@@ -69,6 +69,9 @@ object PqExpressions {
     * ties go to the smallest code, identical to
     * `array_position(dists, array_min(dists)) - 1`. */
   def argmin(r: ArrayData, cb: Array[Array[Long]], offset: Int): GenericInternalRow = {
+    if (cb.isEmpty)
+      throw new IllegalArgumentException(
+        "PQ argmin needs a non-empty codebook (K >= 1); got K = 0")
     check(r, offset, cb(0).length)
     var bestCode = 0
     var bestDist = Long.MaxValue
@@ -92,7 +95,10 @@ object PqExpressions {
     * `zip_with(transform(v, x => floor(x·1e6)), cm, (a,b) => a−b)`
     * twin. Lengths must match (zip_with padded a mismatch with nulls —
     * a shape no engine path can reach, since both sides are Dims by
-    * construction; a reachable mismatch is a bug upstream). */
+    * construction; a reachable mismatch is a bug upstream). Null
+    * elements are ruled out by the same upstream contract as short
+    * arrays: both sides are dense, non-null Dims-long arrays, so a null
+    * element is never checked for and would read as 0. */
   def microResidual(v: ArrayData, cm: ArrayData): ArrayData = {
     val n = v.numElements()
     if (cm.numElements() != n)

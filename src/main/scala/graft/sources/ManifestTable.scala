@@ -4,9 +4,9 @@ import java.nio.charset.StandardCharsets
 import java.util.UUID
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StructField, StructType}
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StructField, StructType, TimestampType}
 
 /** MANIFEST-POINTER TABLES — the transactional commit the rewriting
   * operators (layout OPTIMIZE, artifact refresh snapshots) otherwise
@@ -62,6 +62,13 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, Sh
   *    trailing columns is supported, dropping or retyping a column is
   *    rejected loudly — never a silent column drop.
   *
+  * '''One resolve per operation.''' Every entry point resolves the
+  * table ONCE into a [[Snapshot]] — one listing of `_manifests/`, one
+  * parse of each manifest it needs — and works from that handle:
+  * every read is the snapshot's one pruned scan, every header-only
+  * commit writes the version after it, and a writer re-resolves only
+  * after its commit LOSES a race.
+  *
   * The reference engine rewrites its outputs with a plain
   * delete-then-recreate (reference README.md's output-directory
   * lifecycle); this is the scale-grade replacement for every rewriting
@@ -71,42 +78,147 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, Sh
   */
 object ManifestTable {
 
-  /** A resolved table version: the immutable file list (and the schema
-    * committed with it) a reader can keep using regardless of later
-    * commits (until vacuumed). `files` are the DATA files;
-    * `deleteFiles` the outstanding merge-on-read equality deletes
-    * (format v6), applied by [[read]] as one anti-join on
-    * `deleteCols` (one or more key columns — a composite equality
-    * delete matches on the whole tuple, Iceberg's multi-column
-    * equality-delete shape). */
-  case class Snapshot(version: Int, files: Seq[String],
-                      schema: Option[StructType],
-                      deleteFiles: Seq[String] = Seq.empty,
-                      deleteCols: Seq[String] = Seq.empty) {
-    def read(spark: SparkSession): DataFrame = {
-      require(files.nonEmpty, s"version $version lists no data files")
-      applyDeletes(spark, readFiles(spark, files, schema),
-        deleteFiles, deleteCols)
-    }
-  }
+  /** A resolved table version — the ONE form every operation works
+    * from: the immutable file list (and the schema committed with it)
+    * a reader can keep using regardless of later commits (until
+    * vacuumed). `files` are the DATA files; `deleteFiles` the
+    * outstanding merge-on-read equality deletes (format v6), applied by
+    * [[read]] as one anti-join on `deleteCols` (one or more key columns
+    * — a composite equality delete matches on the whole tuple,
+    * Iceberg's multi-column equality-delete shape). The second
+    * parameter list is what the resolve read: the manifest's headers,
+    * its entry lines (raw, so a commit that carries them stays
+    * byte-identical, and parsed), the `_manifests/` listing it was
+    * resolved from, and the branch it heads (None on the main chain).
+    * Only a resolve constructs one. */
+  case class Snapshot private[sources] (version: Int, files: Seq[String],
+                                        schema: Option[StructType],
+                                        deleteFiles: Seq[String] = Seq.empty,
+                                        deleteCols: Seq[String] = Seq.empty)(
+      private[sources] val root: String,
+      private[sources] val headers: Map[String, String],
+      private[sources] val entryLines: Seq[String],
+      private[sources] val entries: Seq[Entry],
+      private[sources] val listing: Seq[String],
+      private[sources] val branch: Option[String]) {
 
-  /** Merge-on-read: suppress every row whose `deleteCols` TUPLE
-    * appears in the outstanding delete files — one anti-join against
-    * the delta-sized (auto-broadcast) distinct key set. Delete files
-    * without the declaring header would be un-interpretable; fail
-    * loudly rather than return resurrected rows. */
-  private def applyDeletes(spark: SparkSession, df: DataFrame,
-                           deleteFiles: Seq[String],
-                           deleteCols: Seq[String]): DataFrame =
-    if (deleteFiles.isEmpty) df
-    else {
-      if (deleteCols.isEmpty) throw new IllegalStateException(
-        "manifest lists delete files but no #deletecol header names " +
-          "their key column(s) — refusing to read resurrected rows")
-      df.join(spark.read.parquet(deleteFiles: _*)
-          .select(deleteCols.map(col): _*).distinct(),
-        deleteCols, "left_anti")
+    def read(spark: SparkSession): DataFrame = scan(spark, _ => true, None)
+
+    /** The ONE read every entry point shares: keep the data files whose
+      * stats `keep` admits (a zero-row relation with the table schema
+      * when none does), apply the outstanding deletes, then `residual`
+      * (parquet row-group stats prune within the kept files). */
+    private[sources] def scan(spark: SparkSession, keep: Entry => Boolean,
+                              residual: Option[Column]): DataFrame = {
+      val data = dataEntries
+      require(data.nonEmpty,
+        s"version $version of $root lists no data files")
+      val kept = data.filter(keep)
+      val base =
+        if (kept.isEmpty)
+          readFiles(spark, Seq(pathOf(data.head)), schema).where(lit(false))
+        else applyDeletes(spark, readFiles(spark, kept.map(pathOf), schema))
+      residual.fold(base)(base.where)
     }
+
+    /** A [[scan]] `keep`: the file's stored stats intersect every
+      * `column -> [lo, hi]` (a column without stats never prunes). */
+    private[sources] def overlaps(ranges: Iterable[(String, (Long, Long))])
+                                 (e: Entry): Boolean =
+      ranges.forall { case (c, (lo, hi)) =>
+        boundsOf(e, c).forall { case (a, b) => a <= hi && b >= lo } }
+
+    /** A value in column `k`'s stats unit as a comparable literal: a
+      * timestamp column's stats are epoch micros. */
+    private[sources] def statLit(k: String, x: Long): Column =
+      if (schema.exists(_(k).dataType == TimestampType))
+        timestamp_micros(lit(x))
+      else lit(x)
+
+    /** Merge-on-read: suppress every row whose `deleteCols` TUPLE
+      * appears in the outstanding delete set — one anti-join against
+      * the delta-sized (auto-broadcast) distinct key set. Delete files
+      * without the declaring header would be un-interpretable; fail
+      * loudly rather than return resurrected rows. */
+    private[sources] def applyDeletes(spark: SparkSession,
+                                      df: DataFrame): DataFrame =
+      if (deleteFiles.isEmpty) df
+      else {
+        if (deleteCols.isEmpty) throw new IllegalStateException(
+          "manifest lists delete files but no #deletecol header names " +
+            "their key column(s) — refusing to read resurrected rows")
+        df.join(deleteKeys(spark), deleteCols, "left_anti")
+      }
+
+    /** The outstanding equality-delete key tuples, distinct. */
+    private[sources] def deleteKeys(spark: SparkSession): DataFrame =
+      spark.read.parquet(deleteFiles: _*)
+        .select(deleteCols.map(col): _*).distinct()
+
+    /** RESURRECTION GUARD (format v6): an equality delete suppresses
+      * its keys until compacted, so `rows` holding one would vanish on
+      * every read — refuse them with `msg`. */
+    private[sources] def requireNoDeletedKeys(spark: SparkSession,
+                                              rows: DataFrame,
+                                              msg: => String): Unit =
+      if (deleteFiles.nonEmpty && deleteCols.nonEmpty)
+        require(rows.join(deleteKeys(spark), deleteCols, "left_semi")
+          .take(1).isEmpty, msg)
+
+    private[sources] def dataEntries: Seq[Entry] =
+      entries.filterNot(_.isDelete)
+    private[sources] def deleteEntries: Seq[Entry] = entries.filter(_.isDelete)
+    private[sources] def pathOf(e: Entry): String =
+      new Path(root, e.rel).toString
+    private[sources] def boundsCol: Option[String] = headers.get(BoundsKey)
+    private[sources] def statsCols: Seq[String] = colsOf(headers, StatsKey)
+    private[sources] def bloomCols: Seq[String] = colsOf(headers, BloomKey)
+    /** CHECK constraints, name → SQL expression. */
+    private[sources] def constraints: Map[String, String] =
+      named(ConstraintPrefix)
+    /** Tags and live branch pointers, name → version. */
+    private[sources] def tags: Map[String, Int] = namedVersions(TagPrefix)
+    private[sources] def branches: Map[String, Int] =
+      namedVersions(BranchPrefix)
+    private def named(prefix: String): Map[String, String] =
+      headers.collect { case (k, v) if k.startsWith(prefix) =>
+        k.stripPrefix(prefix) -> v }
+    private def namedVersions(prefix: String): Map[String, Int] =
+      named(prefix).collect { case (k, v) if v.toIntOption.isDefined =>
+        k -> v.toInt }
+
+    /** Main-chain versions of the listing this snapshot was resolved
+      * from; [[at]] resolves one of them without listing again. */
+    private[sources] def listedVersions: Seq[Int] = mainVersions(listing)
+    private[sources] def at(spark: SparkSession, v: Int): Snapshot =
+      resolveIn(spark, root, listing, Some(v))
+
+    /** The row count from entry stats alone; None under outstanding
+      * deletes (a delete key may match 0..n rows) or pre-v3 lines. */
+    private[sources] def rowCount: Option[Long] =
+      if (entries.isEmpty ||
+          entries.exists(e => e.isDelete || e.rows.isEmpty)) None
+      else Some(entries.map(_.rows.get).sum)
+
+    /** The stored [lo, hi] of `c` for one entry, from whichever header
+      * declares it — the PRIMARY bounds column or an extra stats
+      * column; None when this manifest carries no stats for it (a
+      * mismatched column must never prune). */
+    private[sources] def boundsOf(e: Entry, c: String): Option[(Long, Long)] =
+      if (boundsCol.contains(c)) for (a <- e.lo; b <- e.hi) yield (a, b)
+      else statsCols.indexOf(c) match {
+        case -1 => None
+        case i => e.extra.lift(i).flatten
+      }
+
+    /** DATA entries with bounds (from either header source) resolved
+      * for `keyCol` into the primary lo/hi slots. */
+    private[sources] def entriesFor(keyCol: String): Seq[Entry] =
+      dataEntries.map { e =>
+        val b = boundsOf(e, keyCol)
+        e.copy(lo = b.map(_._1), hi = b.map(_._2))
+      }
+  }
 
   /** Schema-aware file read: the stored schema resolves columns BY NAME
     * against each file, so pre-evolution files surface the later-added
@@ -127,50 +239,57 @@ object ManifestTable {
 
   private val ManifestName = """v(\d{8})\.manifest""".r
 
-  /** Committed versions, ascending; empty for a not-yet-created table. */
-  def versions(spark: SparkSession, root: String): Seq[Int] = {
+  /** The names under `_manifests/` — ONE listing serves an operation's
+    * main versions and branch manifests alike. */
+  private def listing(spark: SparkSession, root: String): Seq[String] = {
     val dir = manifestDir(root)
     val fs = fsOf(spark, dir)
     if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.flatMap(_.getPath.getName match {
-      case ManifestName(v) => Some(v.toInt)
-      case _ => None
-    }).sorted
+    else fs.listStatus(dir).toSeq.map(_.getPath.getName)
   }
+
+  private def mainVersions(names: Seq[String]): Seq[Int] =
+    names.collect { case ManifestName(v) => v.toInt }.sorted
+
+  /** Committed versions, ascending; empty for a not-yet-created table. */
+  def versions(spark: SparkSession, root: String): Seq[Int] =
+    mainVersions(listing(spark, root))
 
   def currentVersion(spark: SparkSession, root: String): Option[Int] =
     versions(spark, root).lastOption
 
-  /** Resolve a version (newest by default) to its immutable file list. */
-  def snapshot(spark: SparkSession, root: String,
-               version: Option[Int] = None): Snapshot = {
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed version under $root")
+  /** THE resolve: check `version` (newest by default) against one
+    * listing and parse its manifest once. */
+  private def resolveIn(spark: SparkSession, root: String,
+                        names: Seq[String],
+                        version: Option[Int]): Snapshot = {
+    val vs = mainVersions(names)
+    if (vs.isEmpty)
+      throw new IllegalArgumentException(s"no committed version under $root")
     val v = version.getOrElse(vs.last)
     require(vs.contains(v),
       s"version $v not present under $root (have ${vs.mkString(",")}) — " +
         "vacuumed or never committed")
-    val fs = fsOf(spark, manifestDir(root))
-    val m = loadManifest(fs, root, v)
-    Snapshot(v, m.dataEntries.map(e => new Path(root, e.rel).toString),
-      m.schema,
-      m.deleteEntries.map(e => new Path(root, e.rel).toString),
-      m.deleteCols)
+    load(spark, root, names, v, manifestPath(root, v))
   }
 
-  /** The raw lines of a committed manifest (format-opaque — append
-    * copies them verbatim so bounds/stats survive). */
-  private def manifestLines(fs: FileSystem, root: String,
-                            v: Int): Seq[String] =
-    manifestLinesAt(fs, manifestPath(root, v))
+  private def resolve(spark: SparkSession, root: String,
+                      version: Option[Int] = None): Snapshot =
+    resolveIn(spark, root, listing(spark, root), version)
 
-  private def manifestLinesAt(fs: FileSystem, path: Path): Seq[String] = {
-    val in = fs.open(path)
-    val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-      .getLines().toList
-    finally in.close()
-    lines.filter(_.nonEmpty)
+  /** [[resolve]], or None when asked for the newest version of a table
+    * that has none. */
+  private def resolveOption(spark: SparkSession, root: String,
+                            version: Option[Int] = None): Option[Snapshot] = {
+    val names = listing(spark, root)
+    if (version.isEmpty && mainVersions(names).isEmpty) None
+    else Some(resolveIn(spark, root, names, version))
   }
+
+  /** Resolve a version (newest by default) to its immutable file list. */
+  def snapshot(spark: SparkSession, root: String,
+               version: Option[Int] = None): Snapshot =
+    resolve(spark, root, version)
 
   /** One manifest entry: a root-relative data file, optionally carrying
     * per-file metadata stamped at write time —
@@ -210,20 +329,23 @@ object ManifestTable {
     }
   }
 
-  private def parseEntry(line: String): Entry = {
+  /** None for a malformed line: a valid one has 1, 3, or an odd number
+    * >= 5 of tab-separated fields. */
+  private def parseEntry(line: String): Option[Entry] = {
     def bounds(a: String, b: String): Option[(Long, Long)] =
       for (x <- a.toLongOption; y <- b.toLongOption) yield (x, y)
-    line.split('\t') match {
+    line.split("\t", -1) match {
       case f if f.length >= 5 && f.length % 2 == 1 =>
         val b = bounds(f(1), f(2))
         val extra = f.drop(5).grouped(2).toSeq
           .map(p => bounds(p(0), p(1)))
-        Entry(f(0), b.map(_._1), b.map(_._2),
-          f(3).toLongOption, f(4).toLongOption, extra)
+        Some(Entry(f(0), b.map(_._1), b.map(_._2),
+          f(3).toLongOption, f(4).toLongOption, extra))
       case Array(rel, a, b) =>
         val bd = bounds(a, b)
-        Entry(rel, bd.map(_._1), bd.map(_._2))
-      case _ => Entry(line, None, None)
+        Some(Entry(rel, bd.map(_._1), bd.map(_._2)))
+      case Array(rel) => Some(Entry(rel, None, None))
+      case _ => None
     }
   }
 
@@ -344,10 +466,8 @@ object ManifestTable {
   /** The stamped kind of a committed version; None for pre-kind
     * manifests (unknown — consumers must treat it conservatively). */
   def commitKindOf(spark: SparkSession, root: String,
-                   version: Int): Option[String] = {
-    val fs = fsOf(spark, new Path(root))
-    headersOf(fs, root, version).get(KindKey)
-  }
+                   version: Int): Option[String] =
+    resolve(spark, root, Some(version)).headers.get(KindKey)
 
   /** Headers that ride every evolutionary commit (append / merge /
     * delete / optimize) — writer cursors, constraints, and tags must
@@ -358,70 +478,44 @@ object ManifestTable {
         k.startsWith(TagPrefix) || k.startsWith(BranchPrefix) ||
         k == MaxFieldIdKey }
 
-  /** One committed manifest, parsed ONCE — every operation loads this
-    * a single time and derives headers/entries/schema from it, instead
-    * of re-opening the file per accessor (three filesystem round-trips
-    * per pruned read adds up on a remote store). */
-  private case class ManifestData(headers: Map[String, String],
-                                  entryLines: Seq[String]) {
-    lazy val entries: Seq[Entry] = entryLines.map(parseEntry)
-    def boundsCol: Option[String] = headers.get(BoundsKey)
-    def statsCols: Seq[String] = headers.get(StatsKey)
-      .map(_.split(',').toSeq.filter(_.nonEmpty)).getOrElse(Seq.empty)
-    def bloomCols: Seq[String] = headers.get(BloomKey)
-      .map(_.split(',').toSeq.filter(_.nonEmpty)).getOrElse(Seq.empty)
-    def deleteCols: Seq[String] = headers.get(DeleteKey)
-      .map(_.split(',').toSeq.filter(_.nonEmpty)).getOrElse(Seq.empty)
-    /** The table's DATA files — every read plans from these. */
-    def dataEntries: Seq[Entry] = entries.filterNot(_.isDelete)
-    /** Outstanding merge-on-read delete files (format v6). */
-    def deleteEntries: Seq[Entry] = entries.filter(_.isDelete)
-    def schema: Option[StructType] = headers.get(SchemaKey)
-      .map(j => DataType.fromJson(j).asInstanceOf[StructType])
-    /** The stored [lo, hi] of `col` for one entry, from whichever
-      * header declares it — the PRIMARY bounds column or an extra
-      * stats column; None when this manifest carries no stats for it
-      * (a mismatched column must never prune). */
-    def boundsOf(e: Entry, col: String): Option[(Long, Long)] =
-      if (boundsCol.contains(col)) for (a <- e.lo; b <- e.hi) yield (a, b)
-      else statsCols.indexOf(col) match {
-        case -1 => None
-        case i => e.extra.lift(i).flatten
-      }
-    /** DATA entries with bounds (from either header source) resolved
-      * for `keyCol` into the primary lo/hi slots. */
-    def entriesFor(keyCol: String): Seq[Entry] =
-      dataEntries.map { e =>
-        val b = boundsOf(e, keyCol)
-        e.copy(lo = b.map(_._1), hi = b.map(_._2))
-      }
-  }
+  /** A comma-joined column-list header, read and written. */
+  private def colsOf(headers: Map[String, String],
+                     key: String): Seq[String] =
+    headers.get(key).map(_.split(',').toSeq.filter(_.nonEmpty))
+      .getOrElse(Seq.empty)
 
-  private def applyDeletes(spark: SparkSession, root: String,
-                           df: DataFrame, m: ManifestData): DataFrame =
-    applyDeletes(spark, df,
-      m.deleteEntries.map(e => new Path(root, e.rel).toString),
-      m.deleteCols)
+  private def colsHeader(key: String,
+                         cols: Seq[String]): Map[String, String] =
+    if (cols.isEmpty) Map.empty else Map(key -> cols.mkString(","))
 
-  private def loadManifest(fs: FileSystem, root: String,
-                           v: Int): ManifestData =
-    loadManifestAt(fs, manifestPath(root, v))
-
-  private def loadManifestAt(fs: FileSystem, path: Path): ManifestData = {
-    val lines = manifestLinesAt(fs, path)
+  /** Parse the manifest at `path` into a [[Snapshot]] — the one read of
+    * it an operation makes. A header line without `=`, or an entry line
+    * with an even field count, fails loudly: read as a path, such a
+    * line would misname a live data file, which [[vacuum]] would then
+    * delete as unreferenced. */
+  private def load(spark: SparkSession, root: String, listing: Seq[String],
+                   version: Int, path: Path,
+                   branch: Option[String] = None): Snapshot = {
+    val in = fsOf(spark, path).open(path)
+    val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
+      .getLines().filter(_.nonEmpty).toList
+    finally in.close()
+    def malformed(l: String) = new IllegalStateException(
+      s"malformed manifest $path: line '${l.replace("\t", "\\t")}'")
     val (hs, es) = lines.partition(_.startsWith("#"))
-    ManifestData(
-      hs.flatMap { l =>
-        val eq = l.indexOf('=')
-        if (eq < 0) None
-        else Some(l.substring(1, eq) -> l.substring(eq + 1))
-      }.toMap,
-      es)
+    val headers = hs.map { l =>
+      val eq = l.indexOf('=')
+      if (eq < 0) throw malformed(l)
+      l.substring(1, eq) -> l.substring(eq + 1)
+    }.toMap
+    val entries = es.map(l => parseEntry(l).getOrElse(throw malformed(l)))
+    def abs(e: Entry) = new Path(root, e.rel).toString
+    Snapshot(version, entries.filterNot(_.isDelete).map(abs),
+      headers.get(SchemaKey)
+        .map(DataType.fromJson(_).asInstanceOf[StructType]),
+      entries.filter(_.isDelete).map(abs), colsOf(headers, DeleteKey))(
+      root, headers, es, entries, listing, branch)
   }
-
-  private def headersOf(fs: FileSystem, root: String,
-                        v: Int): Map[String, String] =
-    loadManifest(fs, root, v).headers
 
   private def headerLines(hs: Map[String, String]): Seq[String] =
     hs.toSeq.sortBy(_._1).map { case (k, v) => s"#$k=$v" }
@@ -429,28 +523,14 @@ object ManifestTable {
   /** The bounds column a committed manifest's [lo, hi] values describe,
     * if any. */
   def boundsColOf(spark: SparkSession, root: String,
-                  version: Option[Int] = None): Option[String] = {
-    val fs = fsOf(spark, new Path(root))
-    val v = version.orElse(currentVersion(spark, root))
-    v.flatMap(headersOf(fs, root, _).get(BoundsKey))
-  }
-
-  private def headerOf(fs: FileSystem, root: String,
-                       v: Int): Option[String] =
-    loadManifest(fs, root, v).boundsCol
-
-  private def schemaOf(fs: FileSystem, root: String,
-                       v: Int): Option[StructType] =
-    loadManifest(fs, root, v).schema
+                  version: Option[Int] = None): Option[String] =
+    resolveOption(spark, root, version).flatMap(_.boundsCol)
 
   /** The schema a version committed with (None for pre-schema-header
     * tables, whose reads fall back to parquet's own resolution). */
   def schemaAt(spark: SparkSession, root: String,
-               version: Option[Int] = None): Option[StructType] = {
-    val fs = fsOf(spark, new Path(root))
-    version.orElse(currentVersion(spark, root))
-      .flatMap(schemaOf(fs, root, _))
-  }
+               version: Option[Int] = None): Option[StructType] =
+    resolveOption(spark, root, version).flatMap(_.schema)
 
   /** Every field stored nullable: a pre-evolution file genuinely lacks
     * the later columns, so the committed schema must admit null there. */
@@ -508,47 +588,30 @@ object ManifestTable {
         _.fields.map(_.metadata.getLong(FieldIdKey)).max))
       .getOrElse(0L)
 
-  private def manifestEntries(fs: FileSystem, root: String,
-                              v: Int): Seq[Entry] =
-    loadManifest(fs, root, v).entries
-
   /** Per-file (relative path, bounds, rows, bytes) of a committed
-    * version — the metadata the stats consumers and tools read. */
+    * version — the metadata the stats consumers and tools read. DATA
+    * files only: an equality-delete file's bytes/rows would otherwise
+    * leak indistinguishably into size-based planning (optimizeBySize
+    * would size the post-delete output from data+delete bytes);
+    * delete-side accounting lives in [[history]]. */
   def fileStats(spark: SparkSession, root: String,
                 version: Option[Int] = None)
-      : Seq[(String, Option[(Long, Long)], Option[Long], Option[Long])] = {
-    val fs = fsOf(spark, new Path(root))
-    val v = version.orElse(currentVersion(spark, root)).getOrElse(
-      throw new IllegalArgumentException(s"no committed version under $root"))
-    // DATA files only: an equality-delete file's bytes/rows would
-    // otherwise leak indistinguishably into size-based planning
-    // (optimizeBySize would size the post-delete output from
-    // data+delete bytes); delete-side accounting lives in [[history]]
-    manifestEntries(fs, root, v).filterNot(_.isDelete).map(e =>
+      : Seq[(String, Option[(Long, Long)], Option[Long], Option[Long])] =
+    resolve(spark, root, version).dataEntries.map(e =>
       (e.rel, for (a <- e.lo; b <- e.hi) yield (a, b), e.rows, e.bytes))
-  }
 
   /** The table's row count FROM MANIFEST METADATA ALONE — no data file
     * is opened, the answer a format's statistics exist for. None when
     * any entry predates v3 stats (an honest "don't know", never a
-    * partial sum). */
+    * partial sum), or under outstanding equality deletes (they make the
+    * per-file counts an upper bound only — a scan answers). */
   def rowCountFromStats(spark: SparkSession, root: String,
-                        version: Option[Int] = None): Option[Long] = {
-    val fs = fsOf(spark, new Path(root))
-    val v = version.orElse(currentVersion(spark, root)).getOrElse(
-      throw new IllegalArgumentException(s"no committed version under $root"))
-    val es = manifestEntries(fs, root, v)
-    // outstanding equality deletes make the per-file counts an upper
-    // bound only (a delete key may match 0..n rows) — no metadata-only
-    // answer exists; fall back to a scan
-    if (es.exists(_.isDelete)) None
-    else if (es.isEmpty || es.exists(_.rows.isEmpty)) None
-    else Some(es.map(_.rows.get).sum)
-  }
+                        version: Option[Int] = None): Option[Long] =
+    resolve(spark, root, version).rowCount
 
   /** The table at its newest committed version. */
   def read(spark: SparkSession, root: String): DataFrame =
-    snapshot(spark, root).read(spark)
+    resolve(spark, root).read(spark)
 
   /** Bounds-pruned RANGE READ — the read-side payoff of manifest format
     * v2+: resolve the newest version, keep only the files whose stored
@@ -563,9 +626,9 @@ object ManifestTable {
   def readWhereKeyBetween(spark: SparkSession, root: String,
                           keyCol: String, lo: Long, hi: Long): DataFrame = {
     require(lo <= hi, s"empty range [$lo, $hi]")
-    prunedRead(spark, root, keyCol,
-      e => e.lo.get <= hi && e.hi.get >= lo,
-      col(keyCol) >= lo && col(keyCol) <= hi)
+    val s = resolve(spark, root)
+    s.scan(spark, s.overlaps(Seq(keyCol -> (lo, hi))),
+      Some(col(keyCol) >= lo && col(keyCol) <= hi))
   }
 
   /** [[readWhereKeyBetween]]'s SET twin: files whose bounds contain ANY
@@ -585,9 +648,10 @@ object ManifestTable {
       }
       sorted(a) <= hi
     }
-    prunedRead(spark, root, keyCol,
-      e => hits(e.lo.get, e.hi.get),
-      col(keyCol).isin(keys: _*))
+    val s = resolve(spark, root)
+    s.scan(spark, e => s.boundsOf(e, keyCol).forall { case (lo, hi) =>
+        hits(lo, hi) },
+      Some(col(keyCol).isin(keys: _*)))
   }
 
   /** MULTI-COLUMN rectangle read (format v4's payoff): keep only the
@@ -605,32 +669,11 @@ object ManifestTable {
     require(ranges.nonEmpty, "empty range list")
     ranges.foreach { case (k, lo, hi) =>
       require(lo <= hi, s"empty range [$lo, $hi] on $k") }
-    val fs = fsOf(spark, new Path(root))
-    val v = currentVersion(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"no committed version under $root"))
-    val m = loadManifest(fs, root, v)
-    require(m.dataEntries.nonEmpty,
-      s"version $v of $root lists no data files")
-    val kept = m.dataEntries.filter(e => ranges.forall { case (k, lo, hi) =>
-      m.boundsOf(e, k).forall { case (flo, fhi) => flo <= hi && fhi >= lo }
-    })
-    def residual(k: String, lo: Long, hi: Long) = {
-      val isTs = m.schema.exists(_(k).dataType ==
-        org.apache.spark.sql.types.TimestampType)
-      if (isTs) col(k) >= timestamp_micros(lit(lo)) &&
-        col(k) <= timestamp_micros(lit(hi))
-      else col(k) >= lo && col(k) <= hi
-    }
-    val pred = ranges.map { case (k, lo, hi) => residual(k, lo, hi) }
-      .reduce(_ && _)
-    if (kept.isEmpty)
-      readFiles(spark,
-        Seq(new Path(root, m.dataEntries.head.rel).toString),
-        m.schema).where(lit(false))
-    else
-      applyDeletes(spark, root,
-        readFiles(spark, kept.map(e =>
-          new Path(root, e.rel).toString), m.schema).where(pred), m)
+    val s = resolve(spark, root)
+    s.scan(spark, s.overlaps(ranges.map { case (k, lo, hi) => k -> (lo, hi) }),
+      Some(ranges.map { case (k, lo, hi) =>
+        col(k) >= s.statLit(k, lo) && col(k) <= s.statLit(k, hi)
+      }.reduce(_ && _)))
   }
 
   /** POINT-LOOKUP read (format v5's payoff): `column IN (values)`
@@ -649,45 +692,23 @@ object ManifestTable {
   def readWherePointIn(spark: SparkSession, root: String,
                        column: String, values: Seq[Long]): DataFrame = {
     require(values.nonEmpty, "empty probe-value set")
+    val s = resolve(spark, root)
     val fs = fsOf(spark, new Path(root))
-    val v = currentVersion(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"no committed version under $root"))
-    val m = loadManifest(fs, root, v)
-    val entries = m.entriesFor(column)
-    require(entries.nonEmpty, s"version $v of $root lists no data files")
-    val statsKept = entries.filter(e =>
-      e.lo.isEmpty || e.hi.isEmpty ||
-        values.exists(x => e.lo.get <= x && x <= e.hi.get))
-    val kept =
-      if (!m.bloomCols.contains(column)) statsKept
-      else {
-        val cache = scala.collection.mutable.Map
-          .empty[String, Map[String, org.apache.spark.util.sketch.BloomFilter]]
-        statsKept.filter { e =>
-          val slash = e.rel.lastIndexOf('/')
-          val (dirRel, name) =
-            (e.rel.substring(0, math.max(0, slash)),
-              e.rel.substring(slash + 1))
-          val blooms = cache.getOrElseUpdate(dirRel,
-            readBloomSidecar(fs,
-              new Path(new Path(root, dirRel), s"_bloom.$column")))
-          // no sidecar entry (pre-v5 file) => may contain anything
-          blooms.get(name).forall(b => values.exists(b.mightContainLong))
-        }
-      }
-    val isTs = m.schema.exists(_(column).dataType ==
-      org.apache.spark.sql.types.TimestampType)
-    val pred =
-      if (isTs) values.map(x => col(column) === timestamp_micros(lit(x)))
-        .reduce(_ || _)
-      else col(column).isin(values: _*)
-    if (kept.isEmpty)
-      readFiles(spark, Seq(new Path(root, entries.head.rel).toString),
-        m.schema).where(lit(false))
-    else
-      applyDeletes(spark, root,
-        readFiles(spark, kept.map(e =>
-          new Path(root, e.rel).toString), m.schema).where(pred), m)
+    val sidecars = scala.collection.mutable.Map
+      .empty[String, Map[String, org.apache.spark.util.sketch.BloomFilter]]
+    def bloomKeeps(e: Entry): Boolean = !s.bloomCols.contains(column) || {
+      val slash = e.rel.lastIndexOf('/')
+      val (dirRel, name) =
+        (e.rel.substring(0, math.max(0, slash)), e.rel.substring(slash + 1))
+      val blooms = sidecars.getOrElseUpdate(dirRel,
+        readBloomSidecar(fs,
+          new Path(new Path(root, dirRel), s"_bloom.$column")))
+      // no sidecar entry (pre-v5 file) => may contain anything
+      blooms.get(name).forall(b => values.exists(b.mightContainLong))
+    }
+    s.scan(spark, e => s.boundsOf(e, column).forall { case (lo, hi) =>
+        values.exists(x => lo <= x && x <= hi) } && bloomKeeps(e),
+      Some(col(column).isin(values.map(s.statLit(column, _)): _*)))
   }
 
   def readWherePointEquals(spark: SparkSession, root: String,
@@ -712,66 +733,17 @@ object ManifestTable {
                              ranges: Map[String, (Long, Long)],
                              residual: Option[org.apache.spark.sql.Column])
       : DataFrame = {
-    val fs = fsOf(spark, new Path(root))
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed version under $root")
-    val v = version.getOrElse(vs.last)
-    require(vs.contains(v),
-      s"version $v not present under $root (have ${vs.mkString(",")}) — " +
-        "vacuumed or never committed")
-    val m = loadManifest(fs, root, v)
-    require(m.dataEntries.nonEmpty,
-      s"version $v of $root lists no data files")
-    val kept = m.dataEntries.filter(e => ranges.forall {
-      case (c, (lo, hi)) => m.boundsOf(e, c).forall {
-        case (flo, fhi) => flo <= hi && fhi >= lo }
-    })
-    val base =
-      if (kept.isEmpty)
-        readFiles(spark,
-          Seq(new Path(root, m.dataEntries.head.rel).toString),
-          m.schema).where(lit(false))
-      else
-        applyDeletes(spark, root,
-          readFiles(spark, kept.map(e =>
-            new Path(root, e.rel).toString), m.schema), m)
-    val filtered = residual.map(base.where).getOrElse(base)
+    val s = resolve(spark, root, version)
     // an empty projection is the `count(*)` shape: zero columns, rows
     // preserved (RowDataSourceScanExec counts the empty rows)
-    filtered.select(requiredCols.map(col): _*)
-  }
-
-  /** Shared bounds-pruned read: keep files whose (present AND
-    * header-matching) bounds satisfy `boundsHit`; files with unknown or
-    * differently-keyed bounds are always read (unknown = may contain
-    * anything). */
-  private def prunedRead(spark: SparkSession, root: String, keyCol: String,
-                         boundsHit: Entry => Boolean,
-                         pred: org.apache.spark.sql.Column): DataFrame = {
-    val fs = fsOf(spark, new Path(root))
-    val v = currentVersion(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"no committed version under $root"))
-    val m = loadManifest(fs, root, v)
-    // bounds honored ONLY when the manifest declares them for keyCol
-    val entries = m.entriesFor(keyCol)
-    require(entries.nonEmpty, s"version $v of $root lists no data files")
-    val schema = m.schema
-    val kept = entries.filter(e =>
-      e.lo.isEmpty || e.hi.isEmpty || boundsHit(e))
-    if (kept.isEmpty)
-      // preserve the schema from one (skipped) file, with zero rows
-      readFiles(spark, Seq(new Path(root, entries.head.rel).toString),
-        schema).where(lit(false))
-    else
-      applyDeletes(spark, root,
-        readFiles(spark, kept.map(e =>
-          new Path(root, e.rel).toString), schema).where(pred), m)
+    s.scan(spark, s.overlaps(ranges), residual)
+      .select(requiredCols.map(col): _*)
   }
 
   /** Time travel: the table exactly as of `version` (that version's own
     * schema included). */
   def readAt(spark: SparkSession, root: String, version: Int): DataFrame =
-    snapshot(spark, root, Some(version)).read(spark)
+    resolve(spark, root, Some(version)).read(spark)
 
   /** Bounds/stats stamping accepts only integral key columns: a
     * non-numeric column's values would aggregate under the column's
@@ -806,6 +778,11 @@ object ManifestTable {
       s"stats column $k must be integral or timestamp (stats are " +
         s"stored as long [lo, hi] in numeric order); got $dt")
   }
+
+  /** Whether column `k` can carry stored stats: present in `s`, of a
+    * type [[statExpr]] admits. */
+  private def stampable(s: StructType, k: String): Boolean =
+    s.fieldNames.contains(k) && scala.util.Try(statExpr(s, k)).isSuccess
 
   // -------------------------------------------------------------------
   // Bloom sidecars (format v5)
@@ -1095,6 +1072,44 @@ object ManifestTable {
     won
   }
 
+  /** Commit `lines` under `headers` at `target`. A lost race throws the
+    * ConcurrentModificationException of every writer that does not
+    * retry: its output was computed from a base that is now stale. */
+  private def commitAt(spark: SparkSession, root: String, target: Path,
+                       lines: Seq[String], headers: Map[String, String],
+                       what: String): Unit =
+    if (!tryCommitPath(fsOf(spark, target), root, target, lines, headers))
+      throw new java.util.ConcurrentModificationException(
+        s"$what lost the commit race for ${target.getName}; it was " +
+          "computed from a stale base — rerun it")
+
+  /** Commit the version after `s` — on the main chain, or as the next
+    * manifest of the branch `s` heads (branch manifests never carry
+    * branch pointers: those live on the main chain only). Returns the
+    * committed version. */
+  private def commitNext(spark: SparkSession, s: Snapshot,
+                         lines: Seq[String], headers: Map[String, String],
+                         what: String): Int = {
+    val v = s.version + 1
+    s.branch match {
+      case Some(b) => commitAt(spark, s.root,
+        branchManifestPath(s.root, b, v), lines,
+        headers.filterNot(_._1.startsWith(BranchPrefix)), what)
+      case None =>
+        commitAt(spark, s.root, manifestPath(s.root, v), lines, headers,
+          what)
+    }
+    v
+  }
+
+  /** A header-only (`metadata`) commit: `s`'s entry lines verbatim
+    * under `headers`, zero data IO. */
+  private def commitHeaders(spark: SparkSession, s: Snapshot,
+                            headers: Map[String, String],
+                            what: String): Int =
+    commitNext(spark, s, s.entryLines, headers + (KindKey -> "metadata"),
+      s"$what on ${s.root}")
+
   private def boundsHeader(boundsCol: Option[String]): Map[String, String] =
     boundsCol.map(BoundsKey -> _).toMap
 
@@ -1111,7 +1126,6 @@ object ManifestTable {
                 boundsCol: Option[String] = None,
                 statsCols: Seq[String] = Seq.empty,
                 bloomCols: Seq[String] = Seq.empty): Int = {
-    val fs = fsOf(spark, new Path(root))
     val base = expectedBase.getOrElse(currentVersion(spark, root)
       .getOrElse(0))
     // fail fast BEFORE the data write: an invalid bounds/stats/bloom
@@ -1125,14 +1139,13 @@ object ManifestTable {
     val staged = stage(spark, root, dir => dfOut.write.parquet(dir),
       boundsCol = boundsCol, statsCols = statsCols, bloomCols = bloomCols)
     val headers = boundsHeader(boundsCol) ++
-      (if (statsCols.nonEmpty) Map(StatsKey -> statsCols.mkString(","))
-       else Map.empty[String, String]) ++
-      (if (bloomCols.nonEmpty) Map(BloomKey -> bloomCols.mkString(","))
-       else Map.empty[String, String]) +
+      colsHeader(StatsKey, statsCols) ++
+      colsHeader(BloomKey, bloomCols) +
       (SchemaKey -> outSchema.json) +
       (MaxFieldIdKey -> outSchema.fields.length.toString) +
       (KindKey -> "overwrite")
-    if (!tryCommit(fs, root, base + 1, staged, headers))
+    if (!tryCommit(fsOf(spark, new Path(root)), root, base + 1, staged,
+        headers))
       throw new java.util.ConcurrentModificationException(
         s"version ${base + 1} of $root was committed concurrently; " +
           "this overwrite was computed from a stale base — rerun it")
@@ -1201,12 +1214,11 @@ object ManifestTable {
              maxAttempts: Int = 20,
              boundsCol: Option[String] = None): Int = {
     val fs = fsOf(spark, new Path(root))
-    // ONE manifest parse for every pre-staging decision (the
-    // ManifestData single-parse discipline): bounds header, bloom
-    // declaration, committed schema, delete guard, constraints
-    val v0 = currentVersion(spark, root)
-    val m0 = v0.map(loadManifest(fs, root, _))
-    val h0 = m0.flatMap(_.boundsCol)
+    // ONE resolve serves every pre-staging decision (bounds header,
+    // bloom declaration, committed schema, delete guard, constraints)
+    // AND the first commit attempt; only a lost race resolves again
+    var base = resolveOption(spark, root)
+    val h0 = base.flatMap(_.boundsCol)
     // stamp bounds only when they will MEAN the table's declared bounds
     // column — stamping a different column under the base's header
     // would misattribute the values (the format's one hard rule)
@@ -1215,87 +1227,78 @@ object ManifestTable {
     // a maintained index, not a per-writer choice — but only those this
     // df can stamp (present, stampable type); the rest degrade to
     // sidecar-less files (never skipped — correct, just unpruned)
-    val effBloom = m0.map(_.bloomCols).getOrElse(Seq.empty)
-      .filter(k => df.schema.fieldNames.contains(k) &&
-        scala.util.Try(statExpr(df.schema, k)).isSuccess)
+    val effBloom = base.map(_.bloomCols).getOrElse(Seq.empty)
+      .filter(stampable(df.schema, _))
     // evolution contract and bounds-type gate checked BEFORE staging
     // (fail fast, no orphan files); the commit loop re-derives the
     // evolution per attempt for races. The evolved schema is resolved
     // HERE because the staged files must carry ITS field ids — a
     // creation-by-append stamps fresh ids exactly like overwrite.
     effBounds.foreach(k => requireIntegral(df.schema, k))
-    def evolve(m: Option[ManifestData], noBase: Boolean)
-        : Option[(StructType, Long)] = m.flatMap(_.schema) match {
-      case Some(stored) =>
-        val mx = maxFieldIdOf(m.get.headers, Some(stored))
-        val s = evolvedSchema(stored, df.schema, root, mx)
-        Some((s, if (hasFieldIds(s))
-          mx + (s.fields.length - stored.fields.length) else 0L))
-      case None if noBase =>
-        val s = stampFieldIds(asNullable(df.schema))
-        Some((s, s.fields.length.toLong))
-      case None => None
-    }
-    val evolved0 = evolve(m0, v0.isEmpty)
-    // RESURRECTION GUARD (format v6) + CHECK constraints, validated
-    // against a SPECIFIC base manifest — the commit loop re-runs this
-    // whenever it lands on a base OTHER than the one validated (a
-    // racing delete/addConstraint between validation and commit must
-    // not slip pre-deleted or violating rows in: TOCTOU-safe).
-    def validateAgainst(m: ManifestData): Unit = {
-      if (m.deleteEntries.nonEmpty && m.deleteCols.nonEmpty) {
-        val ks = m.deleteCols
-        // the guard joins on ks, so the incoming df must carry them — a
-        // schema-less legacy table would otherwise surface a raw
-        // AnalysisException from the USING join instead of the contract
-        val missing = ks.filterNot(df.schema.fieldNames.contains)
-        require(missing.isEmpty,
-          s"append to $root must carry the delete column(s) " +
-            s"${missing.mkString(", ")} while equality deletes are " +
-            "outstanding (the resurrection guard checks incoming " +
-            s"keys); got columns ${df.schema.fieldNames.mkString(", ")}")
-        val delKeys = spark.read.parquet(m.deleteEntries.map(e =>
-          new Path(root, e.rel).toString): _*)
-          .select(ks.map(col): _*).distinct()
-        require(df.join(delKeys, ks, "left_semi").take(1).isEmpty,
-          s"append to $root would resurrect equality-deleted " +
-            s"(${ks.mkString(", ")}) tuples — the delete is global " +
-            "until compacted; run optimize first, then append")
+    def evolve(b: Option[Snapshot]): Option[(StructType, Long)] = b match {
+      case Some(s) => s.schema.map { stored =>
+        val mx = maxFieldIdOf(s.headers, Some(stored))
+        val e = evolvedSchema(stored, df.schema, root, mx)
+        (e, if (hasFieldIds(e))
+          mx + (e.fields.length - stored.fields.length) else 0L)
       }
-      val cs = m.headers.collect {
-        case (hk, hv) if hk.startsWith(ConstraintPrefix) =>
-          hk.stripPrefix(ConstraintPrefix) -> hv
-      }.toMap
-      if (cs.nonEmpty) validateConstraints(df, cs, s"append to $root")
+      case None =>
+        val e = stampFieldIds(asNullable(df.schema))
+        Some((e, e.fields.length.toLong))
     }
-    m0.foreach(validateAgainst)
-    var validatedBase = v0
+    val evolved0 = evolve(base)
+    // RESURRECTION GUARD (format v6) + CHECK constraints, validated
+    // against a SPECIFIC base — the commit loop re-runs this whenever
+    // it lands on a base OTHER than the one validated (a racing
+    // delete/addConstraint between validation and commit must not slip
+    // pre-deleted or violating rows in: TOCTOU-safe).
+    def validateAgainst(s: Snapshot): Unit = {
+      // the guard joins on the delete columns, so the incoming df must
+      // carry them — a schema-less legacy table would otherwise surface
+      // a raw AnalysisException from the USING join instead of the
+      // contract
+      val missing = s.deleteCols.filterNot(df.schema.fieldNames.contains)
+      require(s.deleteFiles.isEmpty || missing.isEmpty,
+        s"append to $root must carry the delete column(s) " +
+          s"${missing.mkString(", ")} while equality deletes are " +
+          "outstanding (the resurrection guard checks incoming " +
+          s"keys); got columns ${df.schema.fieldNames.mkString(", ")}")
+      s.requireNoDeletedKeys(spark, df,
+        s"append to $root would resurrect equality-deleted " +
+          s"(${s.deleteCols.mkString(", ")}) tuples — the delete is " +
+          "global until compacted; run optimize first, then append")
+      validateConstraints(df, s.constraints, s"append to $root")
+    }
+    base.foreach(validateAgainst)
+    var validatedBase = base.map(_.version)
     val dfOut = evolved0.map { case (s, _) => alignToSchema(df, s) }
       .getOrElse(df)
     val staged = stage(spark, root, dir => dfOut.write.parquet(dir),
       boundsCol = effBounds, bloomCols = effBloom)
     var attempt = 0
     while (attempt < maxAttempts) {
-      val base = versions(spark, root).lastOption
-      val bm = base.map(loadManifest(fs, root, _))
-      if (base != validatedBase) { // a racing commit changed the table
-        bm.foreach(validateAgainst)
-        validatedBase = base
+      if (attempt > 0) { // a lost race: re-resolve the base
+        base = resolveOption(spark, root)
+        if (base.map(_.version) != validatedBase) {
+          base.foreach(validateAgainst)
+          validatedBase = base.map(_.version)
+        }
       }
-      val h = bm.flatMap(_.boundsCol).orElse(effBounds)
+      val h = base.flatMap(_.boundsCol).orElse(effBounds)
       // the base header governs the combined manifest: staged lines
       // were stamped for effBounds, so strip their bounds (stats stay)
       // if a racing commit changed the table's bounds column underneath
       val stagedOut =
         if (effBounds.isEmpty || h == effBounds) staged
-        else staged.map(l => parseEntry(l).copy(lo = None, hi = None).line)
+        else staged.map(l =>
+          parseEntry(l).fold(l)(_.copy(lo = None, hi = None).line))
       // schema evolution against the base's committed schema; a base
       // without one (legacy table) stays schema-less. When field ids
       // are in play the staged files were written with evolved0's ids
       // — a racing commit that changed the id assignment (a different
       // evolution landed first) makes those files WRONG for this
       // base's schema: abort instead of committing misattributed ids.
-      val evolvedB = evolve(bm, base.isEmpty)
+      val evolvedB = evolve(base)
       if (evolved0.exists(e => hasFieldIds(e._1)) || evolvedB.exists(e =>
           hasFieldIds(e._1))) {
         if (evolvedB.map(_._1.json) != evolved0.map(_._1.json))
@@ -1304,20 +1307,21 @@ object ManifestTable {
               "reassigned under the staged files); rerun the append")
       }
       val outSchema = evolvedB.map(_._1)
-      val baseLines = bm.map(_.entryLines).getOrElse(Seq.empty)
-      val v = base.getOrElse(0) + 1
+      val baseLines = base.map(_.entryLines).getOrElse(Seq.empty)
+      val v = base.fold(0)(_.version) + 1
+      val bh = base.map(_.headers).getOrElse(Map.empty[String, String])
       val headers = boundsHeader(h) ++
         // the base's extra-stats header survives: its lines keep their
         // pairs; this commit's new lines carry none (unknown = read)
-        bm.flatMap(_.headers.get(StatsKey)).map(StatsKey -> _).toMap ++
+        bh.get(StatsKey).map(StatsKey -> _).toMap ++
         // likewise the bloom declaration: base files keep their
         // sidecars in place, this commit's were stamped above
-        bm.flatMap(_.headers.get(BloomKey)).map(BloomKey -> _).toMap ++
+        bh.get(BloomKey).map(BloomKey -> _).toMap ++
         // and the delete column: base delete lines carry verbatim
-        bm.flatMap(_.headers.get(DeleteKey)).map(DeleteKey -> _).toMap ++
+        bh.get(DeleteKey).map(DeleteKey -> _).toMap ++
         // writer markers + constraints: an append must not amnesia a
         // sink's cursor or shed the table's invariants
-        bm.map(m => carriedHeaders(m.headers)).getOrElse(Map.empty) ++
+        carriedHeaders(bh) ++
         // the id high-water mark moves with the evolution (overrides
         // the carried value; ids are never reused)
         evolvedB.filter(e => hasFieldIds(e._1))
@@ -1343,19 +1347,16 @@ object ManifestTable {
     * of the resurrected keys (see its scaladoc) so CDF consumers stay
     * coherent. */
   def restore(spark: SparkSession, root: String, toVersion: Int): Int = {
-    val fs = fsOf(spark, new Path(root))
-    val vs = versions(spark, root)
+    val names = listing(spark, root)
+    val vs = mainVersions(names)
     require(vs.contains(toVersion),
       s"cannot restore $root to $toVersion (have ${vs.mkString(",")})")
-    val m = loadManifest(fs, root, toVersion)
-    val v = vs.last + 1
+    val m = resolveIn(spark, root, names, Some(toVersion))
     // headers replicate verbatim EXCEPT the kind: this commit is a
     // restore whatever the target version's commit was
-    if (!tryCommit(fs, root, v, m.entryLines,
-        m.headers + (KindKey -> "restore")))
-      throw new java.util.ConcurrentModificationException(
-        s"restore of $root lost the commit race for version $v; rerun")
-    v
+    commitAt(spark, root, manifestPath(root, vs.last + 1), m.entryLines,
+      m.headers + (KindKey -> "restore"), s"restore of $root")
+    vs.last + 1
   }
 
   /** MERGE-ON-READ DELETE (format v6): commit the distinct `keyCol`
@@ -1390,16 +1391,13 @@ object ManifestTable {
       s"in ${keyCols.mkString(", ")}")
     keyCols.foreach(k => require(!k.contains(','),
       s"delete column name '$k' cannot contain ',' (header format)"))
-    val fs = fsOf(spark, new Path(root))
-    val v0 = currentVersion(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"no committed version under $root"))
-    val m0 = loadManifest(fs, root, v0)
-    require(m0.deleteCols.isEmpty || m0.deleteCols == keyCols,
+    var base = resolve(spark, root)
+    require(base.deleteCols.isEmpty || base.deleteCols == keyCols,
       s"table $root already carries equality deletes on " +
-        s"(${m0.deleteCols.mkString(", ")}); one delete column-set per " +
+        s"(${base.deleteCols.mkString(", ")}); one delete column-set per " +
         s"table (got ${keyCols.mkString(", ")})")
     val delKeys = keys.select(keyCols.map { k =>
-      m0.schema.map(sc => col(k).cast(sc(k).dataType))
+      base.schema.map(sc => col(k).cast(sc(k).dataType))
         .getOrElse(col(k)).as(k)
     }: _*).distinct()
     require(delKeys.where(keyCols.map(col(_).isNull).reduce(_ || _))
@@ -1409,17 +1407,20 @@ object ManifestTable {
     val staged = stage(spark, root,
       dir => delKeys.coalesce(1).write.parquet(dir),
       relPrefix = "deletes")
+    val fs = fsOf(spark, new Path(root))
     var attempt = 0
     while (attempt < maxAttempts) {
-      val base = versions(spark, root).last
-      val bm = loadManifest(fs, root, base)
-      require(bm.deleteCols.isEmpty || bm.deleteCols == keyCols,
-        s"a concurrent commit set the delete columns of $root to " +
-          bm.deleteCols.mkString(", "))
-      val headers = bm.headers + (DeleteKey -> keyCols.mkString(",")) +
-        (KindKey -> "delete")
-      if (tryCommit(fs, root, base + 1, bm.entryLines ++ staged, headers))
-        return base + 1
+      if (attempt > 0) { // a lost race: re-resolve the base
+        base = resolve(spark, root)
+        require(base.deleteCols.isEmpty || base.deleteCols == keyCols,
+          s"a concurrent commit set the delete columns of $root to " +
+            base.deleteCols.mkString(", "))
+      }
+      if (tryCommit(fs, root, base.version + 1,
+          base.entryLines ++ staged,
+          base.headers + (DeleteKey -> keyCols.mkString(",")) +
+            (KindKey -> "delete")))
+        return base.version + 1
       attempt += 1
     }
     throw new java.util.ConcurrentModificationException(
@@ -1435,12 +1436,25 @@ object ManifestTable {
   def changedFiles(spark: SparkSession, root: String,
                    fromVersion: Int, toVersion: Int)
       : (Seq[String], Seq[String]) = {
+    val (from, to) = resolvePair(spark, root, fromVersion, toVersion)
+    changesOf(from, to)
+  }
+
+  /** Both ends of a change range, from one listing. */
+  private def resolvePair(spark: SparkSession, root: String,
+                          fromVersion: Int,
+                          toVersion: Int): (Snapshot, Snapshot) = {
     require(fromVersion < toVersion,
       s"need fromVersion < toVersion, got $fromVersion >= $toVersion")
-    val fs = fsOf(spark, new Path(root))
-    val from = manifestEntries(fs, root, fromVersion).map(_.rel).toSet
-    val to = manifestEntries(fs, root, toVersion).map(_.rel).toSet
-    ((to -- from).toSeq.sorted, (from -- to).toSeq.sorted)
+    val from = resolve(spark, root, Some(fromVersion))
+    (from, from.at(spark, toVersion))
+  }
+
+  private def changesOf(from: Snapshot,
+                        to: Snapshot): (Seq[String], Seq[String]) = {
+    val f = from.entries.map(_.rel).toSet
+    val t = to.entries.map(_.rel).toSet
+    ((t -- f).toSeq.sorted, (f -- t).toSeq.sorted)
   }
 
   /** CHANGED-FILES/CDC READ — the incremental-consumer story (Delta's
@@ -1458,11 +1472,10 @@ object ManifestTable {
     * deletes surface the new columns as null). */
   def readChangesBetween(spark: SparkSession, root: String,
                          fromVersion: Int, toVersion: Int): DataFrame = {
-    val fs = fsOf(spark, new Path(root))
-    val (added, removed) = changedFiles(spark, root, fromVersion, toVersion)
-    def side(rels: Seq[String], v: Int, tag: String,
+    val (mFrom, mTo) = resolvePair(spark, root, fromVersion, toVersion)
+    val (added, removed) = changesOf(mFrom, mTo)
+    def side(rels: Seq[String], m: Snapshot, tag: String,
              deleteSide: Boolean = false): DataFrame = {
-      val m = loadManifest(fs, root, v)
       // delete files are key-only and id-less: resolve them by NAME
       // under the table shape (see stripFieldIds)
       val s = if (deleteSide) m.schema.map(stripFieldIds) else m.schema
@@ -1473,11 +1486,9 @@ object ManifestTable {
         else {
           // zero changed files on this side: an empty, correctly-typed
           // relation (schema from the version's header, or any file)
-          require(m.dataEntries.nonEmpty,
-            s"version $v of $root lists no data files")
-          readFiles(spark,
-            Seq(new Path(root, m.dataEntries.head.rel).toString),
-            s).where(lit(false))
+          require(m.files.nonEmpty,
+            s"version ${m.version} of $root lists no data files")
+          readFiles(spark, m.files.take(1), s).where(lit(false))
         }
       base.withColumn("_change", lit(tag))
     }
@@ -1498,16 +1509,15 @@ object ManifestTable {
     //    toVersion's WHOLE outstanding delete set (carried delete
     //    files included), so every semi-join key is genuinely live.
     def isDel(rel: String) = rel.startsWith("deletes/")
-    val base = side(added.filterNot(isDel), toVersion, "insert")
-      .unionByName(side(added.filter(isDel), toVersion, "delete",
+    val base = side(added.filterNot(isDel), mTo, "insert")
+      .unionByName(side(added.filter(isDel), mTo, "delete",
           deleteSide = true),
         allowMissingColumns = true)
-      .unionByName(side(removed.filterNot(isDel), fromVersion, "delete"),
+      .unionByName(side(removed.filterNot(isDel), mFrom, "delete"),
         allowMissingColumns = true)
     val undropped = removed.filter(isDel)
     if (undropped.isEmpty) base
     else {
-      val mFrom = loadManifest(fs, root, fromVersion)
       val ks = mFrom.deleteCols
       if (ks.isEmpty) throw new IllegalStateException(
         s"version $fromVersion of $root lists delete files but no " +
@@ -1515,7 +1525,6 @@ object ManifestTable {
       val oldKeys = spark.read.parquet(undropped.map(r =>
         new Path(root, r).toString): _*)
         .select(ks.map(col): _*).distinct()
-      val mTo = loadManifest(fs, root, toVersion)
       // a key is UN-deleted only when it is absent from toVersion's
       // WHOLE outstanding delete set — added delete files alone are
       // not enough: two delete commits can hold overlapping keys, and
@@ -1523,12 +1532,9 @@ object ManifestTable {
       // CARRYING deletes/d1, so a shared key must stay suppressed (an
       // added-only anti-join would emit it as a false 'insert' and a
       // CDC mirror would resurrect it)
-      val outstanding = mTo.deleteEntries.map(e =>
-        new Path(root, e.rel).toString)
       val unDeleted =
-        if (outstanding.isEmpty) oldKeys
-        else oldKeys.join(spark.read.parquet(outstanding: _*)
-          .select(ks.map(col): _*).distinct(), ks, "left_anti")
+        if (mTo.deleteFiles.isEmpty) oldKeys
+        else oldKeys.join(mTo.deleteKeys(spark), ks, "left_anti")
       val addedSet = added.toSet
       val carried = mTo.dataEntries.map(_.rel)
         .filterNot(addedSet.contains)
@@ -1555,26 +1561,23 @@ object ManifestTable {
     * Returns (newVersion, filesBefore, filesAfter). */
   def optimize(spark: SparkSession, root: String, clusterCol: String,
                targetFiles: Int): (Int, Int, Int) =
-    optimizeImpl(spark, root, clusterCol, targetFiles)
+    optimizeImpl(spark, resolve(spark, root), clusterCol, targetFiles)
 
   def optimizeBySize(spark: SparkSession, root: String, clusterCol: String,
                      targetFileBytes: Long): (Int, Int, Int) = {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
-    val stats = fileStats(spark, root)
+    val base = resolve(spark, root)
+    val bytes = base.dataEntries.map(_.bytes)
     val n =
-      if (stats.exists(_._4.isEmpty)) stats.size
-      else {
-        val total = stats.map(_._4.get).sum
-        math.max(1, ((total + targetFileBytes - 1) / targetFileBytes).toInt)
-      }
-    optimizeImpl(spark, root, clusterCol, n)
+      if (bytes.exists(_.isEmpty)) bytes.size
+      else math.max(1,
+        ((bytes.flatten.sum + targetFileBytes - 1) / targetFileBytes).toInt)
+    optimizeImpl(spark, base, clusterCol, n)
   }
 
-  private def optimizeImpl(spark: SparkSession, root: String,
+  private def optimizeImpl(spark: SparkSession, base: Snapshot,
                            clusterCol: String,
                            targetFiles: Int): (Int, Int, Int) = {
-    val fs = fsOf(spark, new Path(root))
-    val base = snapshot(spark, root)
     // the rewrite clusters on clusterCol, so stamp bounds on it — every
     // line is fresh, so the header switches cleanly. Stamping by DEFAULT
     // also prevents the silent downgrade where compacting a
@@ -1585,36 +1588,37 @@ object ManifestTable {
     val pinned = base.read(spark)
     val stampCol = Some(clusterCol)
       .filter(c => isIntegral(pinned.schema(c).dataType))
-    // ONE manifest parse for everything the compaction must preserve
-    val m = loadManifest(fs, root, base.version)
-    // the table's bloom AND extra-stats declarations survive a
-    // compaction: every line is fresh, so re-stamp both for the new
-    // files — compacting must never silently strip a pruning tier
-    def stampable(k: String) = pinned.schema.fieldNames.contains(k) &&
-      scala.util.Try(statExpr(pinned.schema, k)).isSuccess
-    val bloomCs = m.bloomCols.filter(stampable)
-    val statsCs = m.statsCols.filter(stampable)
-    val staged = stage(spark, root, dir =>
-      pinned
-        .repartitionByRange(targetFiles, col(clusterCol))
-        .sortWithinPartitions(clusterCol)
-        .write.parquet(dir), boundsCol = stampCol,
-      statsCols = statsCs, bloomCols = bloomCs)
-    val headers = boundsHeader(stampCol) ++
-      (if (bloomCs.nonEmpty) Map(BloomKey -> bloomCs.mkString(","))
-       else Map.empty[String, String]) ++
-      (if (statsCs.nonEmpty) Map(StatsKey -> statsCs.mkString(","))
-       else Map.empty[String, String]) ++
-      // writer markers + constraints: compaction must not amnesia a
-      // sink's cursor or shed the table's invariants
-      carriedHeaders(m.headers) ++
-      base.schema.map(SchemaKey -> _.json).toMap + (KindKey -> "compact")
-    if (!tryCommit(fs, root, base.version + 1, staged, headers))
-      throw new java.util.ConcurrentModificationException(
-        s"optimize of $root lost the commit race for version " +
-          s"${base.version + 1}; rerun against the new base")
-    (base.version + 1, base.files.size, staged.size)
+    compact(spark, base, pinned, col(clusterCol), targetFiles, stampCol,
+      base.statsCols.filter(stampable(pinned.schema, _)), "optimize")
   }
+
+  /** The compaction both OPTIMIZE shapes commit: `base`'s rows (read
+    * through its deletes, which the commit then drops) range-partitioned
+    * into `targetFiles` files sorted on `sortKey`. Every line is fresh,
+    * so the bounds/stats/bloom declarations are re-stamped for the new
+    * files — compacting must never silently strip a pruning tier — and
+    * writer markers, constraints and tags carry over: compaction must
+    * not amnesia a sink's cursor or shed the table's invariants.
+    * Returns (newVersion, filesBefore, filesAfter). */
+  private def compact(spark: SparkSession, base: Snapshot,
+                      pinned: DataFrame, sortKey: Column, targetFiles: Int,
+                      boundsCol: Option[String], statsCols: Seq[String],
+                      what: String): (Int, Int, Int) = {
+    val bloomCs = base.bloomCols.filter(stampable(pinned.schema, _))
+    val staged = stage(spark, base.root, dir =>
+      pinned
+        .repartitionByRange(targetFiles, sortKey)
+        .sortWithinPartitions(sortKey)
+        .write.parquet(dir), boundsCol = boundsCol,
+      statsCols = statsCols, bloomCols = bloomCs)
+    val headers = boundsHeader(boundsCol) ++
+      colsHeader(BloomKey, bloomCs) ++ colsHeader(StatsKey, statsCols) ++
+      carriedHeaders(base.headers) ++
+      base.schema.map(SchemaKey -> _.json).toMap + (KindKey -> "compact")
+    (commitNext(spark, base, staged, headers, s"$what of ${base.root}"),
+      base.files.size, staged.size)
+  }
+
 
   /** OPTIMIZE ZORDER BY (Delta's shape): the transactional compaction
     * with a TWO-dimensional layout — see [[optimizeZOrderCols]], the
@@ -1651,9 +1655,7 @@ object ManifestTable {
     require(cols.size <= 6,
       s"z-order supports at most 6 dimensions (10 bucket bits each " +
         s"in one signed long), got ${cols.size}")
-    val fs = fsOf(spark, new Path(root))
-    val base = snapshot(spark, root)
-    val m = loadManifest(fs, root, base.version)
+    val base = resolve(spark, root)
     val pinned = base.read(spark)
     // the z-bucket needs each dimension as an exact LONG expression in
     // its stats unit — the same unit statExpr stamps, so the stamped
@@ -1681,25 +1683,8 @@ object ManifestTable {
         (hi - lo + 1).toString, "DIV"))
     }
     val zv = ZOrderLayout.zValueN(buckets)
-    def stampable(k: String) = pinned.schema.fieldNames.contains(k) &&
-      scala.util.Try(statExpr(pinned.schema, k)).isSuccess
-    val bloomCs = m.bloomCols.filter(stampable)
-    val staged = stage(spark, root, dir =>
-      pinned
-        .repartitionByRange(targetFiles, zv)
-        .sortWithinPartitions(zv)
-        .write.parquet(dir),
-      statsCols = cols, bloomCols = bloomCs)
-    val headers = Map(StatsKey -> cols.mkString(",")) ++
-      (if (bloomCs.nonEmpty) Map(BloomKey -> bloomCs.mkString(","))
-       else Map.empty[String, String]) ++
-      carriedHeaders(m.headers) ++
-      base.schema.map(SchemaKey -> _.json).toMap + (KindKey -> "compact")
-    if (!tryCommit(fs, root, base.version + 1, staged, headers))
-      throw new java.util.ConcurrentModificationException(
-        s"optimizeZOrder of $root lost the commit race for version " +
-          s"${base.version + 1}; rerun against the new base")
-    (base.version + 1, base.files.size, staged.size)
+    compact(spark, base, pinned, zv, targetFiles, None, cols,
+      "optimizeZOrder")
   }
 
   /** COPY-ON-WRITE MERGE — the `MERGE INTO` shape the public table
@@ -1730,14 +1715,8 @@ object ManifestTable {
     * (newVersion, filesCarried, filesRewritten). */
   /** The table's declared CHECK constraints, name → SQL expression. */
   def constraintsOf(spark: SparkSession, root: String)
-      : Map[String, String] = {
-    val fs = fsOf(spark, new Path(root))
-    currentVersion(spark, root)
-      .map(v => loadManifest(fs, root, v).headers.collect {
-        case (k, v2) if k.startsWith(ConstraintPrefix) =>
-          k.stripPrefix(ConstraintPrefix) -> v2
-      }.toMap).getOrElse(Map.empty)
-  }
+      : Map[String, String] =
+    resolveOption(spark, root).map(_.constraints).getOrElse(Map.empty)
 
   /** A row violates only when the expression is FALSE (SQL-standard
     * CHECK semantics: NULL passes). One `take(1)` job per constraint —
@@ -1762,34 +1741,21 @@ object ManifestTable {
     requireTxnId(name) // same identifier alphabet
     require(!exprSql.contains('\n') && !exprSql.contains('\t'),
       "constraint expression must be a single line (header format)")
-    val fs = fsOf(spark, new Path(root))
-    val v = currentVersion(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"no committed version under $root"))
-    validateConstraints(read(spark, root), Map(name -> exprSql),
+    val s = resolve(spark, root)
+    validateConstraints(s.read(spark), Map(name -> exprSql),
       s"existing data of $root")
-    val m = loadManifest(fs, root, v)
-    if (!tryCommit(fs, root, v + 1, m.entryLines,
-        m.headers + ((ConstraintPrefix + name) -> exprSql) +
-          (KindKey -> "metadata")))
-      throw new java.util.ConcurrentModificationException(
-        s"addConstraint on $root lost the commit race; rerun")
-    v + 1
+    commitHeaders(spark, s,
+      s.headers + ((ConstraintPrefix + name) -> exprSql), "addConstraint")
   }
 
   /** Drop a CHECK constraint — header-only commit, zero data IO. */
   def dropConstraint(spark: SparkSession, root: String,
                      name: String): Int = {
-    val fs = fsOf(spark, new Path(root))
-    val v = currentVersion(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"no committed version under $root"))
-    val m = loadManifest(fs, root, v)
-    require(m.headers.contains(ConstraintPrefix + name),
+    val s = resolve(spark, root)
+    require(s.constraints.contains(name),
       s"no constraint named $name on $root")
-    if (!tryCommit(fs, root, v + 1, m.entryLines,
-        m.headers - (ConstraintPrefix + name) + (KindKey -> "metadata")))
-      throw new java.util.ConcurrentModificationException(
-        s"dropConstraint on $root lost the commit race; rerun")
-    v + 1
+    commitHeaders(spark, s, s.headers - (ConstraintPrefix + name),
+      "dropConstraint")
   }
 
   /** ADD-COLUMN SCHEMA EVOLUTION AS A HEADER-ONLY COMMIT (`ALTER TABLE
@@ -1809,12 +1775,8 @@ object ManifestTable {
     require(cols.map(_.name.toLowerCase).distinct.size == cols.size,
       s"addColumns to $root: duplicate new column names " +
         cols.map(_.name).mkString(", "))
-    val fs = fsOf(spark, new Path(root))
-    val v = currentVersion(spark, root).getOrElse(
-      throw new IllegalArgumentException(
-        s"no committed version under $root"))
-    val m = loadManifest(fs, root, v)
-    val stored = m.schema.getOrElse(
+    val s = resolve(spark, root)
+    val stored = s.schema.getOrElse(
       throw new UnsupportedOperationException(
         s"$root has no committed #schema= header (legacy table) — " +
           "any append/overwrite stamps one; evolve after that"))
@@ -1828,7 +1790,7 @@ object ManifestTable {
     // high-water mark (never a reused id — a re-added name must not
     // resurface the dropped column's old values); legacy tables stay
     // id-less (any foreign metadata stripped)
-    val mx = maxFieldIdOf(m.headers, Some(stored))
+    val mx = maxFieldIdOf(s.headers, Some(stored))
     val added =
       if (hasFieldIds(stored))
         cols.zipWithIndex.map { case (f, i) =>
@@ -1839,12 +1801,8 @@ object ManifestTable {
       if (hasFieldIds(stored))
         Map(MaxFieldIdKey -> (mx + cols.length).toString)
       else Map.empty[String, String]
-    if (!tryCommit(fs, root, v + 1, m.entryLines,
-        m.headers ++ maxHdr + (SchemaKey -> widened.json) +
-          (KindKey -> "metadata")))
-      throw new java.util.ConcurrentModificationException(
-        s"addColumns on $root lost the commit race; rerun")
-    v + 1
+    commitHeaders(spark, s,
+      s.headers ++ maxHdr + (SchemaKey -> widened.json), "addColumns")
   }
 
   /** The shared gate for header-only schema evolution: the column must
@@ -1857,11 +1815,11 @@ object ManifestTable {
     * WIDENING does not (the name never changes, so by-name resolution
     * of the narrow physical column under the wide requested type stays
     * sound on legacy tables too). */
-  private def requireIdEvolvable(spark: SparkSession, root: String,
-                                 m: ManifestData, colName: String,
-                                 what: String,
+  private def requireIdEvolvable(spark: SparkSession, s: Snapshot,
+                                 colName: String, what: String,
                                  needIds: Boolean = true): StructType = {
-    val stored = m.schema.getOrElse(
+    val root = s.root
+    val stored = s.schema.getOrElse(
       throw new UnsupportedOperationException(
         s"$what on $root: no committed #schema= header (legacy " +
           "table) — any append/overwrite stamps one; evolve after " +
@@ -1880,10 +1838,10 @@ object ManifestTable {
     require(stored.fieldNames.contains(colName),
       s"$what on $root: no column named $colName " +
         s"(have ${stored.fieldNames.mkString(", ")})")
-    Seq("the bounds column" -> m.boundsCol.toSeq,
-      "a stats column" -> m.statsCols,
-      "a bloom column" -> m.bloomCols,
-      "a delete column" -> m.deleteCols).foreach { case (role, cols) =>
+    Seq("the bounds column" -> s.boundsCol.toSeq,
+      "a stats column" -> s.statsCols,
+      "a bloom column" -> s.bloomCols,
+      "a delete column" -> s.deleteCols).foreach { case (role, cols) =>
       if (cols.contains(colName)) throw new UnsupportedOperationException(
         s"$what on $root: $colName is $role — pruning/delete headers " +
           "attribute by name; retire the role first (optimize / " +
@@ -1891,11 +1849,11 @@ object ManifestTable {
     }
     val token = ("(?i)(?<![A-Za-z0-9_])" +
       java.util.regex.Pattern.quote(colName) + "(?![A-Za-z0-9_])").r
-    m.headers.foreach { case (k, v) =>
-      if (k.startsWith(ConstraintPrefix) && token.findFirstIn(v).isDefined)
+    s.constraints.foreach { case (name, sql) =>
+      if (token.findFirstIn(sql).isDefined)
         throw new UnsupportedOperationException(
           s"$what on $root: column $colName is referenced by CHECK " +
-            s"constraint ${k.stripPrefix(ConstraintPrefix)} ('$v') — " +
+            s"constraint $name ('$sql') — " +
             "drop the constraint, evolve, then re-declare it")
     }
     stored
@@ -1911,22 +1869,15 @@ object ManifestTable {
                    from: String, to: String): Int = {
     require(to.nonEmpty && !to.exists(c => c == '\n' || c == '\t'),
       s"renameColumn: invalid target name '$to'")
-    val fs = fsOf(spark, new Path(root))
-    val v = currentVersion(spark, root).getOrElse(
-      throw new IllegalArgumentException(
-        s"no committed version under $root"))
-    val m = loadManifest(fs, root, v)
-    val stored = requireIdEvolvable(spark, root, m, from, "renameColumn")
+    val s = resolve(spark, root)
+    val stored = requireIdEvolvable(spark, s, from, "renameColumn")
     require(from == to ||
       !stored.fieldNames.exists(n => n.equalsIgnoreCase(to) && n != from),
       s"renameColumn on $root: a column named $to already exists")
     val renamed = StructType(stored.fields.map(f =>
       if (f.name == from) f.copy(name = to) else f))
-    if (!tryCommit(fs, root, v + 1, m.entryLines,
-        m.headers + (SchemaKey -> renamed.json) + (KindKey -> "metadata")))
-      throw new java.util.ConcurrentModificationException(
-        s"renameColumn on $root lost the commit race; rerun")
-    v + 1
+    commitHeaders(spark, s, s.headers + (SchemaKey -> renamed.json),
+      "renameColumn")
   }
 
   /** DROP AS A PROJECTION MASK: the field leaves the committed schema
@@ -1938,20 +1889,13 @@ object ManifestTable {
     * committed schema). */
   def dropColumn(spark: SparkSession, root: String,
                  name: String): Int = {
-    val fs = fsOf(spark, new Path(root))
-    val v = currentVersion(spark, root).getOrElse(
-      throw new IllegalArgumentException(
-        s"no committed version under $root"))
-    val m = loadManifest(fs, root, v)
-    val stored = requireIdEvolvable(spark, root, m, name, "dropColumn")
+    val s = resolve(spark, root)
+    val stored = requireIdEvolvable(spark, s, name, "dropColumn")
     require(stored.fields.length > 1,
       s"dropColumn on $root: cannot drop the last column")
     val masked = StructType(stored.fields.filterNot(_.name == name))
-    if (!tryCommit(fs, root, v + 1, m.entryLines,
-        m.headers + (SchemaKey -> masked.json) + (KindKey -> "metadata")))
-      throw new java.util.ConcurrentModificationException(
-        s"dropColumn on $root lost the commit race; rerun")
-    v + 1
+    commitHeaders(spark, s, s.headers + (SchemaKey -> masked.json),
+      "dropColumn")
   }
 
   /** The sound header-only type changes: parquet's physical encodings
@@ -1992,15 +1936,11 @@ object ManifestTable {
     * INSERT casts automatically; Scala callers cast explicitly). */
   def widenColumn(spark: SparkSession, root: String, name: String,
                   to: org.apache.spark.sql.types.DataType): Int = {
-    val fs = fsOf(spark, new Path(root))
-    val v = currentVersion(spark, root).getOrElse(
-      throw new IllegalArgumentException(
-        s"no committed version under $root"))
-    val m = loadManifest(fs, root, v)
-    val stored = requireIdEvolvable(spark, root, m, name, "widenColumn",
+    val s = resolve(spark, root)
+    val stored = requireIdEvolvable(spark, s, name, "widenColumn",
       needIds = false)
     val from = stored(name).dataType
-    if (from == to) return v // idempotent no-op, no empty commit
+    if (from == to) return s.version // idempotent no-op, no empty commit
     if (!Widenable.get(from).exists(_.contains(to)))
       throw new UnsupportedOperationException(
         s"widenColumn on $root: $name: ${from.simpleString} -> " +
@@ -2010,11 +1950,8 @@ object ManifestTable {
           "rewrite: CREATE a new table from a cast SELECT")
     val widened = StructType(stored.fields.map(f =>
       if (f.name == name) f.copy(dataType = to) else f))
-    if (!tryCommit(fs, root, v + 1, m.entryLines,
-        m.headers + (SchemaKey -> widened.json) + (KindKey -> "metadata")))
-      throw new java.util.ConcurrentModificationException(
-        s"widenColumn on $root lost the commit race; rerun")
-    v + 1
+    commitHeaders(spark, s, s.headers + (SchemaKey -> widened.json),
+      "widenColumn")
   }
 
   // -------------------------------------------------------------------
@@ -2032,37 +1969,49 @@ object ManifestTable {
   private val BranchManifestName =
     """branch-([A-Za-z0-9_]+)-v(\d{8})\.manifest""".r
 
-  private def branchVersions(fs: FileSystem, root: String,
-                             name: String): Seq[Int] =
-    fs.listStatus(manifestDir(root)).toSeq.map(_.getPath.getName)
-      .collect { case BranchManifestName(n, d) if n == name => d.toInt }
+  private def branchVersionsIn(names: Seq[String], name: String): Seq[Int] =
+    names.collect { case BranchManifestName(n, d) if n == name => d.toInt }
       .sorted
+
+  /** Best-effort delete of branch `name`'s manifests in `s`'s listing;
+    * returns their paths (vacuum sweeps aged stragglers). */
+  private def deleteBranchManifests(spark: SparkSession, s: Snapshot,
+                                    name: String): Seq[Path] = {
+    val fs = fsOf(spark, new Path(s.root))
+    branchVersionsIn(s.listing, name).map { bv =>
+      val p = branchManifestPath(s.root, name, bv)
+      scala.util.Try(fs.delete(p, false))
+      p
+    }
+  }
 
   /** The base version branch `name` forked at; None = no such branch. */
   def branchBase(spark: SparkSession, root: String,
-                 name: String): Option[Int] = {
-    val fs = fsOf(spark, new Path(root))
-    currentVersion(spark, root)
-      .flatMap(v => loadManifest(fs, root, v).headers
-        .get(BranchPrefix + name)).flatMap(_.toIntOption)
-  }
+                 name: String): Option[Int] =
+    resolveOption(spark, root).flatMap(_.branches.get(name))
 
-  /** The branch head: its newest own commit, or (for a just-created
-    * branch) the base version's manifest. */
-  private def branchHeadOf(spark: SparkSession, fs: FileSystem,
-                           root: String, name: String)
-      : (Int, ManifestData) = {
-    val base = branchBase(spark, root, name).getOrElse(
-      throw new IllegalArgumentException(
-        s"no branch named $name on $root"))
-    branchVersions(fs, root, name).filter(_ > base).lastOption
-      .map(v => v -> loadManifestAt(fs,
-        branchManifestPath(root, name, v)))
-      .getOrElse {
-        require(versions(spark, root).contains(base),
+  /** [[resolve]]'s twin for branch heads. */
+  private def resolveBranch(spark: SparkSession, root: String,
+                            name: String): Snapshot =
+    branchHead(spark, resolve(spark, root), name)
+
+  /** The head of branch `name`, from the main head's pointer and
+    * listing: its newest own commit, or (for a just-created branch) the
+    * base version's manifest. */
+  private def branchHead(spark: SparkSession, main: Snapshot,
+                         name: String): Snapshot = {
+    val root = main.root
+    val base = main.branches.getOrElse(name,
+      throw new IllegalArgumentException(s"no branch named $name on $root"))
+    branchVersionsIn(main.listing, name).filter(_ > base).lastOption match {
+      case Some(v) => load(spark, root, main.listing, v,
+        branchManifestPath(root, name, v), Some(name))
+      case None =>
+        require(main.listedVersions.contains(base),
           s"branch $name's base version $base of $root is gone")
-        base -> loadManifest(fs, root, base)
-      }
+        load(spark, root, main.listing, base, manifestPath(root, base),
+          Some(name))
+    }
   }
 
   /** Fork a branch at the current (or a retained) version — one
@@ -2070,68 +2019,46 @@ object ManifestTable {
   def createBranch(spark: SparkSession, root: String, name: String,
                    atVersion: Option[Int] = None): Int = {
     requireBranchName(name)
-    val fs = fsOf(spark, new Path(root))
-    val v = currentVersion(spark, root).getOrElse(
-      throw new IllegalArgumentException(
-        s"no committed version under $root"))
-    val m = loadManifest(fs, root, v)
-    require(!m.headers.contains(BranchPrefix + name),
+    val s = resolve(spark, root)
+    require(!s.headers.contains(BranchPrefix + name),
       s"branch $name already exists on $root")
-    require(!m.headers.contains(TagPrefix + name),
+    require(!s.headers.contains(TagPrefix + name),
       s"cannot create branch $name on $root: a TAG of that name " +
         "exists — 'VERSION AS OF' resolution must stay unambiguous")
     // stale manifests from a previously dropped/published same-named
     // branch (best-effort cleanup can fail on a flaky store) would be
     // picked up as the NEW branch's head — clean them, and refuse to
     // fork until none survive
-    branchVersions(fs, root, name).foreach(bv =>
-      scala.util.Try(fs.delete(branchManifestPath(root, name, bv), false)))
-    require(branchVersions(fs, root, name).isEmpty,
+    val fs = fsOf(spark, new Path(root))
+    require(!deleteBranchManifests(spark, s, name).exists(fs.exists),
       s"stale branch-$name manifests survive under $root and could " +
         "not be deleted — remove them (vacuum) before re-creating " +
         "the branch")
-    val target = atVersion.getOrElse(v)
-    require(versions(spark, root).contains(target),
+    val target = atVersion.getOrElse(s.version)
+    require(s.listedVersions.contains(target),
       s"cannot branch $root at $target — not a retained version")
-    if (!tryCommit(fs, root, v + 1, m.entryLines,
-        m.headers + ((BranchPrefix + name) -> target.toString) +
-          (KindKey -> "metadata")))
-      throw new java.util.ConcurrentModificationException(
-        s"createBranch on $root lost the commit race; rerun")
-    v + 1
+    commitHeaders(spark, s,
+      s.headers + ((BranchPrefix + name) -> target.toString), "createBranch")
   }
 
   /** Abandon a branch: remove the pointer (header-only commit), then
     * best-effort delete its manifests (vacuum sweeps aged stragglers —
     * their files stop being referenced the moment the pointer dies). */
   def dropBranch(spark: SparkSession, root: String, name: String): Int = {
-    val fs = fsOf(spark, new Path(root))
-    val v = currentVersion(spark, root).getOrElse(
-      throw new IllegalArgumentException(
-        s"no committed version under $root"))
-    val m = loadManifest(fs, root, v)
-    require(m.headers.contains(BranchPrefix + name),
+    val s = resolve(spark, root)
+    require(s.headers.contains(BranchPrefix + name),
       s"no branch named $name on $root")
-    if (!tryCommit(fs, root, v + 1, m.entryLines,
-        m.headers - (BranchPrefix + name) + (KindKey -> "metadata")))
-      throw new java.util.ConcurrentModificationException(
-        s"dropBranch on $root lost the commit race; rerun")
-    branchVersions(fs, root, name).foreach(bv =>
-      scala.util.Try(fs.delete(branchManifestPath(root, name, bv), false)))
-    v + 1
+    val v = commitHeaders(spark, s, s.headers - (BranchPrefix + name),
+      "dropBranch")
+    deleteBranchManifests(spark, s, name)
+    v
   }
 
   /** The branch head as a DataFrame — the AUDIT read (`VERSION AS OF
     * '<branch>'` through the SQL catalog resolves here too). */
   def readBranch(spark: SparkSession, root: String,
-                 name: String): DataFrame = {
-    val fs = fsOf(spark, new Path(root))
-    val (v, m) = branchHeadOf(spark, fs, root, name)
-    Snapshot(v, m.dataEntries.map(e => new Path(root, e.rel).toString),
-      m.schema,
-      m.deleteEntries.map(e => new Path(root, e.rel).toString),
-      m.deleteCols).read(spark)
-  }
+                 name: String): DataFrame =
+    resolveBranch(spark, root, name).read(spark)
 
   /** Append to a BRANCH: stages data files in the shared `data/` dir
     * (publish carries lines, never copies bytes) and commits a branch
@@ -2141,9 +2068,8 @@ object ManifestTable {
     * guard and CHECK constraints hold exactly as on main. */
   def appendToBranch(spark: SparkSession, root: String, name: String,
                      df: DataFrame): Int = {
-    val fs = fsOf(spark, new Path(root))
-    val (headV, m) = branchHeadOf(spark, fs, root, name)
-    m.schema.foreach { stored =>
+    val head = resolveBranch(spark, root, name)
+    head.schema.foreach { stored =>
       require(stored.fieldNames.toSeq == df.schema.fieldNames.toSeq &&
         stored.fields.map(_.dataType).toSeq ==
           df.schema.fields.map(_.dataType).toSeq,
@@ -2152,38 +2078,21 @@ object ManifestTable {
           "branch-side evolution is not supported; evolve on main " +
           "and re-branch")
     }
-    if (m.deleteEntries.nonEmpty && m.deleteCols.nonEmpty) {
-      val ks = m.deleteCols
-      val delKeys = spark.read.parquet(m.deleteEntries.map(e =>
-          new Path(root, e.rel).toString): _*)
-        .select(ks.map(col): _*).distinct()
-      require(df.join(delKeys, ks, "left_semi").take(1).isEmpty,
-        s"append to branch $name of $root would resurrect " +
-          s"equality-deleted (${ks.mkString(", ")}) tuples")
-    }
-    validateConstraints(df, m.headers.collect {
-      case (hk, hv) if hk.startsWith(ConstraintPrefix) =>
-        hk.stripPrefix(ConstraintPrefix) -> hv
-    }.toMap, s"append to branch $name of $root")
-    val effBounds = m.boundsCol.filter(b =>
+    head.requireNoDeletedKeys(spark, df,
+      s"append to branch $name of $root would resurrect " +
+        s"equality-deleted (${head.deleteCols.mkString(", ")}) tuples")
+    validateConstraints(df, head.constraints,
+      s"append to branch $name of $root")
+    val effBounds = head.boundsCol.filter(b =>
       df.schema.fieldNames.contains(b) &&
         isIntegral(df.schema(b).dataType))
-    val effBloom = m.bloomCols.filter(k =>
-      df.schema.fieldNames.contains(k) &&
-        scala.util.Try(statExpr(df.schema, k)).isSuccess)
-    val dfOut = m.schema.map(alignToSchema(df, _)).getOrElse(df)
+    val effBloom = head.bloomCols.filter(stampable(df.schema, _))
+    val dfOut = head.schema.map(alignToSchema(df, _)).getOrElse(df)
     val staged = stage(spark, root, dir => dfOut.write.parquet(dir),
       boundsCol = effBounds, bloomCols = effBloom)
-    // branch manifests never carry branch pointers (pointers live on
-    // the MAIN chain only — a published branch must not smuggle them)
-    val headers = m.headers.filterNot(_._1.startsWith(BranchPrefix)) +
-      (KindKey -> "append")
-    if (!tryCommitPath(fs, root,
-        branchManifestPath(root, name, headV + 1),
-        m.entryLines ++ staged, headers))
-      throw new java.util.ConcurrentModificationException(
-        s"append to branch $name of $root lost the commit race; rerun")
-    headV + 1
+    commitNext(spark, head, head.entryLines ++ staged,
+      head.headers + (KindKey -> "append"),
+      s"append to branch $name of $root")
   }
 
   /** PUBLISH (the write-audit-publish promotion): the branch's net
@@ -2201,13 +2110,10 @@ object ManifestTable {
     * with the publish commit. */
   def publishBranch(spark: SparkSession, root: String,
                     name: String): Int = {
-    val fs = fsOf(spark, new Path(root))
-    val base = branchBase(spark, root, name).getOrElse(
-      throw new IllegalArgumentException(
-        s"no branch named $name on $root"))
-    val mainV = currentVersion(spark, root).get
-    val mBase = loadManifest(fs, root, base)
-    val mMain = loadManifest(fs, root, mainV)
+    val mMain = resolve(spark, root)
+    val base = mMain.branches.getOrElse(name,
+      throw new IllegalArgumentException(s"no branch named $name on $root"))
+    val mBase = mMain.at(spark, base)
     // SOUNDNESS PROOF, from base + main alone (vacuumed intermediate
     // manifests never block an otherwise-sound publish): main may only
     // have ADDED lines since the base — appends, metadata commits, and
@@ -2222,15 +2128,13 @@ object ManifestTable {
         "fork (a compact/merge/rowdelete/restore moved the base out " +
         "from under the staged diff) — re-branch from the new head " +
         "and re-apply")
-    val (headV, mHead) = branchHeadOf(spark, fs, root, name)
-    require(headV > base,
+    val mHead = branchHead(spark, mMain, name)
+    require(mHead.version > base,
       s"branch $name of $root has no commits to publish")
     require(mMain.headers.get(SchemaKey) == mBase.headers.get(SchemaKey),
       s"publish of branch $name on $root: the main schema changed " +
         "since the base — re-branch and re-apply")
-    def constraintsOf(h: Map[String, String]) =
-      h.filter(_._1.startsWith(ConstraintPrefix))
-    require(constraintsOf(mMain.headers) == constraintsOf(mBase.headers),
+    require(mMain.constraints == mBase.constraints,
       s"publish of branch $name on $root: constraints changed since " +
         "the base — the branch's rows were never validated against " +
         "them; re-branch and re-apply")
@@ -2264,7 +2168,7 @@ object ManifestTable {
     // header iff any delete line remains, from whichever side declares
     // it.
     val outHasDeletes = outLines.exists(l =>
-      parseEntry(l).isDelete)
+      parseEntry(l).exists(_.isDelete))
     val deleteHdr: Map[String, String] =
       if (!outHasDeletes) Map.empty
       else Map(DeleteKey -> mMain.headers.get(DeleteKey)
@@ -2274,12 +2178,10 @@ object ManifestTable {
             "published manifest but neither side declares #deletecol")))
     val cleaned = (mMain.headers - (BranchPrefix + name) - DeleteKey) ++
       deleteHdr + (KindKey -> "publish")
-    if (!tryCommit(fs, root, mainV + 1, outLines, cleaned))
-      throw new java.util.ConcurrentModificationException(
-        s"publish of branch $name on $root lost the commit race; rerun")
-    branchVersions(fs, root, name).foreach(bv =>
-      scala.util.Try(fs.delete(branchManifestPath(root, name, bv), false)))
-    mainV + 1
+    val v = commitNext(spark, mMain, outLines, cleaned,
+      s"publish of branch $name on $root")
+    deleteBranchManifests(spark, mMain, name)
+    v
   }
 
   /** One committed version's summary: when it landed (its MONOTONIZED
@@ -2303,23 +2205,17 @@ object ManifestTable {
     * resolves to exactly itself. */
   def history(spark: SparkSession, root: String): Seq[CommitInfo] = {
     val fs = fsOf(spark, new Path(root))
+    val names = listing(spark, root)
     var prevTs = Long.MinValue
-    versions(spark, root).map { v =>
-      val m = loadManifest(fs, root, v)
+    mainVersions(names).map { v =>
+      val s = load(spark, root, names, v, manifestPath(root, v))
       val mtime = fs.getFileStatus(manifestPath(root, v))
         .getModificationTime
       val eff = if (prevTs == Long.MinValue) mtime
                 else math.max(prevTs + 1, mtime)
       prevTs = eff
-      val des = m.entries.count(_.isDelete)
-      // row count from the SAME parse ([[rowCountFromStats]]' rule:
-      // None under outstanding deletes or pre-v3 lines)
-      val rows =
-        if (des > 0 || m.entries.isEmpty ||
-            m.entries.exists(_.rows.isEmpty)) None
-        else Some(m.entries.map(_.rows.get).sum)
-      CommitInfo(v, eff, m.entries.size - des, des, rows,
-        m.headers.get(KindKey))
+      CommitInfo(v, eff, s.files.size, s.deleteFiles.size, s.rowCount,
+        s.headers.get(KindKey))
     }
   }
 
@@ -2349,15 +2245,8 @@ object ManifestTable {
   }
 
   /** The table's named tags, name → version (see [[TagPrefix]]). */
-  def tags(spark: SparkSession, root: String): Map[String, Int] = {
-    val fs = fsOf(spark, new Path(root))
-    currentVersion(spark, root)
-      .map(v => loadManifest(fs, root, v).headers.collect {
-        case (k, hv) if k.startsWith(TagPrefix) &&
-            hv.toIntOption.isDefined =>
-          k.stripPrefix(TagPrefix) -> hv.toInt
-      }.toMap).getOrElse(Map.empty)
-  }
+  def tags(spark: SparkSession, root: String): Map[String, Int] =
+    resolveOption(spark, root).map(_.tags).getOrElse(Map.empty)
 
   /** The table's live branches as declared on the CURRENT version:
     * (name, base version, staged branch commits) — O(headers) + one
@@ -2366,17 +2255,10 @@ object ManifestTable {
     * correctly drops the branch from this listing until restored
     * back). */
   def branches(spark: SparkSession,
-               root: String): Seq[(String, Int, Int)] = {
-    val fs = fsOf(spark, new Path(root))
-    currentVersion(spark, root).toSeq.flatMap { v =>
-      loadManifest(fs, root, v).headers.collect {
-        case (k, b) if k.startsWith(BranchPrefix) &&
-            b.toIntOption.isDefined =>
-          val name = k.stripPrefix(BranchPrefix)
-          (name, b.toInt, branchVersions(fs, root, name).size)
-      }.toSeq.sortBy(_._1)
-    }
-  }
+               root: String): Seq[(String, Int, Int)] =
+    resolveOption(spark, root).toSeq.flatMap(s => s.branches.toSeq.map {
+      case (name, b) => (name, b, branchVersionsIn(s.listing, name).size)
+    }).sortBy(_._1)
 
   /** Tag `version` as `name` — a header-only commit (entry lines
     * verbatim, zero data IO). The tagged version becomes a vacuum
@@ -2392,56 +2274,40 @@ object ManifestTable {
     require(!name.forall(_.isDigit),
       s"tag name '$name' is all digits — VERSION AS OF would resolve " +
         "it as a version number, never the tag; pick a non-numeric name")
-    val fs = fsOf(spark, new Path(root))
-    val vs = versions(spark, root)
-    require(vs.contains(version),
+    val s = resolve(spark, root)
+    require(s.listedVersions.contains(version),
       s"cannot tag version $version of $root " +
-        s"(have ${vs.mkString(",")}) — vacuumed or never committed")
-    val m = loadManifest(fs, root, vs.last)
-    if (!tryCommit(fs, root, vs.last + 1, m.entryLines,
-        m.headers + ((TagPrefix + name) -> version.toString) +
-          (KindKey -> "metadata")))
-      throw new java.util.ConcurrentModificationException(
-        s"addTag on $root lost the commit race; rerun")
-    vs.last + 1
+        s"(have ${s.listedVersions.mkString(",")}) — vacuumed or never " +
+        "committed")
+    commitHeaders(spark, s,
+      s.headers + ((TagPrefix + name) -> version.toString), "addTag")
   }
 
   /** Drop tag `name` — header-only commit; the tagged version becomes
     * vacuum-collectable again. */
   def removeTag(spark: SparkSession, root: String, name: String): Int = {
-    val fs = fsOf(spark, new Path(root))
-    val v = currentVersion(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"no committed version under $root"))
-    val m = loadManifest(fs, root, v)
-    require(m.headers.contains(TagPrefix + name),
+    val s = resolve(spark, root)
+    require(s.headers.contains(TagPrefix + name),
       s"no tag named $name on $root")
-    if (!tryCommit(fs, root, v + 1, m.entryLines,
-        m.headers - (TagPrefix + name) + (KindKey -> "metadata")))
-      throw new java.util.ConcurrentModificationException(
-        s"removeTag on $root lost the commit race; rerun")
-    v + 1
+    commitHeaders(spark, s, s.headers - (TagPrefix + name), "removeTag")
   }
 
   /** The table exactly as of the version tag `name` pins. */
   def readAtTag(spark: SparkSession, root: String,
                 name: String): DataFrame = {
-    val t = tags(spark, root)
-    require(t.contains(name),
+    val s = resolve(spark, root)
+    require(s.tags.contains(name),
       s"no tag named $name on $root " +
-        s"(have ${t.keys.toSeq.sorted.mkString(", ")})")
-    readAt(spark, root, t(name))
+        s"(have ${s.tags.keys.toSeq.sorted.mkString(", ")})")
+    s.at(spark, s.tags(name)).read(spark)
   }
 
   /** The newest committed version marker of writer `appId` (see
     * [[TxnPrefix]]); None = this application never committed here. */
   def lastTxnVersion(spark: SparkSession, root: String,
-                     appId: String): Option[Long] = {
-    val fs = fsOf(spark, new Path(root))
-    currentVersion(spark, root)
-      .flatMap(v => loadManifest(fs, root, v)
-        .headers.get(TxnPrefix + appId))
-      .flatMap(_.toLongOption)
-  }
+                     appId: String): Option[Long] =
+    resolveOption(spark, root)
+      .flatMap(_.headers.get(TxnPrefix + appId)).flatMap(_.toLongOption)
 
   private def requireTxnId(appId: String): Unit =
     require(appId.nonEmpty && appId.forall(c =>
@@ -2490,14 +2356,7 @@ object ManifestTable {
     val fs = fsOf(spark, new Path(root))
     // on a BRANCH the merge reads and commits against the branch head
     // (write-audit-publish: invisible to main until publishBranch)
-    val (baseVersion, m) = branch match {
-      case Some(b) => branchHeadOf(spark, fs, root, b)
-      case None =>
-        val v = currentVersion(spark, root)
-          .getOrElse(throw new IllegalArgumentException(
-            s"no committed version under $root"))
-        v -> loadManifest(fs, root, v)
-    }
+    val m = branch.fold(resolve(spark, root))(resolveBranch(spark, root, _))
     // DELETE SEQUENCING (the Iceberg per-snapshot-sequencing shape): a
     // merge over outstanding merge-on-read deletes is sound exactly
     // when the delete column-SET is the merge key-set — then (a)
@@ -2509,7 +2368,7 @@ object ManifestTable {
     // consolidated into one fresh delta-sized delete file. A merge
     // keyed on a DIFFERENT column-set cannot reconcile the two key
     // spaces and is still rejected.
-    require(m.deleteEntries.isEmpty || m.deleteCols == keyCols,
+    require(m.deleteFiles.isEmpty || m.deleteCols == keyCols,
       s"$root carries outstanding equality deletes on " +
         s"(${m.deleteCols.mkString(", ")}); a copy-on-write merge " +
         s"keyed on (${keyCols.mkString(", ")}) cannot sequence them — " +
@@ -2520,7 +2379,7 @@ object ManifestTable {
     // files
     val entries = m.entriesFor(keyCols.head)
     require(entries.nonEmpty,
-      s"version $baseVersion of $root lists no data files; " +
+      s"version ${m.version} of $root lists no data files; " +
         "use overwrite to (re)populate an emptied table")
     val tableSchema = m.schema
     val changedKeys = removeKeys.select(keyCols.map(col): _*)
@@ -2646,10 +2505,8 @@ object ManifestTable {
     // read once, used thrice (rewrite filter, overlap probe,
     // consolidation)
     val delKeys: Option[DataFrame] =
-      if (m.deleteEntries.isEmpty) None
-      else Some(spark.read.parquet(m.deleteEntries.map(e =>
-          new Path(root, e.rel).toString): _*)
-        .select(keyCols.map(col): _*).distinct().localCheckpoint())
+      if (m.deleteFiles.isEmpty) None
+      else Some(m.deleteKeys(spark).localCheckpoint())
     // align the upserts to the table's column order — and REJECT an
     // upsert that carries columns the table lacks: silently dropping
     // them would lose data (widen the schema via append/overwrite first)
@@ -2664,11 +2521,7 @@ object ManifestTable {
         "evolution) or drop the columns explicitly")
     val up = upserts.select(tableCols.map(col): _*)
     // CHECK constraints gate the upserts BEFORE any rewrite is staged
-    // (from the already-loaded base manifest — no re-parse)
-    validateConstraints(up, m.headers.collect {
-      case (hk, hv) if hk.startsWith(ConstraintPrefix) =>
-        hk.stripPrefix(ConstraintPrefix) -> hv
-    }.toMap, s"mergeCoW upserts into $root")
+    validateConstraints(up, m.constraints, s"mergeCoW upserts into $root")
     // surviving rows of the affected files (neither suppressed by an
     // outstanding delete, nor removed, nor about to be replaced by an
     // upsert of the same key) + the upsert rows
@@ -2690,9 +2543,7 @@ object ManifestTable {
     // bloom sidecars are attributed by COLUMN NAME in their commit dir
     // (not by line position), so carried files keep theirs no matter
     // what happens to the bounds header; the rewrite stamps fresh ones
-    val bloomCs = m.bloomCols.filter(k =>
-      rewritten.schema.fieldNames.contains(k) &&
-        scala.util.Try(statExpr(rewritten.schema, k)).isSuccess)
+    val bloomCs = m.bloomCols.filter(stampable(rewritten.schema, _))
     // staged files must carry the committed schema's field ids —
     // upsert frames come from user DataFrames with no id metadata
     val rewrittenOut = tableSchema.map(alignToSchema(rewritten, _))
@@ -2748,21 +2599,9 @@ object ManifestTable {
       txn.map { case (app, ver) =>
         requireTxnId(app); (TxnPrefix + app) -> ver.toString }.toMap ++
       tableSchema.map(SchemaKey -> _.json).toMap + (KindKey -> "merge")
-    // branch manifests never carry branch pointers (main-chain only)
-    val outHeaders = branch.map(_ =>
-      headers.filterNot(_._1.startsWith(BranchPrefix))).getOrElse(headers)
-    val committed = branch match {
-      case Some(b) => tryCommitPath(fs, root,
-        branchManifestPath(root, b, baseVersion + 1), outLines, outHeaders)
-      case None => tryCommit(fs, root, baseVersion + 1, outLines,
-        outHeaders)
-    }
-    if (!committed)
-      throw new java.util.ConcurrentModificationException(
-        s"merge into $root${branch.map(b => s" (branch $b)")
-          .getOrElse("")} lost the commit race for version " +
-          s"${baseVersion + 1}; rerun against the new base")
-    (baseVersion + 1, carryE.size, staged.size)
+    (commitNext(spark, m, outLines, headers, s"merge into $root" +
+      branch.map(b => s" (branch $b)").getOrElse("")),
+      carryE.size, staged.size)
   }
 
   /** ROW-LEVEL COPY-ON-WRITE DELETE (`DELETE FROM t WHERE p` — the
@@ -2838,14 +2677,12 @@ object ManifestTable {
                            validateCheck: Boolean, kind: String,
                            assignedCols: Seq[String] = Seq.empty)
       : (Int, Int, Int) = {
+    val s = resolve(spark, root)
     val fs = fsOf(spark, new Path(root))
-    val baseVersion = currentVersion(spark, root).getOrElse(
-      throw new IllegalArgumentException(
-        s"no committed version under $root"))
-    val m = loadManifest(fs, root, baseVersion)
-    require(m.dataEntries.nonEmpty,
-      s"version $baseVersion of $root lists no data files")
-    val qToRel = m.dataEntries.map(e =>
+    val data = s.dataEntries
+    require(data.nonEmpty,
+      s"version ${s.version} of $root lists no data files")
+    val qToRel = data.map(e =>
       fs.makeQualified(new Path(root, e.rel)).toString -> e.rel).toMap
     // tag the file name AT THE SCAN, before the delete anti-join: an
     // exchange in that join (delete set above the broadcast threshold)
@@ -2853,70 +2690,65 @@ object ManifestTable {
     // strings, not file names (the same ordering mergeCoW's unbounded
     // probe uses)
     val fileTag = "__graft_input_file" // no collision with table cols
-    val snap = applyDeletes(spark, root,
-      readFiles(spark, m.dataEntries.map(e =>
-          new Path(root, e.rel).toString), m.schema)
-        .withColumn(fileTag, input_file_name()), m)
+    val snap = s.applyDeletes(spark,
+      readFiles(spark, data.map(s.pathOf), s.schema)
+        .withColumn(fileTag, input_file_name()))
     val affectedRels = snap.where(predicate)
       .select(fileTag).distinct()
       .collect().flatMap(r => // O(files) rows — bounded collect
         qToRel.get(fs.makeQualified(new Path(r.getString(0))).toString))
       .toSet
     if (affectedRels.isEmpty)
-      return (baseVersion, m.dataEntries.size, 0)
+      return (s.version, data.size, 0)
     val (rewriteE, carryE) =
-      m.dataEntries.partition(e => affectedRels.contains(e.rel))
-    val affectedRows = applyDeletes(spark, root,
-      readFiles(spark, rewriteE.map(e =>
-        new Path(root, e.rel).toString), m.schema), m)
-    val rewritten = transform(affectedRows)
-    if (validateCheck) validateConstraints(rewritten, m.headers.collect {
-      case (hk, hv) if hk.startsWith(ConstraintPrefix) =>
-        hk.stripPrefix(ConstraintPrefix) -> hv
-    }.toMap, s"rewrite of $root")
+      data.partition(e => affectedRels.contains(e.rel))
+    val rewritten =
+      transform(s.scan(spark, e => affectedRels.contains(e.rel), None))
+    if (validateCheck)
+      validateConstraints(rewritten, s.constraints, s"rewrite of $root")
     // RESURRECTION GUARD, rewrite-side: an assignment that SETs a
     // delete-key column can write a suppressed key INTO the rewritten
     // rows — they would silently vanish from every read (the delete
     // files carry verbatim below). The same guard append runs on
     // incoming rows, run on the rewritten output exactly when an
     // assignment targets a delete-key column (delta×affected-sized).
-    if (m.deleteEntries.nonEmpty &&
-        assignedCols.exists(m.deleteCols.contains)) {
-      val ks = m.deleteCols
-      val delKeys = spark.read.parquet(m.deleteEntries.map(e =>
-          new Path(root, e.rel).toString): _*)
-        .select(ks.map(col): _*).distinct()
-      require(rewritten.join(delKeys, ks, "left_semi").take(1).isEmpty,
-        s"rewrite of $root would SET (${ks.mkString(", ")}) to " +
-          "equality-deleted key(s) — the rewritten rows would be " +
+    if (assignedCols.exists(s.deleteCols.contains))
+      s.requireNoDeletedKeys(spark, rewritten,
+        s"rewrite of $root would SET (${s.deleteCols.mkString(", ")}) " +
+          "to equality-deleted key(s) — the rewritten rows would be " +
           "suppressed by the outstanding delete set on every read; " +
           "run optimize first, or assign a non-deleted key")
-    }
-    def stampable(k: String) = rewritten.schema.fieldNames.contains(k) &&
-      scala.util.Try(statExpr(rewritten.schema, k)).isSuccess
-    val stampCol = m.boundsCol.filter(k =>
+    val stampCol = s.boundsCol.filter(k =>
       rewritten.schema.fieldNames.contains(k) &&
         isIntegral(rewritten.schema(k).dataType))
     // re-align to the committed schema: the transform's replaced
     // columns lost their field-id metadata (and the file tag is
     // dropped here too)
-    val rewrittenOut = m.schema.map(alignToSchema(rewritten, _))
+    val rewrittenOut = s.schema.map(alignToSchema(rewritten, _))
       .getOrElse(rewritten.drop(fileTag))
     val staged = stage(spark, root,
       dir => rewrittenOut.write.parquet(dir), allowEmpty = true,
-      boundsCol = stampCol, statsCols = m.statsCols.filter(stampable),
-      bloomCols = m.bloomCols.filter(stampable))
+      boundsCol = stampCol,
+      statsCols = s.statsCols.filter(stampable(rewritten.schema, _)),
+      bloomCols = s.bloomCols.filter(stampable(rewritten.schema, _)))
     require(carryE.nonEmpty || staged.nonEmpty,
       s"the rewrite would leave $root with no data files; " +
         "use overwrite to truncate a table")
     val outLines = carryE.map(_.line) ++ staged ++
-      m.deleteEntries.map(_.line)
-    if (!tryCommit(fs, root, baseVersion + 1, outLines,
-        m.headers + (KindKey -> kind)))
-      throw new java.util.ConcurrentModificationException(
-        s"rewrite of $root lost the commit race for version " +
-          s"${baseVersion + 1}; rerun against the new base")
-    (baseVersion + 1, carryE.size, staged.size)
+      s.deleteEntries.map(_.line)
+    (commitNext(spark, s, outLines, s.headers + (KindKey -> kind),
+      s"rewrite of $root"), carryE.size, staged.size)
+  }
+
+  /** An emptied directory `prefix` + the input's key under the session
+    * warehouse — where each gated query below rebuilds its table. */
+  private def freshRoot(spark: SparkSession, sfDir: String,
+                        prefix: String): String = {
+    val root = new Path(spark.conf.get("spark.sql.warehouse.dir"),
+      prefix + graft.Tables.dirKey(spark, sfDir))
+    val fs = fsOf(spark, root)
+    if (fs.exists(root)) fs.delete(root, true)
+    root.toString
   }
 
   /** Q152: the manifest lifecycle end-to-end, hash-gated — build the
@@ -2931,11 +2763,7 @@ object ManifestTable {
     * row-identity slip (not just a count slip) hash-visible. */
   def q152ManifestLifecycle(spark: SparkSession,
                             sfDir: String): DataFrame = {
-    val root = new Path(
-      spark.conf.get("spark.sql.warehouse.dir"),
-      "manifest_docs_" + graft.Tables.dirKey(spark, sfDir)).toString
-    val fs = fsOf(spark, new Path(root))
-    if (fs.exists(new Path(root))) fs.delete(new Path(root), true)
+    val root = freshRoot(spark, sfDir, "manifest_docs_")
     val docs = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"), col("text"))
     overwrite(spark, root, docs.where(col("doc_id") % 5 =!= 0))
@@ -2972,11 +2800,7 @@ object ManifestTable {
     * touch every range), so carry-over is exercised by the spec's
     * range-local delta instead. */
   def q155ManifestMerge(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = new Path(
-      spark.conf.get("spark.sql.warehouse.dir"),
-      "manifest_merge_" + graft.Tables.dirKey(spark, sfDir)).toString
-    val fs = fsOf(spark, new Path(root))
-    if (fs.exists(new Path(root))) fs.delete(new Path(root), true)
+    val root = freshRoot(spark, sfDir, "manifest_merge_")
     val docs = graft.Tables.documents(spark, sfDir)
     // bounds-stamped write (manifest format v2): the merge below finds
     // its affected files from the manifest alone, no snapshot scan
@@ -3007,11 +2831,7 @@ object ManifestTable {
     * both engines. */
   def q156ManifestPrunedRead(spark: SparkSession,
                              sfDir: String): DataFrame = {
-    val root = new Path(
-      spark.conf.get("spark.sql.warehouse.dir"),
-      "manifest_pruned_" + graft.Tables.dirKey(spark, sfDir)).toString
-    val fs = fsOf(spark, new Path(root))
-    if (fs.exists(new Path(root))) fs.delete(new Path(root), true)
+    val root = freshRoot(spark, sfDir, "manifest_pruned_")
     val docs = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"), col("text"))
     overwrite(spark, root,
@@ -3050,11 +2870,7 @@ object ManifestTable {
     * since skipping is invisible in the result by design. */
   def q163ManifestBloomPoint(spark: SparkSession,
                              sfDir: String): DataFrame = {
-    val root = new Path(
-      spark.conf.get("spark.sql.warehouse.dir"),
-      "manifest_bloom_" + graft.Tables.dirKey(spark, sfDir)).toString
-    val fs = fsOf(spark, new Path(root))
-    if (fs.exists(new Path(root))) fs.delete(new Path(root), true)
+    val root = freshRoot(spark, sfDir, "manifest_bloom_")
     val li = graft.Tables.lineitem(spark, sfDir)
       .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"))
     overwrite(spark, root,
@@ -3086,11 +2902,7 @@ object ManifestTable {
     * — the apply-at-read and apply-at-compaction paths cannot drift. */
   def q169ManifestEqualityDelete(spark: SparkSession,
                                  sfDir: String): DataFrame = {
-    val root = new Path(
-      spark.conf.get("spark.sql.warehouse.dir"),
-      "manifest_eqdel_" + graft.Tables.dirKey(spark, sfDir)).toString
-    val fs = fsOf(spark, new Path(root))
-    if (fs.exists(new Path(root))) fs.delete(new Path(root), true)
+    val root = freshRoot(spark, sfDir, "manifest_eqdel_")
     val docs = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"))
     overwrite(spark, root,
@@ -3122,11 +2934,7 @@ object ManifestTable {
     * definitions, so a wrong version resolution is hash-fatal. */
   def q173HistoryTimeTravel(spark: SparkSession,
                             sfDir: String): DataFrame = {
-    val root = new Path(
-      spark.conf.get("spark.sql.warehouse.dir"),
-      "manifest_history_" + graft.Tables.dirKey(spark, sfDir)).toString
-    val fs = fsOf(spark, new Path(root))
-    if (fs.exists(new Path(root))) fs.delete(new Path(root), true)
+    val root = freshRoot(spark, sfDir, "manifest_history_")
     val docs = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"))
     overwrite(spark, root, docs.where(pmod(col("doc_id"), lit(3)) === 0))
@@ -3167,11 +2975,7 @@ object ManifestTable {
     * one) is hash-fatal. */
   def q174CheckConstraints(spark: SparkSession,
                            sfDir: String): DataFrame = {
-    val root = new Path(
-      spark.conf.get("spark.sql.warehouse.dir"),
-      "manifest_check_" + graft.Tables.dirKey(spark, sfDir)).toString
-    val fs = fsOf(spark, new Path(root))
-    if (fs.exists(new Path(root))) fs.delete(new Path(root), true)
+    val root = freshRoot(spark, sfDir, "manifest_check_")
     val li = graft.Tables.lineitem(spark, sfDir)
       .select(col("l_orderkey"), col("l_linenumber"),
         col("l_returnflag"),
@@ -3227,11 +3031,7 @@ object ManifestTable {
     * The spec pins the mechanics (consolidated delete file, carried
     * files untouched, optimize afterwards agreeing). */
   def q179MergeOverDeletes(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = new Path(
-      spark.conf.get("spark.sql.warehouse.dir"),
-      "manifest_mergedel_" + graft.Tables.dirKey(spark, sfDir)).toString
-    val fs = fsOf(spark, new Path(root))
-    if (fs.exists(new Path(root))) fs.delete(new Path(root), true)
+    val root = freshRoot(spark, sfDir, "manifest_mergedel_")
     val docs = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text"))
     overwrite(spark, root,
@@ -3264,11 +3064,7 @@ object ManifestTable {
     * the tuple resurrection guard, and the merge rejection are
     * spec-pinned. */
   def q187CompositeDelete(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = new Path(
-      spark.conf.get("spark.sql.warehouse.dir"),
-      "manifest_compdel_" + graft.Tables.dirKey(spark, sfDir)).toString
-    val fs = fsOf(spark, new Path(root))
-    if (fs.exists(new Path(root))) fs.delete(new Path(root), true)
+    val root = freshRoot(spark, sfDir, "manifest_compdel_")
     val li = graft.Tables.lineitem(spark, sfDir)
       .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
         round(col("l_extendedprice") * 100).cast("long").as("price_cents"))
@@ -3315,11 +3111,7 @@ object ManifestTable {
     * pruning, whole-tuple guard, mismatched-key rejection) are
     * spec-pinned. */
   def q191CompositeMerge(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = new Path(
-      spark.conf.get("spark.sql.warehouse.dir"),
-      "manifest_compmerge_" + graft.Tables.dirKey(spark, sfDir)).toString
-    val fs = fsOf(spark, new Path(root))
-    if (fs.exists(new Path(root))) fs.delete(new Path(root), true)
+    val root = freshRoot(spark, sfDir, "manifest_compmerge_")
     val li = graft.Tables.lineitem(spark, sfDir)
       .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
         round(col("l_extendedprice") * 100).cast("long").as("price_cents"))
@@ -3358,11 +3150,7 @@ object ManifestTable {
     * constraint gate on updated values, and carried-vs-rewritten file
     * counts are the spec's pins. */
   def q184UpdateWhere(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = new Path(
-      spark.conf.get("spark.sql.warehouse.dir"),
-      "manifest_update_" + graft.Tables.dirKey(spark, sfDir)).toString
-    val fs = fsOf(spark, new Path(root))
-    if (fs.exists(new Path(root))) fs.delete(new Path(root), true)
+    val root = freshRoot(spark, sfDir, "manifest_update_")
     val docs = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"), col("text"))
     overwrite(spark, root,
@@ -3378,11 +3166,7 @@ object ManifestTable {
   }
 
   def q158SchemaEvolution(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = new Path(
-      spark.conf.get("spark.sql.warehouse.dir"),
-      "manifest_evo_" + graft.Tables.dirKey(spark, sfDir)).toString
-    val fs = fsOf(spark, new Path(root))
-    if (fs.exists(new Path(root))) fs.delete(new Path(root), true)
+    val root = freshRoot(spark, sfDir, "manifest_evo_")
     val docs = graft.Tables.documents(spark, sfDir)
     overwrite(spark, root,
       docs.where(col("doc_id") % 3 =!= 0).select("doc_id", "text"))
@@ -3414,11 +3198,7 @@ object ManifestTable {
     * ManifestTableSpec's pins. */
   def q198FieldIdEvolution(spark: SparkSession,
                            sfDir: String): DataFrame = {
-    val root = new Path(
-      spark.conf.get("spark.sql.warehouse.dir"),
-      "manifest_fid_" + graft.Tables.dirKey(spark, sfDir)).toString
-    val fs = fsOf(spark, new Path(root))
-    if (fs.exists(new Path(root))) fs.delete(new Path(root), true)
+    val root = freshRoot(spark, sfDir, "manifest_fid_")
     val docs = graft.Tables.documents(spark, sfDir)
     overwrite(spark, root,                                       // v1
       docs.where(col("doc_id") % 3 =!= 0).select("doc_id", "text"))
@@ -3468,11 +3248,7 @@ object ManifestTable {
     * /constraint drift, vacuumed gaps), the vacuum retention floor,
     * and dropBranch are ManifestTableSpec's pins. */
   def q199BranchWap(spark: SparkSession, sfDir: String): DataFrame = {
-    val key = graft.Tables.dirKey(spark, sfDir)
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val root = new Path(wh, s"manifest_wap_$key").toString
-    val fs = fsOf(spark, new Path(root))
-    if (fs.exists(new Path(root))) fs.delete(new Path(root), true)
+    val root = freshRoot(spark, sfDir, "manifest_wap_")
     val docs = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"), col("text"))
     overwrite(spark, root,                                        // v1
@@ -3521,11 +3297,7 @@ object ManifestTable {
     * file statistics exist for. */
   def q159ManifestStats(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val root = new Path(
-      spark.conf.get("spark.sql.warehouse.dir"),
-      "manifest_stats_" + graft.Tables.dirKey(spark, sfDir)).toString
-    val fs = fsOf(spark, new Path(root))
-    if (fs.exists(new Path(root))) fs.delete(new Path(root), true)
+    val root = freshRoot(spark, sfDir, "manifest_stats_")
     val docs = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text"))
     overwrite(spark, root,
@@ -3581,11 +3353,7 @@ object ManifestTable {
     * put). Returns the table root (rebuilt fresh per call). */
   private[graft] def buildScd2DemoTable(spark: SparkSession, sfDir: String,
                                         prefix: String): String = {
-    val root = new Path(
-      spark.conf.get("spark.sql.warehouse.dir"),
-      prefix + graft.Tables.dirKey(spark, sfDir)).toString
-    val fs = fsOf(spark, new Path(root))
-    if (fs.exists(new Path(root))) fs.delete(new Path(root), true)
+    val root = freshRoot(spark, sfDir, prefix)
     val docs = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text"))
     overwrite(spark, root,
@@ -3652,11 +3420,7 @@ object ManifestTable {
     * paths — q117/q142's shared-gate discipline). */
   def q161ManifestTailScd2(spark: SparkSession, sfDir: String): DataFrame = {
     val root = buildScd2DemoTable(spark, sfDir, "manifest_tail_")
-    val stateDir = new Path(
-      spark.conf.get("spark.sql.warehouse.dir"),
-      "manifest_tailstate_" + graft.Tables.dirKey(spark, sfDir)).toString
-    val fs = fsOf(spark, new Path(stateDir))
-    if (fs.exists(new Path(stateDir))) fs.delete(new Path(stateDir), true)
+    val stateDir = freshRoot(spark, sfDir, "manifest_tailstate_")
     ManifestTail.catchUp(spark, root, stateDir)(
       seed = v1 => scd2Seed(v1),
       fold = (base, changes, v) => scd2Step(base,
@@ -3681,18 +3445,19 @@ object ManifestTable {
   def vacuum(spark: SparkSession, root: String, retain: Int = 1,
              orphanRetentionMs: Long = DefaultOrphanRetentionMs): Int = {
     require(retain >= 1, "must retain at least the newest version")
-    val rootPath = new Path(root)
-    val fs = fsOf(spark, rootPath)
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed version under $root")
+    val fs = fsOf(spark, new Path(root))
+    // ONE listing (statuses: the sweeps below need mtimes) and one parse
+    // per manifest, retained or dropped
+    val mdir = manifestDir(root)
+    val listed = if (fs.exists(mdir)) fs.listStatus(mdir).toSeq else Seq.empty
+    val names = listed.map(_.getPath.getName)
+    val head = resolveIn(spark, root, names, None)
+    val vs = head.listedVersions
+    val snaps = vs.map(v => if (v == head.version) head else head.at(spark, v))
     // named tags are a retention FLOOR (Iceberg's ref-retention shape):
     // a tagged version's manifest and files survive whatever `retain`
     // says — a tag must never dangle
-    val newestHeaders = loadManifest(fs, root, vs.last).headers
-    val tagged = newestHeaders.collect {
-      case (k, hv) if k.startsWith(TagPrefix) &&
-          hv.toIntOption.isDefined => hv.toInt
-    }.toSet
+    val tagged = head.tags.values.toSet
     // LIVE branches pin like tags: the base version is a retention
     // floor (publish diffs against it) and every file a branch
     // manifest lists stays referenced. Pointers are read from EVERY
@@ -3703,50 +3468,40 @@ object ManifestTable {
     // into silent data loss; the branch stays protected for as long
     // as any retained manifest still references it, and cleanup
     // converges as those versions retire.
-    val liveBranches = vs.flatMap(v =>
-      loadManifest(fs, root, v).headers.collect {
-        case (k, hv) if k.startsWith(BranchPrefix) &&
-            hv.toIntOption.isDefined =>
-          k.stripPrefix(BranchPrefix) -> hv.toInt
-      }).distinct
+    val liveBranches = snaps.flatMap(_.branches).distinct
     val keepSet = vs.takeRight(retain).toSet ++
       tagged.filter(vs.contains) ++
       liveBranches.map(_._2).filter(vs.contains)
-    val (drop, keep) = vs.partition(v => !keepSet.contains(v))
+    val (drop, keep) = snaps.partition(s => !keepSet.contains(s.version))
     // compare fully-QUALIFIED paths: listStatus returns scheme-qualified
     // paths (file:/..., hdfs://...) while manifests store root-relative
     // ones — an unqualified comparison would see every file as
     // unreferenced and delete live data
-    def qualified(v: Int): Set[String] = manifestEntries(fs, root, v)
+    def qualified(s: Snapshot): Set[String] = s.entries
       .map(e => fs.makeQualified(new Path(root, e.rel)).toString).toSet
-    val branchManifests: Seq[(String, Path)] =
-      fs.listStatus(manifestDir(root)).toSeq.map(_.getPath).flatMap(p =>
-        p.getName match {
-          case BranchManifestName(n, _) => Some(n -> p)
-          case _ => None
-        })
+    val branchManifests = listed.flatMap(st => st.getPath.getName match {
+      case BranchManifestName(n, d) => Some((n, d.toInt, st))
+      case _ => None
+    })
     val liveNames = liveBranches.map(_._1).toSet
     val branchReferenced = branchManifests.collect {
-      case (n, p) if liveNames.contains(n) =>
-        loadManifestAt(fs, p).entries.map(e =>
-          fs.makeQualified(new Path(root, e.rel)).toString).toSet
+      case (n, bv, st) if liveNames.contains(n) =>
+        qualified(load(spark, root, names, bv, st.getPath, Some(n)))
     }.fold(Set.empty[String])(_ ++ _)
     val referenced = keep.flatMap(qualified).toSet ++ branchReferenced
     val retired = drop.flatMap(qualified).toSet -- referenced
+    val cutoff = System.currentTimeMillis() - math.max(0L, orphanRetentionMs)
     // ORPHANED branch manifests (pointer dropped/published but the
     // best-effort cleanup died): sweep once aged — their files stop
     // being referenced here and age out through the same cutoff
-    branchManifests.foreach { case (n, p) =>
-      if (!liveNames.contains(n) &&
-          fs.getFileStatus(p).getModificationTime <
-            System.currentTimeMillis() - math.max(0L, orphanRetentionMs))
-        fs.delete(p, false)
+    branchManifests.foreach { case (n, _, st) =>
+      if (!liveNames.contains(n) && st.getModificationTime < cutoff)
+        fs.delete(st.getPath, false)
     }
-    drop.foreach(v => fs.delete(manifestPath(root, v), false))
-    val cutoff = System.currentTimeMillis() - math.max(0L, orphanRetentionMs)
+    drop.foreach(s => fs.delete(manifestPath(root, s.version), false))
     // crashed-commit manifest temps: never referenced by anything, but a
     // YOUNG one may be a tryCommit between create and rename
-    fs.listStatus(manifestDir(root)).toSeq
+    listed
       .filter(s => s.isFile && s.getPath.getName.startsWith(".tmp-") &&
         s.getModificationTime < cutoff)
       .foreach(s => fs.delete(s.getPath, false))

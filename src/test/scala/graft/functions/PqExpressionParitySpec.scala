@@ -133,6 +133,10 @@ class PqExpressionParitySpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       PqExpressions.distances(r, cb, 4)
     }
+    // an empty codebook has no cb(0) to size the subspace from
+    intercept[IllegalArgumentException] {
+      PqExpressions.argmin(r, Array.empty[Array[Long]], 0)
+    }
   }
 
   test("the coding projection stays codegen: no CodegenFallback in the plan") {

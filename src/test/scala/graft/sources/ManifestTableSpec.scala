@@ -841,7 +841,10 @@ class ManifestTableSpec extends SparkSpec {
       "data file verbatim; reads (incl. pruned) suppress the keys; " +
       "time travel sees pre-delete; compaction applies + drops; " +
       "vacuum collects applied delete files") {
-    val root = freshRoot()
+    // under a warehouse dir, so the SQL catalog can name the table too
+    val wh = java.nio.file.Files.createTempDirectory("graft-manifest")
+      .toString
+    val root = s"$wh/db/docs"
     ManifestTable.overwrite(spark, root,
       docs.repartitionByRange(8, col("doc_id"))
         .sortWithinPartitions("doc_id"),
@@ -863,6 +866,32 @@ class ManifestTableSpec extends SparkSpec {
     val (lo, hi) = (keep.head, keep(keep.size / 2))
     assert(idsOf(ManifestTable.readWhereKeyBetween(spark, root,
       "doc_id", lo, hi)) === keep.filter(k => k >= lo && k <= hi))
+    // every pruned entry point is the same snapshot scan: each returns
+    // exactly read() under the same filter — deleted probes included
+    val all = ManifestTable.read(spark, root)
+    val probes = Seq(keep.head, keep(keep.size / 2), keep.last) ++
+      idsOf(delKeys).take(2)
+    val inProbes = col("doc_id").isin(probes: _*)
+    val inRange = col("doc_id").between(lo, hi)
+    GraftCatalog.register(spark, "mtcat", wh)
+    Seq(
+      ManifestTable.readWhereKeyIn(spark, root, "doc_id", probes) -> inProbes,
+      ManifestTable.readWherePointIn(spark, root, "doc_id", probes) ->
+        inProbes,
+      ManifestTable.readWhereRect(spark, root, Seq(("doc_id", lo, hi))) ->
+        inRange,
+      spark.sql("SELECT * FROM mtcat.db.docs " +
+        s"WHERE doc_id >= $lo AND doc_id <= $hi") -> inRange
+    ).foreach { case (got, filter) =>
+      assert(idsOf(got) === idsOf(all.where(filter)))
+    }
+    // a range no file covers: zero rows, the table's schema
+    val past = keep.last + 1000
+    val none = ManifestTable.readWhereKeyBetween(spark, root, "doc_id",
+      past, past + 10)
+    assert(none.count() === 0)
+    assert(none.schema.map(f => f.name -> f.dataType) ===
+      all.schema.map(f => f.name -> f.dataType))
     // time travel: v1 is untouched by the delete
     assert(ManifestTable.readAt(spark, root, v1.version).count()
       === keep.size + delKeys.count())
@@ -889,6 +918,41 @@ class ManifestTableSpec extends SparkSpec {
       fs.globStatus(new Path(root, "deletes/*")).isEmpty,
       "vacuum left applied delete files behind")
     assert(idsOf(ManifestTable.read(spark, root)) === keep)
+  }
+
+  test("a malformed manifest fails loudly: read and vacuum throw, " +
+      "naming the manifest, and vacuum deletes no data file") {
+    val corruptions: Seq[Seq[String] => Seq[String]] = Seq(
+      // an entry line with an even field count (once misread as one
+      // path holding tabs, leaving the real file unreferenced)
+      _.map(l => if (l.startsWith("#")) l else s"$l\t0"),
+      // a header line without '='
+      "#boundscol" +: _)
+    corruptions.foreach { corrupt =>
+      val root = freshRoot()
+      ManifestTable.overwrite(spark, root, docs.repartition(2))
+      val fs = new Path(root)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def dataFiles: Set[String] =
+        fs.globStatus(new Path(root, "data/*/*")).map(_.getPath.toString)
+          .toSet
+      val before = dataFiles
+      val in = fs.open(new Path(root, "_manifests/v00000001.manifest"))
+      val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
+        .getLines().toList finally in.close()
+      val out = fs.create(new Path(root, "_manifests/v00000002.manifest"))
+      try out.write(corrupt(lines).mkString("\n").getBytes("UTF-8"))
+      finally out.close()
+      val ex = intercept[IllegalStateException] {
+        ManifestTable.read(spark, root)
+      }
+      assert(ex.getMessage.contains("v00000002.manifest"), ex.getMessage)
+      intercept[IllegalStateException] {
+        ManifestTable.vacuum(spark, root, retain = 1, orphanRetentionMs = 0L)
+      }
+      assert(dataFiles === before, "vacuum deleted data files")
+      assert(ManifestTable.versions(spark, root) === Seq(1, 2))
+    }
   }
 
   test("equality deletes are global-until-compacted: append refuses " +
