@@ -181,19 +181,9 @@ object Bench {
     // from the JSON: a query whose TIME moved but whose SHUFFLE volume
     // didn't (q57, round 5) is fixed-overhead/box noise, not a plan
     // regression. Counted on the last pass only (caches warm, artifacts
-    // prebuilt); the listener bus is drained before each snapshot so the
+    // prebuilt), each query in its own drained metrics window so the
     // async task-end events can't smear across queries.
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null)
-            shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          ()
-        }
-      })
+    val metrics = graft.metrics.MetricsReport.install(spark)
     val shuffleByQuery = scala.collection.mutable.Map.empty[String, Long]
     // per-query streaming state rows (numRowsTotal/numRowsRemoved from
     // the final progress), captured on the counted pass: the stateful
@@ -212,31 +202,23 @@ object Bench {
         .shuffle(names.indices.toList)
       order.foreach { i =>
         val (name, fn) = names(i)
-        // on the counted pass, start from a drained bus so the previous
-        // query's in-flight events can't leak into this window
-        if (pass == passes) {
-          org.apache.spark.graftbridge.SparkBridge
-            .drainListenerBus(spark.sparkContext)
-          // clear accumulated state metrics so a previous query's
-          // streaming drains can't attribute to this one
-          streaming.EventStreams.takeStateMetrics()
-          ()
-        }
-        val t0 = System.nanoTime()
-        val before = shuffleBytes.get()
+        // clear accumulated state metrics so a previous query's
+        // streaming drains can't attribute to this one
+        if (pass == passes) streaming.EventStreams.takeStateMetrics()
         // a failed query must read as -1, not as a suspiciously fast run
         // (NonFatal: let OOM and friends abort the whole run visibly)
         arr(i) = try {
-          fn(spark, sfDir).count()
-          val dt = (System.nanoTime() - t0) / 1e9
           if (pass == passes) {
-            org.apache.spark.graftbridge.SparkBridge
-              .drainListenerBus(spark.sparkContext)
-            shuffleByQuery(name) = shuffleBytes.get() - before
+            val w = metrics.window(fn(spark, sfDir).count())
+            shuffleByQuery(name) = w.shuffleWriteBytes
             streaming.EventStreams.takeStateMetrics()
               .foreach(stateByQuery(name) = _)
+            w.wallS
+          } else {
+            val t0 = System.nanoTime()
+            fn(spark, sfDir).count()
+            (System.nanoTime() - t0) / 1e9
           }
-          dt
         }
         catch { case scala.util.control.NonFatal(_) => -1.0 }
       }

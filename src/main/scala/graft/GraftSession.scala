@@ -106,7 +106,8 @@ object GraftSession {
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       // zstd over the snappy default for every engine-written table:
       // measured −35-40% bytes at equal-or-better write/scan wall
-      // (tools/CodecSweep; SCALING.md round-14). At 100 TB the byte
+      // (`git show f7c7d6f:src/main/scala/graft/tools/CodecSweep.scala`;
+      // SCALING.md round-14). At 100 TB the byte
       // count IS the scan time (object-store bandwidth-bound) and the
       // replication bill; codec is transparent to every reader
       .config("spark.sql.parquet.compression.codec", "zstd")

@@ -90,32 +90,31 @@ object GraftCli {
         err.println("  Note: Combiner disabled via MR_DISABLE_COMBINER=1")
       err.println("\nStarting MapReduce execution...")
     }
-    val t0 = System.nanoTime()
+    def runJob(): Unit =
+      MRJob.runToText(spark, job, MRJob.textInput(spark, a.inputs), a.output)
     val m = a.metrics.map(_ => MetricsReport.install(spark))
-    MRJob.runToText(spark, job, MRJob.textInput(spark, a.inputs), a.output)
-    if (a.verbose) {
-      // the reference's performance summary (job.c:272-284); CPU rusage
-      // has no per-job JVM equivalent, so wall time is the shared line
-      val wall = (System.nanoTime() - t0) / 1e9
-      err.println("\n===== MapReduce Performance =====")
-      err.println(s"Threads     : ${a.threads}")
-      err.println(s"Reducers    : ${a.partitions}")
-      err.println(s"Files       : ${a.inputs.size}")
-      err.println(f"Wall time   : $wall%.3f sec")
-      err.println(s"\nOutput: ${a.output}/part-* (${a.partitions} files)")
-      err.println("====================================")
-    }
-    for (path <- a.metrics; rep <- m) {
-      // the listener bus is async: wait for the counters to quiesce or
-      // the report can legitimately say "tasks: 0"
-      var last = -1L
-      var cur = rep.tasksSeen
-      val deadline = System.nanoTime() + 15000000000L
-      while (cur != last && System.nanoTime() < deadline) {
-        last = cur; Thread.sleep(200); cur = rep.tasksSeen
+    try {
+      val t0 = System.nanoTime()
+      // the window drains the async listener bus after the job, so the
+      // report counts every one of its tasks
+      m match {
+        case Some(rep) => rep.window(runJob())
+        case None => runJob()
       }
-      rep.write(path)
-    }
+      if (a.verbose) {
+        // the reference's performance summary (job.c:272-284); CPU rusage
+        // has no per-job JVM equivalent, so wall time is the shared line
+        val wall = (System.nanoTime() - t0) / 1e9
+        err.println("\n===== MapReduce Performance =====")
+        err.println(s"Threads     : ${a.threads}")
+        err.println(s"Reducers    : ${a.partitions}")
+        err.println(s"Files       : ${a.inputs.size}")
+        err.println(f"Wall time   : $wall%.3f sec")
+        err.println(s"\nOutput: ${a.output}/part-* (${a.partitions} files)")
+        err.println("====================================")
+      }
+      for (path <- a.metrics; rep <- m) rep.write(path)
+    } finally m.foreach(spark.sparkContext.removeSparkListener)
   }
 
   def main(argv: Array[String]): Unit =

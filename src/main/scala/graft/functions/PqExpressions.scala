@@ -14,7 +14,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType,
   * CodegenFallback: at the production operating point (K=256, sd=8)
   * every row paid K·sd interpreted expression evaluations per subspace
   * — measured 5.8 s executor time for one M256/K256 training pass at
-  * sf0.1 (tools.PqTrainProbe), all of it in the interpreted lambda.
+  * sf0.1 (`git show f7c7d6f:src/main/scala/graft/tools/PqTrainProbe.scala`),
+  * all of it in the interpreted lambda.
   * These expressions run the same integer loops inside whole-stage
   * codegen via a static helper, like [[Tokenize]] and
   * [[VectorExpressions]].

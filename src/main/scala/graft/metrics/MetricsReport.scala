@@ -6,6 +6,8 @@ import java.util.concurrent.atomic.{AtomicLong, LongAdder}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.SparkContext
+import org.apache.spark.graftbridge.SparkBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
@@ -22,9 +24,14 @@ import org.apache.spark.sql.SparkSession
   *
   * Always-on and cheap: counters are LongAdders fed by the listener bus;
   * `report()` renders sections in a fixed order so successive runs diff
-  * cleanly, exactly like the reference's report file.
+  * cleanly, exactly like the reference's report file. [[window]] is the
+  * one per-run measurement: the bench's per-query shuffle MB, the
+  * `tools.Profile` job/gap split and the scaling sweeps all read it.
+  *
+  * `sc` is the context whose listener bus [[window]] drains — the one
+  * [[MetricsReport.install]] adds the report to.
   */
-final class MetricsReport extends SparkListener {
+final class MetricsReport(sc: SparkContext) extends SparkListener {
 
   private val jobs = new AtomicLong
   private val tasks = new AtomicLong
@@ -48,9 +55,27 @@ final class MetricsReport extends SparkListener {
     * (the reference's per-partition σ, metrics.c:365-421). */
   private val stageMaxTaskMs = new ConcurrentHashMap[Int, Long]()
   private val t0 = System.nanoTime()
+  /** Job timing, fed in event order by the bus thread: the start time of
+    * each running job, summed job ms, and the driver gaps — ms between
+    * the last job end and a job that starts with none running (planning,
+    * commit-protocol fs work, manifest parsing). */
+  private val jobStartMs = new ConcurrentHashMap[Int, java.lang.Long]()
+  private val jobMs = new LongAdder
+  private val gapMs = new LongAdder
+  @volatile private var lastJobEndMs = -1L
 
-  override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-  override def onJobEnd(e: SparkListenerJobEnd): Unit = ()
+  override def onJobStart(e: SparkListenerJobStart): Unit = {
+    jobs.incrementAndGet()
+    if (jobStartMs.isEmpty && lastJobEndMs >= 0)
+      gapMs.add(math.max(0L, e.time - lastJobEndMs))
+    jobStartMs.put(e.jobId, e.time)
+    ()
+  }
+  override def onJobEnd(e: SparkListenerJobEnd): Unit =
+    Option(jobStartMs.remove(e.jobId)).foreach { s =>
+      jobMs.add(math.max(0L, e.time - s.longValue))
+      lastJobEndMs = math.max(lastJobEndMs, e.time)
+    }
 
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
     tasks.incrementAndGet()
@@ -80,12 +105,25 @@ final class MetricsReport extends SparkListener {
     ()
   }
 
-  /** Tasks observed so far (listener bus is async — poll before report). */
-  def tasksSeen: Long = tasks.get()
-
-  /** Shuffle records written so far — the reference's emitted-pairs
-    * counter (its combiner experiment compares exactly this). */
-  def shuffleWriteRecordsSeen: Long = shuffleWriteRecords.sum()
+  /** Run `body` between two drains of the (async) listener bus and
+    * return what it cost. The first drain keeps earlier work's in-flight
+    * events out; the second lands every event of `body` before the
+    * counters are read, so back-to-back windows never share a task. The
+    * first job of a window has no gap: the time before it is the window's
+    * own planning, which is in the wall time. */
+  def window(body: => Any): MetricsReport.Window = {
+    SparkBridge.drainListenerBus(sc)
+    lastJobEndMs = -1L
+    val (j0, jMs0, g0) = (jobs.get(), jobMs.sum(), gapMs.sum())
+    val (b0, r0) = (shuffleWriteBytes.sum(), shuffleWriteRecords.sum())
+    val start = System.nanoTime()
+    body
+    val wallS = (System.nanoTime() - start) / 1e9
+    SparkBridge.drainListenerBus(sc)
+    MetricsReport.Window(wallS, jobs.get() - j0, (jobMs.sum() - jMs0) / 1e3,
+      (gapMs.sum() - g0) / 1e3, shuffleWriteBytes.sum() - b0,
+      shuffleWriteRecords.sum() - r0)
+  }
 
   /** Stable-ordered text report (the metrics_report.txt analog). */
   def report(): String = {
@@ -127,9 +165,21 @@ final class MetricsReport extends SparkListener {
 }
 
 object MetricsReport {
-  /** Install on a session; returns the live collector. */
+  /** One [[MetricsReport.window]]: `wallS` times the body alone (not the
+    * drains); job and gap seconds come from the scheduler's event times.
+    * Shuffle write is the reference's emitted-pairs counter (its combiner
+    * experiment compares exactly the records). */
+  final case class Window(wallS: Double, jobs: Long, jobS: Double,
+                          gapS: Double, shuffleWriteBytes: Long,
+                          shuffleWriteRecords: Long) {
+    def shuffleMb: Double = shuffleWriteBytes / 1e6
+  }
+
+  /** Install on a session; returns the live collector. The caller removes
+    * it (`removeSparkListener`) when done — on a shared context a
+    * forgotten report keeps counting every later job. */
   def install(spark: SparkSession): MetricsReport = {
-    val m = new MetricsReport
+    val m = new MetricsReport(spark.sparkContext)
     spark.sparkContext.addSparkListener(m)
     m
   }

@@ -90,7 +90,8 @@ object ProductQuantization {
     * HOF was semantically identical but CodegenFallback: every row paid
     * K·sd interpreted expression evaluations per subspace — 5.8 s
     * executor time for one M256/K256 training pass at sf0.1
-    * (tools.PqTrainProbe). PqExpressionParitySpec pins bit-equality
+    * (`git show f7c7d6f:src/main/scala/graft/tools/PqTrainProbe.scala`).
+    * PqExpressionParitySpec pins bit-equality
     * against the HOF form. (An even earlier formulation unrolled K
     * columns × M subspaces of branch chains and Janino refused the
     * generated method — the table shape is also the only viable one at

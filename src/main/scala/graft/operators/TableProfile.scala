@@ -80,7 +80,8 @@ object TableProfile {
     * Everything else — null counts, typed integer-exact bounds, the
     * one driver row — is identical.
     *
-    * rsd = 0.02, MEASURED (tools.Q180Probe at sf0.1): the precision
+    * rsd = 0.02, MEASURED at sf0.1 (`git show
+    * f7c7d6f:src/main/scala/graft/tools/Q180Probe.scala`): the precision
     * knob is the whole cost — the bare 11-column approx aggregation
     * runs 0.75 s at rsd 0.05, 2.1 s at 0.02, 7.2 s at 0.01 (2^14
     * registers per column per partial buffer — 3× the EXACT Expand
@@ -101,9 +102,8 @@ object TableProfile {
       // trade from the exact Expand.
       widen = false)
 
-  /** The one-pass aggregation frame behind [[profileWith]], exposed
-    * for plan inspection (tools/plans deliverables). */
-  private[graft] def aggFrame(spark: SparkSession, df: DataFrame,
+  /** The one-pass aggregation frame behind [[profileWith]]. */
+  private def aggFrame(spark: SparkSession, df: DataFrame,
                               distinctAgg: String => Column,
                               widen: Boolean): DataFrame = {
     val fields = df.schema.fields.toSeq

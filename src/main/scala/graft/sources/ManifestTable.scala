@@ -966,8 +966,9 @@ object ManifestTable {
     // format v5: one Bloom filter per file per declared column. TWO
     // more passes reading only the bloom columns: a per-file DISTINCT
     // count (a filter holds a SET — sizing by row count would pay the
-    // ~10 bits/entry tax once per duplicate occurrence; BloomProbe
-    // measured the repeat factor directly on lineitem), then the
+    // ~10 bits/entry tax once per duplicate occurrence; `git show
+    // f7c7d6f:src/main/scala/graft/tools/BloomProbe.scala` measured the
+    // repeat factor directly on lineitem), then the
     // filters themselves sized PER COLUMN by that column's largest
     // per-file distinct count (a global max across columns would
     // oversize every low-cardinality column's sidecars by the widest

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{GraftSession, Tables}
 import graft.functions.Text
+import graft.metrics.MetricsReport
 import graft.operators.DedupQueries
 
 /** Data-GROWTH sweep for the dedup/span family — the missing half of
@@ -38,17 +39,7 @@ object DedupScaling {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = if (args.length > 1) Some(args(1)) else None
     val spark = GraftSession.create("graft-dedupscaling", Some("local[32]"))
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null)
-            shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          ()
-        }
-      })
+    val metrics = MetricsReport.install(spark)
 
     /** k disjoint-id copies of the documents table (re-crawl model). */
     def amplified(k: Int): DataFrame = {
@@ -207,18 +198,8 @@ object DedupScaling {
     imageNearDup(amplified(1)); quantiles(1); bigramLm(amplified(1))
 
     def measure(f: () => Long): (Double, Double) = {
-      val runs = (1 to 3).map { _ =>
-        org.apache.spark.graftbridge.SparkBridge
-          .drainListenerBus(spark.sparkContext)
-        val b0 = shuffleBytes.get()
-        val t0 = System.nanoTime()
-        f()
-        val dt = (System.nanoTime() - t0) / 1e9
-        org.apache.spark.graftbridge.SparkBridge
-          .drainListenerBus(spark.sparkContext)
-        (dt, (shuffleBytes.get() - b0) / 1e6)
-      }
-      runs.minBy(_._1)
+      val w = (1 to 3).map(_ => metrics.window(f())).minBy(_.wallS)
+      (w.wallS, w.shuffleMb)
     }
 
     val table = new StringBuilder

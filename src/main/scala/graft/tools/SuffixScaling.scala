@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.functions._
 
 import graft.{GraftSession, Tables}
+import graft.metrics.MetricsReport
 import graft.operators.SuffixQueries
 
 /** Measure the two suffix-array constructions against each other across
@@ -26,34 +27,15 @@ object SuffixScaling {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.create("graft-suffix-scaling", Some("local[32]"))
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null)
-            shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          ()
-        }
-      })
+    val metrics = MetricsReport.install(spark)
     def measured(label: String, f: () => Long): Unit = {
       // min-of-3 wall; shuffle bytes from the min-wall pass (bytes are
       // deterministic per pass — the min guards wall against box load)
-      val runs = (1 to 3).map { _ =>
-        org.apache.spark.graftbridge.SparkBridge
-          .drainListenerBus(spark.sparkContext)
-        val b0 = shuffleBytes.get()
-        val t0 = System.nanoTime()
-        val rows = f()
-        val dt = (System.nanoTime() - t0) / 1e9
-        org.apache.spark.graftbridge.SparkBridge
-          .drainListenerBus(spark.sparkContext)
-        (dt, (shuffleBytes.get() - b0) / 1e6, rows)
-      }
-      val best = runs.minBy(_._1)
-      println(f"[suffix] $label%-24s ${best._1}%7.2f s ${best._2}%9.2f MB " +
-        f"shuffle  rows=${best._3}%d")
+      var rows = 0L
+      val best = (1 to 3).map(_ => metrics.window { rows = f() })
+        .minBy(_.wallS)
+      println(f"[suffix] $label%-24s ${best.wallS}%7.2f s ${best.shuffleMb}%9.2f MB " +
+        f"shuffle  rows=$rows%d")
     }
     val docs = Tables.documents(spark, sfDir)
     val nPos = SuffixQueries.directSuffixIndex(docs, 1).count()

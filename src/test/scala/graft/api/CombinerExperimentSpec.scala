@@ -20,17 +20,9 @@ class CombinerExperimentSpec extends SparkSpec {
   /** Run job, return shuffle records attributable to it. */
   private def shuffleRecordsOf(job: MRJob): Long = {
     val m = MetricsReport.install(spark)
-    try {
-      MRJob.run(spark, job, corpus).count()
-      // listener bus is async: wait until the counter is quiescent
-      var last = -1L
-      var cur = m.shuffleWriteRecordsSeen
-      val deadline = System.nanoTime() + 15000000000L
-      while (cur != last && System.nanoTime() < deadline) {
-        last = cur; Thread.sleep(200); cur = m.shuffleWriteRecordsSeen
-      }
-      cur
-    } finally spark.sparkContext.removeSparkListener(m)
+    // the window drains the async listener bus, so the count is exact
+    try m.window(MRJob.run(spark, job, corpus).count()).shuffleWriteRecords
+    finally spark.sparkContext.removeSparkListener(m)
   }
 
   test("map-side combine cuts shuffled records (reference README.md:317-326)") {

@@ -4,18 +4,21 @@ import graft.{SparkSpec, Tables}
 
 class MetricsReportSpec extends SparkSpec {
 
-  /** The listener bus is async; wait until task events have drained. */
-  private def awaitTasks(m: MetricsReport): Unit = {
-    val deadline = System.nanoTime() + 10000000000L
-    while (m.tasksSeen == 0 && System.nanoTime() < deadline) Thread.sleep(50)
+  /** Install a report on the shared session for `body` only: a report
+    * left installed would keep counting every later suite's jobs. */
+  private def withReport[A](body: MetricsReport => A): A = {
+    val m = MetricsReport.install(spark)
+    try body(m) finally spark.sparkContext.removeSparkListener(m)
   }
 
   test("listener collects job/task/shuffle counters and renders stably") {
-    val m = MetricsReport.install(spark)
-    // run a job with a real shuffle so the exchange counters move
-    Tables.orders(spark, sfDir).groupBy("o_orderstatus").count().collect()
-    awaitTasks(m)
-    val r = m.report()
+    // run a job with a real shuffle so the exchange counters move; the
+    // window drains the async listener bus before the report is read
+    val r = withReport { m =>
+      m.window(
+        Tables.orders(spark, sfDir).groupBy("o_orderstatus").count().collect())
+      m.report()
+    }
     assert(r.startsWith("GRAFT METRICS REPORT"))
     // fixed section order — the reference's easy-diffing contract
     val idx = Seq("== Job Configuration ==", "== Timing ==",
@@ -28,7 +31,8 @@ class MetricsReportSpec extends SparkSpec {
 
   test("failed tasks are detected by reason type, not string rendering") {
     import org.apache.spark.scheduler.{SparkListenerTaskEnd, TaskInfo, TaskLocality}
-    val m = new MetricsReport
+    // fed synthetic events directly, never installed on the bus
+    val m = new MetricsReport(spark.sparkContext)
     def event(reason: org.apache.spark.TaskEndReason): SparkListenerTaskEnd =
       SparkListenerTaskEnd(0, 0, "ResultTask", reason,
         new TaskInfo(0L, 0, 0, 0, 0L, "driver", "localhost",
@@ -43,12 +47,28 @@ class MetricsReportSpec extends SparkSpec {
   }
 
   test("report writes to disk") {
-    val m = MetricsReport.install(spark)
-    Tables.nation(spark, sfDir).count()
-    awaitTasks(m)
     val path = java.nio.file.Files.createTempDirectory("mr").toString + "/metrics_report.txt"
-    m.write(path)
+    withReport { m =>
+      m.window(Tables.nation(spark, sfDir).count())
+      m.write(path)
+    }
     assert(java.nio.file.Files.readString(java.nio.file.Paths.get(path))
       .contains("GRAFT METRICS REPORT"))
+  }
+
+  test("back-to-back windows on one report: each sees only its own body") {
+    val (shuffled, local) = withReport { m =>
+      val shuffled = m.window(
+        Tables.orders(spark, sfDir).groupBy("o_orderstatus").count().collect())
+      // no exchange: any shuffle counted here leaked from the window above
+      val local = m.window(Tables.nation(spark, sfDir).collect())
+      (shuffled, local)
+    }
+    assert(shuffled.shuffleWriteBytes > 0 && shuffled.shuffleWriteRecords > 0,
+      s"groupBy window: $shuffled")
+    assert(shuffled.jobs >= 1, s"groupBy window: $shuffled")
+    assert(local.shuffleWriteBytes == 0 && local.shuffleWriteRecords == 0,
+      s"scan window: $local")
+    assert(local.jobs >= 1, s"scan window: $local")
   }
 }

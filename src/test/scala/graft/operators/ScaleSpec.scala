@@ -965,33 +965,18 @@ class ScaleSpec extends SparkSpec {
           .as("hv"),
         when(col("lang") === "en", lit(50)).otherwise(lit(20)).as("pct"))
     val nDocs = docs.count()
-    val written = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null)
-            written.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-        }
+    val m = graft.metrics.MetricsReport.install(spark)
+    def records(body: => Unit): Long = m.window(body).shuffleWriteRecords
+    val (bisect, window) = try (
+      records {
+        CurationPipeline.exactStratifiedSample(docs)
+          .write.format("noop").mode("overwrite").save()
+      },
+      records {
+        CurationPipeline.exactSampleByWindow(docs)
+          .write.format("noop").mode("overwrite").save()
       })
-    def records(body: => Unit): Long = {
-      org.apache.spark.graftbridge.SparkBridge
-        .drainListenerBus(spark.sparkContext)
-      val r0 = written.get()
-      body
-      org.apache.spark.graftbridge.SparkBridge
-        .drainListenerBus(spark.sparkContext)
-      written.get() - r0
-    }
-    val bisect = records {
-      CurationPipeline.exactStratifiedSample(docs)
-        .write.format("noop").mode("overwrite").save()
-    }
-    val window = records {
-      CurationPipeline.exactSampleByWindow(docs)
-        .write.format("noop").mode("overwrite").save()
-    }
+    finally spark.sparkContext.removeSparkListener(m)
     assert(window >= nDocs,
       s"window twin should shuffle the corpus: $window < $nDocs")
     assert(bisect < nDocs / 2,
