@@ -41,30 +41,14 @@ object Tables {
   def dirKey(spark: SparkSession, sfDir: String): String =
     sfDir.replaceAll("[^A-Za-z0-9]", "_") + "_" +
       Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(sfDir)) +
-      dirFingerprint(Some(spark), sfDir).fold("")("_" + _)
-
-  /** Session-less convenience overload (tests, name derivation outside a
-    * query builder). Resolves the session as active-then-default: the
-    * thread-local active session is UNSET on streaming micro-batch and
-    * pool threads, and falling straight to a bare `new Configuration()`
-    * there would (a) lose object-store credentials and (b) let the same
-    * sfDir produce DIFFERENT keys on different threads, silently
-    * splitting every artifact/model cache keyed on it. Main-code call
-    * sites all pass their session explicitly. */
-  def dirKey(sfDir: String): String =
-    sfDir.replaceAll("[^A-Za-z0-9]", "_") + "_" +
-      Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(sfDir)) +
-      dirFingerprint(SparkSession.getActiveSession
-        .orElse(SparkSession.getDefaultSession), sfDir).fold("")("_" + _)
+      dirFingerprint(spark, sfDir).fold("")("_" + _)
 
   /** Hash of the dir's recursive (path, length, mtime) listing; None if
     * the dir can't be listed or fingerprinting is disabled
     * (`spark.graft.dirFingerprint=false` for immutable snapshot dirs). */
-  private def dirFingerprint(session: Option[SparkSession],
-                             sfDir: String): Option[String] = {
-    val enabled = session.forall(
-      _.conf.get("spark.graft.dirFingerprint", "true") != "false")
-    if (!enabled) None
+  private def dirFingerprint(spark: SparkSession,
+                             sfDir: String): Option[String] =
+    if (spark.conf.get("spark.graft.dirFingerprint", "true") == "false") None
     else scala.util.Try {
       val p = new org.apache.hadoop.fs.Path(sfDir)
       // the SESSION's Hadoop conf, not a bare new Configuration():
@@ -72,9 +56,7 @@ object Tables {
       // and without them the listing throws and the fingerprint would
       // silently degrade to the path-only key on exactly the fs that
       // needs it
-      val conf = session.map(_.sparkContext.hadoopConfiguration)
-        .getOrElse(new org.apache.hadoop.conf.Configuration())
-      val fs = p.getFileSystem(conf)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val entries = scala.collection.mutable.ArrayBuffer.empty[String]
       val it = fs.listFiles(p, /* recursive = */ true)
       while (it.hasNext) {
@@ -85,7 +67,6 @@ object Tables {
       Integer.toHexString(scala.util.hashing.MurmurHash3
         .orderedHash(entries.sortInPlace()))
     }.toOption
-  }
 
   /** Register every table as a temp view so `spark.sql` mirrors the oracle. */
   def registerAll(spark: SparkSession, sfDir: String): Unit =

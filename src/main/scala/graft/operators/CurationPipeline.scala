@@ -282,8 +282,7 @@ object CurationPipeline {
     * (session, scale dir), prebuilt by Bench so its cost lands in
     * `artifacts_sec` like every other artifact. */
   def curatedHandoff(spark: SparkSession, sfDir: String): DataFrame =
-    graft.Artifacts.materialize(spark,
-      "graft_curated_" + graft.Tables.dirKey(spark, sfDir), "doc_id") {
+    graft.Artifacts.materialize(spark, sfDir, "graft_curated_", "doc_id") {
       q50CorpusCuration(spark, sfDir)
     }
 
@@ -379,8 +378,7 @@ object CurationPipeline {
     * layout as every base artifact, so the stale/fresh id joins the
     * refreshes run against them are exchange-free. */
   def snapshotDeltaStaged(spark: SparkSession, sfDir: String): DataFrame =
-    graft.Artifacts.materialize(spark,
-      "graft_delta_" + graft.Tables.dirKey(spark, sfDir), "doc_id") {
+    graft.Artifacts.materialize(spark, sfDir, "graft_delta_", "doc_id") {
       computeSnapshotDelta(spark, sfDir)
     }
 
@@ -431,8 +429,7 @@ object CurationPipeline {
     * incremental result row-identical to a from-scratch shingling of
     * snapshot B; Bench times the two builds against each other. */
   def refreshedShingles(spark: SparkSession, sfDir: String): DataFrame =
-    graft.Artifacts.materialize(spark,
-      "graft_shingles_b_" + graft.Tables.dirKey(spark, sfDir), "doc_id") {
+    graft.Artifacts.materialize(spark, sfDir, "graft_shingles_b_", "doc_id") {
       computeRefreshedShingles(spark, sfDir)
     }
 
@@ -501,12 +498,7 @@ object CurationPipeline {
     * snapshots. */
   def q157CdcRefresh(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.sources.ManifestTable
-    val root = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"),
-      "manifest_cdc_" + Tables.dirKey(spark, sfDir)).toString
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(rootPath)) fs.delete(rootPath, true)
+    val root = graft.Artifacts.freshRoot(spark, sfDir, "manifest_cdc_")
     val docs = Tables.documents(spark, sfDir)
     ManifestTable.overwrite(spark, root,
       docs.repartitionByRange(8, col("doc_id"))
@@ -554,8 +546,7 @@ object CurationPipeline {
 
   /** The refreshed (snapshot-B) signature ARTIFACT — q83's table. */
   def refreshedSignatures(spark: SparkSession, sfDir: String): DataFrame =
-    graft.Artifacts.materialize(spark,
-      "graft_signatures_b_" + graft.Tables.dirKey(spark, sfDir), "doc_id") {
+    graft.Artifacts.materialize(spark, sfDir, "graft_signatures_b_", "doc_id") {
       computeRefreshedSignatures(spark, sfDir)
     }
 
@@ -654,8 +645,7 @@ object CurationPipeline {
     * to a from-scratch census of snapshot B; Bench times the two builds
     * against each other (span_refresh_sec vs span_rebuild_sec). */
   def refreshedSpanFeatures(spark: SparkSession, sfDir: String): DataFrame =
-    graft.Artifacts.materialize(spark,
-      "graft_spanfeat_b_" + graft.Tables.dirKey(spark, sfDir), "doc_id") {
+    graft.Artifacts.materialize(spark, sfDir, "graft_spanfeat_b_", "doc_id") {
       computeRefreshedSpanFeatures(spark, sfDir)
     }
 
@@ -710,8 +700,7 @@ object CurationPipeline {
     * column included — to a from-scratch feature pass over snapshot
     * B; Bench pairs docfeat_refresh_sec vs docfeat_rebuild_sec. */
   def refreshedDocFeatures(spark: SparkSession, sfDir: String): DataFrame =
-    graft.Artifacts.materialize(spark,
-      "graft_docfeat_b_" + graft.Tables.dirKey(spark, sfDir), "doc_id") {
+    graft.Artifacts.materialize(spark, sfDir, "graft_docfeat_b_", "doc_id") {
       computeRefreshedDocFeatures(spark, sfDir)
     }
 
@@ -1090,8 +1079,7 @@ object CurationPipeline {
     * change set, exactly q116's discipline. */
   private[graft] def trimmedFeatures(spark: SparkSession,
       sfDir: String): DataFrame =
-    graft.Artifacts.materialize(spark,
-        "graft_trimfeat_" + Tables.dirKey(spark, sfDir), "doc_id") {
+    graft.Artifacts.materialize(spark, sfDir, "graft_trimfeat_", "doc_id") {
       val cuts = SuffixQueries.q119TrimPlan(spark, sfDir)
         .groupBy("doc_id")
         .agg(array_sort(collect_list(

@@ -170,47 +170,15 @@ object DedupQueries {
     * the trio consumers and [[exactDupEdges]], so the edge path can
     * never observe a cache entry the trio path didn't just ensure. */
   private def dupMetaFor(spark: SparkSession, sfDir: String,
-                         pred: Column): DupMeta = {
-    // Tables.dirKey, not the raw path: the fingerprint component
-    // re-keys — and so re-derives — the dup metadata when the dir's
-    // files are rewritten mid-session (the artifact registry's
-    // freshness contract; the trio's checkpointed relations would
-    // otherwise outlive the artifacts they were derived from).
-    // Computed ONCE, OUTSIDE every monitor below: the fingerprint is a
-    // recursive dir listing (must not run under the cache lock), and
-    // using one key for both the ensure and the lookup means a dir
-    // rewritten mid-call can't make the lookup miss an entry the
-    // ensure just created.
-    val key = (Tables.dirKey(spark, sfDir), pred.toString)
-    val cache = trioCache.synchronized {
-      var m = trioCache.get(spark)
-      if (m == null) {
-        m = scala.collection.mutable.Map.empty
-        trioCache.put(spark, m)
-      }
-      m
+                         pred: Column): DupMeta =
+    trioCache(spark, sfDir, pred.toString) {
+      val keyed = TextQueries.docFeatures(spark, sfDir)
+        .where(pred).select("h", "doc_id")
+      val multiH = hashGroupsOfKeyed(keyed)
+        .where(col("cnt") > 1).select("h").localCheckpoint()
+      val ids = dupMemberIds(keyed, multiH)
+      dupMetaOf(multiH, normsForIds(spark, sfDir, ids).localCheckpoint())
     }
-    // the derivation (artifact reads + checkpoint jobs) runs OUTSIDE
-    // the cache monitor. This is not just the blocking concern the
-    // model caches share — it breaks a genuine ABBA cycle: this build
-    // calls docFeatures (the Artifacts registry monitor), while
-    // curatedHandoff's artifact BUILD closure calls back into this
-    // cache from inside that registry's monitor. With the build outside
-    // the lock, only the registry→trio ordering remains. A lost race
-    // derives twice; getOrElseUpdate keeps the first trio.
-    trioCache.synchronized { cache.get(key) } match {
-      case Some(v) => v
-      case None =>
-        val keyed = TextQueries.docFeatures(spark, sfDir)
-          .where(pred).select("h", "doc_id")
-        val multiH = hashGroupsOfKeyed(keyed)
-          .where(col("cnt") > 1).select("h").localCheckpoint()
-        val ids = dupMemberIds(keyed, multiH)
-        val built =
-          dupMetaOf(multiH, normsForIds(spark, sfDir, ids).localCheckpoint())
-        trioCache.synchronized { cache.getOrElseUpdate(key, built) }
-    }
-  }
 
   /** The EXACT-dup edge set of the corpus under `sfDir`: one
     * `(doc_id_1 = member, doc_id_2 = keeper)` row per non-keeper member
@@ -221,12 +189,9 @@ object DedupQueries {
     * trio consumers (q50/q64) never pay for it. */
   private[graft] def exactDupEdges(spark: SparkSession,
                                    sfDir: String): DataFrame =
-    // the lazy edge build (a checkpoint job) is forced OUTSIDE the cache
-    // monitor — dupMetaFor holds it only for the map lookup, and
-    // DupMeta's lazy val has its own monitor, so concurrent forcing
-    // stays race-free. No second key derivation, no raw Map apply: the
-    // ensure and the lookup are the same call, so a dir whose
-    // fingerprint changes mid-call rebuilds instead of throwing.
+    // the lazy edge build (a checkpoint job) is forced outside the
+    // memo's lock; DupMeta's lazy val has its own monitor, so
+    // concurrent forcing stays race-free
     dupMetaFor(spark, sfDir, lit(true)).edges
 
   /** Metadata bundle one verify base yields: the trio every consumer
@@ -238,13 +203,10 @@ object DedupQueries {
     lazy val edges: DataFrame = edgesThunk()
   }
 
-  /** Metas already derived this session, keyed by (dir, predicate SQL)
-    * — weak-keyed like the Artifacts registry, so a discarded session's
-    * checkpoints are collectable. A predicate built through a different
-    * expression tree misses the cache and rebuilds: never wrong, only
-    * unshared. */
-  private val trioCache = new java.util.WeakHashMap[SparkSession,
-    scala.collection.mutable.Map[(String, String), DupMeta]]
+  /** Metas already derived this session, keyed by (dir, predicate SQL).
+    * A predicate built through a different expression tree misses the
+    * cache and rebuilds: never wrong, only unshared. */
+  private val trioCache = new Artifacts.Memo[DupMeta]
 
   /** [[dupGroupsFromFeatures]] over a raw `(doc_id, norm)` relation —
     * same metadata, same keeper rule, for inputs that are not the
@@ -378,8 +340,7 @@ object DedupQueries {
     * shingling is per-document, so filter-then-shingle ≡ shingle-then-
     * filter. */
   def shingles(spark: SparkSession, sfDir: String): DataFrame =
-    Artifacts.materialize(spark, "graft_shingles_" + Tables.dirKey(spark, sfDir),
-      "doc_id") {
+    Artifacts.materialize(spark, sfDir, "graft_shingles_", "doc_id") {
       Text.shingleRows(Tables.documents(spark, sfDir), "doc_id", "text", 3)
     }
 
@@ -396,8 +357,7 @@ object DedupQueries {
     * [[shingles]] artifact, so the tokenize pass is shared with the
     * n-gram consumers too. */
   def signatures(spark: SparkSession, sfDir: String): DataFrame =
-    Artifacts.materialize(spark, "graft_signatures_" + Tables.dirKey(spark, sfDir),
-      "doc_id") {
+    Artifacts.materialize(spark, sfDir, "graft_signatures_", "doc_id") {
       computeSignatures(spark, sfDir)
     }
 
@@ -527,8 +487,7 @@ object DedupQueries {
     * snapshot and read by every split/dedup/reporting job — this table
     * is that snapshot, and q42/q71 both read it. */
   def clusterLabels(spark: SparkSession, sfDir: String): DataFrame =
-    Artifacts.materialize(spark, "graft_clusters_" + Tables.dirKey(spark, sfDir),
-      "doc_id") {
+    Artifacts.materialize(spark, sfDir, "graft_clusters_", "doc_id") {
       computeClusters(spark, sfDir)
     }
 
@@ -719,8 +678,7 @@ object DedupQueries {
     * deliberately does NOT read it: the bloom prefilter is the
     * independent path that must reproduce this table's contents. */
   def contamination(spark: SparkSession, sfDir: String): DataFrame =
-    Artifacts.materialize(spark, "graft_contam_" + Tables.dirKey(spark, sfDir),
-      "doc_id") {
+    Artifacts.materialize(spark, sfDir, "graft_contam_", "doc_id") {
       computeContamination(spark, sfDir)
     }
 
@@ -1055,8 +1013,7 @@ object DedupQueries {
     * a branch over a bucketed fixed-width table reads columns instead.
     * Bucketed on doc_id like every per-doc consumer expects. */
   def spanFeatures(spark: SparkSession, sfDir: String): DataFrame =
-    Artifacts.materialize(spark, "graft_spanfeat_" + Tables.dirKey(spark, sfDir),
-      "doc_id") {
+    Artifacts.materialize(spark, sfDir, "graft_spanfeat_", "doc_id") {
       computeSpanFeatures(spark, sfDir)
     }
 

@@ -130,12 +130,8 @@ object ProductQuantization {
         }): _*)
   }
 
-  /** Model cache — same session-scoped, weak-keyed contract as the IVF
-    * codebook cache (SimilarityQueries.codebooks). */
-  private val models = new java.util.WeakHashMap[
-    SparkSession,
-    scala.collection.mutable.Map[String,
-      (Seq[(Long, Seq[Double])], Seq[Seq[Seq[Long]]])]]
+  private val models =
+    new Artifacts.Memo[(Seq[(Long, Seq[Double])], Seq[Seq[Seq[Long]]])]
 
   /** The trained PQ model: (coarse codebook, sub-codebooks[m][k][j] in
     * micros). Training is ONE deterministic Lloyd round per subspace on
@@ -153,31 +149,8 @@ object ProductQuantization {
     * codes, narrower widths) through exactly the shipped recipe; the
     * shipped queries call it at ([[M]], [[K]]). */
   def pqModelAt(spark: SparkSession, sfDir: String, m: Int, k: Int)
-      : (Seq[(Long, Seq[Double])], Seq[Seq[Seq[Long]]]) = {
-    val cache = models.synchronized {
-      var c = models.get(spark)
-      if (c == null) {
-        c = scala.collection.mutable.Map.empty
-        models.put(spark, c)
-      }
-      c
-    }
-    // Tables.dirKey, not the raw path: the fingerprint component
-    // re-keys — and so retrains — the model when the dir's files are
-    // rewritten mid-session, the same freshness contract as the
-    // artifact registry and the IVF codebook cache
-    val key = s"${Tables.dirKey(spark, sfDir)}:$m:$k"
-    // training (two collects over the corpus residuals) runs OUTSIDE
-    // the cache monitor — same contract as SimilarityQueries'
-    // cachedCodebook: a lost race trains twice, getOrElseUpdate keeps
-    // the first, and no other model consumer blocks meanwhile
-    models.synchronized { cache.get(key) } match {
-      case Some(v) => v
-      case None =>
-        val built = trainModel(spark, sfDir, m, k)
-        models.synchronized { cache.getOrElseUpdate(key, built) }
-    }
-  }
+      : (Seq[(Long, Seq[Double])], Seq[Seq[Seq[Long]]]) =
+    models(spark, sfDir, s"$m:$k")(trainModel(spark, sfDir, m, k))
 
   private def trainModel(spark: SparkSession, sfDir: String, m: Int, k: Int)
       : (Seq[(Long, Seq[Double])], Seq[Seq[Seq[Long]]]) = {
@@ -231,8 +204,7 @@ object ProductQuantization {
     * codes, never raw vectors. Coding itself is map-side over the
     * embeddings scan (model shipped as literals — spec-pinned). */
   def pqIndex(spark: SparkSession, sfDir: String): DataFrame =
-    Artifacts.materialize(spark, "graft_pqcodes_" + Tables.dirKey(spark, sfDir),
-      "vec_id") {
+    Artifacts.materialize(spark, sfDir, "graft_pqcodes_", "vec_id") {
       computePqCodes(spark, sfDir)
     }
 
@@ -245,8 +217,8 @@ object ProductQuantization {
   def pqIndexAt(spark: SparkSession, sfDir: String,
                 m: Int, k: Int): DataFrame =
     if (m == M && k == K) pqIndex(spark, sfDir)
-    else Artifacts.materialize(spark,
-      s"graft_pqcodes_${m}_${k}_" + Tables.dirKey(spark, sfDir), "vec_id") {
+    else Artifacts.materialize(spark, sfDir,
+      s"graft_pqcodes_${m}_${k}_", "vec_id") {
       computePqCodesAt(spark, sfDir, m, k)
     }
 
@@ -469,8 +441,7 @@ object ProductQuantization {
     * code table's layout, so the refresh's anti/semi joins against it
     * are exchange-free. */
   def vectorDeltaStaged(spark: SparkSession, sfDir: String): DataFrame =
-    Artifacts.materialize(spark,
-      "graft_vecdelta_" + Tables.dirKey(spark, sfDir), "vec_id") {
+    Artifacts.materialize(spark, sfDir, "graft_vecdelta_", "vec_id") {
       computeVectorDelta(spark, sfDir)
     }
 
@@ -530,8 +501,8 @@ object ProductQuantization {
   /** The refreshed (snapshot-B) PQ code-table ARTIFACT — q91's table,
     * bucketed on vec_id like the base index. */
   def refreshedPqIndex(spark: SparkSession, sfDir: String): DataFrame =
-    Artifacts.materialize(spark,
-      s"graft_pqcodes_b_${M256}_${K256}_" + Tables.dirKey(spark, sfDir), "vec_id") {
+    Artifacts.materialize(spark, sfDir,
+      s"graft_pqcodes_b_${M256}_${K256}_", "vec_id") {
       computeRefreshedPqCodes(spark, sfDir)
     }
 

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Artifacts, Tables}
 import graft.sources.ManifestTable
 import graft.functions.Vectors
 
@@ -113,51 +113,8 @@ object SimilarityQueries {
 
   /** Codebooks are index ARTIFACTS: built once per (session, scale dir),
     * then reused by every query — the same build-once/consume-many story
-    * as the MinHash signature table, at codebook (not data) size.
-    *
-    * WEAK-keyed by session so a stopped/discarded session's entries are
-    * collectable instead of pinning the SparkSession for the JVM's life.
-    * Freshness contract (same as the Artifacts registry): entries are
-    * keyed by [[Tables.dirKey]] — which folds in the dir-listing
-    * fingerprint — so a cached sfDir whose files are rewritten
-    * mid-session re-keys and RETRAINS instead of assigning fresh
-    * vectors against a stale codebook (the one driver-side cache class
-    * the artifact re-keying alone would not have covered). */
-  private val codebooks = new java.util.WeakHashMap[
-    SparkSession,
-    scala.collection.mutable.Map[(String, String), Seq[(Long, Seq[Double])]]]
-
-  private def codebookCache(spark: SparkSession)
-      : scala.collection.mutable.Map[(String, String), Seq[(Long, Seq[Double])]] =
-    codebooks.synchronized {
-      var m = codebooks.get(spark)
-      if (m == null) {
-        m = scala.collection.mutable.Map.empty
-        codebooks.put(spark, m)
-      }
-      m
-    }
-
-  /** Cache lookup with the DERIVATION evaluated OUTSIDE the cache
-    * monitor: holding a JVM-global lock across multi-job Spark work
-    * (collects, Lloyd rounds) blocks every other caller — including
-    * pure cache HITS — for the whole training run, and building inside
-    * the monitor is one half of a lock-ordering cycle with the
-    * Artifacts registry, whose build closures call back into these
-    * caches. A lost race builds twice; getOrElseUpdate keeps the first
-    * result, and derivations are pure, so the duplicate is only wasted
-    * work. Lock-ordering rule (engine-wide): Artifacts.built may be
-    * held while TAKING a model-cache monitor, never the reverse. */
-  private def cachedCodebook(spark: SparkSession, key: (String, String))
-      (build: => Seq[(Long, Seq[Double])]): Seq[(Long, Seq[Double])] = {
-    val c = codebookCache(spark)
-    codebooks.synchronized { c.get(key) } match {
-      case Some(v) => v
-      case None =>
-        val built = build
-        codebooks.synchronized { c.getOrElseUpdate(key, built) }
-    }
-  }
+    * as the MinHash signature table, at codebook (not data) size. */
+  private val codebooks = new Artifacts.Memo[Seq[(Long, Seq[Double])]]
 
   /** IVF codebook collected to the driver — NumCells rows, bounded by the
     * codebook size, never by data size. In FAISS terms the coarse
@@ -178,7 +135,7 @@ object SimilarityQueries {
     * tracks n²/2k. */
   def codebookAt(spark: SparkSession, sfDir: String,
                  k: Int): Seq[(Long, Seq[Double])] =
-    cachedCodebook(spark, (Tables.dirKey(spark, sfDir), s"init_$k")) {
+    codebooks(spark, sfDir, s"init_$k") {
       val seeds = vecs(spark, sfDir).where(col("vec_id") < k)
         .orderBy("vec_id")
         .collect().toSeq.map(r => (r.getLong(0), r.getSeq[Double](1)))
@@ -403,9 +360,7 @@ object SimilarityQueries {
     * (session, scale dir); public for the spec. Returns the root after
     * the two refresh commits (v1 stale, v2 junk delete, v3 append). */
   def refreshedIndexRoot(spark: SparkSession, sfDir: String): String = {
-    val root = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"),
-      "ivf_refresh_" + graft.Tables.dirKey(spark, sfDir)).toString
+    val root = Artifacts.manifestRoot(spark, sfDir, "ivf_refresh_")
     val p = new org.apache.hadoop.fs.Path(root)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // the build is THREE commits — a bare existence check would serve
@@ -436,25 +391,18 @@ object SimilarityQueries {
     root
   }
 
-  /** The stored index: one file per cell-range, rebuilt (atomically,
-    * version N+1) whenever called on a fresh warehouse. Public for the
-    * spec. */
+  /** The stored index: one file per cell-range, built once per
+    * (session, scale dir) as a manifest-committed artifact. Public for
+    * the spec. */
   def indexRoot(spark: SparkSession, sfDir: String): String = {
-    val root = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"),
-      "ivf_index_" + graft.Tables.dirKey(spark, sfDir)).toString
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) {
-      val cents = kmeansCodebook(spark, sfDir)
-      graft.sources.ManifestTable.overwrite(spark, root,
-        assignCells(vecs(spark, sfDir), cents)
-          .select(col("cell"), col("vec_id"), col("v"))
-          .repartitionByRange(NumCells, col("cell"))
-          .sortWithinPartitions("cell"),
-        boundsCol = Some("cell"))
+    Artifacts.materializeManifest(spark, sfDir, "ivf_index_",
+        boundsCol = Some("cell")) {
+      assignCells(vecs(spark, sfDir), kmeansCodebook(spark, sfDir))
+        .select(col("cell"), col("vec_id"), col("v"))
+        .repartitionByRange(NumCells, col("cell"))
+        .sortWithinPartitions("cell")
     }
-    root
+    Artifacts.manifestRoot(spark, sfDir, "ivf_index_")
   }
 
   /** The k-means codebook after KmeansIters rounds — built once per
@@ -469,7 +417,7 @@ object SimilarityQueries {
     * (sfDir, k). */
   def kmeansCodebookAt(spark: SparkSession, sfDir: String,
                        k: Int): Seq[(Long, Seq[Double])] =
-    cachedCodebook(spark, (Tables.dirKey(spark, sfDir), s"kmeans_$k")) {
+    codebooks(spark, sfDir, s"kmeans_$k") {
       val e = vecs(spark, sfDir)
       (1 to KmeansIters).foldLeft(codebookAt(spark, sfDir, k))(
         (c, _) => lloydStep(e, c))

@@ -190,8 +190,7 @@ object SuffixQueries {
     * q115's per-source profile) reads the table. Unfiltered
     * (minReport = 1) so consumers pick their own thresholds. */
   def suffixShared(spark: SparkSession, sfDir: String): DataFrame =
-    graft.Artifacts.materialize(spark,
-        "graft_suffixshared_" + Tables.dirKey(spark, sfDir), "doc_id") {
+    graft.Artifacts.materialize(spark, sfDir, "graft_suffixshared_", "doc_id") {
       suffixRepeatsOf(Tables.documents(spark, sfDir), PrefixCap, 1)
     }
 
@@ -402,8 +401,7 @@ object SuffixQueries {
     * trim plan) read the bucketed rows — their doc-keyed windows then
     * run off the bucketed scan. */
   def suffixPositions(spark: SparkSession, sfDir: String): DataFrame =
-    graft.Artifacts.materialize(spark,
-        "graft_suffixpos_" + Tables.dirKey(spark, sfDir), "doc_id") {
+    graft.Artifacts.materialize(spark, sfDir, "graft_suffixpos_", "doc_id") {
       positionMatchLengths(Tables.documents(spark, sfDir),
         PrefixCap, DupThreshold)
     }
@@ -555,8 +553,8 @@ object SuffixQueries {
     * what [[q116SuffixDelta]] materializes (the changed rows ARE the
     * write set, measured in tools.SuffixScaling). */
   def suffixSharedB(spark: SparkSession, sfDir: String): DataFrame =
-    graft.Artifacts.materialize(spark,
-        "graft_suffixshared_b_" + Tables.dirKey(spark, sfDir), "doc_id") {
+    graft.Artifacts.materialize(spark, sfDir,
+      "graft_suffixshared_b_", "doc_id") {
       suffixRepeatsOf(
         CurationPipeline.snapshotB(Tables.documents(spark, sfDir)),
         PrefixCap, 1)

@@ -210,8 +210,7 @@ object SuffixRefresh extends Serializable {
   // Stored A-state artifacts (once per session per dir)
   // -------------------------------------------------------------------
 
-  private def indexAName(spark: SparkSession, sfDir: String): String =
-    "graft_sfxridx_" + Tables.dirKey(spark, sfDir)
+  private val IndexAPrefix = "graft_sfxridx_"
 
   /** The stored suffix index as a MANIFEST-COMMITTED artifact,
     * bounds-stamped on `part` (one range partition per file, so a
@@ -221,21 +220,19 @@ object SuffixRefresh extends Serializable {
     * directory-partitioned layout pruned directories, plus the
     * transactional rewrite every artifact build now rides. */
   def indexA(spark: SparkSession, sfDir: String): DataFrame =
-    graft.Artifacts.materializeManifest(spark,
-        indexAName(spark, sfDir), boundsCol = Some("part")) {
+    graft.Artifacts.materializeManifest(spark, sfDir, IndexAPrefix,
+        boundsCol = Some("part")) {
       taggedIndexOf(Tables.documents(spark, sfDir),
         spark.sessionState.conf.numShufflePartitions)
     }
 
   def innerMaxA(spark: SparkSession, sfDir: String): DataFrame =
-    graft.Artifacts.materialize(spark,
-        "graft_sfxrinner_" + Tables.dirKey(spark, sfDir), "doc_id") {
+    graft.Artifacts.materialize(spark, sfDir, "graft_sfxrinner_", "doc_id") {
       innerMaxOf(indexA(spark, sfDir))
     }
 
   def summariesA(spark: SparkSession, sfDir: String): DataFrame =
-    graft.Artifacts.materializeManifest(spark,
-        "graft_sfxrsums_" + Tables.dirKey(spark, sfDir)) {
+    graft.Artifacts.materializeManifest(spark, sfDir, "graft_sfxrsums_") {
       summariesOf(indexA(spark, sfDir))
     }
 
@@ -403,7 +400,7 @@ object SuffixRefresh extends Serializable {
       // only the affected partitions' files, decided from its manifest
       indexForParts = Some(parts =>
         graft.sources.ManifestTable.readWhereKeyIn(spark,
-          graft.Artifacts.manifestRoot(spark, indexAName(spark, sfDir)),
+          graft.Artifacts.manifestRoot(spark, sfDir, IndexAPrefix),
           "part", parts.map(_.toLong))))
   }
 

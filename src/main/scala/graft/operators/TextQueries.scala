@@ -43,8 +43,7 @@ object TextQueries {
     * artifact by per-doc upsert — no cross-document state, unlike the
     * signature refresh chain (q83) it would ride beside. */
   def docFeatures(spark: SparkSession, sfDir: String): DataFrame =
-    Artifacts.materialize(spark,
-        "graft_docfeatures_" + Tables.dirKey(spark, sfDir), "doc_id") {
+    Artifacts.materialize(spark, sfDir, "graft_docfeatures_", "doc_id") {
       docFeaturesOf(Tables.documents(spark, sfDir))
     }
 
@@ -1012,31 +1011,13 @@ object TextQueries {
 
   /** Snapshot A's sketch, built once per (session, dir) off the
     * artifact-backed bigram stream — the stored-index stand-in the
-    * refresh updates (same weak-keyed discipline as
-    * DelimitedSources.staged). */
-  private val sketchCache = new java.util.WeakHashMap[SparkSession,
-    scala.collection.mutable.Map[String, Array[Long]]]
+    * refresh updates. */
+  private val sketchCache = new Artifacts.Memo[Array[Long]]
   private[graft] def baseSketch(spark: SparkSession,
-                                sfDir: String): Array[Long] = {
-    val cache = sketchCache.synchronized {
-      var m = sketchCache.get(spark)
-      if (m == null) {
-        m = scala.collection.mutable.Map.empty
-        sketchCache.put(spark, m)
-      }
-      m
+                                sfDir: String): Array[Long] =
+    sketchCache(spark, sfDir) {
+      cmsSketchOf(bigramsFrom(DedupQueries.spanFeatures(spark, sfDir)))
     }
-    val key = Tables.dirKey(spark, sfDir)
-    // build outside the monitor (a Spark job); a lost race rebuilds the
-    // same deterministic vector, so either winner is correct
-    sketchCache.synchronized { cache.get(key) } match {
-      case Some(a) => a
-      case None =>
-        val built = cmsSketchOf(
-          bigramsFrom(DedupQueries.spanFeatures(spark, sfDir)))
-        sketchCache.synchronized { cache.getOrElseUpdate(key, built) }
-    }
-  }
 
   /** Q136: MAD robust outliers — q70's length gate made SKEW-PROOF:
     * z-scores (mean/stddev) move with the very outliers they hunt (one

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-import graft.{GraftSession, Tables}
+import graft.{Artifacts, GraftSession, Tables}
 
 /** CSV / JSON / ORC / gzip-CSV source support (S7 breadth — the
   * reference reads only
@@ -45,53 +45,37 @@ object DelimitedSources {
     * discipline applied to the text renders: before this, every
     * q58/q59 call re-ran the coalesce(1) write, and the FIXED shared
     * tmp path meant two concurrent JVMs could interleave one's
-    * overwrite-delete with the other's read. Weak-keyed per session;
-    * each session stages under its own fresh temp dir, so cross-JVM
-    * (and cross-session) runs never collide. */
-  private val staged = new java.util.WeakHashMap[SparkSession,
-    scala.collection.mutable.Map[String, String]]
+    * overwrite-delete with the other's read. Each render lands in its
+    * own fresh temp dir, so cross-JVM (and cross-session) runs never
+    * collide and a lost race never tears a read. */
+  private val staged = new Artifacts.Memo[String]
 
   /** Render a test table as csv/json ONCE per (session, table, dir) —
     * small dims, one file. */
   private def stage(spark: SparkSession, sfDir: String,
-                    table: String, fmt: String): String = {
-    val cache = staged.synchronized {
-      var m = staged.get(spark)
-      if (m == null) {
-        m = scala.collection.mutable.Map.empty
-        staged.put(spark, m)
+                    table: String, fmt: String): String =
+    staged(spark, sfDir, s"${fmt}_$table") {
+      // staged renders are JVM-lifetime temp state, so they get the
+      // same shutdown discipline as the warehouse dir — an
+      // unregistered temp dir would accumulate under /tmp (often
+      // tmpfs) across repeated JVM runs; a lost race's render is swept
+      // by its own hook, so the winner's files are never deleted early
+      val tmpDir = java.nio.file.Files.createTempDirectory("graft-sources-")
+      Runtime.getRuntime.addShutdownHook(new Thread(() =>
+        GraftSession.deleteRecursively(tmpDir.toFile)))
+      val out = tmpDir.toString + "/" +
+        Artifacts.nameOf(spark, sfDir, s"${fmt}_${table}_")
+      val w = Tables.load(spark, sfDir, table).coalesce(1)
+        .write.mode("overwrite")
+      fmt match {
+        case "csv"   => w.option("header", "true").csv(out)
+        case "csvgz" => w.option("header", "true")
+          .option("compression", "gzip").csv(out)
+        case "json"  => w.json(out)
+        case "orc"   => w.orc(out)
       }
-      m
+      out
     }
-    val key = s"${fmt}_${table}_" + Tables.dirKey(spark, sfDir)
-    // render outside the monitor (a Spark job); a lost race writes two
-    // distinct temp dirs and keeps the first — never a torn read
-    staged.synchronized { cache.get(key) } match {
-      case Some(p) => p
-      case None =>
-        // staged renders are JVM-lifetime temp state, so they get the
-        // same shutdown discipline as the warehouse dir — an
-        // unregistered temp dir would accumulate under /tmp (often
-        // tmpfs) across repeated JVM runs
-        val tmpDir = java.nio.file.Files.createTempDirectory("graft-sources-")
-        Runtime.getRuntime.addShutdownHook(new Thread(() =>
-          GraftSession.deleteRecursively(tmpDir.toFile)))
-        val out = tmpDir.toString + "/" + key
-        val w = Tables.load(spark, sfDir, table).coalesce(1)
-          .write.mode("overwrite")
-        fmt match {
-          case "csv"   => w.option("header", "true").csv(out)
-          case "csvgz" => w.option("header", "true")
-            .option("compression", "gzip").csv(out)
-          case "json"  => w.json(out)
-          case "orc"   => w.orc(out)
-        }
-        // a lost race keeps the winner's path; the loser's render is
-        // swept by its own shutdown hook registered above, so neither
-        // dir leaks and the winner's files are never deleted early
-        staged.synchronized { cache.getOrElseUpdate(key, out) }
-    }
-  }
 
   /** Q58: CSV round-trip — nation rendered to CSV, read back with the
     * parquet schema, aggregated per region. */

@@ -14,6 +14,8 @@ import org.apache.spark.sql.sources.{And, BaseRelation, EqualNullSafe, EqualTo, 
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructField, StructType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import graft.Artifacts
+
 /** THE SQL SURFACE OVER MANIFEST TABLES — a DataSource V2
   * `TableCatalog`, registered the way every public table format's
   * catalog is (Delta's `DeltaCatalog`, Iceberg's `SparkCatalog`):
@@ -525,12 +527,9 @@ object GraftCatalog {
     * correct result by design. */
   def q175SqlCatalog(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.functions.pmod
-    val key = graft.Tables.dirKey(spark, sfDir)
     val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val db = s"sqlcat_$key"
-    val dbPath = new Path(wh, db)
-    val fs = dbPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(dbPath)) fs.delete(dbPath, true)
+    val dbPath = new Path(Artifacts.freshRoot(spark, sfDir, "sqlcat_"))
+    val db = dbPath.getName
     val root = new Path(dbPath, "docs").toString
     val docs = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"))
@@ -572,12 +571,9 @@ object GraftCatalog {
     * REJECTED at analysis (`canDeleteWhere` false — never wrong rows),
     * spec-pinned with the no-match no-op. */
   def q183SqlDelete(spark: SparkSession, sfDir: String): DataFrame = {
-    val key = graft.Tables.dirKey(spark, sfDir)
     val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val db = s"sqldel_$key"
-    val dbPath = new Path(wh, db)
-    val fs = dbPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(dbPath)) fs.delete(dbPath, true)
+    val dbPath = new Path(Artifacts.freshRoot(spark, sfDir, "sqldel_"))
+    val db = dbPath.getName
     val root = new Path(dbPath, "docs").toString
     val docs = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"))
@@ -607,12 +603,9 @@ object GraftCatalog {
     * hash-fatal. */
   def q185SqlProcedures(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.functions.pmod
-    val key = graft.Tables.dirKey(spark, sfDir)
     val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val db = s"sqlproc_$key"
-    val dbPath = new Path(wh, db)
-    val fs = dbPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(dbPath)) fs.delete(dbPath, true)
+    val dbPath = new Path(Artifacts.freshRoot(spark, sfDir, "sqlproc_"))
+    val db = dbPath.getName
     val root = new Path(dbPath, "docs").toString
     val docs = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"))
@@ -659,12 +652,9 @@ object GraftCatalog {
     * loud at analysis) are spec-pinned. */
   def q186SqlTags(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.functions.pmod
-    val key = graft.Tables.dirKey(spark, sfDir)
     val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val db = s"sqltag_$key"
-    val dbPath = new Path(wh, db)
-    val fs = dbPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(dbPath)) fs.delete(dbPath, true)
+    val dbPath = new Path(Artifacts.freshRoot(spark, sfDir, "sqltag_"))
+    val db = dbPath.getName
     val root = new Path(dbPath, "docs").toString
     val docs = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"))
@@ -699,12 +689,9 @@ object GraftCatalog {
     * Scala rect read q162, the raw z-layout q130, and SQL). The
     * 2-D-beats-1-D pruning pin lives in GraftCatalogSpec. */
   def q188SqlZOrderRect(spark: SparkSession, sfDir: String): DataFrame = {
-    val key = graft.Tables.dirKey(spark, sfDir)
     val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val db = s"sqlzorder_$key"
-    val dbPath = new Path(wh, db)
-    val fs = dbPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(dbPath)) fs.delete(dbPath, true)
+    val dbPath = new Path(Artifacts.freshRoot(spark, sfDir, "sqlzorder_"))
+    val db = dbPath.getName
     val root = new Path(dbPath, "events").toString
     ManifestTable.overwrite(spark, root, graft.Tables.events(spark, sfDir))
     register(spark, "graft_tables", wh)
@@ -745,12 +732,9 @@ object GraftCatalog {
     * update), original-row SET semantics under SQL, and the loud
     * subquery/pinned-target rejections are GraftCatalogSpec's. */
   def q189SqlUpdate(spark: SparkSession, sfDir: String): DataFrame = {
-    val key = graft.Tables.dirKey(spark, sfDir)
     val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val db = s"sqlupd_$key"
-    val dbPath = new Path(wh, db)
-    val fs = dbPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(dbPath)) fs.delete(dbPath, true)
+    val dbPath = new Path(Artifacts.freshRoot(spark, sfDir, "sqlupd_"))
+    val db = dbPath.getName
     val root = new Path(dbPath, "docs").toString
     val docs = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"), col("text"))
@@ -779,12 +763,9 @@ object GraftCatalog {
     * (spec-pinned). */
   def q190SqlMerge(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.functions.pmod
-    val key = graft.Tables.dirKey(spark, sfDir)
     val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val db = s"sqlmrg_$key"
-    val dbPath = new Path(wh, db)
-    val fs = dbPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(dbPath)) fs.delete(dbPath, true)
+    val dbPath = new Path(Artifacts.freshRoot(spark, sfDir, "sqlmrg_"))
+    val db = dbPath.getName
     val root = new Path(dbPath, "docs").toString
     val docs = graft.Tables.documents(spark, sfDir)
     ManifestTable.overwrite(spark, root,
@@ -795,7 +776,7 @@ object GraftCatalog {
     // the q155 delta as ONE source view: removed docs (full rows —
     // their payload is unused, DELETE fires first), edited docs, and
     // the negative-namespace inserts, tagged by op
-    val view = s"q190_delta_$key"
+    val view = Artifacts.nameOf(spark, sfDir, "q190_delta_")
     docs.where(pmod(col("doc_id"), lit(10)) === 7)
       .withColumn("op", lit("remove"))
       .unionByName(
@@ -830,12 +811,9 @@ object GraftCatalog {
     * and the header-only property (same data files across the ALTER)
     * are GraftCatalogSpec's pins. */
   def q194SqlAddColumn(spark: SparkSession, sfDir: String): DataFrame = {
-    val key = graft.Tables.dirKey(spark, sfDir)
     val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val db = s"sqlevo_$key"
-    val dbPath = new Path(wh, db)
-    val fs = dbPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(dbPath)) fs.delete(dbPath, true)
+    val dbPath = new Path(Artifacts.freshRoot(spark, sfDir, "sqlevo_"))
+    val db = dbPath.getName
     val root = new Path(dbPath, "docs").toString
     val docs = graft.Tables.documents(spark, sfDir)
     ManifestTable.overwrite(spark, root,
@@ -843,7 +821,7 @@ object GraftCatalog {
     register(spark, "graft_tables", wh)
     val t = s"graft_tables.`$db`.`docs`"
     spark.sql(s"ALTER TABLE $t ADD COLUMN lang STRING")
-    val view = s"q194_src_$key"
+    val view = Artifacts.nameOf(spark, sfDir, "q194_src_")
     docs.where(col("doc_id") % 3 === 0)
       .select("doc_id", "text", "lang")
       .createOrReplaceTempView(view)
@@ -872,12 +850,9 @@ object GraftCatalog {
     * gate + the allowlist), spec-pinned. */
   def q200TypeWidening(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.functions.{length, pmod}
-    val key = graft.Tables.dirKey(spark, sfDir)
     val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val db = s"sqlwide_$key"
-    val dbPath = new Path(wh, db)
-    val fs = dbPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(dbPath)) fs.delete(dbPath, true)
+    val dbPath = new Path(Artifacts.freshRoot(spark, sfDir, "sqlwide_"))
+    val db = dbPath.getName
     val root = new Path(dbPath, "docs").toString
     val docs = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"), col("text"))
@@ -890,7 +865,7 @@ object GraftCatalog {
     val t = s"graft_tables.`$db`.`docs`"
     spark.sql(s"ALTER TABLE $t ALTER COLUMN len_i TYPE BIGINT")
     spark.sql(s"ALTER TABLE $t ALTER COLUMN val_f TYPE DOUBLE")
-    val view = s"q200_wide_$key"
+    val view = Artifacts.nameOf(spark, sfDir, "q200_wide_")
     docs.where(col("doc_id") % 3 === 0).select(
       col("doc_id"), col("lang"),
       length(col("text")).cast("long").as("len_i"),
@@ -935,12 +910,9 @@ object GraftCatalog {
   def q195SqlCompositeMerge(spark: SparkSession,
                             sfDir: String): DataFrame = {
     import org.apache.spark.sql.functions.{max, pmod, sum}
-    val key = graft.Tables.dirKey(spark, sfDir)
     val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val db = s"sqlcmrg_$key"
-    val dbPath = new Path(wh, db)
-    val fs = dbPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(dbPath)) fs.delete(dbPath, true)
+    val dbPath = new Path(Artifacts.freshRoot(spark, sfDir, "sqlcmrg_"))
+    val db = dbPath.getName
     val root = new Path(dbPath, "lineitem").toString
     // ONE deterministic row per (l_orderkey, l_linenumber) tuple —
     // integer-exact aggregation, so the DuckDB oracle replays it
@@ -966,7 +938,7 @@ object GraftCatalog {
           pmod(col("l_linenumber"), lit(2)) === 1)
         .select("l_orderkey", "l_linenumber"))
     register(spark, "graft_tables", wh)
-    val view = s"q195_delta_$key"
+    val view = Artifacts.nameOf(spark, sfDir, "q195_delta_")
     li.where(pmod(col("l_orderkey"), lit(10)) === 4)
       .withColumn("op", lit("remove"))
       .unionByName(
@@ -1007,12 +979,9 @@ object GraftCatalog {
     * the by-source side is spec-pinned. */
   def q196SqlMergeBySource(spark: SparkSession,
                            sfDir: String): DataFrame = {
-    val key = graft.Tables.dirKey(spark, sfDir)
     val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val db = s"sqlbsrc_$key"
-    val dbPath = new Path(wh, db)
-    val fs = dbPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(dbPath)) fs.delete(dbPath, true)
+    val dbPath = new Path(Artifacts.freshRoot(spark, sfDir, "sqlbsrc_"))
+    val db = dbPath.getName
     val root = new Path(dbPath, "docs").toString
     val docs = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"), col("text"))
@@ -1021,7 +990,7 @@ object GraftCatalog {
         .sortWithinPartitions("doc_id"),
       boundsCol = Some("doc_id"))
     register(spark, "graft_tables", wh)
-    val view = s"q196_crawl_$key"
+    val view = Artifacts.nameOf(spark, sfDir, "q196_crawl_")
     docs.where(col("doc_id") % 3 === 0)
       .withColumn("text",
         org.apache.spark.sql.functions.when(col("doc_id") % 10 === 3,
@@ -1065,14 +1034,11 @@ object GraftCatalog {
                             sfDir: String): DataFrame = {
     import org.apache.spark.sql.functions.{count, pmod, round, sum}
     import org.apache.spark.sql.streaming.Trigger
-    val key = graft.Tables.dirKey(spark, sfDir)
     val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val db = s"sqlstr_$key"
-    val dbPath = new Path(wh, db)
-    val fs = dbPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(dbPath)) fs.delete(dbPath, true)
+    val dbPath = new Path(Artifacts.freshRoot(spark, sfDir, "sqlstr_"))
+    val db = dbPath.getName
     val root = new Path(dbPath, "events").toString
-    val qn = s"q197_agg_$key"
+    val qn = Artifacts.nameOf(spark, sfDir, "q197_agg_")
     val ev = graft.Tables.events(spark, sfDir)
       .select(col("event_id"), col("event_type"), col("user_id"),
         col("value"))
@@ -1114,12 +1080,9 @@ object GraftCatalog {
   def q181SqlMetadataTables(spark: SparkSession,
                             sfDir: String): DataFrame = {
     import org.apache.spark.sql.functions.pmod
-    val key = graft.Tables.dirKey(spark, sfDir)
     val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val db = s"sqlmeta_$key"
-    val dbPath = new Path(wh, db)
-    val fs = dbPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(dbPath)) fs.delete(dbPath, true)
+    val dbPath = new Path(Artifacts.freshRoot(spark, sfDir, "sqlmeta_"))
+    val db = dbPath.getName
     val root = new Path(dbPath, "docs").toString
     val docs = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text"))
@@ -1151,15 +1114,13 @@ object GraftCatalog {
     * guard, and the schema contract all hold under SQL writes
     * (spec-pinned, with the pinned-table write rejection). */
   def q182SqlWrites(spark: SparkSession, sfDir: String): DataFrame = {
-    val key = graft.Tables.dirKey(spark, sfDir)
     val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val db = s"sqlwrite_$key"
-    val dbPath = new Path(wh, db)
-    val fs = dbPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(dbPath)) fs.delete(dbPath, true)
-    fs.mkdirs(dbPath)
+    val dbPath = new Path(Artifacts.freshRoot(spark, sfDir, "sqlwrite_"))
+    val db = dbPath.getName
+    dbPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .mkdirs(dbPath)
     register(spark, "graft_tables", wh)
-    val view = s"q182_docs_$key"
+    val view = Artifacts.nameOf(spark, sfDir, "q182_docs_")
     graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"))
       .createOrReplaceTempView(view)

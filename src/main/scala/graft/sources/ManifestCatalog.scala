@@ -167,14 +167,8 @@ object ManifestCatalog {
   def q178CatalogTxnScd2(spark: SparkSession, sfDir: String): DataFrame = {
     val root = ManifestTable.buildScd2DemoTable(spark, sfDir,
       "manifest_cattxn_")
-    val base = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"),
-      "manifest_cattxn_state_" +
-        graft.Tables.dirKey(spark, sfDir)).toString
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(base)))
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
+    val base = graft.Artifacts.freshRoot(spark, sfDir,
+      "manifest_cattxn_state_")
     val cat = Catalog(s"$base/catalog",
       Map("dim" -> s"$base/dim", "cur" -> s"$base/cur"))
     // seed transaction: dim from v1, cur mirrors v1

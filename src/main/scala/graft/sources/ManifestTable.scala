@@ -8,6 +8,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StructField, StructType, TimestampType}
 
+import graft.Artifacts
+
 /** MANIFEST-POINTER TABLES — the transactional commit the rewriting
   * operators (layout OPTIMIZE, artifact refresh snapshots) otherwise
   * lack on a plain filesystem: readers of a directory-listed table can
@@ -2741,17 +2743,6 @@ object ManifestTable {
       s"rewrite of $root"), carryE.size, staged.size)
   }
 
-  /** An emptied directory `prefix` + the input's key under the session
-    * warehouse — where each gated query below rebuilds its table. */
-  private def freshRoot(spark: SparkSession, sfDir: String,
-                        prefix: String): String = {
-    val root = new Path(spark.conf.get("spark.sql.warehouse.dir"),
-      prefix + graft.Tables.dirKey(spark, sfDir))
-    val fs = fsOf(spark, root)
-    if (fs.exists(root)) fs.delete(root, true)
-    root.toString
-  }
-
   /** Q152: the manifest lifecycle end-to-end, hash-gated — build the
     * documents table as a manifest table (v1 = 80% of docs), APPEND the
     * rest (v2), OPTIMIZE clustered on doc_id (v3), then read ALL THREE
@@ -2764,7 +2755,7 @@ object ManifestTable {
     * row-identity slip (not just a count slip) hash-visible. */
   def q152ManifestLifecycle(spark: SparkSession,
                             sfDir: String): DataFrame = {
-    val root = freshRoot(spark, sfDir, "manifest_docs_")
+    val root = Artifacts.freshRoot(spark, sfDir, "manifest_docs_")
     val docs = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"), col("text"))
     overwrite(spark, root, docs.where(col("doc_id") % 5 =!= 0))
@@ -2801,7 +2792,7 @@ object ManifestTable {
     * touch every range), so carry-over is exercised by the spec's
     * range-local delta instead. */
   def q155ManifestMerge(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = freshRoot(spark, sfDir, "manifest_merge_")
+    val root = Artifacts.freshRoot(spark, sfDir, "manifest_merge_")
     val docs = graft.Tables.documents(spark, sfDir)
     // bounds-stamped write (manifest format v2): the merge below finds
     // its affected files from the manifest alone, no snapshot scan
@@ -2832,7 +2823,7 @@ object ManifestTable {
     * both engines. */
   def q156ManifestPrunedRead(spark: SparkSession,
                              sfDir: String): DataFrame = {
-    val root = freshRoot(spark, sfDir, "manifest_pruned_")
+    val root = Artifacts.freshRoot(spark, sfDir, "manifest_pruned_")
     val docs = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"), col("text"))
     overwrite(spark, root,
@@ -2871,7 +2862,7 @@ object ManifestTable {
     * since skipping is invisible in the result by design. */
   def q163ManifestBloomPoint(spark: SparkSession,
                              sfDir: String): DataFrame = {
-    val root = freshRoot(spark, sfDir, "manifest_bloom_")
+    val root = Artifacts.freshRoot(spark, sfDir, "manifest_bloom_")
     val li = graft.Tables.lineitem(spark, sfDir)
       .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"))
     overwrite(spark, root,
@@ -2903,7 +2894,7 @@ object ManifestTable {
     * — the apply-at-read and apply-at-compaction paths cannot drift. */
   def q169ManifestEqualityDelete(spark: SparkSession,
                                  sfDir: String): DataFrame = {
-    val root = freshRoot(spark, sfDir, "manifest_eqdel_")
+    val root = Artifacts.freshRoot(spark, sfDir, "manifest_eqdel_")
     val docs = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"))
     overwrite(spark, root,
@@ -2935,7 +2926,7 @@ object ManifestTable {
     * definitions, so a wrong version resolution is hash-fatal. */
   def q173HistoryTimeTravel(spark: SparkSession,
                             sfDir: String): DataFrame = {
-    val root = freshRoot(spark, sfDir, "manifest_history_")
+    val root = Artifacts.freshRoot(spark, sfDir, "manifest_history_")
     val docs = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"))
     overwrite(spark, root, docs.where(pmod(col("doc_id"), lit(3)) === 0))
@@ -2976,7 +2967,7 @@ object ManifestTable {
     * one) is hash-fatal. */
   def q174CheckConstraints(spark: SparkSession,
                            sfDir: String): DataFrame = {
-    val root = freshRoot(spark, sfDir, "manifest_check_")
+    val root = Artifacts.freshRoot(spark, sfDir, "manifest_check_")
     val li = graft.Tables.lineitem(spark, sfDir)
       .select(col("l_orderkey"), col("l_linenumber"),
         col("l_returnflag"),
@@ -3032,7 +3023,7 @@ object ManifestTable {
     * The spec pins the mechanics (consolidated delete file, carried
     * files untouched, optimize afterwards agreeing). */
   def q179MergeOverDeletes(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = freshRoot(spark, sfDir, "manifest_mergedel_")
+    val root = Artifacts.freshRoot(spark, sfDir, "manifest_mergedel_")
     val docs = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text"))
     overwrite(spark, root,
@@ -3065,7 +3056,7 @@ object ManifestTable {
     * the tuple resurrection guard, and the merge rejection are
     * spec-pinned. */
   def q187CompositeDelete(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = freshRoot(spark, sfDir, "manifest_compdel_")
+    val root = Artifacts.freshRoot(spark, sfDir, "manifest_compdel_")
     val li = graft.Tables.lineitem(spark, sfDir)
       .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
         round(col("l_extendedprice") * 100).cast("long").as("price_cents"))
@@ -3112,7 +3103,7 @@ object ManifestTable {
     * pruning, whole-tuple guard, mismatched-key rejection) are
     * spec-pinned. */
   def q191CompositeMerge(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = freshRoot(spark, sfDir, "manifest_compmerge_")
+    val root = Artifacts.freshRoot(spark, sfDir, "manifest_compmerge_")
     val li = graft.Tables.lineitem(spark, sfDir)
       .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
         round(col("l_extendedprice") * 100).cast("long").as("price_cents"))
@@ -3151,7 +3142,7 @@ object ManifestTable {
     * constraint gate on updated values, and carried-vs-rewritten file
     * counts are the spec's pins. */
   def q184UpdateWhere(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = freshRoot(spark, sfDir, "manifest_update_")
+    val root = Artifacts.freshRoot(spark, sfDir, "manifest_update_")
     val docs = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"), col("text"))
     overwrite(spark, root,
@@ -3167,7 +3158,7 @@ object ManifestTable {
   }
 
   def q158SchemaEvolution(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = freshRoot(spark, sfDir, "manifest_evo_")
+    val root = Artifacts.freshRoot(spark, sfDir, "manifest_evo_")
     val docs = graft.Tables.documents(spark, sfDir)
     overwrite(spark, root,
       docs.where(col("doc_id") % 3 =!= 0).select("doc_id", "text"))
@@ -3199,7 +3190,7 @@ object ManifestTable {
     * ManifestTableSpec's pins. */
   def q198FieldIdEvolution(spark: SparkSession,
                            sfDir: String): DataFrame = {
-    val root = freshRoot(spark, sfDir, "manifest_fid_")
+    val root = Artifacts.freshRoot(spark, sfDir, "manifest_fid_")
     val docs = graft.Tables.documents(spark, sfDir)
     overwrite(spark, root,                                       // v1
       docs.where(col("doc_id") % 3 =!= 0).select("doc_id", "text"))
@@ -3249,7 +3240,7 @@ object ManifestTable {
     * /constraint drift, vacuumed gaps), the vacuum retention floor,
     * and dropBranch are ManifestTableSpec's pins. */
   def q199BranchWap(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = freshRoot(spark, sfDir, "manifest_wap_")
+    val root = Artifacts.freshRoot(spark, sfDir, "manifest_wap_")
     val docs = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"), col("text"))
     overwrite(spark, root,                                        // v1
@@ -3298,7 +3289,7 @@ object ManifestTable {
     * file statistics exist for. */
   def q159ManifestStats(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val root = freshRoot(spark, sfDir, "manifest_stats_")
+    val root = Artifacts.freshRoot(spark, sfDir, "manifest_stats_")
     val docs = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text"))
     overwrite(spark, root,
@@ -3354,7 +3345,7 @@ object ManifestTable {
     * put). Returns the table root (rebuilt fresh per call). */
   private[graft] def buildScd2DemoTable(spark: SparkSession, sfDir: String,
                                         prefix: String): String = {
-    val root = freshRoot(spark, sfDir, prefix)
+    val root = Artifacts.freshRoot(spark, sfDir, prefix)
     val docs = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text"))
     overwrite(spark, root,
@@ -3421,7 +3412,7 @@ object ManifestTable {
     * paths — q117/q142's shared-gate discipline). */
   def q161ManifestTailScd2(spark: SparkSession, sfDir: String): DataFrame = {
     val root = buildScd2DemoTable(spark, sfDir, "manifest_tail_")
-    val stateDir = freshRoot(spark, sfDir, "manifest_tailstate_")
+    val stateDir = Artifacts.freshRoot(spark, sfDir, "manifest_tailstate_")
     ManifestTail.catchUp(spark, root, stateDir)(
       seed = v1 => scd2Seed(v1),
       fold = (base, changes, v) => scd2Step(base,

@@ -19,14 +19,16 @@ import graft.{Artifacts, Tables}
   */
 object PartitionedSink {
 
+  private val DailyPrefix = "graft_events_daily_"
+
   def eventsDailyName(spark: SparkSession, sfDir: String): String =
-    "graft_events_daily_" + Tables.dirKey(spark, sfDir)
+    Artifacts.nameOf(spark, sfDir, DailyPrefix)
 
   /** The events table written PARTITIONED BY day — materialized once
     * per (session, scale dir) like every artifact, so consumers (q82,
     * ad-hoc date-range queries) read the layout, never rebuild it. */
   def eventsDaily(spark: SparkSession, sfDir: String): DataFrame =
-    Artifacts.materializePartitioned(spark, eventsDailyName(spark, sfDir), "day") {
+    Artifacts.materializePartitioned(spark, sfDir, DailyPrefix, "day") {
       Tables.events(spark, sfDir).withColumn("day", to_date(col("ts")))
     }
 

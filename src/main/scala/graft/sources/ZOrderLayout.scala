@@ -84,9 +84,6 @@ object ZOrderLayout {
     s"(${spread(x)} | (${spread(y)} << 1))"
   }
 
-  def zEventsName(spark: SparkSession, sfDir: String): String =
-    "graft_events_zorder_" + Tables.dirKey(spark, sfDir)
-
   /** Z-curve resolution per dimension. Raw values must NOT be
     * interleaved directly: dimensions of different bit-width stack all
     * the curve's significant bits on the wider one (user ids vary in ~8
@@ -117,7 +114,7 @@ object ZOrderLayout {
     * scale; at production scale the same layout also prunes at
     * row-group granularity. */
   def zEvents(spark: SparkSession, sfDir: String): DataFrame =
-    Artifacts.materializeManifest(spark, zEventsName(spark, sfDir)) {
+    Artifacts.materializeManifest(spark, sfDir, "graft_events_zorder_") {
       val (uMax, tMin, tMax) = boundsOf(spark, sfDir)
       Tables.events(spark, sfDir)
         .withColumn("zv", zValue(
@@ -181,13 +178,7 @@ object ZOrderLayout {
     * this query — is ManifestTableSpec's pin (skipping is invisible
     * in a correct result by design). */
   def q193ZOrder3D(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(
-      spark.conf.get("spark.sql.warehouse.dir"),
-      "manifest_z3_" + Tables.dirKey(spark, sfDir)).toString
-    val fs = new Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new Path(root))) fs.delete(new Path(root), true)
+    val root = Artifacts.freshRoot(spark, sfDir, "manifest_z3_")
     val li = Tables.lineitem(spark, sfDir)
       .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
         col("l_returnflag"),
@@ -243,13 +234,7 @@ object ZOrderLayout {
     * unapplied residual (extra rows) fires the hash gate. */
   def q162ZOrderManifestRect(spark: SparkSession,
                              sfDir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(
-      spark.conf.get("spark.sql.warehouse.dir"),
-      "manifest_zrect_" + Tables.dirKey(spark, sfDir)).toString
-    val fs = new Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new Path(root))) fs.delete(new Path(root), true)
+    val root = Artifacts.freshRoot(spark, sfDir, "manifest_zrect_")
     val (uMax, tMin, tMax) = boundsOf(spark, sfDir)
     val z = Tables.events(spark, sfDir)
       .withColumn("zv", zValue(

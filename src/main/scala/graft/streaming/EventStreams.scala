@@ -1036,10 +1036,12 @@ object EventStreams {
           expr("unix_micros(ts)").as("v")),
         Seq(25, 50, 75))
       .sortBy(_._2).map(_._3)
-    val landing = java.nio.file.Files
-      .createTempDirectory("graft-scd2-landing").toString
-    val stateDir = java.nio.file.Files
-      .createTempDirectory("graft-scd2-state").toString
+    // a local path: the landing stamps and the recovery pointer below
+    // read mtimes and listings through java.io.File
+    val root = new org.apache.hadoop.fs.Path(
+      graft.Artifacts.freshRoot(spark, sfDir, "stream_scd2_")).toUri.getPath
+    val landing = s"$root/landing"
+    val stateDir = s"$root/state"
     val bounds = (Long.MinValue +: qs) :+ Long.MaxValue
     bounds.sliding(2).zipWithIndex.foreach { case (Seq(lo, hi), i) =>
       fixtureLandOneFile(

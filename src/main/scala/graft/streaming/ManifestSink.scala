@@ -121,14 +121,7 @@ object ManifestSink {
     * missed resurrection is hash-fatal. */
   def q176CdcApplySink(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val key = graft.Tables.dirKey(spark, sfDir)
-    val base = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"),
-      "manifest_cdcapply_" + key).toString
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(base)))
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
+    val base = graft.Artifacts.freshRoot(spark, sfDir, "manifest_cdcapply_")
     val src = s"$base/src"
     val dst = s"$base/dst"
     val appId = "q176-cdc-apply"
@@ -217,14 +210,7 @@ object ManifestSink {
   def q171StreamUpsertSink(spark: SparkSession,
                            sfDir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val key = graft.Tables.dirKey(spark, sfDir)
-    val base = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"),
-      "manifest_upsert_" + key).toString
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(base)))
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
+    val base = graft.Artifacts.freshRoot(spark, sfDir, "manifest_upsert_")
     val root = s"$base/tbl"
     val appId = "q171-upsert"
     val ev = graft.Tables.events(spark, sfDir)

@@ -184,16 +184,9 @@ object ManifestStream {
   def q164StreamManifestSource(spark: SparkSession,
                                sfDir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val key = graft.Tables.dirKey(spark, sfDir)
-    val base = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"),
-      "manifest_stream_" + key).toString
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(base)))
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
+    val base = graft.Artifacts.freshRoot(spark, sfDir, "manifest_stream_")
     val root = s"$base/tbl"
-    val qn = s"q164_agg_$key"
+    val qn = graft.Artifacts.nameOf(spark, sfDir, "q164_agg_")
     val ev = graft.Tables.events(spark, sfDir)
       .select(col("event_id"), col("event_type"), col("user_id"),
         col("value"))
@@ -239,16 +232,9 @@ object ManifestStream {
   def q177TailAcrossOptimize(spark: SparkSession,
                              sfDir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val key = graft.Tables.dirKey(spark, sfDir)
-    val base = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"),
-      "manifest_tailopt_" + key).toString
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(base)))
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
+    val base = graft.Artifacts.freshRoot(spark, sfDir, "manifest_tailopt_")
     val root = s"$base/tbl"
-    val qn = s"q177_agg_$key"
+    val qn = graft.Artifacts.nameOf(spark, sfDir, "q177_agg_")
     val ev = graft.Tables.events(spark, sfDir)
       .select(col("event_id"), col("event_type"), col("user_id"),
         col("value"))
@@ -297,14 +283,7 @@ object ManifestStream {
   def q170ManifestChangeFeed(spark: SparkSession,
                              sfDir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val key = graft.Tables.dirKey(spark, sfDir)
-    val base = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"),
-      "manifest_cdf_" + key).toString
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(base)))
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
+    val base = graft.Artifacts.freshRoot(spark, sfDir, "manifest_cdf_")
     val root = s"$base/tbl"
     val docs = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"))

@@ -24,15 +24,19 @@ class ArtifactsSpec extends SparkSpec {
     // "stopped" on its own and its WeakReference stays uncleared for an
     // arbitrary GC's lifetime — without the explicit release, every other
     // session gets a nondeterministic IllegalStateException for the name.
-    val name = "graft_release_probe"
+    val name = "graft_release_probe_"
     val child = spark.newSession()
-    Artifacts.materialize(child, name, "id") { child.range(5).toDF("id") }
+    Artifacts.materialize(child, sfDir, name, "id") {
+      child.range(5).toDF("id")
+    }
     val e = intercept[IllegalStateException] {
-      Artifacts.materialize(spark, name, "id") { spark.range(5).toDF("id") }
+      Artifacts.materialize(spark, sfDir, name, "id") {
+        spark.range(5).toDF("id")
+      }
     }
     assert(e.getMessage.contains("another live session"))
     Artifacts.release(child)
-    val df = Artifacts.materialize(spark, name, "id") {
+    val df = Artifacts.materialize(spark, sfDir, name, "id") {
       spark.range(5).toDF("id")
     }
     assert(df.count() === 5)
@@ -44,7 +48,7 @@ class ArtifactsSpec extends SparkSpec {
     // build-once, so pin the physical files: same names, same mtimes
     // across calls means the second call wrote nothing.
     def listing(): Map[String, Long] = {
-      val name = "graft_shingles_" + Tables.dirKey(sfDir)
+      val name = Artifacts.nameOf(spark, sfDir, "graft_shingles_")
       val dir = new java.io.File(
         spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"),
         name)
@@ -70,8 +74,7 @@ class ArtifactsSpec extends SparkSpec {
     // derived from it. Without the fingerprint this test reads the FIRST
     // corpus's shingles after the rewrite.
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-fresh-").toString
+    val dir = scratchDir("graft-fresh-").toString
     try {
       def write(texts: Seq[String]): Unit =
         texts.zipWithIndex
@@ -101,8 +104,7 @@ class ArtifactsSpec extends SparkSpec {
     // artifact re-keying alone would not cover
     import spark.implicits._
     import graft.operators.SimilarityQueries
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-fresh-vec-").toString
+    val dir = scratchDir("graft-fresh-vec-").toString
     try {
       def write(scale: Float): Unit =
         (0L until 8L).map(i =>
@@ -119,26 +121,92 @@ class ArtifactsSpec extends SparkSpec {
     } finally GraftSession.deleteRecursively(new java.io.File(dir))
   }
 
+  test("Memo: one build per (session, dir, tag), a rewrite rebuilds, " +
+      "builds may nest, and a lost race keeps the first value") {
+    import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    import spark.implicits._
+    val dir = scratchDir("graft-memo-").toString
+    def write(n: Int): Unit =
+      (0 until n).toDF("id").coalesce(1).write.mode("overwrite")
+        .parquet(s"$dir/t.parquet")
+    write(1)
+
+    // one build per (session, dir, tag); a rewritten dir re-keys
+    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
+    val memo = new Artifacts.Memo[Int]
+    def get(s: org.apache.spark.sql.SparkSession, tag: String): Int =
+      memo(s, dir, tag)(builds.incrementAndGet())
+    assert(get(spark, "a") === 1)
+    assert(get(spark, "a") === 1)
+    assert(get(spark, "b") === 2)
+    assert(get(spark.newSession(), "a") === 3)
+    assert(builds.get === 3)
+    write(2)
+    assert(get(spark, "a") === 4)
+    assert(get(spark, "a") === 4)
+
+    val pool = Executors.newFixedThreadPool(2)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      // the lock-order rule: a memo build may materialize an artifact
+      // (whose build reads a memo) and consult another memo, and the
+      // memo's lock is free meanwhile — another thread's hit on the
+      // same memo completes while the build is still running
+      val outer = new Artifacts.Memo[Long]
+      val inner = new Artifacts.Memo[Long]
+      assert(outer(spark, dir, "ready")(7L) === 7L)
+      val n = outer(spark, dir, "nested") {
+        val hit = Future(outer(spark, dir, "ready")(-1L))
+        assert(Await.result(hit, 60.seconds) === 7L)
+        Artifacts.materialize(spark, dir, "graft_memo_probe_", "id") {
+          spark.range(inner(spark, dir, "n")(3L)).toDF("id")
+        }.count() + inner(spark, dir, "n")(-1L)
+      }
+      assert(n === 6L)
+
+      // two threads miss the same key and both build; the first to
+      // store wins and the second caller gets the first value too
+      val race = new Artifacts.Memo[String]
+      val bothBuilding = new CountDownLatch(2)
+      val firstStored = new CountDownLatch(1)
+      def build(v: String, after: Option[CountDownLatch]): String = {
+        bothBuilding.countDown()
+        assert(bothBuilding.await(60, TimeUnit.SECONDS))
+        after.foreach(l => assert(l.await(60, TimeUnit.SECONDS)))
+        v
+      }
+      val first = Future {
+        try race(spark, dir, "race")(build("first", None))
+        finally firstStored.countDown()
+      }
+      val second = Future(race(spark, dir, "race")(
+        build("second", Some(firstStored))))
+      assert(Await.result(first, 120.seconds) === "first")
+      assert(Await.result(second, 120.seconds) === "first")
+    } finally pool.shutdown()
+  }
+
   test("spark.graft.dirFingerprint=false keys by path only") {
     // the production escape hatch for immutable versioned snapshot
     // layouts: no listing, path hash alone — a rewrite then does NOT
     // re-key (the operator has declared dirs immutable)
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-fresh-knob-").toString
+    val dir = scratchDir("graft-fresh-knob-").toString
     def write(text: String): Unit =
       Seq((0L, text)).toDF("doc_id", "text")
         .coalesce(1).write.mode("overwrite")
         .parquet(s"$dir/documents.parquet")
     try {
       write("one")
-      val k1 = Tables.dirKey(dir)
+      val k1 = Tables.dirKey(spark, dir)
       write("two")
-      assert(Tables.dirKey(dir) !== k1, "fingerprint on: rewrite must re-key")
+      assert(Tables.dirKey(spark, dir) !== k1, "fingerprint on: rewrite must re-key")
       spark.conf.set("spark.graft.dirFingerprint", "false")
-      val k3 = Tables.dirKey(dir)
+      val k3 = Tables.dirKey(spark, dir)
       write("three")
-      assert(Tables.dirKey(dir) === k3, "fingerprint off: key must be stable")
+      assert(Tables.dirKey(spark, dir) === k3, "fingerprint off: key must be stable")
     } finally {
       spark.conf.unset("spark.graft.dirFingerprint")
       GraftSession.deleteRecursively(new java.io.File(dir))

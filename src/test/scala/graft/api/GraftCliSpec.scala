@@ -21,7 +21,7 @@ class GraftCliSpec extends SparkSpec {
   test("MR_DISABLE_COMBINER=1 env var disables the combiner on any job") {
     // reference job.c:209-217: the env var works WITHOUT CLI changes and
     // only the exact value "1" triggers it
-    val dir = java.nio.file.Files.createTempDirectory("cli-env").toFile
+    val dir = scratchDir("cli-env").toFile
     java.nio.file.Files.writeString(
       new java.io.File(dir, "in.txt").toPath, "apple banana\napple")
     def runWith(env: Map[String, String]): (String, Seq[String]) = {
@@ -50,7 +50,7 @@ class GraftCliSpec extends SparkSpec {
   }
 
   test("end-to-end: CLI run produces the inverted index with metrics") {
-    val dir = java.nio.file.Files.createTempDirectory("cli").toFile
+    val dir = scratchDir("cli").toFile
     java.nio.file.Files.writeString(
       new java.io.File(dir, "in.txt").toPath, "apple banana\napple")
     val out = new java.io.File(dir, "out").toString

@@ -81,7 +81,7 @@ class MRJobSpec extends SparkSpec {
   }
 
   test("runToText writes part files in the reference's key\\tvalue shape") {
-    val out = java.nio.file.Files.createTempDirectory("mrout").toString + "/wc"
+    val out = scratchDir("mrout").toString + "/wc"
     MRJob.runToText(spark, SampleJobs.wordCount, corpus, out)
     val partFiles = new java.io.File(out).listFiles()
       .filter(_.getName.startsWith("part-"))
@@ -99,7 +99,7 @@ class MRJobSpec extends SparkSpec {
   }
 
   test("textInput exposes real filenames to the map callback") {
-    val dir = java.nio.file.Files.createTempDirectory("mrjob").toFile
+    val dir = scratchDir("mrjob").toFile
     java.nio.file.Files.writeString(
       new java.io.File(dir, "one.txt").toPath, "alpha beta\nbeta")
     val input = MRJob.textInput(spark, Seq(dir.getAbsolutePath))

@@ -47,7 +47,7 @@ class MetricsReportSpec extends SparkSpec {
   }
 
   test("report writes to disk") {
-    val path = java.nio.file.Files.createTempDirectory("mr").toString + "/metrics_report.txt"
+    val path = scratchDir("mr").toString + "/metrics_report.txt"
     withReport { m =>
       m.window(Tables.nation(spark, sfDir).count())
       m.write(path)

@@ -127,7 +127,7 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("date-partitioned writes let the scan prune partitions") {
-    val out = java.nio.file.Files.createTempDirectory("part").toString + "/ev"
+    val out = scratchDir("part").toString + "/ev"
     Tables.events(spark, sfDir)
       .withColumn("day", to_date(col("ts")))
       .write.partitionBy("day").mode("overwrite").parquet(out)
@@ -421,7 +421,7 @@ class ScaleSpec extends SparkSpec {
     // exact base-table name: the shared "graft_signatures_" prefix would
     // also match the refreshed graft_signatures_b_* table, so a rewire
     // that dropped the base scan could slip past a prefix assertion
-    assert(plan.contains("graft_signatures_" + graft.Tables.dirKey(sfDir)),
+    assert(plan.contains("graft_signatures_" + graft.Tables.dirKey(spark, sfDir)),
       s"must scan the base signature table:\n${plan.take(4000)}")
     assert(plan.contains("graft_shingles_b_"),
       s"must scan the refreshed shingle artifact:\n${plan.take(4000)}")
@@ -448,7 +448,7 @@ class ScaleSpec extends SparkSpec {
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains(s"graft_pqcodes_${ProductQuantization.M256}_" +
-        s"${ProductQuantization.K256}_" + graft.Tables.dirKey(sfDir)),
+        s"${ProductQuantization.K256}_" + graft.Tables.dirKey(spark, sfDir)),
       s"must scan the base code table:\n${plan.take(4000)}")
     // delta economics: q79's rules touch 3 of 10 id endings, so the
     // coded side is a strict minority of the corpus
@@ -1012,8 +1012,7 @@ class ScaleSpec extends SparkSpec {
     // have real granularity; the spec session just reads another dir
     val dir = "/root/testdata/sf0.01"
     val z = ZOrderLayout.zEvents(spark, dir)
-    val tsPath = java.nio.file.Files.createTempDirectory("graft-tssort")
-      .toString + "/tslay"
+    val tsPath = scratchDir("graft-tssort").toString + "/tslay"
     z.repartitionByRange(64, col("ts")).sortWithinPartitions("ts")
       .write.mode("overwrite").parquet(tsPath)
     val (uHi, tLo, tHi) = ZOrderLayout.rectangleOf(spark, dir)

@@ -92,8 +92,7 @@ class SuffixRefreshSpec extends SparkSpec {
       "each advance equals the full rebuild of its corpus, state " +
       "history time-travels") {
     import graft.sources.ManifestTable
-    val rootBase = java.nio.file.Files
-      .createTempDirectory("graft-sfxstate").toString
+    val rootBase = scratchDir("graft-sfxstate").toString
     val docsA = Seq(
       (1L, "shared payload alpha beta gamma delta epsilon"),
       (2L, "shared payload alpha beta gamma delta zeta"),

@@ -12,7 +12,7 @@ import graft.SparkSpec
 class GraftCatalogSpec extends SparkSpec {
 
   private lazy val wh =
-    java.nio.file.Files.createTempDirectory("graft-cat").toString
+    scratchDir("graft-cat").toString
 
   private def docs = graft.Tables.documents(spark, sfDir)
     .select("doc_id", "lang", "text")
@@ -241,7 +241,7 @@ class GraftCatalogSpec extends SparkSpec {
       "filters on BOTH dimensions keep strictly fewer files than " +
       "either alone") {
     import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
-    val b = java.nio.file.Files.createTempDirectory("graft-zcat").toString
+    val b = scratchDir("graft-zcat").toString
     val root = s"$b/ev"
     val ev = graft.Tables.events(spark, sfDir)
       .select("event_id", "user_id", "ts", "value")
@@ -435,7 +435,7 @@ class GraftCatalogSpec extends SparkSpec {
     // (3) duplicate-keyed TARGET: legal SQL (one source row may update
     // both) but the keyed rewrite would collapse them — its own honest
     // loud rejection, not the cardinality message blaming the source
-    val b = java.nio.file.Files.createTempDirectory("graft-dupkey")
+    val b = scratchDir("graft-dupkey")
     val dupRoot = s"$b/t"
     import spark.implicits._
     ManifestTable.overwrite(spark, dupRoot,
@@ -553,7 +553,7 @@ class GraftCatalogSpec extends SparkSpec {
   test("r19: composite-key SQL MERGE — conjunction folding, mixed-AND " +
       "and duplicate-key rejections, tuple re-key guard, dup-tuple " +
       "target rejection") {
-    val b = java.nio.file.Files.createTempDirectory("graft-cmrg")
+    val b = scratchDir("graft-cmrg")
     import spark.implicits._
     val root = s"$b/t"
     ManifestTable.overwrite(spark, root,
@@ -617,7 +617,7 @@ class GraftCatalogSpec extends SparkSpec {
 
   test("r19: WHEN NOT MATCHED BY SOURCE — all three families in one " +
       "commit; by-source dup-key rejection") {
-    val b = java.nio.file.Files.createTempDirectory("graft-bsrc")
+    val b = scratchDir("graft-bsrc")
     import spark.implicits._
     val root = s"$b/t"
     ManifestTable.overwrite(spark, root,
@@ -660,7 +660,7 @@ class GraftCatalogSpec extends SparkSpec {
 
   test("r19: ALTER TABLE ADD COLUMN is a header-only evolution " +
       "commit; everything else rejects loudly") {
-    val b = java.nio.file.Files.createTempDirectory("graft-alter")
+    val b = scratchDir("graft-alter")
     val root = s"$b/t"
     import spark.implicits._
     ManifestTable.overwrite(spark, root,
@@ -721,7 +721,7 @@ class GraftCatalogSpec extends SparkSpec {
       "rejection") {
     import org.apache.spark.sql.streaming.Trigger
     import spark.implicits._
-    val b = java.nio.file.Files.createTempDirectory("graft-strm")
+    val b = scratchDir("graft-strm")
     val root = s"$b/t"
     GraftCatalog.register(spark, "gstr", b.toString)
     def drain(): Unit = {
@@ -790,7 +790,7 @@ class GraftCatalogSpec extends SparkSpec {
       "the audit reads VERSION AS OF the name, publish_branch " +
       "promotes, drop_branch abandons") {
     import spark.implicits._
-    val b = java.nio.file.Files.createTempDirectory("graft-callbr")
+    val b = scratchDir("graft-callbr")
     val root = s"$b/t"
     ManifestTable.overwrite(spark, root,
       Seq((1L, "a"), (2L, "b")).toDF("doc_id", "text"))
@@ -825,7 +825,7 @@ class GraftCatalogSpec extends SparkSpec {
       "stages on the branch, SELECT audits, overwrite and dead " +
       "branches reject, a real table wins the name") {
     import spark.implicits._
-    val b = java.nio.file.Files.createTempDirectory("graft-brsfx")
+    val b = scratchDir("graft-brsfx")
     val root = s"$b/t"
     ManifestTable.overwrite(spark, root,
       Seq((1L, "a"), (2L, "b")).toDF("doc_id", "text"))
@@ -876,7 +876,7 @@ class GraftCatalogSpec extends SparkSpec {
       "state — what VERSION AS OF '<name>' can resolve; drop/publish " +
       "retire the branch row") {
     import spark.implicits._
-    val b = java.nio.file.Files.createTempDirectory("graft-refs")
+    val b = scratchDir("graft-refs")
     val root = s"$b/t"
     ManifestTable.overwrite(spark, root,
       Seq((1L, "a"), (2L, "b")).toDF("doc_id", "text"))
@@ -906,7 +906,7 @@ class GraftCatalogSpec extends SparkSpec {
       "SELECT seeds and fills in one statement, REPLACE TABLE AS " +
       "SELECT swaps the definition, both land id-stamped schemas") {
     import spark.implicits._
-    val b = java.nio.file.Files.createTempDirectory("graft-ctas")
+    val b = scratchDir("graft-ctas")
     GraftCatalog.register(spark, "gctas", b.toString)
     Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("doc_id", "text")
       .createOrReplaceTempView("ctas_src")

@@ -34,8 +34,7 @@ class LayoutMaintenanceSpec extends SparkSpec {
     // sf0.01 so file stats have granularity (the q130 pin's scale)
     val dir10 = "/root/testdata/sf0.01"
     val z = ZOrderLayout.zEvents(spark, dir10)
-    val lay = java.nio.file.Files.createTempDirectory("graft-optimize")
-      .toString + "/zlay"
+    val lay = scratchDir("graft-optimize").toString + "/zlay"
     // spec-owned copy of the layout: clustered base (75% of rows) ...
     z.where(col("event_id") % 4 =!= 0)
       .repartitionByRange(64, col("zv")).sortWithinPartitions("zv")
@@ -181,11 +180,9 @@ class LayoutMaintenanceSpec extends SparkSpec {
       .select("doc_id", "lang", "text")
     val base = docs.where(col("doc_id") % 4 =!= 0)
       .repartitionByRange(6, col("doc_id")).sortWithinPartitions("doc_id")
-    val dir = java.nio.file.Files.createTempDirectory("graft-eqopt")
-      .toString + "/lay"
+    val dir = scratchDir("graft-eqopt").toString + "/lay"
     base.write.parquet(dir)
-    val mroot = java.nio.file.Files.createTempDirectory("graft-eqopt")
-      .toString + "/tbl"
+    val mroot = scratchDir("graft-eqopt").toString + "/tbl"
     ManifestTable.overwrite(spark, mroot, base, boundsCol = Some("doc_id"))
     for (i <- 0 until 3) {
       val delta = docs.where(col("doc_id") % 12 === i * 4).repartition(1)

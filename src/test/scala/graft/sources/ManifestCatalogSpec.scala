@@ -15,7 +15,7 @@ class ManifestCatalogSpec extends SparkSpec {
     .select("doc_id", "lang")
 
   private def freshCat(): ManifestCatalog.Catalog = {
-    val b = java.nio.file.Files.createTempDirectory("graft-mcat").toString
+    val b = scratchDir("graft-mcat").toString
     ManifestCatalog.Catalog(s"$b/catalog",
       Map("a" -> s"$b/a", "b" -> s"$b/b"))
   }

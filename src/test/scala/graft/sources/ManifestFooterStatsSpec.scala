@@ -19,7 +19,7 @@ import graft.SparkSpec
 class ManifestFooterStatsSpec extends SparkSpec {
 
   private def freshRoot(): String =
-    java.nio.file.Files.createTempDirectory("graft-fstats").toString +
+    scratchDir("graft-fstats").toString +
       "/tbl"
 
   private def manifestEntries(root: String, v: Int): Seq[Array[String]] = {

@@ -31,7 +31,7 @@ import graft.SparkSpec
 class ManifestModelSpec extends SparkSpec {
 
   private def freshRoot(): String =
-    java.nio.file.Files.createTempDirectory("graft-model").toString +
+    scratchDir("graft-model").toString +
       "/tbl"
 
   /** The differential read: doc_id -> text for the model compare,

@@ -13,7 +13,7 @@ import graft.SparkSpec
 class ManifestTableSpec extends SparkSpec {
 
   private def freshRoot(): String =
-    java.nio.file.Files.createTempDirectory("graft-manifest").toString +
+    scratchDir("graft-manifest").toString +
       "/tbl"
 
   private def docs = graft.Tables.documents(spark, sfDir)
@@ -842,8 +842,7 @@ class ManifestTableSpec extends SparkSpec {
       "time travel sees pre-delete; compaction applies + drops; " +
       "vacuum collects applied delete files") {
     // under a warehouse dir, so the SQL catalog can name the table too
-    val wh = java.nio.file.Files.createTempDirectory("graft-manifest")
-      .toString
+    val wh = scratchDir("graft-manifest").toString
     val root = s"$wh/db/docs"
     ManifestTable.overwrite(spark, root,
       docs.repartitionByRange(8, col("doc_id"))
@@ -1552,7 +1551,7 @@ class ManifestTableSpec extends SparkSpec {
       "main, audit reads agree across surfaces, publish rebases over " +
       "appends, conflicts and vacuum floors enforced") {
     import spark.implicits._
-    val b = java.nio.file.Files.createTempDirectory("graft-wap")
+    val b = scratchDir("graft-wap")
     val root = s"$b/t"
     def rows(n: Range, tag: String) = n.map(i => (i.toLong, s"$tag$i"))
       .toDF("doc_id", "text")
@@ -1629,7 +1628,7 @@ class ManifestTableSpec extends SparkSpec {
       "the pointer does not let vacuum eat staged work; tag names " +
       "collide loudly") {
     import spark.implicits._
-    val b = java.nio.file.Files.createTempDirectory("graft-bredge")
+    val b = scratchDir("graft-bredge")
     val root = s"$b/t"
     def rows(n: Range) = n.map(i => (i.toLong, s"d$i"))
       .toDF("doc_id", "text")
@@ -1731,7 +1730,7 @@ class ManifestTableSpec extends SparkSpec {
       "re-added name gets a fresh id (no resurrection), time travel " +
       "serves each regime") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-fid")
+    val base = scratchDir("graft-fid")
     val root = s"$base/t"
     // v1: creation stamps ids 1..3
     ManifestTable.overwrite(spark, root,
@@ -1819,7 +1818,7 @@ class ManifestTableSpec extends SparkSpec {
       "narrowing/cross-family/role/legacy reject; SQL ALTER COLUMN " +
       "TYPE routes") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-widen")
+    val base = scratchDir("graft-widen")
     val root = s"$base/t"
     // v1: creation stamps ids; n is INT, f is FLOAT
     ManifestTable.overwrite(spark, root,
@@ -1891,7 +1890,7 @@ class ManifestTableSpec extends SparkSpec {
       "byte->short/int/long and short->int/long upcast old files' " +
       "values exactly (int->long, float->double pinned above)") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-widenall")
+    val base = scratchDir("graft-widenall")
     val root = s"$base/t"
     ManifestTable.overwrite(spark, root,
       Seq((1.toByte, 2.toByte, 3.toByte, 10.toShort, 20.toShort, "x"),
@@ -1914,7 +1913,7 @@ class ManifestTableSpec extends SparkSpec {
   test("r19: SQL ALTER COLUMN TYPE — widening lands, narrowing and " +
       "cross-family reject through the catalog route") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-widensql")
+    val base = scratchDir("graft-widensql")
     val root = s"$base/t"
     ManifestTable.overwrite(spark, root,
       Seq((1, "a"), (2, "b")).toDF("n", "text"))
@@ -1947,7 +1946,7 @@ class ManifestTableSpec extends SparkSpec {
       "clustered on the leading merge key, stays silent when " +
       "near-disjoint file ranges legitimately all rewrite") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-prdiag")
+    val base = scratchDir("graft-prdiag")
     // k2 is a scrambled bijection of k1 (NOT merely reversed — a
     // reversal keeps per-range k1 spans narrow), so k2-ranged files
     // each span ~the whole k1 domain

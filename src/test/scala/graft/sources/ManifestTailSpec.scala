@@ -18,8 +18,7 @@ class ManifestTailSpec extends SparkSpec {
 
   /** A three-commit table with constructed row-level deltas. */
   private def buildTable(): String = {
-    val root = java.nio.file.Files.createTempDirectory("graft-tail")
-      .toString + "/tbl"
+    val root = scratchDir("graft-tail").toString + "/tbl"
     ManifestTable.overwrite(spark, root,
       docs.repartitionByRange(4, col("doc_id"))
         .sortWithinPartitions("doc_id"),
@@ -36,7 +35,7 @@ class ManifestTailSpec extends SparkSpec {
   }
 
   private def freshStateDir(): String =
-    java.nio.file.Files.createTempDirectory("graft-tailstate").toString +
+    scratchDir("graft-tailstate").toString +
       "/state"
 
   private def run(root: String, stateDir: String, max: Int): Int =

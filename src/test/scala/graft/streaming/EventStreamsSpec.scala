@@ -150,8 +150,7 @@ class EventStreamsSpec extends SparkSpec {
     // for that plan build only — caching the guess would misread every
     // future build 1000x once differently-encoded files land. After
     // files arrive, the next plan build must probe the REAL encoding.
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-probe-").toString
+    val dir = scratchDir("graft-probe-").toString
     try {
       val empty = EventStreams.q43StreamIntervalJoin(spark, dir)
       assert(empty.count() === 0, "empty landing dir emitted rows")
@@ -161,8 +160,7 @@ class EventStreamsSpec extends SparkSpec {
       // named events.parquet (the fixture layout the glob expects), so
       // the Spark write stages to a scratch dir and the part file moves
       // into place.
-      val staging = java.nio.file.Files
-        .createTempDirectory("graft-probe-stage-").toString
+      val staging = scratchDir("graft-probe-stage-").toString
       Tables.events(spark, sfDir).coalesce(1)
         .write.mode("overwrite").parquet(staging)
       val part = new java.io.File(staging).listFiles()

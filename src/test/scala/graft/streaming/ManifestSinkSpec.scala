@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -19,7 +17,7 @@ class ManifestSinkSpec extends SparkSpec {
 
   test("replayed batches are no-ops at every recovery window; markers " +
       "survive append and optimize; overwrite resets them") {
-    val root = Files.createTempDirectory("graft-sink").toString + "/tbl"
+    val root = scratchDir("graft-sink").toString + "/tbl"
     val app = "sink-spec"
     ManifestTable.overwrite(spark, root, docs.limit(0).repartition(1))
     val b0 = docs.where(col("doc_id") % 2 === 0)
@@ -66,7 +64,7 @@ class ManifestSinkSpec extends SparkSpec {
   test("CDC apply: delete rows route to removeKeys in the same " +
       "txn-marked commit; a replayed delete batch is a no-op; an " +
       "in-batch delete+insert pair resolves to replace") {
-    val root = Files.createTempDirectory("graft-sink-cdc").toString +
+    val root = scratchDir("graft-sink-cdc").toString +
       "/tbl"
     val app = "cdc-spec"
     ManifestTable.overwrite(spark, root, docs.limit(0).repartition(1))
@@ -105,7 +103,7 @@ class ManifestSinkSpec extends SparkSpec {
   test("maxVersionsPerTrigger=1 paces the tail to strictly per-commit " +
       "batches after the initial snapshot") {
     import org.apache.spark.sql.streaming.Trigger
-    val base = Files.createTempDirectory("graft-pace").toString
+    val base = scratchDir("graft-pace").toString
     val root = s"$base/tbl"
     val batches = scala.collection.mutable.ArrayBuffer.empty[Long]
     def drain(): Unit = {

@@ -50,7 +50,7 @@ class ManifestStreamSpec extends SparkSpec {
 
   test("snapshot-then-tail, killed after every commit: each row arrives " +
       "exactly once; resume is from the checkpointed version offset") {
-    val base = Files.createTempDirectory("graft-mstream").toString
+    val base = scratchDir("graft-mstream").toString
     val root = s"$base/tbl"
     val (ck, out) = (s"$base/ck", s"$base/out")
     // v1 with two slices: the stream's FIRST batch is the whole snapshot
@@ -89,7 +89,7 @@ class ManifestStreamSpec extends SparkSpec {
       q.awaitTermination()
     }
     // DEFAULT: loud failure on the rewrite commit
-    val b1 = Files.createTempDirectory("graft-rw").toString
+    val b1 = scratchDir("graft-rw").toString
     ManifestTable.overwrite(spark, s"$b1/t", slice(0))
     drainWith(s"$b1/t", s"$b1/ck", s"$b1/out", None)
     ManifestTable.optimize(spark, s"$b1/t", "doc_id", 2)
@@ -100,7 +100,7 @@ class ManifestStreamSpec extends SparkSpec {
       Option(ex.getCause).exists(_.getMessage.contains("rewrite commit")),
       s"default did not fail loudly: ${ex.getMessage}")
     // SKIP: appends arrive exactly once across two interleaved rewrites
-    val b2 = Files.createTempDirectory("graft-rw").toString
+    val b2 = scratchDir("graft-rw").toString
     ManifestTable.overwrite(spark, s"$b2/t", slice(0))
     drainWith(s"$b2/t", s"$b2/ck", s"$b2/out", Some("skip"))
     ManifestTable.optimize(spark, s"$b2/t", "doc_id", 2)
@@ -113,7 +113,7 @@ class ManifestStreamSpec extends SparkSpec {
       ids(slice(0).unionByName(slice(1)).unionByName(slice(2))),
       "skip lost or duplicated rows")
     // REDELIVER: the rewrite's output files flow — carried rows twice
-    val b3 = Files.createTempDirectory("graft-rw").toString
+    val b3 = scratchDir("graft-rw").toString
     ManifestTable.overwrite(spark, s"$b3/t", slice(0))
     drainWith(s"$b3/t", s"$b3/ck", s"$b3/out", Some("redeliver"))
     ManifestTable.optimize(spark, s"$b3/t", "doc_id", 2)
@@ -125,7 +125,7 @@ class ManifestStreamSpec extends SparkSpec {
   test("review r17: a tail resumes across a vacuum GAP when its own " +
       "checkpointed version is retained (tag floor keeps v1, middles " +
       "retired) — rows arrive exactly once via the net diff") {
-    val base = Files.createTempDirectory("graft-mstream").toString
+    val base = scratchDir("graft-mstream").toString
     val root = s"$base/tbl"
     val (ck, out) = (s"$base/ck", s"$base/out")
     ManifestTable.overwrite(spark, root, slice(0)) // v1
@@ -145,7 +145,7 @@ class ManifestStreamSpec extends SparkSpec {
   }
 
   test("startingVersion skips the snapshot: only commits >= v arrive") {
-    val base = Files.createTempDirectory("graft-mstream").toString
+    val base = scratchDir("graft-mstream").toString
     val root = s"$base/tbl"
     ManifestTable.overwrite(spark, root, slice(0))  // v1
     ManifestTable.append(spark, root, slice(1))     // v2
@@ -158,7 +158,7 @@ class ManifestStreamSpec extends SparkSpec {
 
   test("an add-column evolution mid-stream doesn't break a consumer " +
       "that PINS its schema: new rows project onto the pinned columns") {
-    val base = Files.createTempDirectory("graft-mstream").toString
+    val base = scratchDir("graft-mstream").toString
     val root = s"$base/tbl"
     val (ck, out) = (s"$base/ck", s"$base/out")
     // a consumer that must survive table evolution across restarts pins
@@ -180,7 +180,7 @@ class ManifestStreamSpec extends SparkSpec {
 
   test("a consumer that fell behind a vacuum fails LOUDLY — silent " +
       "skipping would be data loss") {
-    val base = Files.createTempDirectory("graft-mstream").toString
+    val base = scratchDir("graft-mstream").toString
     val root = s"$base/tbl"
     val (ck, out) = (s"$base/ck", s"$base/out")
     ManifestTable.overwrite(spark, root, slice(0)) // v1
@@ -201,7 +201,7 @@ class ManifestStreamSpec extends SparkSpec {
 
   test("event-time windows + watermark compose over the manifest " +
       "stream: append-mode windows close exactly once across restarts") {
-    val base = Files.createTempDirectory("graft-mstream").toString
+    val base = scratchDir("graft-mstream").toString
     val root = s"$base/tbl"
     val (ck, out) = (s"$base/ck", s"$base/out")
     val ev = graft.Tables.events(spark, sfDir)
@@ -255,7 +255,7 @@ class ManifestStreamSpec extends SparkSpec {
   test("change-feed mode: every commit's rows arrive tagged exactly " +
       "once across restarted drains; equality-delete keys stream as " +
       "'delete' rows") {
-    val base = Files.createTempDirectory("graft-mstream").toString
+    val base = scratchDir("graft-mstream").toString
     val root = s"$base/tbl"
     def drainCdf(): Unit = {
       val q = spark.readStream
@@ -310,7 +310,7 @@ class ManifestStreamSpec extends SparkSpec {
     }
     // a MERGE commit under skip: upserts live in the skipped files —
     // the tail must fail loudly instead of silently losing them
-    val b1 = Files.createTempDirectory("graft-skipkind").toString
+    val b1 = scratchDir("graft-skipkind").toString
     ManifestTable.overwrite(spark, s"$b1/t", slice(0))
     drainSkip(b1, s"$b1/t")
     ManifestTable.mergeCoW(spark, s"$b1/t", "doc_id",
@@ -323,7 +323,7 @@ class ManifestStreamSpec extends SparkSpec {
     assert(msg.contains("merge") && msg.contains("readChangeFeed"),
       s"merge under skip did not fail loudly naming CDF: $msg")
     // a HEADERLESS rewrite (pre-kind manifest): unknown must fail too
-    val b2 = Files.createTempDirectory("graft-skipkind").toString
+    val b2 = scratchDir("graft-skipkind").toString
     ManifestTable.overwrite(spark, s"$b2/t", slice(0))
     drainSkip(b2, s"$b2/t")
     val (v, _, _) = ManifestTable.optimize(spark, s"$b2/t", "doc_id", 2)
@@ -344,7 +344,7 @@ class ManifestStreamSpec extends SparkSpec {
     assert(msg2.contains("unknown"),
       s"headerless rewrite under skip did not fail as unknown: $msg2")
     // and a genuine compaction still skips silently (q177's contract)
-    val b3 = Files.createTempDirectory("graft-skipkind").toString
+    val b3 = scratchDir("graft-skipkind").toString
     ManifestTable.overwrite(spark, s"$b3/t", slice(0))
     drainSkip(b3, s"$b3/t")
     ManifestTable.optimize(spark, s"$b3/t", "doc_id", 2)
@@ -357,7 +357,7 @@ class ManifestStreamSpec extends SparkSpec {
   test("advisor r17: a batch whose END version was vacuumed between " +
       "offset resolution and planning fails loudly instead of " +
       "committing an under-delivering batch") {
-    val base = Files.createTempDirectory("graft-endvac").toString
+    val base = scratchDir("graft-endvac").toString
     val root = s"$base/tbl"
     ManifestTable.overwrite(spark, root, slice(0)) // v1
     ManifestTable.append(spark, root, slice(1))    // v2
@@ -386,7 +386,7 @@ class ManifestStreamSpec extends SparkSpec {
   test("review r18: a PACED tail (maxVersionsPerTrigger) resuming " +
       "across a vacuum gap advances to the next RETAINED version " +
       "instead of crash-looping on a vacuumed endV") {
-    val base = Files.createTempDirectory("graft-paced").toString
+    val base = scratchDir("graft-paced").toString
     val root = s"$base/tbl"
     val (ck, out) = (s"$base/ck", s"$base/out")
     def drainPaced(): Unit = {

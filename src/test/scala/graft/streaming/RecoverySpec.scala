@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -32,7 +30,7 @@ class RecoverySpec extends SparkSpec {
   }
 
   test("killed+resumed checkpointed stream equals the uninterrupted run") {
-    val base = Files.createTempDirectory("graft-recovery").toString
+    val base = scratchDir("graft-recovery").toString
     // raw events with ts as nanos-since-epoch LONG (see rawNanosEvents)
     val raw = rawNanosEvents
     val Seq(lo, hi) = raw.agg(min("ts"), max("ts")).head()
@@ -92,7 +90,7 @@ class RecoverySpec extends SparkSpec {
     // windows straddle batches, watermarks advance incrementally, and
     // emitted windows must never re-emit. Kill+resume proved checkpoint
     // recovery; this proves the ordinary many-batch path.
-    val base = Files.createTempDirectory("graft-multibatch").toString
+    val base = scratchDir("graft-multibatch").toString
     val raw = rawNanosEvents
     val Seq(lo, hi) = raw.agg(min("ts"), max("ts")).head()
       .toSeq.map(_.asInstanceOf[Long]).toSeq
@@ -139,7 +137,7 @@ class RecoverySpec extends SparkSpec {
     // would be missing from the resumed output; if inputs were re-read,
     // _spark_metadata-deduped file output would still catch re-emits as
     // duplicate (click_id, view_id) rows.
-    val base = Files.createTempDirectory("graft-recovery-join").toString
+    val base = scratchDir("graft-recovery-join").toString
     val raw = rawNanosEvents
     // an arbitrary midpoint may straddle no matched pair at the smallest
     // SF; instead CUT INSIDE THE WIDEST MATCHED PAIR (batch twin of the
@@ -210,7 +208,7 @@ class RecoverySpec extends SparkSpec {
     // _spark_metadata transaction log. The static side comes from the
     // FIXED sfDir (the contract: genuinely static input), so both runs
     // see the same dimension and outputs must be identical.
-    val base = Files.createTempDirectory("graft-recovery-enrich").toString
+    val base = scratchDir("graft-recovery-enrich").toString
     val raw = rawNanosEvents
     val ids = raw.where(col("event_type") === "click")
       .select("event_id").orderBy("event_id").collect().map(_.getLong(0))
@@ -261,7 +259,7 @@ class RecoverySpec extends SparkSpec {
     // and no existing pair duplicates; the expiryMs clamp in
     // EventStreams is defense-in-depth for the exact-boundary case and
     // for Spark versions that deliver late rows to the function.
-    val base = Files.createTempDirectory("graft-backfill").toString
+    val base = scratchDir("graft-backfill").toString
     val raw = rawNanosEvents
     // phase 1: current data advances the watermark to max(ts) - 1h
     raw.write.mode("append").parquet(s"$base/landing")
@@ -292,7 +290,7 @@ class RecoverySpec extends SparkSpec {
     // after the resume — a duplicate row the equality below would catch.
     // The cut is by TIME, so a pair's true first event is always in the
     // phase that first contains the pair.
-    val base = Files.createTempDirectory("graft-recovery-state").toString
+    val base = scratchDir("graft-recovery-state").toString
     val raw = rawNanosEvents
     val Seq(lo, hi) = raw.agg(min("ts"), max("ts")).head()
       .toSeq.map(_.asInstanceOf[Long]).toSeq
@@ -346,7 +344,7 @@ class RecoverySpec extends SparkSpec {
     // runner must suppress every already-seen content purely from the
     // RECOVERED state. Equality with an uninterrupted run over the same
     // landing sequence + a zero-duplicate check is the whole contract.
-    val base = Files.createTempDirectory("graft-dedup-recovery").toString
+    val base = scratchDir("graft-dedup-recovery").toString
     val docs = graft.Tables.documents(spark, sfDir)
       .select("doc_id", "lang", "text")
     val b = graft.operators.CurationPipeline.snapshotB(docs)
@@ -389,7 +387,7 @@ class RecoverySpec extends SparkSpec {
     // must resume from the recovered pointer and close out phase-A
     // current rows it has never seen in memory.
     import org.apache.spark.sql.functions._
-    val base = Files.createTempDirectory("graft-scd2-recovery").toString
+    val base = scratchDir("graft-scd2-recovery").toString
     val updates = graft.operators.RelationalQueries
       .scd2Updates(graft.Tables.events(spark, sfDir))
     val qs = updates
