@@ -32,6 +32,14 @@ object Vectors {
   def cosine(a: Column, b: Column): Column =
     Bridge.column(CosineSimilarity(expr(a), expr(b)))
 
+  /** Ids of the `n` centroids of `cents` nearest `v` by cosine, ranked
+    * (cosine DESC, id ASC): one native [[NearestCentroids]]. */
+  def nearestCentroids(v: Column, cents: Seq[(Long, Seq[Double])],
+                       n: Int): Column = {
+    val (ids, rows) = cents.sortBy(_._1).unzip
+    Bridge.column(NearestCentroids(expr(v), ids, rows, n))
+  }
+
   /** Cosine rounded for hash-stable oracle comparison. */
   def cosineRounded(a: Column, b: Column, scale: Int = 4): Column =
     round(cosine(a, b), scale)

@@ -67,20 +67,22 @@ object ProductQuantization {
   private def micros(cv: Seq[Double]): Seq[Long] =
     cv.map(x => math.floor(x * 1e6).toLong)
 
+  /** Micro residual of `v` against the coarse centroid of the row's
+    * `cell`, looked up in one literal cell → micros map. */
+  private def coarseResidual(v: Column,
+                             coarse: Seq[(Long, Seq[Double])]): Column = {
+    val cm = typedlit(coarse.map { case (c, cv) => c -> micros(cv) }.toMap)
+    Bridge.column(graft.functions.PqMicroResidual(
+      Bridge.expression(v), Bridge.expression(element_at(cm, col("cell")))))
+  }
+
   /** Residuals in integer micros: r_d = floor(v_d·1e6) − floor(c_d·1e6)
     * for the vector's assigned coarse cell (q57's assignment semantics,
     * map-side argmax — adds `cell` and `r` columns). */
   private def residuals(df: DataFrame,
-                        coarse: Seq[(Long, Seq[Double])]): DataFrame = {
-    val asg = SimilarityQueries.assignCells(df, coarse)
-    val cmArr = coarse.sortBy(_._1)
-      .foldRight(typedlit(Seq.empty[Long]): Column) { case ((c, cv), rest) =>
-        when(col("cell") === c, typedlit(micros(cv))).otherwise(rest)
-      }
-    asg.withColumn("r",
-      Bridge.column(graft.functions.PqMicroResidual(
-        Bridge.expression(col("v")), Bridge.expression(cmArr))))
-  }
+                        coarse: Seq[(Long, Seq[Double])]): DataFrame =
+    SimilarityQueries.assignCells(df, coarse)
+      .withColumn("r", coarseResidual(col("v"), coarse))
 
   /** Per-subspace distance TABLE: the K distances from subvector m of
     * residual column `r` to the m-th sub-codebook — the FAISS
@@ -133,21 +135,14 @@ object ProductQuantization {
   private val models =
     new Artifacts.Memo[(Seq[(Long, Seq[Double])], Seq[Seq[Seq[Long]]])]
 
-  /** The trained PQ model: (coarse codebook, sub-codebooks[m][k][j] in
-    * micros). Training is ONE deterministic Lloyd round per subspace on
-    * the corpus residuals: init = residual subvectors of vectors 0..K−1;
-    * assignment = integer argmin; update = floor(mean) per component
-    * (empty codes keep their init) — the q57 build recipe applied per
-    * subspace, all driver-held state bounded by M·K·SubDim, never by
-    * data size. Public for the spec. */
-  def pqModel(spark: SparkSession, sfDir: String)
-      : (Seq[(Long, Seq[Double])], Seq[Seq[Seq[Long]]]) =
-    pqModelAt(spark, sfDir, M, K)
-
-  /** [[pqModel]] at an explicit (subspaces, codebook size) — the recall
-    * sweep trains the alternative operating points (K=256 one-byte
-    * codes, narrower widths) through exactly the shipped recipe; the
-    * shipped queries call it at ([[M]], [[K]]). */
+  /** The trained PQ model at (subspaces, codebook size): (coarse
+    * codebook, sub-codebooks[m][k][j] in micros). Training is ONE
+    * deterministic Lloyd round per subspace on the corpus residuals:
+    * init = residual subvectors of vectors 0..K−1; assignment = integer
+    * argmin; update = floor(mean) per component (empty codes keep their
+    * init) — the q57 build recipe applied per subspace, all driver-held
+    * state bounded by M·K·SubDim, never by data size. The recall sweep
+    * trains other widths through the same recipe. Public for the spec. */
   def pqModelAt(spark: SparkSession, sfDir: String, m: Int, k: Int)
       : (Seq[(Long, Seq[Double])], Seq[Seq[Seq[Long]]]) =
     models(spark, sfDir, s"$m:$k")(trainModel(spark, sfDir, m, k))
@@ -257,46 +252,21 @@ object ProductQuantization {
       .select("vec_id", "cell", "codes", "qerr")
       .orderBy("vec_id")
 
-  /** The ADC-ranked candidate stream shared by q77/q78: probes (q57's
-    * path) → per-cell query residual → candidates scored by asymmetric
-    * distance over their stored codes → dense rank per query by
-    * (adc asc, neighbor asc). */
-  private def adcRanked(spark: SparkSession, sfDir: String): DataFrame = {
-    val (coarse, cents) = pqModel(spark, sfDir)
-    val index = pqIndex(spark, sfDir)
-      .select(Seq(col("vec_id").as("neighbor_id"), col("cell")) ++
-        (0 until M).map(m => col(s"code_$m")): _*)
-    adcRankedOver(spark, sfDir, index, coarse, cents, M)
-  }
-
-  /** The ADC ranking at an explicit (subspaces, codebook size) — the
-    * recall sweep's and q84's path: the model trains via [[pqModelAt]]
-    * and candidates read the STORED code table for that setting
-    * ([[pqIndexAt]] — a search never re-codes its index), with the
-    * query shape byte-for-byte [[adcRanked]]'s. `depth` bounds the
-    * per-query heap — callers that re-rank deeper than [[RerankDepth]]
-    * must say so here, or the shortlist silently caps. */
+  /** The ADC-ranked candidate stream of q77/q78 (at ([[M]], [[K]])),
+    * q84 and the recall sweep: probes (q57's path) → per-cell query
+    * residual → candidates scored by asymmetric distance over the
+    * STORED codes of that setting ([[pqIndexAt]] — a search never
+    * re-codes its index; the model trains via [[pqModelAt]]) → rank per
+    * query by (adc asc, neighbor asc). `depth` bounds the per-query
+    * heap — callers that re-rank deeper than [[RerankDepth]] must say
+    * so here, or the shortlist silently caps. */
   def adcRankedAt(spark: SparkSession, sfDir: String, m: Int, k: Int,
                   depth: Int = RerankDepth): DataFrame = {
     val (coarse, cents) = pqModelAt(spark, sfDir, m, k)
     val index = pqIndexAt(spark, sfDir, m, k)
       .select(Seq(col("vec_id").as("neighbor_id"), col("cell")) ++
         (0 until m).map(mi => col(s"code_$mi")): _*)
-    adcRankedOver(spark, sfDir, index, coarse, cents, m, depth)
-  }
-
-  private def adcRankedOver(spark: SparkSession, sfDir: String,
-                            index: DataFrame,
-                            coarse: Seq[(Long, Seq[Double])],
-                            cents: Seq[Seq[Seq[Long]]],
-                            m: Int,
-                            depth: Int = RerankDepth): DataFrame = {
     val sd = SimilarityQueries.Dims / m
-    val e = vecs(spark, sfDir)
-    val cmArr = coarse.sortBy(_._1)
-      .foldRight(typedlit(Seq.empty[Long]): Column) { case ((c, cv), rest) =>
-        when(col("cell") === c, typedlit(micros(cv))).otherwise(rest)
-      }
     // the ADC LOOKUP TABLES (Jégou §IV) are computed on the PROBE side —
     // one K-entry distance array per subspace per (query, probed cell),
     // i.e. nProbe·M tiny arrays per query — and candidates are then
@@ -304,13 +274,8 @@ object ProductQuantization {
     // (the first formulation) re-evaluated the K distances 125× per
     // cell for identical input.
     val probes = (0 until m).foldLeft(
-      SimilarityQueries.probeCells(
-        e.where(col("vec_id") < 10)
-          .select(col("vec_id").as("query_id"), col("v").as("qv")),
-        coarse, "qv")
-        .withColumn("rq",
-          Bridge.column(graft.functions.PqMicroResidual(
-            Bridge.expression(col("qv")), Bridge.expression(cmArr))))) { (d, mi) =>
+      SimilarityQueries.probedQueries(spark, sfDir, coarse)
+        .withColumn("rq", coarseResidual(col("qv"), coarse))) { (d, mi) =>
       d.withColumn(s"lut_$mi", distTable(col("rq"), mi, cents, sd))
     }.select(Seq(col("query_id"), col("cell")) ++
       (0 until m).map(mi => col(s"lut_$mi")): _*)
@@ -349,7 +314,7 @@ object ProductQuantization {
     * quantization error dominates the ranking; q78's re-rank stage is
     * the production answer. */
   def q77AnnIvfPq(spark: SparkSession, sfDir: String): DataFrame =
-    adcRanked(spark, sfDir)
+    adcRankedAt(spark, sfDir, M, K)
       .where(col("rank") <= 10)
       .orderBy("query_id", "rank")
 
@@ -368,7 +333,7 @@ object ProductQuantization {
     * need to survive INTO the shortlist, not win the quantized
     * ranking. */
   def q78AnnPqRerank(spark: SparkSession, sfDir: String): DataFrame =
-    rerankOver(spark, sfDir, adcRanked(spark, sfDir), RerankDepth)
+    rerankOver(spark, sfDir, adcRankedAt(spark, sfDir, M, K), RerankDepth)
 
   /** q78's re-rank at an explicit (m, k) code setting — the sweep's
     * IVFADC+R row per operating point. The depth reaches the ADC heap

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Artifacts, Tables}
@@ -118,8 +118,9 @@ object SimilarityQueries {
 
   /** IVF codebook collected to the driver — NumCells rows, bounded by the
     * codebook size, never by data size. In FAISS terms the coarse
-    * quantizer always ships whole to every worker; embedding it as column
-    * literals IS that broadcast (and keeps the assignment codegen'd).
+    * quantizer always ships whole to every worker; the one
+    * [[graft.functions.NearestCentroids]] expression holding it IS that
+    * broadcast.
     * Public (with [[kmeansCodebook]]) so the recall sweep tool and specs
     * can compare the unrefined and refined quantizers. */
   def codebook(spark: SparkSession,
@@ -139,47 +140,27 @@ object SimilarityQueries {
       val seeds = vecs(spark, sfDir).where(col("vec_id") < k)
         .orderBy("vec_id")
         .collect().toSeq.map(r => (r.getLong(0), r.getSeq[Double](1)))
-      // the assignment fold needs >= 2 centroids (greatest() arity) —
-      // fail at the seam with the precondition, not deep inside a
-      // consumer's plan (the pqModelAt guard's discipline)
-      require(seeds.length >= 2,
-        s"IVF codebook needs >= 2 seed vectors with vec_id < $k; " +
-          s"$sfDir has ${seeds.length}")
+      // an empty codebook has no nearest centroid — fail at the seam
+      // with the precondition, not deep inside a consumer's plan (the
+      // pqModelAt guard's discipline)
+      require(seeds.nonEmpty,
+        s"IVF codebook needs a non-empty codebook: no seed vector with " +
+          s"vec_id < $k in $sfDir")
       seeds
     }
 
-  /** Map-side argmax cell assignment: all NumCells cosine similarities in
-    * ONE projection against literal centroids; the best cell is a
-    * when-fold in ascending cell order, so ties go to the smallest cell
-    * id — identical semantics to a (csim DESC, cell ASC) row_number
-    * window, with ZERO shuffle. The round-3 formulation cross-joined
-    * every vector with the 16 centroids and picked the argmax with a
-    * row_number window — a hash exchange of 16 rows per vector, each
-    * carrying the full 64-dim array (~16× the index volume through the
-    * wire), for a purely per-row decision. */
+  /** Map-side argmax cell assignment: `cell` is element 0 of
+    * [[Vectors.nearestCentroids]] (null for a null vector), the
+    * expression [[probeCells]] ranks with, so ties go to the smallest
+    * cell id — a (sim DESC, cell ASC) row_number window's semantics with
+    * ZERO shuffle. The round-3 formulation cross-joined every vector
+    * with the 16 centroids and picked the argmax with a row_number
+    * window — a hash exchange of 16 rows per vector, each carrying the
+    * full 64-dim array (~16× the index volume through the wire), for a
+    * purely per-row decision. */
   def assignCells(df: DataFrame, cents: Seq[(Long, Seq[Double])],
-                  vcol: String = "v"): DataFrame = {
-    val simd = withSims(df, cents, vcol)
-    val cellIds = cents.map(_._1).sorted
-    simd.withColumn("cell",
-        argmaxCell(cellIds, greatest(cellIds.map(c => col(s"csim_$c")): _*)))
-      .drop(cellIds.map(c => s"csim_$c"): _*)
-  }
-
-  /** ONE projection adding `csim_<cell>` per centroid — shared by the
-    * index-side assignment and the probe side so their tie-break and
-    * NaN semantics can never diverge. */
-  private def withSims(df: DataFrame, cents: Seq[(Long, Seq[Double])],
-                       vcol: String): DataFrame =
-    df.select(col("*") +: cents.map { case (c, cv) =>
-      Vectors.cosine(col(vcol), typedlit(cv)).as(s"csim_$c") }: _*)
-
-  /** Argmax fold in ascending cell order (ties → smallest id): the first
-    * cell whose similarity equals `best` and passes `ok`. */
-  private def argmaxCell(cellIds: Seq[Long], best: Column,
-                         ok: Long => Column = _ => lit(true)): Column =
-    cellIds.foldRight(lit(-1L): Column) { (c, rest) =>
-      when(col(s"csim_$c") === best && ok(c), lit(c)).otherwise(rest) }
+                  vcol: String = "v"): DataFrame =
+    df.withColumn("cell", Vectors.nearestCentroids(col(vcol), cents, 1)(0))
 
   /** The full index-side assignment for a scale dir — public so the spec
     * can pin its plan shape (no exchange anywhere). */
@@ -192,32 +173,37 @@ object SimilarityQueries {
                       cents: Seq[(Long, Seq[Double])]): DataFrame =
     assignCells(vecs(spark, sfDir), cents)
 
-  /** Map-side top-`nProbe` probe cells per query, from the same literal-
-    * centroid projection: probe i = argmax over the cells not already
-    * chosen (masked to the -2 sentinel, below cosine's -1 floor), then
-    * the probe cells explode into rows (a Generate — still no exchange).
-    * Tie-break matches a (csim DESC, cell ASC) rk ≤ nProbe window: probe
-    * i is exactly the i-th (sim, cell) pair in that order. */
+  /** Map-side top-`nProbe` probe cells per query: the
+    * [[Vectors.nearestCentroids]] array explodes into one row per probe
+    * (a Generate — still no exchange). Tie-break matches a (sim DESC,
+    * cell ASC) rk ≤ nProbe window: probe i is exactly the i-th (sim,
+    * cell) pair in that order. A null query vector probes no cell. */
   def probeCells(df: DataFrame, cents: Seq[(Long, Seq[Double])],
                  vcol: String, nProbe: Int = NProbe): DataFrame = {
     require(nProbe >= 1 && nProbe <= cents.size,
       s"nProbe must be in [1, ${cents.size}]: $nProbe")
-    val cellIds = cents.map(_._1).sorted
-    val probeCols = (1 to nProbe).map(i => s"probe_$i")
-    val withChosen = (1 to nProbe).foldLeft(withSims(df, cents, vcol)) {
-      (d, i) =>
-        val chosen = (1 until i).map(j => col(s"probe_$j"))
-        val masked = (c: Long) => chosen.foldLeft(col(s"csim_$c")) {
-          (s, prev) => when(lit(c) === prev, lit(-2.0)).otherwise(s) }
-        val notChosen = (c: Long) => chosen.foldLeft(lit(true): Column) {
-          (b, prev) => b && lit(c) =!= prev }
-        d.withColumn(s"probe_$i",
-          argmaxCell(cellIds, greatest(cellIds.map(masked): _*), notChosen))
-    }
-    withChosen
-      .select(col("*"), explode(array(probeCols.map(col): _*)).as("cell"))
-      .drop(cellIds.map(c => s"csim_$c") ++ probeCols: _*)
+    df.select(col("*"),
+      explode(Vectors.nearestCentroids(col(vcol), cents, nProbe)).as("cell"))
   }
+
+  /** The IVF query batch (`query_id` = vec_id < 10, vector `qv`), one
+    * row per probed cell: the probe side of q39/q57, q168/q192 and ADC. */
+  private[operators] def probedQueries(spark: SparkSession, sfDir: String,
+                                       cents: Seq[(Long, Seq[Double])],
+                                       nProbe: Int = NProbe): DataFrame =
+    probeCells(vecs(spark, sfDir).where(col("vec_id") < 10)
+        .select(col("vec_id").as("query_id"), col("v").as("qv")),
+      cents, "qv", nProbe)
+
+  /** Exact top-10 per query within its probed cells of the cell-assigned
+    * `index` (`cell`, `vec_id`, `v`); the tiny probe side broadcasts. */
+  private def rerankProbed(probes: DataFrame, index: DataFrame): DataFrame =
+    topKBySim(
+      broadcast(probes).join(index, Seq("cell"))
+        .where(col("vec_id") =!= col("query_id"))
+        .select(col("query_id"), col("vec_id").as("neighbor_id"),
+          Vectors.cosineRounded(col("qv"), col("v")).as("sim")), 10)
+      .orderBy("query_id", "rank")
 
   /** Candidate ranking shared by q39/q57: probe the index on the cell id
     * and keep each query's exact top-10. The cell equi-join is the ONLY
@@ -228,20 +214,9 @@ object SimilarityQueries {
     * measures the exact query path the operators ship. */
   def ivfTopK(spark: SparkSession, sfDir: String,
               cents: Seq[(Long, Seq[Double])],
-              nProbe: Int = NProbe): DataFrame = {
-    val e = vecs(spark, sfDir)
-    val asg = assignCells(e, cents)
-    val probes = probeCells(
-      e.where(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("v").as("qv")),
-      cents, "qv", nProbe)
-    topKBySim(
-      broadcast(probes).join(asg, Seq("cell"))
-        .where(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          Vectors.cosineRounded(col("qv"), col("v")).as("sim")), 10)
-      .orderBy("query_id", "rank")
-  }
+              nProbe: Int = NProbe): DataFrame =
+    rerankProbed(probedQueries(spark, sfDir, cents, nProbe),
+      assignCells(vecs(spark, sfDir), cents))
 
   /** Q39: ANN via IVF with the fixed first-NumCells codebook (q57 runs the
     * k-means-refined one). Queries probe their NProbe nearest cells and
@@ -316,24 +291,13 @@ object SimilarityQueries {
     * the read), rerank exact cosine within them. */
   private def searchStoredIndex(spark: SparkSession, sfDir: String,
                                 root: String): DataFrame = {
-    val cents = kmeansCodebook(spark, sfDir)
-    val e = vecs(spark, sfDir)
-    val probes = probeCells(
-      e.where(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("v").as("qv")),
-      cents, "qv", NProbe)
+    val probes = probedQueries(spark, sfDir, kmeansCodebook(spark, sfDir))
     // NProbe cells per query, <= NumCells distinct overall (bounded
     // collect — the probe set, not data)
     val needed = probes.select("cell").distinct()
       .collect().map(_.getLong(0)).toSeq
-    val index = graft.sources.ManifestTable.readWhereKeyIn(
-      spark, root, "cell", needed)
-    topKBySim(
-      broadcast(probes).join(index, Seq("cell"))
-        .where(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          Vectors.cosineRounded(col("qv"), col("v")).as("sim")), 10)
-      .orderBy("query_id", "rank")
+    rerankProbed(probes, graft.sources.ManifestTable.readWhereKeyIn(
+      spark, root, "cell", needed))
   }
 
   /** Q192: INCREMENTAL MAINTENANCE OF THE STORED IVF INDEX (closing

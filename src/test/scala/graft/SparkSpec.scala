@@ -5,10 +5,18 @@ import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one JVM, one SparkContext). */
+/** Shared local session for all suites (one JVM, one SparkContext).
+  * A whole-stage codegen compile failure (e.g. a generated method past
+  * the JVM's 64 KB limit) throws instead of logging a WARN and running
+  * the stage without whole-stage codegen, so the spec whose plan caused
+  * it fails. */
 object SharedSpark {
-  lazy val spark: SparkSession =
-    GraftSession.create("graft-test", Some("local[4]"), shufflePartitions = 4)
+  lazy val spark: SparkSession = {
+    val s = GraftSession.create("graft-test", Some("local[4]"),
+      shufflePartitions = 4)
+    s.conf.set("spark.sql.codegen.fallback", "false")
+    s
+  }
 }
 
 /** Base class: every spec gets the shared session + the smallest test SF. */
