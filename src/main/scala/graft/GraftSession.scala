@@ -116,7 +116,7 @@ object GraftSession {
       // makes Spark resolve requested columns BY ID whenever the
       // requested schema carries ids — the read side of header-only
       // RENAME/DROP evolution. Inert for id-less schemas (raw
-      // testdata and legacy tables keep by-name resolution).
+      // testdata keeps by-name resolution).
       .config("spark.sql.parquet.fieldId.read.enabled", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -1239,9 +1239,7 @@ private[sources] class GraftSqlTable(ident: String, root: String,
   override def name(): String = ident
 
   override lazy val schema: StructType =
-    ManifestTable.schemaAt(spark, root, pinned).getOrElse(
-      // pre-schema-header (legacy) table: parquet's own resolution
-      ManifestTable.snapshot(spark, root, pinned).read(spark).schema)
+    ManifestTable.snapshot(spark, root, pinned).schema
 
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ,

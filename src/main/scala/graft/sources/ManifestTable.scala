@@ -83,9 +83,11 @@ object ManifestTable {
   /** A resolved table version — the ONE form every operation works
     * from: the immutable file list (and the schema committed with it)
     * a reader can keep using regardless of later commits (until
-    * vacuumed). `files` are the DATA files; `deleteFiles` the
-    * outstanding merge-on-read equality deletes (format v6), applied by
-    * [[read]] as one anti-join on `deleteCols` (one or more key columns
+    * vacuumed). `schema` is the committed `#schema=` header, every
+    * field carrying its field id. `files` are the DATA files;
+    * `deleteFiles` the outstanding merge-on-read equality deletes
+    * (format v6), applied by [[read]] as one anti-join on
+    * `deleteCols` (one or more key columns
     * — a composite equality delete matches on the whole tuple,
     * Iceberg's multi-column equality-delete shape). The second
     * parameter list is what the resolve read: the manifest's headers,
@@ -94,7 +96,7 @@ object ManifestTable {
     * resolved from, and the branch it heads (None on the main chain).
     * Only a resolve constructs one. */
   case class Snapshot private[sources] (version: Int, files: Seq[String],
-                                        schema: Option[StructType],
+                                        schema: StructType,
                                         deleteFiles: Seq[String] = Seq.empty,
                                         deleteCols: Seq[String] = Seq.empty)(
       private[sources] val root: String,
@@ -133,7 +135,7 @@ object ManifestTable {
     /** A value in column `k`'s stats unit as a comparable literal: a
       * timestamp column's stats are epoch micros. */
     private[sources] def statLit(k: String, x: Long): Column =
-      if (schema.exists(_(k).dataType == TimestampType))
+      if (schema(k).dataType == TimestampType)
         timestamp_micros(lit(x))
       else lit(x)
 
@@ -196,11 +198,13 @@ object ManifestTable {
       resolveIn(spark, root, listing, Some(v))
 
     /** The row count from entry stats alone; None under outstanding
-      * deletes (a delete key may match 0..n rows) or pre-v3 lines. */
+      * deletes (a delete key may match 0..n rows). */
     private[sources] def rowCount: Option[Long] =
-      if (entries.isEmpty ||
-          entries.exists(e => e.isDelete || e.rows.isEmpty)) None
-      else Some(entries.map(_.rows.get).sum)
+      if (entries.isEmpty || entries.exists(_.isDelete)) None
+      else Some(entries.map(_.rows).sum)
+
+    /** The table's field-id high-water mark (see the FIELD IDS block). */
+    private[sources] def maxFieldId: Long = headers(MaxFieldIdKey).toLong
 
     /** The stored [lo, hi] of `c` for one entry, from whichever header
       * declares it — the PRIMARY bounds column or an extra stats
@@ -226,9 +230,8 @@ object ManifestTable {
     * against each file, so pre-evolution files surface the later-added
     * columns as null without any `mergeSchema` footer sweep. */
   private def readFiles(spark: SparkSession, files: Seq[String],
-                        schema: Option[StructType]): DataFrame =
-    schema.map(s => spark.read.schema(s))
-      .getOrElse(spark.read).parquet(files: _*)
+                        schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(files: _*)
 
   private def fsOf(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -293,62 +296,47 @@ object ManifestTable {
                version: Option[Int] = None): Snapshot =
     resolve(spark, root, version)
 
-  /** One manifest entry: a root-relative data file, optionally carrying
-    * per-file metadata stamped at write time —
-    *  - format v1: `rel` (nothing known);
-    *  - format v2: `rel<TAB>lo<TAB>hi` ([lo, hi] bounds of the integral
-    *    key column the `#boundscol=` header names);
-    *  - format v3: `rel<TAB>lo<TAB>hi<TAB>rows<TAB>bytes` (bounds may be
-    *    `-` when the key was all-null or no bounds column was declared;
-    *    rows/bytes are the file's row count and size);
-    *  - format v4: v3 plus one `<TAB>lo<TAB>hi` pair per EXTRA stats
-    *    column the `#statscols=` header names, in header order — the
-    *    multi-column file statistics Iceberg/Delta ship, enabling
-    *    file skipping on non-key predicates ([[readWhereRect]]).
-    * All four coexist in one manifest, so old tables read fine and
-    * every consumer falls back field-by-field ("unknown = may contain
-    * any key" / "no stats = scan to count"). */
+  /** One manifest entry line, in the ONE shape [[stage]] writes:
+    * `rel<TAB>lo<TAB>hi<TAB>rows<TAB>bytes` followed by one
+    * `<TAB>lo<TAB>hi` pair per EXTRA stats column the `#statscols=`
+    * header names, in header order. `rel` is the root-relative file;
+    * `lo`/`hi` are the [lo, hi] bounds of the integral column the
+    * `#boundscol=` header names (`-` when the column was all-null or no
+    * bounds column was declared); `rows`/`bytes` are the file's row
+    * count and size. The extra pairs are the multi-column file
+    * statistics Iceberg/Delta ship, enabling file skipping on non-key
+    * predicates ([[readWhereRect]]); a `-` pair is unknown and never
+    * prunes. Any other line shape is malformed, and [[load]] rejects
+    * the manifest. */
   private[sources] case class Entry(rel: String, lo: Option[Long],
-                                    hi: Option[Long],
-                                    rows: Option[Long] = None,
-                                    bytes: Option[Long] = None,
+                                    hi: Option[Long], rows: Long,
+                                    bytes: Long,
                                     extra: Seq[Option[(Long, Long)]] =
                                       Seq.empty) {
     /** Format v6: a delete file is distinguished by its PATH prefix —
-      * the line format itself is unchanged, so every older field
-      * (stats, bounds) still parses. */
+      * the line format itself is the same. */
     def isDelete: Boolean = rel.startsWith("deletes/")
     def line: String = {
       def pair(p: Option[(Long, Long)]): String =
         p.map { case (a, b) => s"$a\t$b" }.getOrElse("-\t-")
-      val b = (for (a <- lo; c <- hi) yield s"$a\t$c").getOrElse(
-        if (rows.isDefined) "-\t-" else "")
-      (rows, bytes) match {
-        case (Some(r), Some(s)) =>
-          (s"$rel\t$b\t$r\t$s" +: extra.map(pair)).mkString("\t")
-        case _ => if (b.isEmpty) rel else s"$rel\t$b"
-      }
+      val b = pair(for (a <- lo; c <- hi) yield (a, c))
+      (s"$rel\t$b\t$rows\t$bytes" +: extra.map(pair)).mkString("\t")
     }
   }
 
-  /** None for a malformed line: a valid one has 1, 3, or an odd number
-    * >= 5 of tab-separated fields. */
+  /** None for a malformed line: a valid one has an odd number >= 5 of
+    * tab-separated fields, and integral rows and bytes. */
   private def parseEntry(line: String): Option[Entry] = {
     def bounds(a: String, b: String): Option[(Long, Long)] =
       for (x <- a.toLongOption; y <- b.toLongOption) yield (x, y)
-    line.split("\t", -1) match {
-      case f if f.length >= 5 && f.length % 2 == 1 =>
+    val f = line.split("\t", -1)
+    if (f.length < 5 || f.length % 2 == 0) None
+    else for (rows <- f(3).toLongOption; bytes <- f(4).toLongOption)
+      yield {
         val b = bounds(f(1), f(2))
-        val extra = f.drop(5).grouped(2).toSeq
-          .map(p => bounds(p(0), p(1)))
-        Some(Entry(f(0), b.map(_._1), b.map(_._2),
-          f(3).toLongOption, f(4).toLongOption, extra))
-      case Array(rel, a, b) =>
-        val bd = bounds(a, b)
-        Some(Entry(rel, bd.map(_._1), bd.map(_._2)))
-      case Array(rel) => Some(Entry(rel, None, None))
-      case _ => None
-    }
+        Entry(f(0), b.map(_._1), b.map(_._2), rows, bytes,
+          f.drop(5).grouped(2).toSeq.map(p => bounds(p(0), p(1))))
+      }
   }
 
   // -------------------------------------------------------------------
@@ -491,10 +479,13 @@ object ManifestTable {
     if (cols.isEmpty) Map.empty else Map(key -> cols.mkString(","))
 
   /** Parse the manifest at `path` into a [[Snapshot]] — the one read of
-    * it an operation makes. A header line without `=`, or an entry line
-    * with an even field count, fails loudly: read as a path, such a
-    * line would misname a live data file, which [[vacuum]] would then
-    * delete as unreferenced. */
+    * it an operation makes. The manifest must be in the one format the
+    * writers emit, or the read fails loudly naming it: every header
+    * line `#key=value` with no key repeated, a `#schema=` header whose
+    * every field carries its field id, a `#maxfieldid=` header, and
+    * every entry line in [[Entry]]'s shape. A malformed entry line read
+    * as a path would misname a live data file, which [[vacuum]] would
+    * then delete as unreferenced. */
   private def load(spark: SparkSession, root: String, listing: Seq[String],
                    version: Int, path: Path,
                    branch: Option[String] = None): Snapshot = {
@@ -504,17 +495,25 @@ object ManifestTable {
     finally in.close()
     def malformed(l: String) = new IllegalStateException(
       s"malformed manifest $path: line '${l.replace("\t", "\\t")}'")
+    def missing(what: String) = new IllegalStateException(
+      s"malformed manifest $path: no $what")
     val (hs, es) = lines.partition(_.startsWith("#"))
-    val headers = hs.map { l =>
+    val headers = hs.foldLeft(Map.empty[String, String]) { (m, l) =>
       val eq = l.indexOf('=')
-      if (eq < 0) throw malformed(l)
-      l.substring(1, eq) -> l.substring(eq + 1)
-    }.toMap
+      if (eq < 0 || m.contains(l.substring(1, eq))) throw malformed(l)
+      m + (l.substring(1, eq) -> l.substring(eq + 1))
+    }
+    val schema = headers.get(SchemaKey)
+        .flatMap(j => scala.util.Try(DataType.fromJson(j)).toOption) match {
+      case Some(st: StructType) if hasFieldIds(st) => st
+      case _ => throw missing(
+        s"#$SchemaKey= header with a field id on every field")
+    }
+    if (headers.get(MaxFieldIdKey).flatMap(_.toLongOption).isEmpty)
+      throw missing(s"#$MaxFieldIdKey= header")
     val entries = es.map(l => parseEntry(l).getOrElse(throw malformed(l)))
     def abs(e: Entry) = new Path(root, e.rel).toString
-    Snapshot(version, entries.filterNot(_.isDelete).map(abs),
-      headers.get(SchemaKey)
-        .map(DataType.fromJson(_).asInstanceOf[StructType]),
+    Snapshot(version, entries.filterNot(_.isDelete).map(abs), schema,
       entries.filter(_.isDelete).map(abs), colsOf(headers, DeleteKey))(
       root, headers, es, entries, listing, branch)
   }
@@ -528,11 +527,11 @@ object ManifestTable {
                   version: Option[Int] = None): Option[String] =
     resolveOption(spark, root, version).flatMap(_.boundsCol)
 
-  /** The schema a version committed with (None for pre-schema-header
-    * tables, whose reads fall back to parquet's own resolution). */
+  /** The schema a version committed with; None when asked for the
+    * newest version of a table that has none. */
   def schemaAt(spark: SparkSession, root: String,
                version: Option[Int] = None): Option[StructType] =
-    resolveOption(spark, root, version).flatMap(_.schema)
+    resolveOption(spark, root, version).map(_.schema)
 
   /** Every field stored nullable: a pre-evolution file genuinely lacks
     * the later columns, so the committed schema must admit null there. */
@@ -541,10 +540,10 @@ object ManifestTable {
 
   // -------------------------------------------------------------------
   // FIELD IDS (Iceberg's stable-column-identity idea on parquet's own
-  // mechanism): every column of a table created from round 19 on
-  // carries a stable id in its field metadata under parquet's
-  // `parquet.field.id` key — Spark's writer stamps the ids into the
-  // files (spark.sql.parquet.fieldId.write.enabled, default on) and,
+  // mechanism): every column of every table carries a stable id in its
+  // field metadata under parquet's `parquet.field.id` key — Spark's
+  // writer stamps the ids into the files
+  // (spark.sql.parquet.fieldId.write.enabled, default on) and,
   // with spark.sql.parquet.fieldId.read.enabled (set by
   // [[graft.GraftSession]]), the reader resolves requested columns BY
   // ID instead of by name. That makes RENAME a header-only commit (the
@@ -554,9 +553,9 @@ object ManifestTable {
   // a FRESH id, so the dropped column's old values never resurface).
   // Ids are never reused: the high-water mark rides the
   // `#maxfieldid=` header (max-of-schema would recycle the id of a
-  // dropped newest column). Tables created before field-id stamping
-  // (no ids in the committed schema) keep by-name resolution and
-  // reject rename/drop loudly.
+  // dropped newest column). Creation stamps both headers and every
+  // commit carries them; [[load]] rejects a manifest without them or
+  // with an id-less field.
   // -------------------------------------------------------------------
   private val FieldIdKey = "parquet.field.id"
   private val MaxFieldIdKey = "maxfieldid"
@@ -576,19 +575,10 @@ object ManifestTable {
     * — the write-side half of field-id resolution: every staged data
     * file must carry the ids the committed schema declares, whatever
     * transformations (which drop metadata on replaced columns) built
-    * the frame. A no-op for id-less (legacy) schemas. */
+    * the frame. */
   private def alignToSchema(df: DataFrame, s: StructType): DataFrame =
     df.select(s.fields.map(f =>
       col(f.name).as(f.name, f.metadata)).toSeq: _*)
-
-  /** The table's field-id high-water mark (never decreases, never
-    * reused — see the block comment above). */
-  private def maxFieldIdOf(headers: Map[String, String],
-                           schema: Option[StructType]): Long =
-    headers.get(MaxFieldIdKey).flatMap(_.toLongOption)
-      .orElse(schema.filter(hasFieldIds).map(
-        _.fields.map(_.metadata.getLong(FieldIdKey)).max))
-      .getOrElse(0L)
 
   /** Per-file (relative path, bounds, rows, bytes) of a committed
     * version — the metadata the stats consumers and tools read. DATA
@@ -600,13 +590,13 @@ object ManifestTable {
                 version: Option[Int] = None)
       : Seq[(String, Option[(Long, Long)], Option[Long], Option[Long])] =
     resolve(spark, root, version).dataEntries.map(e =>
-      (e.rel, for (a <- e.lo; b <- e.hi) yield (a, b), e.rows, e.bytes))
+      (e.rel, for (a <- e.lo; b <- e.hi) yield (a, b), Some(e.rows),
+        Some(e.bytes)))
 
   /** The table's row count FROM MANIFEST METADATA ALONE — no data file
-    * is opened, the answer a format's statistics exist for. None when
-    * any entry predates v3 stats (an honest "don't know", never a
-    * partial sum), or under outstanding equality deletes (they make the
-    * per-file counts an upper bound only — a scan answers). */
+    * is opened, the answer a format's statistics exist for. None under
+    * outstanding equality deletes (they make the per-file counts an
+    * upper bound only — a scan answers). */
   def rowCountFromStats(spark: SparkSession, root: String,
                         version: Option[Int] = None): Option[Long] =
     resolve(spark, root, version).rowCount
@@ -617,7 +607,7 @@ object ManifestTable {
 
   /** Bounds-pruned RANGE READ — the read-side payoff of manifest format
     * v2+: resolve the newest version, keep only the files whose stored
-    * [lo, hi] key bounds intersect `[lo, hi]` (v1/bounds-less entries
+    * [lo, hi] key bounds intersect `[lo, hi]` (bounds-less entries
     * are always kept — unknown means "may contain anything"), and apply
     * the residual row filter on what remains. File-level skipping from
     * the MANIFEST alone — no footer reads, no directory listing beyond
@@ -824,13 +814,6 @@ object ManifestTable {
     } finally in.close()
   }
 
-  /** Write `df`'s rows as immutable files under a fresh commit subdir and
-    * return their manifest entry lines — NOT yet visible to any reader
-    * (no manifest references them until a commit does). Every line
-    * carries format-v3 stats (row count + size); `boundsCol` adds the
-    * per-file [lo, hi] key bounds, `statsCols` one extra [lo, hi] pair
-    * per column (format v4), `bloomCols` one per-file Bloom filter per
-    * column in the commit dir's sidecars (format v5). */
   /** Per-file ([lo, hi] stat pairs for `statNames`, row count) read
     * from the parquet footers of just-written files — zero Spark jobs,
     * zero data IO. Returns None (caller falls back to the aggregate
@@ -911,6 +894,14 @@ object ManifestTable {
     Some(out.result())
   }
 
+  /** Write `df`'s rows as immutable files under a fresh commit subdir and
+    * return their manifest entry lines — NOT yet visible to any reader
+    * (no manifest references them until a commit does). Every line is
+    * in [[Entry]]'s shape, carrying the file's row count and size;
+    * `boundsCol` fills the per-file [lo, hi] key bounds, `statsCols`
+    * adds one extra [lo, hi] pair per column (format v4), `bloomCols`
+    * one per-file Bloom filter per column in the commit dir's sidecars
+    * (format v5). */
   private def stage(spark: SparkSession, root: String,
                     write: String => Unit,
                     allowEmpty: Boolean = false,
@@ -1010,8 +1001,8 @@ object ManifestTable {
       val (primary, extra) =
         if (boundsCol.isDefined) (pairs.head, pairs.tail)
         else (None, pairs)
-      Entry(s"$rel/$name", primary.map(_._1), primary.map(_._2),
-        Some(n), Some(bytes), extra)
+      Entry(s"$rel/$name", primary.map(_._1), primary.map(_._2), n, bytes,
+        extra)
     }
     val lines = staged.toSeq.sortBy(_._1).flatMap { case (name, bytes) =>
       perFile.get(name) match {
@@ -1027,7 +1018,7 @@ object ManifestTable {
     // rows stamped 0) so the table stays readable as a zero-row relation
     if (lines.isEmpty)
       staged.toSeq.sortBy(_._1).map { case (name, bytes) =>
-        Entry(s"$rel/$name", None, None, Some(0L), Some(bytes)).line }
+        Entry(s"$rel/$name", None, None, 0L, bytes).line }
     else lines
   }
 
@@ -1161,8 +1152,7 @@ object ManifestTable {
     * never a silent column drop / type flip), NEW columns append after
     * the stored ones (old files read them as null). */
   private def evolvedSchema(stored: StructType, incoming: StructType,
-                            root: String,
-                            maxFieldId: Long = 0L): StructType = {
+                            root: String, maxFieldId: Long): StructType = {
     val inByName = incoming.fields.map(f => f.name -> f.dataType).toMap
     val missing = stored.fields.map(_.name).filterNot(inByName.contains)
     require(missing.isEmpty,
@@ -1179,24 +1169,13 @@ object ManifestTable {
         "committed types (after a widening, send the WIDE type); to " +
         "change the TABLE's types use widenColumn (lossless) or " +
         "overwrite (anything else)")
-    val newFields0 = incoming.fields.filterNot(f =>
-      stored.fieldNames.contains(f.name))
-    // new columns: FRESH ids off the high-water mark on an id-stamped
-    // table; on a legacy table any metadata riding in from a foreign
-    // read is STRIPPED (a stale foreign id would mis-resolve) — the
-    // evolved schema must be all-ids or no-ids, never mixed
-    val newFields =
-      if (hasFieldIds(stored))
-        newFields0.zipWithIndex.map { case (f, i) =>
-          withFieldId(f, maxFieldId + i + 1L) }
-      else newFields0.map(stripFieldId)
+    // new columns: FRESH ids off the high-water mark (a stale id riding
+    // in from a foreign read is overwritten)
+    val newFields = incoming.fields
+      .filterNot(f => stored.fieldNames.contains(f.name))
+      .zipWithIndex.map { case (f, i) => withFieldId(f, maxFieldId + i + 1L) }
     asNullable(StructType(stored.fields ++ newFields))
   }
-
-  private def stripFieldId(f: StructField): StructField =
-    if (!f.metadata.contains(FieldIdKey)) f
-    else f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
-      .withMetadata(f.metadata).remove(FieldIdKey).build())
 
   /** The schema with every field id removed — for reading DELETE files
     * under the table shape: delete files are key-only and id-LESS
@@ -1204,7 +1183,9 @@ object ManifestTable {
     * rejects), so they resolve by name; requesting ids over them would
     * fail loudly for nothing. */
   private def stripFieldIds(s: StructType): StructType =
-    StructType(s.fields.map(stripFieldId))
+    StructType(s.fields.map(f => f.copy(metadata =
+      new org.apache.spark.sql.types.MetadataBuilder()
+        .withMetadata(f.metadata).remove(FieldIdKey).build())))
 
   /** Append `df`'s rows: new manifest = base manifest + this commit's
     * files. Staged files stay valid whatever the base becomes, so a lost
@@ -1238,34 +1219,24 @@ object ManifestTable {
     // HERE because the staged files must carry ITS field ids — a
     // creation-by-append stamps fresh ids exactly like overwrite.
     effBounds.foreach(k => requireIntegral(df.schema, k))
-    def evolve(b: Option[Snapshot]): Option[(StructType, Long)] = b match {
-      case Some(s) => s.schema.map { stored =>
-        val mx = maxFieldIdOf(s.headers, Some(stored))
-        val e = evolvedSchema(stored, df.schema, root, mx)
-        (e, if (hasFieldIds(e))
-          mx + (e.fields.length - stored.fields.length) else 0L)
-      }
+    // (evolved schema, field-id high-water mark) against a base
+    def evolve(b: Option[Snapshot]): (StructType, Long) = b match {
+      case Some(s) =>
+        val e = evolvedSchema(s.schema, df.schema, root, s.maxFieldId)
+        (e, s.maxFieldId + e.fields.length - s.schema.fields.length)
       case None =>
         val e = stampFieldIds(asNullable(df.schema))
-        Some((e, e.fields.length.toLong))
+        (e, e.fields.length.toLong)
     }
-    val evolved0 = evolve(base)
+    val (stagedSchema, _) = evolve(base)
     // RESURRECTION GUARD (format v6) + CHECK constraints, validated
     // against a SPECIFIC base — the commit loop re-runs this whenever
     // it lands on a base OTHER than the one validated (a racing
     // delete/addConstraint between validation and commit must not slip
-    // pre-deleted or violating rows in: TOCTOU-safe).
+    // pre-deleted or violating rows in: TOCTOU-safe). The evolution
+    // contract above already requires `df` to carry every table column,
+    // the delete columns among them.
     def validateAgainst(s: Snapshot): Unit = {
-      // the guard joins on the delete columns, so the incoming df must
-      // carry them — a schema-less legacy table would otherwise surface
-      // a raw AnalysisException from the USING join instead of the
-      // contract
-      val missing = s.deleteCols.filterNot(df.schema.fieldNames.contains)
-      require(s.deleteFiles.isEmpty || missing.isEmpty,
-        s"append to $root must carry the delete column(s) " +
-          s"${missing.mkString(", ")} while equality deletes are " +
-          "outstanding (the resurrection guard checks incoming " +
-          s"keys); got columns ${df.schema.fieldNames.mkString(", ")}")
       s.requireNoDeletedKeys(spark, df,
         s"append to $root would resurrect equality-deleted " +
           s"(${s.deleteCols.mkString(", ")}) tuples — the delete is " +
@@ -1274,18 +1245,25 @@ object ManifestTable {
     }
     base.foreach(validateAgainst)
     var validatedBase = base.map(_.version)
-    val dfOut = evolved0.map { case (s, _) => alignToSchema(df, s) }
-      .getOrElse(df)
-    val staged = stage(spark, root, dir => dfOut.write.parquet(dir),
+    val staged = stage(spark, root,
+      dir => alignToSchema(df, stagedSchema).write.parquet(dir),
       boundsCol = effBounds, bloomCols = effBloom)
     var attempt = 0
     while (attempt < maxAttempts) {
-      if (attempt > 0) { // a lost race: re-resolve the base
-        base = resolveOption(spark, root)
-        if (base.map(_.version) != validatedBase) {
-          base.foreach(validateAgainst)
-          validatedBase = base.map(_.version)
-        }
+      if (attempt > 0) base = resolveOption(spark, root) // a lost race
+      // schema evolution against the base's committed schema. The
+      // staged files carry stagedSchema's field ids — a racing commit
+      // that changed the id assignment (a different evolution landed
+      // first) makes those files WRONG for this base's schema: abort
+      // instead of committing misattributed ids.
+      val (outSchema, maxFieldId) = evolve(base)
+      if (outSchema.json != stagedSchema.json)
+        throw new java.util.ConcurrentModificationException(
+          s"append to $root raced a schema change (field ids " +
+            "reassigned under the staged files); rerun the append")
+      if (base.map(_.version) != validatedBase) {
+        base.foreach(validateAgainst)
+        validatedBase = base.map(_.version)
       }
       val h = base.flatMap(_.boundsCol).orElse(effBounds)
       // the base header governs the combined manifest: staged lines
@@ -1295,21 +1273,6 @@ object ManifestTable {
         if (effBounds.isEmpty || h == effBounds) staged
         else staged.map(l =>
           parseEntry(l).fold(l)(_.copy(lo = None, hi = None).line))
-      // schema evolution against the base's committed schema; a base
-      // without one (legacy table) stays schema-less. When field ids
-      // are in play the staged files were written with evolved0's ids
-      // — a racing commit that changed the id assignment (a different
-      // evolution landed first) makes those files WRONG for this
-      // base's schema: abort instead of committing misattributed ids.
-      val evolvedB = evolve(base)
-      if (evolved0.exists(e => hasFieldIds(e._1)) || evolvedB.exists(e =>
-          hasFieldIds(e._1))) {
-        if (evolvedB.map(_._1.json) != evolved0.map(_._1.json))
-          throw new java.util.ConcurrentModificationException(
-            s"append to $root raced a schema change (field ids " +
-              "reassigned under the staged files); rerun the append")
-      }
-      val outSchema = evolvedB.map(_._1)
       val baseLines = base.map(_.entryLines).getOrElse(Seq.empty)
       val v = base.fold(0)(_.version) + 1
       val bh = base.map(_.headers).getOrElse(Map.empty[String, String])
@@ -1324,12 +1287,11 @@ object ManifestTable {
         bh.get(DeleteKey).map(DeleteKey -> _).toMap ++
         // writer markers + constraints: an append must not amnesia a
         // sink's cursor or shed the table's invariants
-        carriedHeaders(bh) ++
+        carriedHeaders(bh) +
         // the id high-water mark moves with the evolution (overrides
         // the carried value; ids are never reused)
-        evolvedB.filter(e => hasFieldIds(e._1))
-          .map(e => MaxFieldIdKey -> e._2.toString).toMap ++
-        outSchema.map(SchemaKey -> _.json).toMap + (KindKey -> "append")
+        (MaxFieldIdKey -> maxFieldId.toString) +
+        (SchemaKey -> outSchema.json) + (KindKey -> "append")
       if (tryCommit(fs, root, v, baseLines ++ stagedOut, headers)) return v
       attempt += 1
     }
@@ -1399,10 +1361,8 @@ object ManifestTable {
       s"table $root already carries equality deletes on " +
         s"(${base.deleteCols.mkString(", ")}); one delete column-set per " +
         s"table (got ${keyCols.mkString(", ")})")
-    val delKeys = keys.select(keyCols.map { k =>
-      base.schema.map(sc => col(k).cast(sc(k).dataType))
-        .getOrElse(col(k)).as(k)
-    }: _*).distinct()
+    val delKeys = keys.select(keyCols.map(k =>
+      col(k).cast(base.schema(k).dataType).as(k)): _*).distinct()
     require(delKeys.where(keyCols.map(col(_).isNull).reduce(_ || _))
       .take(1).isEmpty,
       "null keys cannot be equality-deleted (the anti-join would " +
@@ -1481,14 +1441,14 @@ object ManifestTable {
              deleteSide: Boolean = false): DataFrame = {
       // delete files are key-only and id-less: resolve them by NAME
       // under the table shape (see stripFieldIds)
-      val s = if (deleteSide) m.schema.map(stripFieldIds) else m.schema
+      val s = if (deleteSide) stripFieldIds(m.schema) else m.schema
       val base =
         if (rels.nonEmpty)
           readFiles(spark,
             rels.map(r => new Path(root, r).toString), s)
         else {
-          // zero changed files on this side: an empty, correctly-typed
-          // relation (schema from the version's header, or any file)
+          // zero changed files on this side: an empty relation typed by
+          // the version's schema
           require(m.files.nonEmpty,
             s"version ${m.version} of $root lists no data files")
           readFiles(spark, m.files.take(1), s).where(lit(false))
@@ -1559,8 +1519,7 @@ object ManifestTable {
     * [[vacuum]], and a concurrent commit aborts the swap (stale base)
     * instead of clobbering it. Pass `targetFiles` explicitly, or
     * `targetFileBytes` to SIZE-BALANCE from the manifest's v3 stats
-    * (total bytes / target size, metadata-only — no listing, no scan;
-    * stat-less legacy entries fall back to the current file count).
+    * (total bytes / target size, metadata-only — no listing, no scan).
     * Returns (newVersion, filesBefore, filesAfter). */
   def optimize(spark: SparkSession, root: String, clusterCol: String,
                targetFiles: Int): (Int, Int, Int) =
@@ -1570,12 +1529,9 @@ object ManifestTable {
                      targetFileBytes: Long): (Int, Int, Int) = {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
     val base = resolve(spark, root)
-    val bytes = base.dataEntries.map(_.bytes)
-    val n =
-      if (bytes.exists(_.isEmpty)) bytes.size
-      else math.max(1,
-        ((bytes.flatten.sum + targetFileBytes - 1) / targetFileBytes).toInt)
-    optimizeImpl(spark, base, clusterCol, n)
+    val bytes = base.dataEntries.map(_.bytes).sum
+    optimizeImpl(spark, base, clusterCol,
+      math.max(1, ((bytes + targetFileBytes - 1) / targetFileBytes).toInt))
   }
 
   private def optimizeImpl(spark: SparkSession, base: Snapshot,
@@ -1616,8 +1572,8 @@ object ManifestTable {
       statsCols = statsCols, bloomCols = bloomCs)
     val headers = boundsHeader(boundsCol) ++
       colsHeader(BloomKey, bloomCs) ++ colsHeader(StatsKey, statsCols) ++
-      carriedHeaders(base.headers) ++
-      base.schema.map(SchemaKey -> _.json).toMap + (KindKey -> "compact")
+      carriedHeaders(base.headers) + (SchemaKey -> base.schema.json) +
+      (KindKey -> "compact")
     (commitNext(spark, base, staged, headers, s"$what of ${base.root}"),
       base.files.size, staged.size)
   }
@@ -1690,32 +1646,6 @@ object ManifestTable {
       "optimizeZOrder")
   }
 
-  /** COPY-ON-WRITE MERGE — the `MERGE INTO` shape the public table
-    * formats put behind their commit: apply row-level deletes and
-    * upserts keyed on `keyCol` by rewriting ONLY the data files that
-    * contain a changed key; every other file is carried VERBATIM into
-    * the new manifest (same path, zero IO). Affected files are found
-    * from the MANIFEST's per-file key bounds when the table was written
-    * with `boundsCol` (format v2+): a delta-sized distributed interval
-    * stabbing against the O(files) broadcast bounds — no snapshot scan
-    * at all, the same plan Delta/Iceberg run off their file statistics.
-    * Entries without bounds (v1 lines, or writes that skipped
-    * `boundsCol`) fall back to one key-column-only scan of just those
-    * files tagged with `input_file_name`. New keys (pure inserts) need
-    * no affected file; they land in the rewrite commit's fresh files,
-    * which are themselves bounds-stamped so the NEXT merge prunes too.
-    * Readers keep snapshot isolation throughout: the merge is one
-    * manifest rename, old versions stay readable, and a concurrent
-    * commit aborts this merge (stale base) instead of losing either
-    * side's rows.
-    *
-    * `removeKeys` is a 1-column (`keyCol`) relation; `upserts` carries
-    * full rows (an update = its key in neither/either — upsert rows
-    * REPLACE any existing row with the same key) and must carry EXACTLY
-    * the table's columns — an extra column is rejected (schema widens
-    * via [[append]]/[[overwrite]], never silently dropped here), a
-    * missing one fails resolution. Returns
-    * (newVersion, filesCarried, filesRewritten). */
   /** The table's declared CHECK constraints, name → SQL expression. */
   def constraintsOf(spark: SparkSession, root: String)
       : Map[String, String] =
@@ -1768,8 +1698,8 @@ object ManifestTable {
     * additions as null, exactly the state an evolving append leaves
     * them in. New columns are forced NULLABLE (no existing row carries
     * them). Name collisions — including case-insensitive ones, which
-    * SQL resolution would conflate — schema-less legacy tables, and
-    * empty additions reject loudly; rename / drop ride field ids
+    * SQL resolution would conflate — and empty additions reject
+    * loudly; rename / drop ride field ids
     * ([[renameColumn]]/[[dropColumn]]) and retyping is sound only as
     * a lossless widening ([[widenColumn]]). */
   def addColumns(spark: SparkSession, root: String,
@@ -1779,59 +1709,39 @@ object ManifestTable {
       s"addColumns to $root: duplicate new column names " +
         cols.map(_.name).mkString(", "))
     val s = resolve(spark, root)
-    val stored = s.schema.getOrElse(
-      throw new UnsupportedOperationException(
-        s"$root has no committed #schema= header (legacy table) — " +
-          "any append/overwrite stamps one; evolve after that"))
+    val stored = s.schema
     val clash = cols.map(_.name).filter(n =>
       stored.fieldNames.exists(_.equalsIgnoreCase(n)))
     require(clash.isEmpty,
       s"addColumns to $root: column(s) ${clash.mkString(", ")} " +
         "already exist (rename/retype is not supported — evolution " +
         "is add-only)")
-    // on an id-stamped table the additions get FRESH ids off the
-    // high-water mark (never a reused id — a re-added name must not
-    // resurface the dropped column's old values); legacy tables stay
-    // id-less (any foreign metadata stripped)
-    val mx = maxFieldIdOf(s.headers, Some(stored))
-    val added =
-      if (hasFieldIds(stored))
-        cols.zipWithIndex.map { case (f, i) =>
-          withFieldId(f.copy(nullable = true), mx + i + 1L) }
-      else cols.map(f => stripFieldId(f.copy(nullable = true)))
+    // the additions get FRESH ids off the high-water mark (never a
+    // reused id — a re-added name must not resurface the dropped
+    // column's old values)
+    val mx = s.maxFieldId
+    val added = cols.zipWithIndex.map { case (f, i) =>
+      withFieldId(f.copy(nullable = true), mx + i + 1L) }
     val widened = asNullable(StructType(stored.fields ++ added))
-    val maxHdr =
-      if (hasFieldIds(stored))
-        Map(MaxFieldIdKey -> (mx + cols.length).toString)
-      else Map.empty[String, String]
-    commitHeaders(spark, s,
-      s.headers ++ maxHdr + (SchemaKey -> widened.json), "addColumns")
+    commitHeaders(spark, s, s.headers +
+      (MaxFieldIdKey -> (mx + cols.length).toString) +
+      (SchemaKey -> widened.json), "addColumns")
   }
 
   /** The shared gate for header-only schema evolution: the column must
     * exist and hold no pruning/delete ROLE (those headers attribute by
     * NAME), and no CHECK constraint may reference it (constraint
     * expressions are SQL text — a silent rewrite could change
-    * semantics). RENAME/DROP additionally require the table to be
-    * field-id-stamped and the session to resolve by id (`needIds` —
-    * a renamed column would silently null under by-name resolution);
-    * WIDENING does not (the name never changes, so by-name resolution
-    * of the narrow physical column under the wide requested type stays
-    * sound on legacy tables too). */
+    * semantics). RENAME/DROP additionally require the session to
+    * resolve by id (`needIds` — a renamed column would silently null
+    * under by-name resolution); WIDENING does not (the name never
+    * changes, so by-name resolution of the narrow physical column
+    * under the wide requested type stays sound). */
   private def requireIdEvolvable(spark: SparkSession, s: Snapshot,
                                  colName: String, what: String,
                                  needIds: Boolean = true): StructType = {
     val root = s.root
-    val stored = s.schema.getOrElse(
-      throw new UnsupportedOperationException(
-        s"$what on $root: no committed #schema= header (legacy " +
-          "table) — any append/overwrite stamps one; evolve after " +
-          "that"))
-    if (needIds && !hasFieldIds(stored))
-      throw new UnsupportedOperationException(
-        s"$what on $root: the table predates field-id stamping — " +
-          "reads resolve by NAME, so a header-only rename/drop would " +
-          "silently null the column; overwrite to re-create it with ids")
+    val stored = s.schema
     if (needIds)
       require(spark.conf.get("spark.sql.parquet.fieldId.read.enabled",
           "false").equalsIgnoreCase("true"),
@@ -1931,12 +1841,12 @@ object ManifestTable {
     * rename/drop — pruning-role (bounds/stats/bloom/delete) and
     * constraint-referenced columns reject (bloom sidecars hash the
     * PHYSICAL values), so retire the role (optimize / re-stamp) before
-    * widening — but does NOT require field ids: the name never
+    * widening — but does NOT require id resolution: the name never
     * changes, so by-name resolution of the narrow physical column
-    * under the wide requested type stays sound on legacy tables too
-    * (spec-pinned). Appends after the widening
-    * must send the WIDE type (the schema contract is exact — SQL
-    * INSERT casts automatically; Scala callers cast explicitly). */
+    * under the wide requested type stays sound (spec-pinned). Appends
+    * after the widening must send the WIDE type (the schema contract
+    * is exact — SQL INSERT casts automatically; Scala callers cast
+    * explicitly). */
   def widenColumn(spark: SparkSession, root: String, name: String,
                   to: org.apache.spark.sql.types.DataType): Int = {
     val s = resolve(spark, root)
@@ -2072,15 +1982,14 @@ object ManifestTable {
   def appendToBranch(spark: SparkSession, root: String, name: String,
                      df: DataFrame): Int = {
     val head = resolveBranch(spark, root, name)
-    head.schema.foreach { stored =>
-      require(stored.fieldNames.toSeq == df.schema.fieldNames.toSeq &&
-        stored.fields.map(_.dataType).toSeq ==
-          df.schema.fields.map(_.dataType).toSeq,
-        s"append to branch $name of $root must match the table " +
-          s"schema exactly (${stored.fieldNames.mkString(", ")}) — " +
-          "branch-side evolution is not supported; evolve on main " +
-          "and re-branch")
-    }
+    val stored = head.schema
+    require(stored.fieldNames.toSeq == df.schema.fieldNames.toSeq &&
+      stored.fields.map(_.dataType).toSeq ==
+        df.schema.fields.map(_.dataType).toSeq,
+      s"append to branch $name of $root must match the table " +
+        s"schema exactly (${stored.fieldNames.mkString(", ")}) — " +
+        "branch-side evolution is not supported; evolve on main " +
+        "and re-branch")
     head.requireNoDeletedKeys(spark, df,
       s"append to branch $name of $root would resurrect " +
         s"equality-deleted (${head.deleteCols.mkString(", ")}) tuples")
@@ -2090,8 +1999,8 @@ object ManifestTable {
       df.schema.fieldNames.contains(b) &&
         isIntegral(df.schema(b).dataType))
     val effBloom = head.bloomCols.filter(stampable(df.schema, _))
-    val dfOut = head.schema.map(alignToSchema(df, _)).getOrElse(df)
-    val staged = stage(spark, root, dir => dfOut.write.parquet(dir),
+    val staged = stage(spark, root,
+      dir => alignToSchema(df, stored).write.parquet(dir),
       boundsCol = effBounds, bloomCols = effBloom)
     commitNext(spark, head, head.entryLines ++ staged,
       head.headers + (KindKey -> "append"),
@@ -2317,10 +2226,42 @@ object ManifestTable {
       c.isLetterOrDigit || c == '_' || c == '-' || c == '.'),
       s"txn appId must be [A-Za-z0-9_.-]+, got '$appId'")
 
+  /** COPY-ON-WRITE MERGE — the `MERGE INTO` shape the public table
+    * formats put behind their commit: apply row-level deletes and
+    * upserts keyed on `keyCol` by rewriting ONLY the data files that
+    * contain a changed key; every other file is carried VERBATIM into
+    * the new manifest (same path, zero IO). Affected files are found
+    * from the MANIFEST's per-file key bounds when the table was written
+    * with `boundsCol` (format v2+): a delta-sized distributed interval
+    * stabbing against the O(files) broadcast bounds — no snapshot scan
+    * at all, the same plan Delta/Iceberg run off their file statistics.
+    * Entries without bounds (writes that skipped `boundsCol`, or an
+    * all-null key) fall back to one key-column-only scan of just those
+    * files tagged with `input_file_name`. New keys (pure inserts) need
+    * no affected file; they land in the rewrite commit's fresh files,
+    * which are themselves bounds-stamped so the NEXT merge prunes too.
+    * Readers keep snapshot isolation throughout: the merge is one
+    * manifest rename, old versions stay readable, and a concurrent
+    * commit aborts this merge (stale base) instead of losing either
+    * side's rows.
+    *
+    * `removeKeys` is a 1-column (`keyCol`) relation; `upserts` carries
+    * full rows (an update = its key in neither/either — upsert rows
+    * REPLACE any existing row with the same key) and must carry EXACTLY
+    * the table's columns — an extra column is rejected (schema widens
+    * via [[append]]/[[overwrite]], never silently dropped here), a
+    * missing one fails resolution. Returns
+    * (newVersion, filesCarried, filesRewritten). */
   def mergeCoW(spark: SparkSession, root: String, keyCol: String,
                removeKeys: DataFrame, upserts: DataFrame,
                txn: Option[(String, Long)] = None): (Int, Int, Int) =
     mergeCoWKeys(spark, root, Seq(keyCol), removeKeys, upserts, txn)
+
+  /** Where [[mergeCoWKeys]]' pruning-degradation diagnostic goes when
+    * the caller doesn't inject a sink: the library's logger — visible
+    * in executor/driver logs without any wiring. */
+  private def logDiagnostic(msg: String): Unit =
+    org.slf4j.LoggerFactory.getLogger("graft.ManifestTable").warn(msg)
 
   /** The TUPLE-KEYED merge (the [[mergeCoW]] contract with a composite
     * key): rows are removed/replaced when their WHOLE `keyCols` tuple
@@ -2337,12 +2278,6 @@ object ManifestTable {
     * named diagnostic through `onDiagnostic` (default: the library
     * logger) recommending exactly that. `removeKeys` is a
     * keyCols-relation; `upserts` carries full rows. */
-  /** Where [[mergeCoWKeys]]' pruning-degradation diagnostic goes when
-    * the caller doesn't inject a sink: the library's logger — visible
-    * in executor/driver logs without any wiring. */
-  private def logDiagnostic(msg: String): Unit =
-    org.slf4j.LoggerFactory.getLogger("graft.ManifestTable").warn(msg)
-
   def mergeCoWKeys(spark: SparkSession, root: String,
                    keyCols: Seq[String],
                    removeKeys: DataFrame, upserts: DataFrame,
@@ -2513,9 +2448,7 @@ object ManifestTable {
     // align the upserts to the table's column order — and REJECT an
     // upsert that carries columns the table lacks: silently dropping
     // them would lose data (widen the schema via append/overwrite first)
-    val tableCols = tableSchema.map(_.fieldNames.toSeq).getOrElse(
-      spark.read.parquet(new Path(root, entries.head.rel).toString)
-        .columns.toSeq)
+    val tableCols = tableSchema.fieldNames.toSeq
     val extraCols = upserts.columns.filterNot(tableCols.contains)
     require(extraCols.isEmpty,
       s"mergeCoW upserts carry columns the table lacks: " +
@@ -2549,11 +2482,9 @@ object ManifestTable {
     val bloomCs = m.bloomCols.filter(stampable(rewritten.schema, _))
     // staged files must carry the committed schema's field ids —
     // upsert frames come from user DataFrames with no id metadata
-    val rewrittenOut = tableSchema.map(alignToSchema(rewritten, _))
-      .getOrElse(rewritten)
     val staged = stage(spark, root,
-      dir => rewrittenOut.write.parquet(dir), allowEmpty = true,
-      boundsCol = stampCol, bloomCols = bloomCs)
+      dir => alignToSchema(rewritten, tableSchema).write.parquet(dir),
+      allowEmpty = true, boundsCol = stampCol, bloomCols = bloomCs)
     // delete sequencing, write side: changed keys leave the delete set
     // — carry the delete files VERBATIM when the merge touched none of
     // their keys (zero IO), else consolidate the surviving keys into
@@ -2600,8 +2531,8 @@ object ManifestTable {
       // may set its own marker
       carriedHeaders(m.headers) ++
       txn.map { case (app, ver) =>
-        requireTxnId(app); (TxnPrefix + app) -> ver.toString }.toMap ++
-      tableSchema.map(SchemaKey -> _.json).toMap + (KindKey -> "merge")
+        requireTxnId(app); (TxnPrefix + app) -> ver.toString }.toMap +
+      (SchemaKey -> tableSchema.json) + (KindKey -> "merge")
     (commitNext(spark, m, outLines, headers, s"merge into $root" +
       branch.map(b => s" (branch $b)").getOrElse("")),
       carryE.size, staged.size)
@@ -2727,10 +2658,9 @@ object ManifestTable {
     // re-align to the committed schema: the transform's replaced
     // columns lost their field-id metadata (and the file tag is
     // dropped here too)
-    val rewrittenOut = s.schema.map(alignToSchema(rewritten, _))
-      .getOrElse(rewritten.drop(fileTag))
     val staged = stage(spark, root,
-      dir => rewrittenOut.write.parquet(dir), allowEmpty = true,
+      dir => alignToSchema(rewritten, s.schema).write.parquet(dir),
+      allowEmpty = true,
       boundsCol = stampCol,
       statsCols = s.statsCols.filter(stampable(rewritten.schema, _)),
       bloomCols = s.bloomCols.filter(stampable(rewritten.schema, _)))
@@ -2841,15 +2771,6 @@ object ManifestTable {
       .orderBy("lang")
   }
 
-  /** Q158: SCHEMA EVOLUTION, hash-gated — the documents table committed
-    * WITHOUT a lang column (v1), then an append that ADDS it (v2:
-    * add-column evolution widens the committed `#schema=` header), read
-    * back as one relation: pre-evolution rows surface lang as null
-    * (grouped under a sentinel), post-evolution rows carry it. The
-    * oracle replays the same two-phase union with a NULL lang for the
-    * first subset, so a silently-dropped column, a misresolved old
-    * file, or a wrong null-fill all fire the hash gate. Time-travel
-    * schema (v1 has no lang at all) is the spec's pin. */
   /** Q163: format v5's point lookup, hash-gated — build lineitem as a
     * manifest table CLUSTERED on l_orderkey (so l_partkey is scattered:
     * every file's [lo, hi] on it spans the domain and stats alone prune
@@ -3157,6 +3078,15 @@ object ManifestTable {
       .orderBy("doc_id")
   }
 
+  /** Q158: SCHEMA EVOLUTION, hash-gated — the documents table committed
+    * WITHOUT a lang column (v1), then an append that ADDS it (v2:
+    * add-column evolution widens the committed `#schema=` header), read
+    * back as one relation: pre-evolution rows surface lang as null
+    * (grouped under a sentinel), post-evolution rows carry it. The
+    * oracle replays the same two-phase union with a NULL lang for the
+    * first subset, so a silently-dropped column, a misresolved old
+    * file, or a wrong null-fill all fire the hash gate. Time-travel
+    * schema (v1 has no lang at all) is the spec's pin. */
   def q158SchemaEvolution(spark: SparkSession, sfDir: String): DataFrame = {
     val root = Artifacts.freshRoot(spark, sfDir, "manifest_evo_")
     val docs = graft.Tables.documents(spark, sfDir)
@@ -3303,7 +3233,7 @@ object ManifestTable {
     (1 to 3).map { v =>
       val n = rowCountFromStats(spark, root, Some(v)).getOrElse(
         throw new IllegalStateException(
-          s"version $v of $root lacks v3 row-count stats"))
+          s"version $v of $root has outstanding deletes"))
       (v, n)
     }.toDF("version", "n_rows").orderBy("version")
   }

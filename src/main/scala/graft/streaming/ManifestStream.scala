@@ -90,8 +90,7 @@ class ManifestStreamProvider extends StreamSourceProvider
       : (String, StructType) = {
     val spark = sqlContext.sparkSession
     val root = rootOf(parameters)
-    val s = schema.orElse(ManifestTable.schemaAt(spark, root))
-      .getOrElse(ManifestTable.read(spark, root).schema)
+    val s = schema.getOrElse(ManifestTable.snapshot(spark, root).schema)
     val out =
       if (isCdf(parameters))
         org.apache.spark.sql.types.StructType(s.fields :+
@@ -473,16 +472,11 @@ class ManifestStreamSource(spark: SparkSession, root: String,
       case RewriteRedeliver => perCommit
     }
     val rels = kept.flatMap(_._2).distinct.filterNot(isDel)
-    val committed = ManifestTable.schemaAt(spark, root, Some(endV))
+    val committed = ManifestTable.snapshot(spark, root, Some(endV)).schema
     if (rels.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], committed.getOrElse(schema))
-    else {
-      val paths = rels.map(r =>
-        new org.apache.hadoop.fs.Path(root, r).toString)
-      committed.map(s => spark.read.schema(s))
-        .getOrElse(spark.read).parquet(paths: _*)
-    }
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], committed)
+    else spark.read.schema(committed).parquet(rels.map(r =>
+      new org.apache.hadoop.fs.Path(root, r).toString): _*)
   }
 
   /** The CDF batch for `(fromV, endV]` or the tagged initial snapshot. */

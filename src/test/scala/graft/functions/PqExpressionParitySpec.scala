@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 
@@ -43,36 +43,66 @@ class PqExpressionParitySpec extends SparkSpec {
           x => floor(x * lit(1e6))).as("r"))
   }
 
-  test("dist table matches the HOF formulation on the trained K=256 model") {
+  /** The rows the interpreted HOF twin runs over at the production
+    * K=256: a fixed 1-in-16 sample, picked by a seeded hash of vec_id.
+    * The twin costs O(rows x M x K x SubDim) interpreted evaluations
+    * (~100 s per test over the full corpus at K=256); parity is per
+    * row, so a fixed sample pins it as hard as the whole corpus does.
+    * The full corpus still runs the twin at M=K=16, and the native
+    * side at K=256. */
+  private def k256Sample(df: DataFrame): DataFrame =
+    df.where(pmod(hash(col("vec_id"), lit(20261019)), lit(16)) === 0)
+
+  /** Per row of `rows` and subspace `mi` of the trained (m, k) model:
+    * the native dist table `n_mi`, the native argmin `a_mi` and
+    * `table`'s distance table `h_mi`. Checkpointed, so each interpreted
+    * HOF table is evaluated once per row: the argmin check reads it
+    * three times, and Catalyst would inline it into every read. */
+  private def tables(rows: DataFrame, m: Int, k: Int,
+                     table: (Column, Seq[Seq[Long]], Int, Int) => Column =
+                       hofDistTable): DataFrame = {
     val pq = graft.operators.ProductQuantization
-    val (_, cents) = pq.pqModelAt(spark, sfDir, pq.M256, pq.K256)
-    val sd = graft.operators.SimilarityQueries.Dims / pq.M256
-    val df = microRows.select(
-      (0 until pq.M256).flatMap { mi =>
+    val (_, cents) = pq.pqModelAt(spark, sfDir, m, k)
+    val sd = graft.operators.SimilarityQueries.Dims / m
+    rows.select(
+      (0 until m).flatMap { mi =>
         Seq(nativeDistTable(col("r"), cents(mi), mi * sd).as(s"n_$mi"),
-          hofDistTable(col("r"), cents(mi), mi * sd, sd).as(s"h_$mi"))
-      }: _*)
-    val drift = df.where((0 until pq.M256)
+          nativeArgmin(col("r"), cents(mi), mi * sd).as(s"a_$mi"),
+          table(col("r"), cents(mi), mi * sd, sd).as(s"h_$mi"))
+      }: _*).localCheckpoint()
+  }
+
+  /** Rows where the native dist table and `h` differ. */
+  private def distDrift(t: DataFrame, m: Int): Long =
+    t.where((0 until m)
       .map(mi => not(col(s"n_$mi") <=> col(s"h_$mi"))).reduce(_ || _))
       .count()
+
+  /** Rows where the native argmin differs from array_position /
+    * array_min over `h`. */
+  private def argminDrift(t: DataFrame, m: Int): Long =
+    t.where((0 until m).map { mi =>
+      val h = col(s"h_$mi")
+      not(col(s"a_$mi").getField("code") <=>
+        (array_position(h, array_min(h)) - 1).cast("int")) ||
+        not(col(s"a_$mi").getField("dist") <=> array_min(h))
+    }.reduce(_ || _)).count()
+
+  test("dist table matches the HOF formulation on the trained K=256 model") {
+    val pq = graft.operators.ProductQuantization
+    assert(k256Sample(microRows).count() > 0L, "empty K=256 sample")
+    val drift = distDrift(tables(microRows, pq.M, pq.K), pq.M) +
+      distDrift(tables(k256Sample(microRows), pq.M256, pq.K256), pq.M256)
     assert(drift === 0L, "native dist table drifted from the HOF form")
   }
 
   test("argmin matches array_min/array_position over the HOF table") {
     val pq = graft.operators.ProductQuantization
-    val (_, cents) = pq.pqModelAt(spark, sfDir, pq.M256, pq.K256)
-    val sd = graft.operators.SimilarityQueries.Dims / pq.M256
-    val df = microRows.select(
-      (0 until pq.M256).flatMap { mi =>
-        val h = hofDistTable(col("r"), cents(mi), mi * sd, sd)
-        Seq(nativeArgmin(col("r"), cents(mi), mi * sd).as(s"n_$mi"),
-          (array_position(h, array_min(h)) - 1).cast("int").as(s"hc_$mi"),
-          array_min(h).as(s"hd_$mi"))
-      }: _*)
-    val drift = df.where((0 until pq.M256).map(mi =>
-      not(col(s"n_$mi").getField("code") <=> col(s"hc_$mi")) ||
-        not(col(s"n_$mi").getField("dist") <=> col(s"hd_$mi")))
-      .reduce(_ || _)).count()
+    val drift = argminDrift(tables(microRows, pq.M, pq.K), pq.M) +
+      argminDrift(tables(k256Sample(microRows), pq.M256, pq.K256),
+        pq.M256) +
+      argminDrift(tables(microRows, pq.M256, pq.K256,
+        (r, cb, offset, _) => nativeDistTable(r, cb, offset)), pq.M256)
     assert(drift === 0L, "native argmin drifted from the HOF form")
   }
 

@@ -33,8 +33,14 @@ class WinnowParitySpec extends SparkSpec {
     // the interpreted gram-hash array per WINDOW element once Catalyst
     // collapses the projects (O(len^2) interpreted md5s — the very cost
     // the native expression removes), so full-length corpus docs make
-    // this differential take minutes for no extra coverage
+    // this differential take minutes for no extra coverage. For the
+    // same reason the twin runs over a fixed 1-in-16 sample of the
+    // corpus (a seeded hash of doc_id; ~96 s over all of it): parity is
+    // per row, so a fixed sample pins it as hard. The native side runs
+    // over the whole corpus at full length in the production test
+    // below.
     val docs = graft.Tables.documents(spark, sfDir)
+      .where(pmod(hash(col("doc_id"), lit(20261019)), lit(16)) === 0)
       .select(substring(col("text"), 1, 160).as("text")).as[String]
       .collect().toSeq ++ synthetic ++ randomDocs
     val native = Bridge.column(WinnowFingerprints(
@@ -49,6 +55,17 @@ class WinnowParitySpec extends SparkSpec {
     // non-degenerate: some doc has several fingerprints, some exactly one
     assert(rows.exists(_.getSeq[Long](0).size > 2))
     assert(rows.exists(_.getSeq[Long](0).size == 1))
+  }
+
+  test("native WinnowFingerprints over the whole corpus at full length " +
+      "and q26's (8, 4): every doc keeps at least one fingerprint") {
+    val fps = Bridge.column(WinnowFingerprints(
+      Bridge.expression(Text.normalized(col("text"))), 8, 4))
+    val sizes = graft.Tables.documents(spark, sfDir)
+      .select(size(fps).as("n")).as[Int].collect()
+    assert(sizes.nonEmpty)
+    assert(sizes.forall(_ >= 1), "a document lost every fingerprint")
+    assert(sizes.exists(_ > 2))
   }
 
   test("q26's plan runs the native expression, no interpreted lambda") {

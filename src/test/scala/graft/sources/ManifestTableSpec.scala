@@ -921,12 +921,30 @@ class ManifestTableSpec extends SparkSpec {
 
   test("a malformed manifest fails loudly: read and vacuum throw, " +
       "naming the manifest, and vacuum deletes no data file") {
+    import org.apache.spark.sql.types.{DataType, Metadata, StructType}
+    def entries(f: String => String)(ls: Seq[String]): Seq[String] =
+      ls.map(l => if (l.startsWith("#")) l else f(l))
+    def idLess(l: String): String =
+      if (!l.startsWith("#schema=")) l
+      else "#schema=" + StructType(DataType.fromJson(l.stripPrefix(
+          "#schema=")).asInstanceOf[StructType].fields
+        .map(_.copy(metadata = Metadata.empty))).json
     val corruptions: Seq[Seq[String] => Seq[String]] = Seq(
       // an entry line with an even field count (once misread as one
       // path holding tabs, leaving the real file unreferenced)
       _.map(l => if (l.startsWith("#")) l else s"$l\t0"),
       // a header line without '='
-      "#boundscol" +: _)
+      "#boundscol" +: _,
+      // entry lines of one field (a bare path) or three (path + bounds)
+      entries(_.split("\t").head),
+      entries(_.split("\t").take(3).mkString("\t")),
+      // no #schema= header, or one whose fields carry no field ids
+      _.filterNot(_.startsWith("#schema=")),
+      _.map(idLess),
+      // no #maxfieldid= header
+      _.filterNot(_.startsWith("#maxfieldid=")),
+      // a repeated header key
+      ls => ls.filter(_.startsWith("#schema=")) ++ ls)
     corruptions.foreach { corrupt =>
       val root = freshRoot()
       ManifestTable.overwrite(spark, root, docs.repartition(2))
