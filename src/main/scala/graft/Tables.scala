@@ -68,10 +68,6 @@ object Tables {
         .orderedHash(entries.sortInPlace()))
     }.toOption
 
-  /** Register every table as a temp view so `spark.sql` mirrors the oracle. */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    names.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
-
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = load(s, d, "nation")
   def customer(s: SparkSession, d: String): DataFrame = load(s, d, "customer")

@@ -26,7 +26,8 @@ import org.apache.spark.sql.SparkSession
   * `report()` renders sections in a fixed order so successive runs diff
   * cleanly, exactly like the reference's report file. [[window]] is the
   * one per-run measurement: the bench's per-query shuffle MB, the
-  * `tools.Profile` job/gap split and the scaling sweeps all read it.
+  * `tools.Profile` job/gap split and the shuffle-counting specs all
+  * read it.
   *
   * `sc` is the context whose listener bus [[window]] drains — the one
   * [[MetricsReport.install]] adds the report to.

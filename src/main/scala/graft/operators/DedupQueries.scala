@@ -62,15 +62,6 @@ object DedupQueries {
     hashGroupsOfKeyed(
       idNorm.select(normHash(col("norm")).as("h"), col("doc_id")))
 
-  /** Hash values whose group holds MORE than one row (duplicates and,
-    * vanishingly rarely, 64-bit collisions) — the side consumers probe
-    * to route docs between the provably-unique fast path and the exact
-    * verify pass. */
-  private[graft] def multiHashes(idNorm: DataFrame): DataFrame =
-    hashGroups(idNorm)
-      .where(col("cnt") > 1)
-      .select("h")
-
   /** The doc_ids belonging to multi-hash groups — the dup-sized routing
     * list of narrow-key dedup. The probe is bloom-prefiltered MAP-SIDE
     * (q66's discipline, over `multiH`'s 64-bit hashes): rows that miss
@@ -404,22 +395,14 @@ object DedupQueries {
     * stable; window-prune 5.8-10.9 s; groupBy-prune 4.7-23.8 s). On a
     * sparse real-world corpus add the `df > 1` filter back — the pair
     * join's input, not this operator's shape, is what explodes. */
-  /** Distinct co-shingled pairs with their common-shingle counts — q19's
-    * exact candidate space. Public so the CandidateScaling sweep measures
-    * the SAME join the operator ships (no drift between the scaling
-    * evidence and the pipeline). */
-  def shingleIntersections(spark: SparkSession, sfDir: String): DataFrame = {
+  def q19NgramJaccard(spark: SparkSession, sfDir: String): DataFrame = {
     val sh = shingles(spark, sfDir)
+    val sz = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
+    // distinct co-shingled pairs with their common-shingle counts
     sh.select(col("doc_id").as("doc_id_1"), col("s"))
       .join(sh.select(col("doc_id").as("doc_id_2"), col("s")), Seq("s"))
       .where(col("doc_id_1") < col("doc_id_2"))
       .groupBy("doc_id_1", "doc_id_2").agg(count(lit(1)).as("i"))
-  }
-
-  def q19NgramJaccard(spark: SparkSession, sfDir: String): DataFrame = {
-    val sh = shingles(spark, sfDir)
-    val sz = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    shingleIntersections(spark, sfDir)
       .join(sz.select(col("doc_id").as("doc_id_1"), col("n").as("n1")), "doc_id_1")
       .join(sz.select(col("doc_id").as("doc_id_2"), col("n").as("n2")), "doc_id_2")
       .select(col("doc_id_1"), col("doc_id_2"),
@@ -739,8 +722,8 @@ object DedupQueries {
   }
 
   /** Distinct band-collision pairs with both fingerprints — q48's
-    * candidate space before the hamming verify. Public so the
-    * CandidateScaling sweep measures the shipped shape. */
+    * candidate space before the hamming verify. Public so OperatorSpec's
+    * band-count and band-width tests count the shipped shape. */
   def simhashCandidates(spark: SparkSession, sfDir: String,
                         bands: Int = 4, fpBits: Int = 32): DataFrame = {
     val banded = simhashBanded(
@@ -973,8 +956,8 @@ object DedupQueries {
 
   /** [[computeSpanFeatures]] over an explicit `(doc_id, text)` relation —
     * the same map-side gram-key plan for inputs that are not the
-    * documents table (the data-growth sweep in
-    * [[graft.tools.DedupScaling]]; any embedded relation), mirroring the
+    * documents table (the refresh's fresh documents, Bench's span
+    * rebuild over snapshot B, any embedded relation), mirroring the
     * [[dupGroups]] / [[dupGroupsFromFeatures]] split. */
   private[graft] def spanFeaturesOf(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.graftbridge.Bridge

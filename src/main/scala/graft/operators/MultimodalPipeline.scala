@@ -69,15 +69,10 @@ object MultimodalPipeline {
   /** Documents rendered as REAL uncompressed 24-bpp BMP files — the
     * image-table fixture q27/q41/q38 decode. Encoding happens
     * per-partition on executors (BinaryType column, never the driver). */
-  def bmpMediaTable(spark: SparkSession, sfDir: String): DataFrame =
-    bmpMediaTableOf(
-      Tables.documents(spark, sfDir).select(col("doc_id"), col("text")))
-
-  /** [[bmpMediaTable]] over an explicit (doc_id, text) relation. */
-  private[graft] def bmpMediaTableOf(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
+  def bmpMediaTable(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    docs.as[(Long, String)]
+    Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
+      .as[(Long, String)]
       .mapPartitions(_.map { case (id, text) =>
         val (w, h) = bmpDims(text.length)
         (id, graft.functions.Bmp.encode(w, h, bmpPixels(text, w, h)),
@@ -155,15 +150,7 @@ object MultimodalPipeline {
     * Oracle replays pixel formula -> chunk means -> bands -> banded join
     * in SQL, so a drift anywhere in decode/hash/join fires the gate. */
   def q106ImageNearDup(spark: SparkSession, sfDir: String,
-                       maxHamming: Int = 7): DataFrame =
-    imageNearDupOf(bmpMediaTable(spark, sfDir), maxHamming)
-
-  /** The q106 plan over any (doc_id, payload, fmt) media frame — the
-    * spanFeaturesOf split, so [[graft.tools.DedupScaling]] can grow the
-    * image corpus and measure the 8-bytes-per-image claim. */
-  private[graft] def imageNearDupOf(media: DataFrame,
-                                    maxHamming: Int): DataFrame = {
-    val spark = media.sparkSession
+                       maxHamming: Int = 7): DataFrame = {
     import spark.implicits._
     // 8 bands x 8 bits: the pigeonhole guarantee needs bands > hamming,
     // and this fixture's closest non-identical pairs sit at hamming 7
@@ -171,7 +158,7 @@ object MultimodalPipeline {
     // formula decorrelates unequal texts fast). 8-bit bands collide
     // more than q48's 16-bit ones — the production knob at image-corpus
     // scale is a wider perceptual hash (256-bit pHash), same topology.
-    val hashes = media.as[MediaRecord]
+    val hashes = bmpMediaTable(spark, sfDir).as[MediaRecord]
       .mapPartitions(_.map(r =>
         (r.doc_id, aHash(graft.functions.Bmp.decode(r.payload).pixels))))
       .toDF("doc_id", "ahash")

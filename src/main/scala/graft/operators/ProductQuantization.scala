@@ -442,18 +442,6 @@ object ProductQuantization {
         coarse, cents, M256))
   }
 
-  /** [[codesOver]] with the production ([[M256]], [[K256]]) model
-    * loaded from `sfDir` — the measurement seam
-    * [[graft.tools.RefreshScaling]]'s PQ sweep codes amplified
-    * relations through, so the sweep times exactly the shipped coding
-    * plan (literal LUTs, pure map-side) at any vector count. `e` must
-    * carry `(vec_id, v: array<double>)`. */
-  private[graft] def codesOverFor(spark: SparkSession, sfDir: String,
-                                  e: DataFrame): DataFrame = {
-    val (coarse, cents) = pqModelAt(spark, sfDir, M256, K256)
-    codesOver(e, coarse, cents, M256)
-  }
-
   /** The from-scratch twin: snapshot B coded in full with the same
     * frozen model — Bench times it against the refresh (the pair of
     * numbers that states the incremental claim), and the spec proves

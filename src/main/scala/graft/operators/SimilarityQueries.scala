@@ -131,9 +131,8 @@ object SimilarityQueries {
     * verdict gap #4: `NumCells` was the one scale knob in the LLM
     * family no code path could turn). The fixture/oracle queries stay
     * at k = [[NumCells]]; production raises k toward √n (SemDeDup runs
-    * 50k cells on 5B embeddings) through this entry, and the
-    * CandidateScaling sweep measures that the in-cell pair budget
-    * tracks n²/2k. */
+    * 50k cells on 5B embeddings) through this entry; ScaleSpec's q87
+    * k-knob test pins that the in-cell pair budget tracks n²/2k. */
   def codebookAt(spark: SparkSession, sfDir: String,
                  k: Int): Seq[(Long, Seq[Double])] =
     codebooks(spark, sfDir, s"init_$k") {
@@ -445,11 +444,11 @@ object SimilarityQueries {
     * oracle stay pinned at k = [[NumCells]] = 16 via [[q87SemDedup]];
     * at scale the caller raises k toward √n — the paper's 50k cells on
     * 5B embeddings — and the per-cell pair budget n²/2k falls
-    * accordingly (measured across k by CandidateScaling; ScaleSpec pins
-    * that raising k strictly cuts the candidate space on the fixture
-    * corpus). Note the k-dependence of the ANSWER is inherent to
-    * SemDeDup: candidate pairs exist only within a cell, so k is a
-    * recall/cost knob exactly like LSH's band count. */
+    * accordingly (ScaleSpec pins that raising k strictly cuts the
+    * candidate space on the fixture corpus). Note the k-dependence of
+    * the ANSWER is inherent to SemDeDup: candidate pairs exist only
+    * within a cell, so k is a recall/cost knob exactly like LSH's band
+    * count. */
   def semdedupAt(spark: SparkSession, sfDir: String, k: Int,
                  tau: Double = SemDedupTau): DataFrame = {
     val asg = cellAssignments(spark, sfDir, kmeansCodebookAt(spark, sfDir, k))
@@ -464,23 +463,20 @@ object SimilarityQueries {
   }
 
   /** q87's exact candidate space — the ordered in-cell pairs the cosine
-    * verify then filters. Shared by the operator and the
-    * CandidateScaling sweep (the q19/q48 discipline: the sweep counts
-    * the SHIPPED join, so the n²/k scaling evidence cannot drift from
-    * the pipeline). */
+    * verify then filters. Shared by the operator and ScaleSpec's
+    * cell-budget tests, so the n²/k evidence counts the SHIPPED join. */
   private def semdedupCandidatesOf(asg: DataFrame): DataFrame =
     asg.join(asg.select(col("cell"), col("vec_id").as("rep_id"),
         col("v").as("rv")), Seq("cell"))
       .where(col("rep_id") < col("vec_id"))
 
-  /** [[semdedupCandidatesOf]] over the shipped assignment — the sweep's
-    * and the balance spec's entry point. */
+  /** [[semdedupCandidatesOf]] over the shipped assignment — the balance
+    * spec's entry point. */
   def semdedupCandidates(spark: SparkSession, sfDir: String): DataFrame =
     semdedupCandidatesAt(spark, sfDir, NumCells)
 
-  /** The candidate space at an explicit k — the sweep's second (and any
-    * further) operating point, counting exactly the join [[semdedupAt]]
-    * ships at that k. */
+  /** The candidate space at an explicit k — counting exactly the join
+    * [[semdedupAt]] ships at that k. */
   def semdedupCandidatesAt(spark: SparkSession, sfDir: String,
                            k: Int): DataFrame =
     semdedupCandidatesOf(

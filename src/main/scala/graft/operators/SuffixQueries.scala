@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -36,12 +36,12 @@ import graft.functions.CommonPrefixLen
   * long is decision-grade duplication (q88's span machinery takes over
   * well below it), and the cap is what bounds the shuffle row width.
   *
-  * Scale analysis (measured in tools.SuffixScaling, written up in
-  * SCALING.md): at cap C the direct bounded sort ships one
+  * Scale analysis (SCALING.md's suffix-sort section, which names the
+  * `git show` of the measuring sweep and of the deleted doubling twin):
+  * at cap C the direct bounded sort ships one
   * min(C, remaining-doc-chars) prefix per corpus position through ONE
   * range exchange. The textbook alternative, prefix doubling over
-  * integer ranks ([[suffixRanksByDoubling]], kept as the differential
-  * twin and the unbounded-cap path), ships ~3 longs per position per
+  * integer ranks (Manber–Myers), ships ~3 longs per position per
   * rank round — TWO sorted exchanges a round — for ceil(log2 C) rounds.
   * The naive byte math (C·n once vs 24·n·log2 C) suggests doubling wins
   * past C ≈ 200; the measurements say otherwise on this corpus: direct
@@ -91,30 +91,6 @@ object SuffixQueries {
       .select(col("doc_id"), col("pos"),
         col("text").substr(col("pos"), lit(cap)).as("pref"))
   }
-
-  /** Global sort order + contiguous dense index, without a
-    * single-partition window: range-repartition by the sort key, sort
-    * within partitions, then RDD zipWithIndex (per-partition offsets
-    * from one count pass — the q72 dense-indexing shape). */
-  private def sortedWithIndex(sfx: DataFrame): DataFrame = {
-    val spark = sfx.sparkSession
-    val sorted = sfx
-      .repartitionByRange(col("pref"), col("doc_id"), col("pos"))
-      .sortWithinPartitions("pref", "doc_id", "pos")
-      .localCheckpoint()
-    val schema = sorted.schema.add("idx", LongType, nullable = false)
-    spark.createDataFrame(
-      sorted.rdd.zipWithIndex().map { case (r, i) => Row.fromSeq(r.toSeq :+ i) },
-      schema)
-  }
-
-  /** The direct construction's sort stage alone — the seam
-    * [[graft.tools.SuffixScaling]] measures against the doubling twin
-    * (same output granularity: one globally ordered indexed position
-    * table), so the A/B compares the two CONSTRUCTIONS, not the shared
-    * LCP/aggregate tail. */
-  private[graft] def directSuffixIndex(docs: DataFrame, cap: Int): DataFrame =
-    sortedWithIndex(positions(docs, cap))
 
   /** The q114 engine over any (doc_id, text) relation: bounded suffix
     * sort → adjacent cross-doc LCP → per-doc max.
@@ -551,7 +527,7 @@ object SuffixQueries {
     * incrementally — the sound refresh recomputes the table on B, and
     * the incremental value lives entirely in the WRITE side, which is
     * what [[q116SuffixDelta]] materializes (the changed rows ARE the
-    * write set, measured in tools.SuffixScaling). */
+    * write set). */
   def suffixSharedB(spark: SparkSession, sfDir: String): DataFrame =
     graft.Artifacts.materialize(spark, sfDir,
       "graft_suffixshared_b_", "doc_id") {
@@ -579,77 +555,5 @@ object SuffixQueries {
         coalesce(col("new_shared"), lit(0L)).as("new_shared"))
       .where(col("prev_shared") =!= col("new_shared"))
       .orderBy("doc_id")
-  }
-
-  // ---------------------------------------------------------------------
-  // Prefix-doubling twin (the unbounded-cap construction)
-  // ---------------------------------------------------------------------
-
-  /** Order-isomorphic rank per key tuple without a global window: sort by
-    * the keys, dense-index, take min(index) per distinct key — ranks are
-    * not dense but preserve exactly the key order, which is all prefix
-    * doubling needs. Two exchanges per call (range sort + key agg). */
-  private def rankOf(df: DataFrame, keyCols: Seq[String]): DataFrame = {
-    val indexed = sortedWithIndexBy(df, keyCols)
-    val ranks = indexed.groupBy(keyCols.map(col): _*)
-      .agg(min(col("idx")).as("rank"))
-    indexed.join(ranks, keyCols)
-      .select(col("doc_id"), col("pos"), col("rank"))
-  }
-
-  private def sortedWithIndexBy(df: DataFrame, keyCols: Seq[String]): DataFrame = {
-    val spark = df.sparkSession
-    val sorted = df
-      .repartitionByRange(keyCols.map(col): _*)
-      .sortWithinPartitions(keyCols.head, keyCols.tail: _*)
-      .localCheckpoint()
-    val schema = sorted.schema.add("idx", LongType, nullable = false)
-    spark.createDataFrame(
-      sorted.rdd.zipWithIndex().map { case (r, i) => Row.fromSeq(r.toSeq :+ i) },
-      schema)
-  }
-
-  /** Suffix ranks by PREFIX DOUBLING (Manber–Myers on a cluster): round k
-    * ranks each position by (rank of its 2^k-prefix, rank of the next
-    * 2^k-prefix), so after ceil(log2 cap) rounds ranks order suffixes by
-    * their first `cap` characters — every round exchanges fixed-width
-    * integer rows, never strings. Rows past a document's end pair with
-    * rank -1 (shorter suffix sorts first, matching string order).
-    * Returns (doc_id, pos, rank) with rank order-isomorphic to the
-    * bounded-prefix lexicographic order (differentially spec-pinned
-    * against the direct sort in SuffixSpec). Early-exits when all ranks
-    * are distinct — further rounds cannot change a total order.
-    *
-    * `cap` must be a power of two (asserted): the doubling rounds rank
-    * by exactly 2^k characters, so a non-power-of-two cap would end the
-    * loop ranking by the next power of two ABOVE it — a strict
-    * refinement of the cap-bounded order that separates suffixes tying
-    * on the first `cap` chars, violating the order-isomorphism contract
-    * (rank tie ⟺ capped-prefix tie) the direct-sort differential spec
-    * pins. Every engine cap ([[PrefixCap]]) is a power of two. */
-  private[graft] def suffixRanksByDoubling(docs: DataFrame, cap: Int): DataFrame = {
-    require(cap > 0 && Integer.bitCount(cap) == 1,
-      s"doubling cap must be a power of two, got $cap — a 2^k round " +
-        "structure cannot stop ranking at a non-power-of-two prefix length")
-    val base = positions(docs, 1)
-      .withColumnRenamed("pref", "c0")
-    var cur = rankOf(base, Seq("c0")).localCheckpoint()
-    var k = 1
-    while (k < cap) {
-      val n = cur.count()
-      if (cur.select(countDistinct(col("rank"))).head.getLong(0) == n) {
-        k = cap // total order reached: every later round is the identity
-      } else {
-        val nxt = cur.select(col("doc_id"), (col("pos") - k).as("pos"),
-          col("rank").as("r2"))
-        val paired = cur.withColumnRenamed("rank", "r1")
-          .join(nxt, Seq("doc_id", "pos"), "left")
-          .select(col("doc_id"), col("pos"), col("r1"),
-            coalesce(col("r2"), lit(-1L)).as("r2"))
-        cur = rankOf(paired, Seq("r1", "r2")).localCheckpoint()
-        k *= 2
-      }
-    }
-    cur
   }
 }

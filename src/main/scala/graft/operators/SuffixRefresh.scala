@@ -57,8 +57,8 @@ import graft.functions.CommonPrefixLen
   * partitions, so the bounded fraction is ~min(1, D/P) — and D counts
   * POSITIONS, not docs (one ~600-char doc is ~600 keys spread across
   * the prefix domain), so the regime where pruning pays is
-  * delta-positions ≲ partitions. Measured at sf0.1
-  * (`tools.SuffixRefreshScaling`): the q79 recrawl delta (601k
+  * delta-positions ≲ partitions. Measured at sf0.1 (SCALING.md's
+  * partition-bounded suffix refresh section): the q79 recrawl delta (601k
   * positions) hits 100% of partitions at every width tested — there
   * refresh ≈ rebuild plus bookkeeping and the r10 "recompute freely"
   * guidance stands; a single-doc edit (95 positions) hits ~84% of 32

@@ -49,7 +49,7 @@ object TextQueries {
 
   /** The feature computation over an explicit documents relation — the
     * [[DedupQueries.spanFeaturesOf]] split applied here, so the
-    * incremental refresh (q98) and the growth sweeps can run the same
+    * incremental refresh (q98) and Bench's rebuild can run the same
     * plan over inputs that are not the on-disk table. Every column is a
     * pure per-document function of `text`, which is exactly what makes
     * the per-doc-upsert refresh sound. */
@@ -322,21 +322,9 @@ object TextQueries {
   }
 
   def learnBpeMerges(spark: SparkSession, sfDir: String,
-                     rounds: Int): Seq[(Int, String, String, String, Long)] =
-    learnBpeMergesFrom(
-      DedupQueries.spanFeatures(spark, sfDir)
-        .groupBy(col("w").as("word")).agg(count(lit(1)).as("cnt")),
-      rounds)
-
-  /** [[learnBpeMerges]] over an explicit `(word, cnt)` frequency
-    * relation — the [[graft.operators.DedupQueries.spanFeaturesOf]]
-    * split applied to the learner, so the data-growth sweep
-    * ([[graft.tools.DedupScaling]]) can drive it over amplified
-    * corpora and measure the Heaps'-law claim: corpus growth inflates
-    * COUNTS, the vocab relation every round runs over stays
-    * vocabulary-sized. */
-  private[graft] def learnBpeMergesFrom(
-      words: DataFrame, rounds: Int): Seq[(Int, String, String, String, Long)] = {
+                     rounds: Int): Seq[(Int, String, String, String, Long)] = {
+    val words = DedupQueries.spanFeatures(spark, sfDir)
+      .groupBy(col("w").as("word")).agg(count(lit(1)).as("cnt"))
     // The vocab relation is Heaps'-law-bounded: corpus growth inflates
     // COUNTS, not the row count this loop runs over. When the whole
     // relation fits the driver comfortably (clamped, the q66
@@ -873,9 +861,8 @@ object TextQueries {
     bigramsFrom(DedupQueries.spanFeatures(spark, sfDir))
 
   /** [[bigrams]] over an explicit (doc_id, pos, w) relation — the
-    * spanFeaturesOf split applied here so the data-growth sweep
-    * ([[graft.tools.DedupScaling]]) can drive the q102 shape over
-    * amplified corpora. */
+    * spanFeaturesOf split applied here so q107's refresh can sketch the
+    * kept and the stale positions separately. */
   private[graft] def bigramsFrom(spanFeats: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val win = Window.partitionBy("doc_id").orderBy("pos")
@@ -910,10 +897,6 @@ object TextQueries {
     // the sketch builds once per (session, dir) via [[baseSketch]] —
     // the stored index q107's incremental refresh then updates
     cmsVerify(bigrams(spark, sfDir), baseSketch(spark, sfDir))
-
-  /** The q102 two-pass plan over any bigram stream (sweep-drivable). */
-  private[graft] def heavyHittersOf(bg: DataFrame): DataFrame =
-    cmsVerify(bg, cmsSketchOf(bg))
 
   /** One CMS pass over a bigram stream → the flat depth×width counter
     * vector. */

@@ -1029,6 +1029,10 @@ object ManifestTable {
     * filesystem's job (see the object scaladoc). */
   private val commitLock = new Object
 
+  /** Lost commit races [[append]] and [[deleteWhereKeysIn]] absorb
+    * (re-resolving the base each time) before they give up. */
+  private val MaxCommitAttempts = 20
+
   /** Atomic-rename commit of version `v`; false = lost the race (a
     * manifest for `v` already exists). See the object scaladoc for the
     * per-filesystem exclusivity contract. `headers` lead the file
@@ -1195,7 +1199,6 @@ object ManifestTable {
     * read the additions as null); a `df` missing or retyping a table
     * column is rejected loudly. */
   def append(spark: SparkSession, root: String, df: DataFrame,
-             maxAttempts: Int = 20,
              boundsCol: Option[String] = None): Int = {
     val fs = fsOf(spark, new Path(root))
     // ONE resolve serves every pre-staging decision (bounds header,
@@ -1249,7 +1252,7 @@ object ManifestTable {
       dir => alignToSchema(df, stagedSchema).write.parquet(dir),
       boundsCol = effBounds, bloomCols = effBloom)
     var attempt = 0
-    while (attempt < maxAttempts) {
+    while (attempt < MaxCommitAttempts) {
       if (attempt > 0) base = resolveOption(spark, root) // a lost race
       // schema evolution against the base's committed schema. The
       // staged files carry stagedSchema's field ids — a racing commit
@@ -1296,7 +1299,7 @@ object ManifestTable {
       attempt += 1
     }
     throw new java.util.ConcurrentModificationException(
-      s"append to $root lost $maxAttempts commit races")
+      s"append to $root lost $MaxCommitAttempts commit races")
   }
 
   /** RESTORE an earlier version as the NEWEST commit (Delta's RESTORE /
@@ -1337,9 +1340,8 @@ object ManifestTable {
     * refuses otherwise. One delete column per table; a second call
     * must use the same `keyCol`. */
   def deleteWhereKeyIn(spark: SparkSession, root: String,
-                       keyCol: String, keys: DataFrame,
-                       maxAttempts: Int = 20): Int =
-    deleteWhereKeysIn(spark, root, Seq(keyCol), keys, maxAttempts)
+                       keyCol: String, keys: DataFrame): Int =
+    deleteWhereKeysIn(spark, root, Seq(keyCol), keys)
 
   /** The COMPOSITE-key twin (Iceberg's multi-column equality deletes):
     * `keyCols` together form the equality tuple — a row is suppressed
@@ -1349,8 +1351,7 @@ object ManifestTable {
     * column-set sequences the outstanding tuples (upsert = keyed
     * resurrection), or [[optimize]] applies and drops them. */
   def deleteWhereKeysIn(spark: SparkSession, root: String,
-                        keyCols: Seq[String], keys: DataFrame,
-                        maxAttempts: Int = 20): Int = {
+                        keyCols: Seq[String], keys: DataFrame): Int = {
     require(keyCols.nonEmpty, "need at least one delete key column")
     require(keyCols.distinct == keyCols, s"duplicate delete columns " +
       s"in ${keyCols.mkString(", ")}")
@@ -1372,7 +1373,7 @@ object ManifestTable {
       relPrefix = "deletes")
     val fs = fsOf(spark, new Path(root))
     var attempt = 0
-    while (attempt < maxAttempts) {
+    while (attempt < MaxCommitAttempts) {
       if (attempt > 0) { // a lost race: re-resolve the base
         base = resolve(spark, root)
         require(base.deleteCols.isEmpty || base.deleteCols == keyCols,
@@ -1387,7 +1388,7 @@ object ManifestTable {
       attempt += 1
     }
     throw new java.util.ConcurrentModificationException(
-      s"delete on $root lost $maxAttempts commit races")
+      s"delete on $root lost $MaxCommitAttempts commit races")
   }
 
   /** The file-level CHANGE SET between two committed versions: entries

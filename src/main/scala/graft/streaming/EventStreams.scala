@@ -184,18 +184,11 @@ object EventStreams {
                              checkpointDir: String,
                              outDir: String): Unit = {
     val s = stateSession(spark)
-    val ev = streamEvents(s, landingDir)
-    val q = clickViewIntervalJoin(ev)
+    drainToParquet(clickViewIntervalJoin(streamEvents(s, landingDir))
       .select(col("user_id"), col("click_id"), col("view_id"),
         date_format(col("click_ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("click_ts"),
-        date_format(col("view_ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("view_ts"))
-      .writeStream.format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+        date_format(col("view_ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("view_ts")),
+      checkpointDir, outDir)
   }
 
   /** RESTARTABLE stream-static enrichment: q104's shape over a landing
@@ -214,25 +207,10 @@ object EventStreams {
                        staticDir: String, checkpointDir: String,
                        outDir: String): Unit = {
     val s = stateSession(spark)
-    val profile = graft.Tables.events(s, staticDir)
-      .where(col("event_type") === "view")
-      .groupBy("user_id")
-      .agg(count(lit(1)).as("views"),
-        round(sum(col("value")), 2).as("view_value"))
-    val clicks = streamEvents(s, landingDir)
-      .where(col("event_type") === "click")
-      .select("user_id", "event_id")
-    val q = clicks.join(broadcast(profile), Seq("user_id"), "left")
-      .select(col("user_id"), col("event_id"),
-        coalesce(col("views"), lit(0L)).as("views"),
-        coalesce(col("view_value"), lit(0.0)).as("view_value"))
-      .writeStream.format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drainToParquet(
+      clickEnrichPlan(streamEvents(s, landingDir),
+        graft.Tables.events(s, staticDir)),
+      checkpointDir, outDir)
   }
 
   /** RESTARTABLE online dedup: q86's content-key dedup over a landing
@@ -247,15 +225,9 @@ object EventStreams {
     * proof. */
   def runDedupToFiles(spark: SparkSession, landingDir: String,
                       checkpointDir: String, outDir: String): Unit = {
-    val s = stateSession(spark)
-    val q = contentDedupPlan(docLandingStream(s, landingDir))
-      .writeStream.format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drainToParquet(
+      contentDedupPlan(docLandingStream(stateSession(spark), landingDir)),
+      checkpointDir, outDir)
   }
 
   /** The document landing-file schema — one definition for every
@@ -352,6 +324,20 @@ object EventStreams {
   private def runToTable(df: DataFrame, mode: OutputMode): DataFrame =
     runToTableWithProgress(df, mode)._1
 
+  /** One `AvailableNow` drain of `df` into the parquet sink at `outDir`,
+    * checkpointed at `checkpointDir` — the block every restartable
+    * file-sink runner shares. The sink's `_spark_metadata` log and the
+    * checkpoint make a repeat call with the same dirs a resume. */
+  private def drainToParquet(df: DataFrame, checkpointDir: String,
+                             outDir: String): Unit =
+    df.writeStream.format("parquet")
+      .option("path", outDir)
+      .option("checkpointLocation", checkpointDir)
+      .outputMode(OutputMode.Append())
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+
   /** Q104: STREAM-STATIC enrichment join — the remaining join shape in
     * the streaming surface (q43 is stream-stream): each arriving click
     * is enriched with the user's profile from a STATIC relation (here a
@@ -369,21 +355,30 @@ object EventStreams {
     * for the oracle. */
   def q104StreamStaticJoin(spark: SparkSession, sfDir: String): DataFrame = {
     val s = stateSession(spark)
-    val profile = graft.Tables.events(s, sfDir)
+    runToTable(
+        clickEnrichPlan(eventsStream(s, sfDir), graft.Tables.events(s, sfDir)),
+        OutputMode.Append())
+      .orderBy("user_id", "event_id")
+  }
+
+  /** q104's enrichment plan — ONE definition shared by the memory-sink
+    * query and the checkpointed runner ([[clickViewIntervalJoin]]'s
+    * discipline): the clicks of the `ev` stream, left-joined to a
+    * broadcast per-user view profile aggregated from the static
+    * `staticEvents` relation. */
+  private def clickEnrichPlan(ev: DataFrame,
+                              staticEvents: DataFrame): DataFrame = {
+    val profile = staticEvents
       .where(col("event_type") === "view")
       .groupBy("user_id")
       .agg(count(lit(1)).as("views"),
         round(sum(col("value")), 2).as("view_value"))
-    val clicks = eventsStream(s, sfDir)
-      .where(col("event_type") === "click")
+    ev.where(col("event_type") === "click")
       .select("user_id", "event_id")
-    val enriched = clicks
       .join(broadcast(profile), Seq("user_id"), "left")
       .select(col("user_id"), col("event_id"),
         coalesce(col("views"), lit(0L)).as("views"),
         coalesce(col("view_value"), lit(0.0)).as("view_value"))
-    runToTable(enriched, OutputMode.Append())
-      .orderBy("user_id", "event_id")
   }
 
   /** Q86: ONLINE exact dedup of a document INGEST stream — the streaming
@@ -788,13 +783,7 @@ object EventStreams {
       .select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hour"),
         col("event_type"), col("cnt"), col("sum_value"))
-    val q = agg.writeStream.format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drainToParquet(agg, checkpointDir, outDir)
   }
 
   /** RESTARTABLE first-seen dedup: q31's `flatMapGroupsWithState` over a
@@ -816,16 +805,10 @@ object EventStreams {
   def runFirstSeenToFiles(spark: SparkSession, landingDir: String,
                           checkpointDir: String,
                           outDir: String): Unit = {
-    val s = stateSession(spark)
-    val q = firstSeenPlan(streamEvents(s, landingDir),
-        horizonMs = 365L * 24 * 3600 * 1000)
-      .writeStream.format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drainToParquet(
+      firstSeenPlan(streamEvents(stateSession(spark), landingDir),
+        horizonMs = 365L * 24 * 3600 * 1000),
+      checkpointDir, outDir)
   }
 
   /** q31's first-seen dedup plan over a streaming events frame,

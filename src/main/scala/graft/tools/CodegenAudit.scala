@@ -14,9 +14,14 @@ import graft.{GraftSession, SparkEntry}
   * Interpreted (non-codegen) operators are expected at exactly the
   * documented seams — Exchange/shuffle boundaries, sorts, object-mode
   * plans (the MRJob protocol surface, the multimodal codec
-  * mapPartitions, Dataset typed ops), generators and streaming
-  * relations — so the interesting signal is a LOW fraction on a query
-  * whose plan should be pure projections/aggregates/joins.
+  * mapPartitions, Dataset typed ops), generators, streaming relations
+  * and the operators Spark never fuses (object/sort aggregates,
+  * windows, top-k, unions, local relations, the as-of join) — so the
+  * interesting signal is a Project, Filter or join outside a span: an
+  * interpreted (CodegenFallback) expression such as a higher-order
+  * function. The specs' `spark.sql.codegen.fallback=false` cannot see
+  * those: it fails a span whose generated code does not compile, and
+  * such an expression is planned outside any span instead.
   *
   *   runMain graft.tools.CodegenAudit [sfDir] [worstN]
   */

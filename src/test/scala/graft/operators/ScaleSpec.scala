@@ -465,7 +465,7 @@ class ScaleSpec extends SparkSpec {
     // SemDeDup's n²/k budget only holds if the Lloyd rounds keep cells
     // balanced — pin both halves: no cell dominates, and the shipped
     // candidate builder's count equals Σ s(s−1)/2 over the cell sizes
-    // (so the CandidateScaling sweep column measures what q87 joins)
+    // (so the count measures what q87 joins)
     val asg = SimilarityQueries.cellAssignments(spark, sfDir,
       SimilarityQueries.kmeansCodebook(spark, sfDir))
     val sizes = asg.groupBy("cell").count().collect().map(_.getLong(1))

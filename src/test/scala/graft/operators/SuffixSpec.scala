@@ -375,42 +375,4 @@ class SuffixSpec extends SparkSpec {
       ((r.getLong(0), r.getInt(1)), r.getInt(2))).toMap
     assert(g === d, "partition split changed the scan result")
   }
-
-  // ---- prefix-doubling twin ----------------------------------------------
-
-  test("prefix doubling rejects a non-power-of-two cap") {
-    import spark.implicits._
-    val docs = Seq((1L, "abcabc")).toDF("doc_id", "text")
-    val e = intercept[IllegalArgumentException] {
-      SuffixQueries.suffixRanksByDoubling(docs, 100)
-    }
-    assert(e.getMessage.contains("power of two"))
-  }
-
-  test("prefix doubling is order-isomorphic to the direct bounded sort") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(90210)
-    val docs = (1L to 10L).map { id =>
-      id -> (0 until rnd.nextInt(50)).map(_ => "ab" (rnd.nextInt(2))).mkString
-    }.filter(_._2.nonEmpty).toDF("doc_id", "text")
-    val cap = 32
-    val ranks = SuffixQueries.suffixRanksByDoubling(docs, cap)
-    val prefs = docs
-      .select(col("doc_id"),
-        explode(sequence(lit(1), length(col("text")))).as("pos"),
-        col("text"))
-      .select(col("doc_id"), col("pos"),
-        col("text").substr(col("pos"), lit(cap)).as("pref"))
-    val joined = ranks.join(prefs, Seq("doc_id", "pos")).collect()
-      .map(r => (r.getLong(2), r.getLong(0), r.getInt(1), r.getString(3)))
-      .sortBy(t => (t._1, t._2, t._3))
-    assert(joined.nonEmpty)
-    // walk the rank order: prefs never decrease, and rank equality is
-    // exactly pref equality (order-isomorphism, both directions)
-    for (w <- joined.sliding(2) if w.length == 2; a = w(0); b = w(1)) {
-      assert(a._4 <= b._4, s"rank order violates pref order: $a then $b")
-      assert((a._1 == b._1) === (a._4 == b._4),
-        s"rank-tie != pref-tie: $a vs $b")
-    }
-  }
 }
