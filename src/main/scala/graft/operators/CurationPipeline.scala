@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Delta, Tables}
 import graft.functions.Text
 
 /** End-to-end training-corpus curation — the composed pipeline a user of
@@ -307,6 +307,63 @@ object CurationPipeline {
           .as("contaminated_shingles"))
       .orderBy("doc_id")
 
+  /** Snapshot B of the recrawl scenario, derived deterministically from
+    * the same documents table (every doc_id ending in 7 deleted, ending
+    * in 3 edited, ending in 1 duplicated under a negative-namespace new
+    * id — q79's rules) — ONE definition shared by q79 (the diff) and q80
+    * (the incremental refresh that consumes it), so the two ends of the
+    * incremental story can never drift. In production A and B are two
+    * stored snapshots. */
+  def snapshotB(docs: DataFrame): DataFrame =
+    docs.where(col("doc_id") % 10 =!= 7)
+      .withColumn("text",
+        when(col("doc_id") % 10 === 3,
+          concat(col("text"), lit(" updated v2")))
+          .otherwise(col("text")))
+      .unionByName(docs.where(col("doc_id") % 10 === 1)
+        .withColumn("doc_id", -(col("doc_id") + 1L)))
+
+  /** The (doc_id, change, old_md5, new_md5) delta between snapshots A
+    * and B, unordered — q79 presents it; every snapshot refresh consumes
+    * it. [[Delta.classify]] over the md5 of each side's text. */
+  def computeSnapshotDelta(spark: SparkSession, sfDir: String): DataFrame = {
+    val docs = Tables.documents(spark, sfDir)
+    def hashed(d: DataFrame) =
+      d.select(col("doc_id"), md5(col("text")).as("md5"))
+    Delta.classify(hashed(docs), hashed(snapshotB(docs)), "doc_id", "md5")
+  }
+
+  /** The snapshot delta STAGED as a bucketed artifact — built ONCE per
+    * (session, snapshot pair) and shared by q79 and every downstream
+    * refresh (q80 shingles, q83 signatures). Before this, each refresh
+    * re-derived the full-outer hash diff (two corpus scans + a join) for
+    * the same snapshot pair — at toy scale that fixed cost alone made
+    * "refresh" read slower than "rebuild" (r8: 5.13 s vs 5.00 s), and in
+    * production the diff of a recrawl pair is likewise one staged job,
+    * not a per-consumer recomputation. Bucketed on doc_id, the same
+    * layout as every base artifact, so the stale/fresh id joins the
+    * refreshes run against them are exchange-free. */
+  def snapshotDeltaStaged(spark: SparkSession, sfDir: String): DataFrame =
+    graft.Artifacts.materialize(spark, sfDir, "graft_delta_", "doc_id") {
+      computeSnapshotDelta(spark, sfDir)
+    }
+
+  /** The staged delta's (doc_id, change) — all a refresh reads of it. */
+  private[graft] def snapshotChanges(spark: SparkSession,
+                                     sfDir: String): DataFrame =
+    snapshotDeltaStaged(spark, sfDir).select("doc_id", "change")
+
+  /** A doc_id-keyed snapshot-A artifact refreshed to snapshot B by the
+    * staged delta ([[Delta.apply]]); `freshRows` gets the fresh ids. */
+  private def refreshToB(spark: SparkSession, sfDir: String, base: DataFrame)(
+      freshRows: DataFrame => DataFrame): DataFrame =
+    Delta.apply(base, snapshotChanges(spark, sfDir), "doc_id")(freshRows)
+
+  /** Snapshot B's documents at the given doc ids. */
+  private[graft] def snapshotBDocs(spark: SparkSession, sfDir: String,
+                                   ids: DataFrame): DataFrame =
+    snapshotB(Tables.documents(spark, sfDir)).join(ids, Seq("doc_id"))
+
   /** Q79: SNAPSHOT DIFF — the incremental-ingestion step between two
     * corpus snapshots (a recrawl): emit only the DELTA — added, removed,
     * and modified documents by content hash — so every downstream job
@@ -328,60 +385,6 @@ object CurationPipeline {
     * bucketed on doc_id (the q75 handoff layout) make even that join
     * exchange-free; unchanged documents are filtered before the
     * presentation sort, so the output is delta-sized. */
-  /** Snapshot B of the recrawl scenario, derived deterministically from
-    * the same documents table (every doc_id ending in 7 deleted, ending
-    * in 3 edited, ending in 1 duplicated under a negative-namespace new
-    * id — q79's rules) — ONE definition shared by q79 (the diff) and q80
-    * (the incremental refresh that consumes it), so the two ends of the
-    * incremental story can never drift. In production A and B are two
-    * stored snapshots. */
-  def snapshotB(docs: DataFrame): DataFrame =
-    docs.where(col("doc_id") % 10 =!= 7)
-      .withColumn("text",
-        when(col("doc_id") % 10 === 3,
-          concat(col("text"), lit(" updated v2")))
-          .otherwise(col("text")))
-      .unionByName(docs.where(col("doc_id") % 10 === 1)
-        .withColumn("doc_id", -(col("doc_id") + 1L)))
-
-  /** The (doc_id, change, old_md5, new_md5) delta between snapshots A
-    * and B, unordered — q79 presents it; [[refreshedShingles]] consumes
-    * it. Hashes are computed BEFORE the join (narrow, map-side — the
-    * join carries 32-byte digests, never text); the diff is one
-    * full-outer join on doc_id; unchanged documents are dropped, so the
-    * relation is delta-sized. */
-  def computeSnapshotDelta(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = Tables.documents(spark, sfDir)
-    val a = docs.select(col("doc_id"), md5(col("text")).as("old_md5"))
-    val b = snapshotB(docs)
-      .select(col("doc_id"), md5(col("text")).as("new_md5"))
-    a.join(b, Seq("doc_id"), "full_outer")
-      .withColumn("change",
-        when(col("new_md5").isNull, "removed")
-          .when(col("old_md5").isNull, "added")
-          .otherwise("modified"))
-      .where(col("old_md5").isNull || col("new_md5").isNull ||
-        col("old_md5") =!= col("new_md5"))
-      .select(col("doc_id"), col("change"),
-        coalesce(col("old_md5"), lit("")).as("old_md5"),
-        coalesce(col("new_md5"), lit("")).as("new_md5"))
-  }
-
-  /** The snapshot delta STAGED as a bucketed artifact — built ONCE per
-    * (session, snapshot pair) and shared by q79 and every downstream
-    * refresh (q80 shingles, q83 signatures). Before this, each refresh
-    * re-derived the full-outer hash diff (two corpus scans + a join) for
-    * the same snapshot pair — at toy scale that fixed cost alone made
-    * "refresh" read slower than "rebuild" (r8: 5.13 s vs 5.00 s), and in
-    * production the diff of a recrawl pair is likewise one staged job,
-    * not a per-consumer recomputation. Bucketed on doc_id, the same
-    * layout as every base artifact, so the stale/fresh id joins the
-    * refreshes run against them are exchange-free. */
-  def snapshotDeltaStaged(spark: SparkSession, sfDir: String): DataFrame =
-    graft.Artifacts.materialize(spark, sfDir, "graft_delta_", "doc_id") {
-      computeSnapshotDelta(spark, sfDir)
-    }
-
   def q79SnapshotDiff(spark: SparkSession, sfDir: String): DataFrame =
     snapshotDeltaStaged(spark, sfDir).orderBy("doc_id")
 
@@ -409,18 +412,10 @@ object CurationPipeline {
     // delta feeds both the drop list and the fresh list: the STAGED
     // artifact serves both scans (and every other refresh consumer)
     // from its bucketed files — the hash diff itself never reruns
-    val delta = snapshotDeltaStaged(spark, sfDir)
-      .select("doc_id", "change")
-    val stale = delta.where(col("change").isin("removed", "modified"))
-      .select("doc_id")
-    val freshIds = delta.where(col("change").isin("added", "modified"))
-      .select("doc_id")
-    val freshDocs = snapshotB(Tables.documents(spark, sfDir))
-      .join(freshIds, Seq("doc_id"))
-      .select("doc_id", "text")
-    DedupQueries.shingles(spark, sfDir)
-      .join(stale, Seq("doc_id"), "left_anti")
-      .unionByName(Text.shingleRows(freshDocs, "doc_id", "text", 3))
+    refreshToB(spark, sfDir, DedupQueries.shingles(spark, sfDir)) { ids =>
+      Text.shingleRows(snapshotBDocs(spark, sfDir, ids)
+        .select("doc_id", "text"), "doc_id", "text", 3)
+    }
   }
 
   /** The refreshed (snapshot-B) shingle ARTIFACT — built once per
@@ -466,20 +461,12 @@ object CurationPipeline {
     val changes = changesIn
       .select(col("doc_id"), col("text"), col("_change"))
       .localCheckpoint() // delta-file-sized; read twice below
-    val oldSide = changes.where(col("_change") === "delete")
-      .select(col("doc_id"), md5(col("text")).as("old_md5"))
-    val newSide = changes.where(col("_change") === "insert")
-      .select(col("doc_id"), col("text"), md5(col("text")).as("new_md5"))
-    oldSide.join(newSide, Seq("doc_id"), "full_outer")
-      .where(col("old_md5").isNull || col("new_md5").isNull ||
-        col("old_md5") =!= col("new_md5"))
-      .select(col("doc_id"),
-        when(col("new_md5").isNull, "removed")
-          .when(col("old_md5").isNull, "added")
-          .otherwise("modified").as("change"),
-        coalesce(col("old_md5"), lit("")).as("old_md5"),
-        coalesce(col("new_md5"), lit("")).as("new_md5"),
-        col("text"))
+    Delta.classify(
+      changes.where(col("_change") === "delete")
+        .select(col("doc_id"), md5(col("text")).as("md5")),
+      changes.where(col("_change") === "insert")
+        .select(col("doc_id"), col("text"), md5(col("text")).as("md5")),
+      "doc_id", "md5")
   }
 
   /** Q157: CDC-DRIVEN INCREMENTAL REFRESH — q80's shingle refresh
@@ -508,15 +495,11 @@ object CurationPipeline {
     val upserts = snapshotB(docs)
       .where(col("doc_id") % 10 === 3 || col("doc_id") < 0)
     ManifestTable.mergeCoW(spark, root, "doc_id", removeKeys, upserts)
-    val delta = cdcDocDelta(spark, root, 1, 2)
-    val stale = delta.where(col("change").isin("removed", "modified"))
-      .select("doc_id")
-    val freshDocs = delta.where(col("change").isin("added", "modified"))
-      .select("doc_id", "text")
-    DedupQueries.shingles(spark, sfDir)
-      .join(stale, Seq("doc_id"), "left_anti")
-      .unionByName(Text.shingleRows(freshDocs, "doc_id", "text", 3))
-      .groupBy("doc_id").agg(count(lit(1)).as("n_shingles"))
+    val refreshed = Delta.apply(DedupQueries.shingles(spark, sfDir),
+        cdcDocDelta(spark, root, 1, 2), "doc_id") { fresh =>
+      Text.shingleRows(fresh.select("doc_id", "text"), "doc_id", "text", 3)
+    }
+    refreshed.groupBy("doc_id").agg(count(lit(1)).as("n_shingles"))
       .orderBy("doc_id")
   }
 
@@ -531,17 +514,10 @@ object CurationPipeline {
     * artifact CHAIN, not just its first link. Public for the spec. */
   def computeRefreshedSignatures(spark: SparkSession,
                                  sfDir: String): DataFrame = {
-    val delta = snapshotDeltaStaged(spark, sfDir)
-      .select("doc_id", "change")
-    val stale = delta.where(col("change").isin("removed", "modified"))
-      .select("doc_id")
-    val freshIds = delta.where(col("change").isin("added", "modified"))
-      .select("doc_id")
-    val freshSigs = DedupQueries.computeSignaturesFrom(
-      refreshedShingles(spark, sfDir).join(freshIds, Seq("doc_id")))
-    DedupQueries.signatures(spark, sfDir)
-      .join(stale, Seq("doc_id"), "left_anti")
-      .unionByName(freshSigs)
+    refreshToB(spark, sfDir, DedupQueries.signatures(spark, sfDir)) { ids =>
+      DedupQueries.computeSignaturesFrom(
+        refreshedShingles(spark, sfDir).join(ids, Seq("doc_id")))
+    }
   }
 
   /** The refreshed (snapshot-B) signature ARTIFACT — q83's table. */
@@ -625,18 +601,10 @@ object CurationPipeline {
     * re-tokenized). */
   def computeRefreshedSpanFeatures(spark: SparkSession,
                                    sfDir: String): DataFrame = {
-    val delta = snapshotDeltaStaged(spark, sfDir)
-      .select("doc_id", "change")
-    val stale = delta.where(col("change").isin("removed", "modified"))
-      .select("doc_id")
-    val freshIds = delta.where(col("change").isin("added", "modified"))
-      .select("doc_id")
-    val freshDocs = snapshotB(Tables.documents(spark, sfDir))
-      .join(freshIds, Seq("doc_id"))
-      .select("doc_id", "text")
-    DedupQueries.spanFeatures(spark, sfDir)
-      .join(stale, Seq("doc_id"), "left_anti")
-      .unionByName(DedupQueries.spanFeaturesOf(freshDocs))
+    refreshToB(spark, sfDir, DedupQueries.spanFeatures(spark, sfDir)) { ids =>
+      DedupQueries.spanFeaturesOf(
+        snapshotBDocs(spark, sfDir, ids).select("doc_id", "text"))
+    }
   }
 
   /** The refreshed (snapshot-B) span-feature ARTIFACT — built once per
@@ -682,17 +650,9 @@ object CurationPipeline {
     * refresh family is closed over the whole artifact DAG. */
   def computeRefreshedDocFeatures(spark: SparkSession,
                                   sfDir: String): DataFrame = {
-    val delta = snapshotDeltaStaged(spark, sfDir)
-      .select("doc_id", "change")
-    val stale = delta.where(col("change").isin("removed", "modified"))
-      .select("doc_id")
-    val freshIds = delta.where(col("change").isin("added", "modified"))
-      .select("doc_id")
-    val freshDocs = snapshotB(Tables.documents(spark, sfDir))
-      .join(freshIds, Seq("doc_id"))
-    TextQueries.docFeatures(spark, sfDir)
-      .join(stale, Seq("doc_id"), "left_anti")
-      .unionByName(TextQueries.docFeaturesOf(freshDocs))
+    refreshToB(spark, sfDir, TextQueries.docFeatures(spark, sfDir)) { ids =>
+      TextQueries.docFeaturesOf(snapshotBDocs(spark, sfDir, ids))
+    }
   }
 
   /** The refreshed (snapshot-B) doc-feature ARTIFACT, bucketed on
@@ -732,22 +692,15 @@ object CurationPipeline {
     * corpus passes. */
   def computeRefreshedContamination(spark: SparkSession,
                                     sfDir: String): DataFrame = {
-    val delta = snapshotDeltaStaged(spark, sfDir)
-      .select("doc_id", "change")
-    val stale = delta.where(col("change").isin("removed", "modified"))
-      .select("doc_id")
-    val freshIds = delta.where(col("change").isin("added", "modified"))
-      .select("doc_id")
     val benchSh = DedupQueries.shingles(spark, sfDir)
       .where(col("doc_id") % 20 === 0).select("s").distinct()
-    val freshContam = refreshedShingles(spark, sfDir)
-      .join(freshIds, Seq("doc_id"))
-      .join(broadcast(benchSh), Seq("s"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("contaminated_shingles"))
-    DedupQueries.contamination(spark, sfDir)
-      .join(stale, Seq("doc_id"), "left_anti")
-      .unionByName(freshContam)
+    refreshToB(spark, sfDir, DedupQueries.contamination(spark, sfDir)) { ids =>
+      refreshedShingles(spark, sfDir)
+        .join(ids, Seq("doc_id"))
+        .join(broadcast(benchSh), Seq("s"))
+        .groupBy("doc_id")
+        .agg(count(lit(1)).as("contaminated_shingles"))
+    }
   }
 
   /** Q99: CONTAMINATION REFRESH — the refreshed per-doc contamination
@@ -820,16 +773,10 @@ object CurationPipeline {
     * input. */
   def q93TokenDrift(spark: SparkSession, sfDir: String): DataFrame = {
     val aTok = DedupQueries.spanFeatures(spark, sfDir).select("doc_id", "w")
-    val delta = snapshotDeltaStaged(spark, sfDir).select("doc_id", "change")
-    val stale = delta.where(col("change").isin("removed", "modified"))
-      .select("doc_id")
-    val freshIds = delta.where(col("change").isin("added", "modified"))
-      .select("doc_id")
-    val freshTok = snapshotB(Tables.documents(spark, sfDir))
-      .join(freshIds, Seq("doc_id"))
-      .select(col("doc_id"), explode(Text.tokens(col("text"))).as("w"))
-    val bTok = aTok.join(stale, Seq("doc_id"), "left_anti")
-      .unionByName(freshTok)
+    val bTok = refreshToB(spark, sfDir, aTok) { ids =>
+      snapshotBDocs(spark, sfDir, ids)
+        .select(col("doc_id"), explode(Text.tokens(col("text"))).as("w"))
+    }
     val joined = aTok.groupBy("w").agg(count(lit(1)).as("cnt_a"))
       .join(bTok.groupBy("w").agg(count(lit(1)).as("cnt_b")),
         Seq("w"), "full_outer")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import org.apache.spark.sql.graftbridge.Bridge
 
-import graft.{Artifacts, Tables}
+import graft.{Artifacts, Delta, Tables}
 import graft.functions.Vectors
 
 /** Product quantization on top of the IVF index — the rest of
@@ -376,6 +376,30 @@ object ProductQuantization {
       .unionByName(e.where(col("vec_id") % 10 === 1)
         .withColumn("vec_id", -(col("vec_id") + 1L)))
 
+  /** The VECTOR snapshot delta STAGED as a bucketed artifact —
+    * [[CurationPipeline.snapshotDeltaStaged]]'s discipline for the
+    * embedding corpus: the full-outer hash diff of a snapshot pair is
+    * one staged job, not a cost every index refresh re-pays (at toy
+    * scale the re-derived diff alone made pq_refresh read slower than
+    * pq_rebuild, r8: 0.95 s vs 0.38 s). Bucketed on vec_id, the base
+    * code table's layout, so the refresh's anti/semi joins against it
+    * are exchange-free. */
+  def vectorDeltaStaged(spark: SparkSession, sfDir: String): DataFrame =
+    Artifacts.materialize(spark, sfDir, "graft_vecdelta_", "vec_id") {
+      computeVectorDelta(spark, sfDir)
+    }
+
+  /** The vector diff's build plan (what [[vectorDeltaStaged]]
+    * materializes) — public so Bench can time the shared one-off on its
+    * own (`delta_sec`). */
+  def computeVectorDelta(spark: SparkSession, sfDir: String): DataFrame = {
+    val e = vecs(spark, sfDir)
+    def hashed(d: DataFrame) = d.select(col("vec_id"),
+      md5(concat_ws(",", transform(col("v"), _.cast("string")))).as("h"))
+    Delta.classify(hashed(e), hashed(vectorSnapshotB(e)), "vec_id", "h")
+      .select("vec_id", "change")
+  }
+
   /** The INCREMENTAL PQ-INDEX REFRESH build plan (round-7 verdict gap
     * #2): a PQ code is a pure per-vector function of a FROZEN model, so
     * the q79/q80 delta discipline applies verbatim to the code table —
@@ -397,49 +421,13 @@ object ProductQuantization {
     * from scratch with the same frozen model, so the hash gate is the
     * refresh ≡ rebuild claim (q80/q83's gate, third artifact in the
     * chain). Public so the spec pins the build shape. */
-  /** The VECTOR snapshot delta STAGED as a bucketed artifact —
-    * [[CurationPipeline.snapshotDeltaStaged]]'s discipline for the
-    * embedding corpus: the full-outer hash diff of a snapshot pair is
-    * one staged job, not a cost every index refresh re-pays (at toy
-    * scale the re-derived diff alone made pq_refresh read slower than
-    * pq_rebuild, r8: 0.95 s vs 0.38 s). Bucketed on vec_id, the base
-    * code table's layout, so the refresh's anti/semi joins against it
-    * are exchange-free. */
-  def vectorDeltaStaged(spark: SparkSession, sfDir: String): DataFrame =
-    Artifacts.materialize(spark, sfDir, "graft_vecdelta_", "vec_id") {
-      computeVectorDelta(spark, sfDir)
-    }
-
-  /** The vector diff's build plan (what [[vectorDeltaStaged]]
-    * materializes) — public so Bench can time the shared one-off on its
-    * own (`delta_sec`). */
-  def computeVectorDelta(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = vecs(spark, sfDir)
-    def h(v: Column) = md5(concat_ws(",", transform(v, _.cast("string"))))
-    val a = e.select(col("vec_id"), h(col("v")).as("old_h"))
-    val b = vectorSnapshotB(e)
-    a.join(b.select(col("vec_id"), h(col("v")).as("new_h")),
-        Seq("vec_id"), "full_outer")
-      .where(col("old_h").isNull || col("new_h").isNull ||
-        col("old_h") =!= col("new_h"))
-      .select(col("vec_id"),
-        when(col("new_h").isNull, "removed")
-          .when(col("old_h").isNull, "added")
-          .otherwise("modified").as("change"))
-  }
-
   def computeRefreshedPqCodes(spark: SparkSession, sfDir: String): DataFrame = {
     val b = vectorSnapshotB(vecs(spark, sfDir))
-    val delta = vectorDeltaStaged(spark, sfDir)
-    val stale = delta.where(col("change").isin("removed", "modified"))
-      .select("vec_id")
-    val freshIds = delta.where(col("change").isin("added", "modified"))
-      .select("vec_id")
     val (coarse, cents) = pqModelAt(spark, sfDir, M256, K256)
-    pqIndexAt(spark, sfDir, M256, K256)
-      .join(stale, Seq("vec_id"), "left_anti")
-      .unionByName(codesOver(b.join(freshIds, Seq("vec_id")),
-        coarse, cents, M256))
+    Delta.apply(pqIndexAt(spark, sfDir, M256, K256),
+        vectorDeltaStaged(spark, sfDir), "vec_id") { ids =>
+      codesOver(b.join(ids, Seq("vec_id")), coarse, cents, M256)
+    }
   }
 
   /** The from-scratch twin: snapshot B coded in full with the same

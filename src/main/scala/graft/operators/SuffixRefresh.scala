@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.Tables
+import graft.{Delta, Tables}
 import graft.functions.CommonPrefixLen
 
 /** PARTITION-BOUNDED suffix-table refresh — the missing incremental
@@ -385,14 +385,12 @@ object SuffixRefresh extends Serializable {
     val index = indexA(spark, sfDir)
     val innerA = innerMaxA(spark, sfDir)
     val sums = toSummaries(summariesA(spark, sfDir))
-    val delta = CurationPipeline.snapshotDeltaStaged(spark, sfDir)
+    val delta = CurationPipeline.snapshotChanges(spark, sfDir)
     val removedDocs = docs
-      .join(delta.where(col("change").isin("removed", "modified"))
-        .select("doc_id"), Seq("doc_id"), "left_semi")
+      .join(Delta.stale(delta).select("doc_id"), Seq("doc_id"), "left_semi")
       .select("doc_id", "text")
     val addedDocs = CurationPipeline.snapshotB(docs)
-      .join(delta.where(col("change").isin("added", "modified"))
-        .select("doc_id"), Seq("doc_id"), "left_semi")
+      .join(Delta.fresh(delta).select("doc_id"), Seq("doc_id"), "left_semi")
       .select("doc_id", "text")
     refreshOf(spark, index, innerA, sums, removedDocs, addedDocs,
       minReport = 1,

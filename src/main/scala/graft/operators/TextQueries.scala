@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst
 import org.apache.spark.sql.functions._
 
-import graft.{Artifacts, Tables}
+import graft.{Artifacts, Delta, Tables}
 import graft.functions.Text
 
 /** Text-analysis surface for LLM training-data pipelines, over the
@@ -957,18 +957,22 @@ object TextQueries {
     * recomputes snapshot B's heavy hitters from scratch: the hash gate
     * IS refresh ≡ rebuild. */
   def q107SketchRefresh(spark: SparkSession, sfDir: String): DataFrame = {
-    val feats = DedupQueries.spanFeatures(spark, sfDir)
-    val stale = col("doc_id") % 10 === 7 || col("doc_id") % 10 === 3
-    val bBigrams = bigramsFrom(feats.where(!stale))
+    val bBigrams = bigramsFrom(DedupQueries.spanFeatures(spark, sfDir)
+        .join(staleIds(spark, sfDir), Seq("doc_id"), "left_anti"))
       .unionByName(bigramsOfDocs(freshBDocs(spark, sfDir)))
     cmsVerify(bBigrams, refreshedSketch(spark, sfDir))
   }
 
-  /** Snapshot B's added/modified docs (q79's delta rules). */
+  /** The staged snapshot delta's removed/modified doc ids. */
+  private def staleIds(spark: SparkSession, sfDir: String): DataFrame =
+    Delta.stale(CurationPipeline.snapshotChanges(spark, sfDir))
+      .select("doc_id")
+
+  /** Snapshot B's docs at the staged delta's added/modified doc ids. */
   private def freshBDocs(spark: SparkSession, sfDir: String): DataFrame =
-    graft.operators.CurationPipeline
-      .snapshotB(Tables.documents(spark, sfDir))
-      .where(col("doc_id") < 0 || col("doc_id") % 10 === 3)
+    CurationPipeline.snapshotBDocs(spark, sfDir,
+      Delta.fresh(CurationPipeline.snapshotChanges(spark, sfDir))
+        .select("doc_id"))
       .select("doc_id", "text")
 
   /** The q107 refresh arithmetic alone (two delta-sized passes + vector
@@ -976,10 +980,9 @@ object TextQueries {
     * sketch_refresh_sec against sketch_rebuild_sec. */
   private[graft] def refreshedSketch(spark: SparkSession,
                                      sfDir: String): Array[Long] = {
-    val feats = DedupQueries.spanFeatures(spark, sfDir)
-    val stale = col("doc_id") % 10 === 7 || col("doc_id") % 10 === 3
     val base = baseSketch(spark, sfDir)
-    val sub = cmsSketchOf(bigramsFrom(feats.where(stale)))
+    val sub = cmsSketchOf(bigramsFrom(DedupQueries.spanFeatures(spark, sfDir)
+      .join(staleIds(spark, sfDir), Seq("doc_id"), "left_semi")))
     val add = cmsSketchOf(bigramsOfDocs(freshBDocs(spark, sfDir)))
     base.indices.map(i => base(i) - sub(i) + add(i)).toArray
   }

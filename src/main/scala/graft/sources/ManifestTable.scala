@@ -816,20 +816,21 @@ object ManifestTable {
 
   /** Per-file ([lo, hi] stat pairs for `statNames`, row count) read
     * from the parquet footers of just-written files — zero Spark jobs,
-    * zero data IO. Returns None (caller falls back to the aggregate
-    * pass) unless EVERY requested column in EVERY file is a stat shape
-    * the manifest stores exactly: signed INT32/INT64 (Spark
+    * zero data IO. EVERY requested column in EVERY file must be a stat
+    * shape the manifest stores exactly: signed INT32/INT64 (Spark
     * byte/short/int/long) or INT64 TIMESTAMP(MICROS) (the engine's
     * pinned parquet output type, whose footer min/max ARE `unix_micros`
-    * values). Chunks of an all-null column carry no min/max but a set
-    * null count — they contribute nothing, exactly like the old
-    * `min/max` aggregates; a chunk with statistics MISSING (not
-    * written) forces the fallback rather than guessing. Zero-row files
-    * are omitted from the map — the caller drops them from the
-    * manifest, as before. */
+    * values) — the callers admit only integral and timestamp stat
+    * columns, and Spark's writer always emits their statistics, so
+    * anything else (a column missing from the file, another physical
+    * type, a chunk without statistics) throws, naming the file and the
+    * column, rather than stamping guessed bounds. Chunks of an all-null
+    * column carry no min/max but a set null count — they contribute
+    * nothing. Zero-row files are omitted from the map — the caller drops
+    * them from the manifest. */
   private def footerStats(fs: FileSystem, dir: Path, names: Seq[String],
                           statNames: Seq[String])
-      : Option[Map[String, (Seq[Option[(Long, Long)]], Long)]] = {
+      : Map[String, (Seq[Option[(Long, Long)]], Long)] = {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
     import org.apache.parquet.schema.LogicalTypeAnnotation
     def servable(pt: org.apache.parquet.schema.PrimitiveType): Boolean =
@@ -865,14 +866,16 @@ object ManifestTable {
         if (rows > 0) {
           val fileSchema = footer.getFileMetaData.getSchema
           val pairs: Seq[Option[(Long, Long)]] = statNames.map { k =>
-            // a column the file doesn't carry at top level must go
-            // through the aggregate pass's loud resolution error, not
-            // silently stamp unprunable (None) bounds
-            if (!fileSchema.containsField(k)) return None
+            def unservable(why: String) = new IllegalStateException(
+              s"stats column $k of ${new Path(dir, name)}: $why")
+            if (!fileSchema.containsField(k))
+              throw unservable("not a top-level column of the file")
             var lo = Long.MaxValue; var hi = Long.MinValue; var seen = false
             for (b <- blocks; cc <- b.getColumns.asScala
                  if cc.getPath.size == 1 && cc.getPath.toArray.head == k) {
-              if (!servable(cc.getPrimitiveType)) return None
+              if (!servable(cc.getPrimitiveType))
+                throw unservable(s"footer type ${cc.getPrimitiveType} " +
+                  "is not signed INT32/INT64 or INT64 TIMESTAMP(MICROS)")
               val st = cc.getStatistics
               if (st != null && st.hasNonNullValue) {
                 lo = math.min(lo, longOf(st.genericGetMin))
@@ -880,9 +883,8 @@ object ManifestTable {
                 seen = true
               } else if (st == null || !st.isNumNullsSet ||
                   st.getNumNulls != cc.getValueCount) {
-                // stats absent (vs. a provably all-null chunk) — don't
-                // guess; the aggregate pass recomputes them exactly
-                return None
+                // stats absent (vs. a provably all-null chunk)
+                throw unservable("a column chunk carries no statistics")
               }
             }
             if (seen) Some((lo, hi)) else None
@@ -891,7 +893,7 @@ object ManifestTable {
         }
       } finally reader.close()
     }
-    Some(out.result())
+    out.result()
   }
 
   /** Write `df`'s rows as immutable files under a fresh commit subdir and
@@ -928,34 +930,11 @@ object ManifestTable {
     // [[statExpr]] admits, and the engine pins TIMESTAMP_MICROS output
     // — are bit-exact equals of the old `min(cast(k as long))`
     // aggregates, so the manifest lines are byte-identical
-    // (ManifestFooterStatsSpec pins the equality). Any other shape, or
-    // a footer without statistics, falls back to the aggregate pass —
-    // which also owns the loud non-integral type rejection.
+    // (ManifestFooterStatsSpec pins the equality). The callers reject
+    // non-integral stat columns before writing.
     lazy val justWritten = spark.read.parquet(dir.toString)
-    val statNames: Seq[String] = boundsCol.toSeq ++ statsCols
-    def aggregateStats(): Map[String, (Seq[Option[(Long, Long)]], Long)] = {
-      boundsCol.foreach(k => requireIntegral(justWritten.schema, k))
-      val statCols: Seq[(String, org.apache.spark.sql.Column)] =
-        boundsCol.map(k => k -> col(k).cast("long")).toSeq ++
-          statsCols.map(k => k -> statExpr(justWritten.schema, k))
-      val aggs = statCols.zipWithIndex.flatMap { case ((_, e), i) =>
-        Seq(min(e).as(s"_lo$i"), max(e).as(s"_hi$i"))
-      } :+ count(lit(1)).as("_n")
-      justWritten
-        .groupBy(input_file_name().as("_f"))
-        .agg(aggs.head, aggs.tail: _*)
-        .collect().map { r =>
-          val pairs = statCols.indices.map { i =>
-            if (r.isNullAt(1 + 2 * i) || r.isNullAt(2 + 2 * i)) None
-            else Some((r.getLong(1 + 2 * i), r.getLong(2 + 2 * i)))
-          }
-          new Path(r.getString(0)).getName ->
-            ((pairs, r.getLong(1 + 2 * statCols.size)))
-        }.toMap
-    }
     val perFile: Map[String, (Seq[Option[(Long, Long)]], Long)] =
-      footerStats(fs, dir, staged.keys.toSeq, statNames)
-        .getOrElse(aggregateStats())
+      footerStats(fs, dir, staged.keys.toSeq, boundsCol.toSeq ++ statsCols)
     // format v5: one Bloom filter per file per declared column. TWO
     // more passes reading only the bloom columns: a per-file DISTINCT
     // count (a filter holds a SET — sizing by row count would pay the
@@ -3308,11 +3287,9 @@ object ManifestTable {
   private[graft] def scd2Step(base: DataFrame, deltaIn: DataFrame,
                               v: Int): DataFrame = {
     val delta = deltaIn.localCheckpoint() // delta-sized; read twice
-    val closing = delta
-      .where(col("change").isin("removed", "modified"))
+    val closing = graft.Delta.stale(delta)
       .select(col("doc_id"), lit(1).as("_close"))
-    val opening = delta
-      .where(col("change").isin("added", "modified"))
+    val opening = graft.Delta.fresh(delta)
       .select(col("doc_id"), md5(col("text")).as("text_md5"),
         lit(v).as("valid_from"), lit(null).cast("int").as("valid_to"))
     base

@@ -35,8 +35,9 @@ object EventStreams {
     *
     * A NOT-YET-POPULATED landing dir (the documented production start
     * order: runner first, files later) has nothing to probe — the probe
-    * failure falls back to the nanos-long schema, this corpus's native
-    * encoding. Invariant either way: ONE ts encoding per landing dir for
+    * failure falls back to the nanos-long schema — a guess: every
+    * shipped input (the sf fixtures, perfbench's generator) writes
+    * TIMESTAMP(MICROS). Invariant either way: ONE ts encoding per landing dir for
     * the dir's lifetime. The encoding is decided once at plan build, so
     * a file of the other encoding landing later is misread (nanos long
     * under a TimestampType schema or vice versa), and a checkpointed
@@ -106,7 +107,7 @@ object EventStreams {
           }
         }.getOrElse(true) // can't list: can't prove empty — stay loud
         if (hasMatchingFiles) throw e
-        else LongType // nothing landed yet: this corpus's native encoding
+        else LongType // nothing landed yet: guess the nanos-long encoding
     })
     val tsIsNanos = probe == LongType
     val schema = StructType(Seq(

@@ -14,8 +14,7 @@ import graft.SparkSpec
   * committed manifest lines, across: negative longs, ints, all-null
   * and partly-null columns, and TIMESTAMP(MICROS) (whose footer
   * min/max must equal `unix_micros` aggregates). The loud rejection
-  * of non-integral stat columns must also survive (it lives in the
-  * fallback aggregate path). */
+  * of non-integral stat columns must also survive. */
 class ManifestFooterStatsSpec extends SparkSpec {
 
   private def freshRoot(): String =
@@ -84,8 +83,7 @@ class ManifestFooterStatsSpec extends SparkSpec {
     assert(got.toSeq === (-10L to 10L).toSeq)
   }
 
-  test("non-integral stats columns still reject loudly (the fallback " +
-      "aggregate pass owns the type error)") {
+  test("non-integral stats columns still reject loudly") {
     val root = freshRoot()
     import spark.implicits._
     val df = Seq((1L, "a"), (2L, "b")).toDF("k", "s")
