@@ -323,6 +323,25 @@ object CurationPipeline {
       .unionByName(docs.where(col("doc_id") % 10 === 1)
         .withColumn("doc_id", -(col("doc_id") + 1L)))
 
+  /** The recrawl as a manifest-table history at `root`: v1 = `docs`
+    * (snapshot A) as 8 doc_id-clustered bounds-stamped files, v2 =
+    * [[snapshotB]]'s rules as ONE copy-on-write merge (remove the ids
+    * ending in 7; upsert the edits and the negative-namespace
+    * duplicates). The one writer q155, q157 and the q160/q161 history
+    * share, beside snapshotB so none of them can drift from it. */
+  private[graft] def mergeSnapshotB(spark: SparkSession, root: String,
+                                    docs: DataFrame): Unit = {
+    import graft.sources.ManifestTable
+    ManifestTable.overwrite(spark, root,
+      docs.repartitionByRange(8, col("doc_id"))
+        .sortWithinPartitions("doc_id"),
+      boundsCol = Some("doc_id"))
+    ManifestTable.mergeCoW(spark, root, "doc_id",
+      docs.where(col("doc_id") % 10 === 7).select("doc_id"),
+      snapshotB(docs).where(col("doc_id") % 10 === 3 || col("doc_id") < 0))
+    ()
+  }
+
   /** The (doc_id, change, old_md5, new_md5) delta between snapshots A
     * and B, unordered — q79 presents it; every snapshot refresh consumes
     * it. [[Delta.classify]] over the md5 of each side's text. */
@@ -484,17 +503,8 @@ object CurationPipeline {
     * artifact refresh tails table versions, never diffs corpus
     * snapshots. */
   def q157CdcRefresh(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.sources.ManifestTable
     val root = graft.Artifacts.freshRoot(spark, sfDir, "manifest_cdc_")
-    val docs = Tables.documents(spark, sfDir)
-    ManifestTable.overwrite(spark, root,
-      docs.repartitionByRange(8, col("doc_id"))
-        .sortWithinPartitions("doc_id"),
-      boundsCol = Some("doc_id"))
-    val removeKeys = docs.where(col("doc_id") % 10 === 7).select("doc_id")
-    val upserts = snapshotB(docs)
-      .where(col("doc_id") % 10 === 3 || col("doc_id") < 0)
-    ManifestTable.mergeCoW(spark, root, "doc_id", removeKeys, upserts)
+    mergeSnapshotB(spark, root, Tables.documents(spark, sfDir))
     val refreshed = Delta.apply(DedupQueries.shingles(spark, sfDir),
         cdcDocDelta(spark, root, 1, 2), "doc_id") { fresh =>
       Text.shingleRows(fresh.select("doc_id", "text"), "doc_id", "text", 3)

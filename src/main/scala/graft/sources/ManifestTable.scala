@@ -141,9 +141,10 @@ object ManifestTable {
 
     /** Merge-on-read: suppress every row whose `deleteCols` TUPLE
       * appears in the outstanding delete set — one anti-join against
-      * the delta-sized (auto-broadcast) distinct key set. Delete files
-      * without the declaring header would be un-interpretable; fail
-      * loudly rather than return resurrected rows. */
+      * the delta-sized (auto-broadcast) key set, duplicates and all.
+      * Delete files without the declaring header would be
+      * un-interpretable; fail loudly rather than return resurrected
+      * rows. */
     private[sources] def applyDeletes(spark: SparkSession,
                                       df: DataFrame): DataFrame =
       if (deleteFiles.isEmpty) df
@@ -154,10 +155,16 @@ object ManifestTable {
         df.join(deleteKeys(spark), deleteCols, "left_anti")
       }
 
-    /** The outstanding equality-delete key tuples, distinct. */
-    private[sources] def deleteKeys(spark: SparkSession): DataFrame =
-      spark.read.parquet(deleteFiles: _*)
-        .select(deleteCols.map(col): _*).distinct()
+    /** The ONE delete-key read: the `deleteCols` tuples of `paths`
+      * (default: the outstanding delete files) under their declared key
+      * schema, so no footer-inference job — a delete column is never
+      * renamed, dropped or widened (requireIdEvolvable). Keys that two
+      * delete commits share stay duplicated: every reader is an
+      * anti/semi join, or the merge's consolidation, which dedups. */
+    private[sources] def deleteKeys(spark: SparkSession,
+        paths: Seq[String] = deleteFiles): DataFrame =
+      readFiles(spark, paths,
+        StructType(deleteCols.map(stripFieldIds(schema)(_))))
 
     /** RESURRECTION GUARD (format v6): an equality delete suppresses
       * its keys until compacted, so `rows` holding one would vanish on
@@ -1164,7 +1171,8 @@ object ManifestTable {
     * under the table shape: delete files are key-only and id-LESS
     * (their key columns can never be renamed — requireIdEvolvable
     * rejects), so they resolve by name; requesting ids over them would
-    * fail loudly for nothing. */
+    * fail loudly for nothing. Callers: [[Snapshot.deleteKeys]] and
+    * [[readChangesBetween]]'s delete side. */
   private def stripFieldIds(s: StructType): StructType =
     StructType(s.fields.map(f => f.copy(metadata =
       new org.apache.spark.sql.types.MetadataBuilder()
@@ -1465,9 +1473,8 @@ object ManifestTable {
       if (ks.isEmpty) throw new IllegalStateException(
         s"version $fromVersion of $root lists delete files but no " +
           "#deletecol header")
-      val oldKeys = spark.read.parquet(undropped.map(r =>
-        new Path(root, r).toString): _*)
-        .select(ks.map(col): _*).distinct()
+      val oldKeys = mFrom.deleteKeys(spark,
+        undropped.map(r => new Path(root, r).toString))
       // a key is UN-deleted only when it is absent from toVersion's
       // WHOLE outstanding delete set — added delete files alone are
       // not enough: two delete commits can hold overlapping keys, and
@@ -2300,9 +2307,12 @@ object ManifestTable {
       s"version ${m.version} of $root lists no data files; " +
         "use overwrite to (re)populate an emptied table")
     val tableSchema = m.schema
+    // not distinct: every reader is a semi/anti join, a set or the
+    // delete probe. The LAZY checkpoint is filled by the first job that
+    // scans it (the stab), so a computed frame is evaluated once.
     val changedKeys = removeKeys.select(keyCols.map(col): _*)
-      .unionByName(upserts.select(keyCols.map(col): _*)).distinct()
-      .localCheckpoint() // read thrice: two probes + rewrite anti-join
+      .unionByName(upserts.select(keyCols.map(col): _*))
+      .localCheckpoint(eager = false)
     // null keys cannot be merged: the anti-join would never match them
     // (SQL null semantics), silently appending duplicates — fail fast.
     // The probe is FOLDED into the interval-stab job below when the
@@ -2334,15 +2344,17 @@ object ManifestTable {
       // "\t" can never be a staged rel (UUID alphabet) — safe sentinel
       // for "a null key was seen in this partition"
       val nullMark = "\t"
+      // ONE job, no shuffle: each partition emits its SET of hit rels
+      // and the driver's toSet merges them
       val stabbed = changedKeys.select(
           keyCols.map(col(_).isNull).reduce(_ || _).as("_n"),
           col(keyCols.head).cast("long").as("_k"))
-        .distinct()
         .mapPartitions { it =>
           val lo = bcLo.value; val hi = bcHi.value
           val pm = bcPm.value; val rel = bcRel.value
-          it.flatMap { row =>
-            if (row.getBoolean(0)) Iterator.single(nullMark)
+          val hit = scala.collection.mutable.HashSet.empty[String]
+          it.foreach { row =>
+            if (row.getBoolean(0)) hit += nullMark
             else {
               val k = row.getLong(1)
               // last file with lo <= k, then walk back while any
@@ -2355,16 +2367,15 @@ object ManifestTable {
                 }
                 idx = a
               }
-              val out = scala.collection.mutable.ArrayBuffer.empty[String]
               var i = idx
               while (i >= 0 && pm(i) >= k) {
-                if (hi(i) >= k) out += rel(i)
+                if (hi(i) >= k) hit += rel(i)
                 i -= 1
               }
-              out
             }
           }
-        }.distinct().collect().toSet
+          hit.iterator
+        }.collect().toSet
       if (stabbed.contains(nullMark)) nullKeyError()
       stabbed - nullMark
     }
@@ -2419,12 +2430,10 @@ object ManifestTable {
     val headerMatches = m.boundsCol.contains(keyCols.head)
     val carryE = (if (headerMatches) m.dataEntries else entries)
       .filterNot(e => affectedRels.contains(e.rel))
-    // delete sequencing: the outstanding delete keys (delta-sized),
-    // read once, used thrice (rewrite filter, overlap probe,
-    // consolidation)
+    // delete sequencing: the outstanding delete keys (delta-sized) for
+    // the rewrite filter, the overlap probe and the consolidation
     val delKeys: Option[DataFrame] =
-      if (m.deleteFiles.isEmpty) None
-      else Some(m.deleteKeys(spark).localCheckpoint())
+      if (m.deleteFiles.isEmpty) None else Some(m.deleteKeys(spark))
     // align the upserts to the table's column order — and REJECT an
     // upsert that carries columns the table lacks: silently dropping
     // them would lose data (widen the schema via append/overwrite first)
@@ -2473,9 +2482,11 @@ object ManifestTable {
     val deleteLines: Seq[String] = delKeys match {
       case None => Seq.empty
       case Some(dk) =>
-        // ONE probe job for both decisions (touched? anything left?):
-        // changedKeys is distinct, so the outer join is row-preserving
-        // and count(__m) counts exactly the touched delete keys
+        // ONE probe job for both decisions (touched? anything left?),
+        // exact with duplicates on either side: a delete row matching
+        // n changed keys adds n to both counts, an unmatched one adds 1
+        // to _n only — touched == 0 iff no delete key changed, and
+        // total == touched iff every one did
         val probe = dk.join(
             changedKeys.withColumn("__m", lit(1)), keyCols, "left_outer")
           .agg(count(lit(1)).as("_n"), count(col("__m")).as("_touched"))
@@ -2484,7 +2495,7 @@ object ManifestTable {
         if (touched == 0) m.deleteEntries.map(_.line)
         else if (total == touched) Seq.empty
         else stage(spark, root,
-          dir => dk.join(changedKeys, keyCols, "left_anti")
+          dir => dk.join(changedKeys, keyCols, "left_anti").distinct()
             .coalesce(1).write.parquet(dir),
           relPrefix = "deletes")
     }
@@ -2703,19 +2714,10 @@ object ManifestTable {
     * range-local delta instead. */
   def q155ManifestMerge(spark: SparkSession, sfDir: String): DataFrame = {
     val root = Artifacts.freshRoot(spark, sfDir, "manifest_merge_")
-    val docs = graft.Tables.documents(spark, sfDir)
-    // bounds-stamped write (manifest format v2): the merge below finds
-    // its affected files from the manifest alone, no snapshot scan
-    overwrite(spark, root,
-      docs.repartitionByRange(8, col("doc_id"))
-        .sortWithinPartitions("doc_id"),
-      boundsCol = Some("doc_id"))
-    // the q79 recrawl rules as one merge: delete %10==7, edit %10==3,
-    // insert the %10==1 docs under the negative namespace
-    val removeKeys = docs.where(col("doc_id") % 10 === 7).select("doc_id")
-    val upserts = graft.operators.CurationPipeline.snapshotB(docs)
-      .where(col("doc_id") % 10 === 3 || col("doc_id") < 0)
-    mergeCoW(spark, root, "doc_id", removeKeys, upserts)
+    // bounds-stamped (manifest format v2): the merge finds its affected
+    // files from the manifest alone, no snapshot scan
+    graft.operators.CurationPipeline.mergeSnapshotB(spark, root,
+      graft.Tables.documents(spark, sfDir))
     read(spark, root)
       .select(col("doc_id"), md5(col("text")).as("text_md5"))
       .orderBy("doc_id")
@@ -3256,16 +3258,8 @@ object ManifestTable {
   private[graft] def buildScd2DemoTable(spark: SparkSession, sfDir: String,
                                         prefix: String): String = {
     val root = Artifacts.freshRoot(spark, sfDir, prefix)
-    val docs = graft.Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("text"))
-    overwrite(spark, root,
-      docs.repartitionByRange(8, col("doc_id"))
-        .sortWithinPartitions("doc_id"),
-      boundsCol = Some("doc_id"))
-    mergeCoW(spark, root, "doc_id",
-      docs.where(col("doc_id") % 10 === 7).select("doc_id"),
-      graft.operators.CurationPipeline.snapshotB(docs)
-        .where(col("doc_id") % 10 === 3 || col("doc_id") < 0))
+    graft.operators.CurationPipeline.mergeSnapshotB(spark, root,
+      graft.Tables.documents(spark, sfDir).select(col("doc_id"), col("text")))
     val cur = readAt(spark, root, 2)
     mergeCoW(spark, root, "doc_id",
       cur.where(col("doc_id") > 0 && col("doc_id") % 10 === 9)

@@ -1072,6 +1072,74 @@ class ManifestTableSpec extends SparkSpec {
       "an untouched delete set was rewritten")
   }
 
+  test("overlapping equality deletes: a key two delete commits share " +
+      "reads, guards, merges and surfaces in the change feed once") {
+    val root = freshRoot()
+    ManifestTable.overwrite(spark, root,
+      docs.repartitionByRange(4, col("doc_id"))
+        .sortWithinPartitions("doc_id"),
+      boundsCol = Some("doc_id")) // v1
+    val k1 = docs.where(col("doc_id") % 3 === 0).select("doc_id")
+    val k2 = docs.where(col("doc_id") % 2 === 0).select("doc_id")
+    ManifestTable.deleteWhereKeyIn(spark, root, "doc_id", k1) // v2
+    val v3 = ManifestTable.deleteWhereKeyIn(spark, root, "doc_id", k2)
+    val deleted = col("doc_id") % 3 === 0 || col("doc_id") % 2 === 0
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+    assert(ids(ManifestTable.read(spark, root)) === ids(docs.where(!deleted)))
+    // the resurrection guard fires on a shared key, message unchanged
+    val ex = intercept[IllegalArgumentException] {
+      ManifestTable.append(spark, root,
+        docs.where(col("doc_id") % 6 === 0).orderBy("doc_id").limit(1))
+    }
+    assert(ex.getMessage === s"requirement failed: append to $root " +
+      "would resurrect equality-deleted (doc_id) tuples — the delete is " +
+      "global until compacted; run optimize first, then append")
+    // a restore dropping BOTH delete files un-deletes each shared key's
+    // row as ONE insert, not one per delete file holding it
+    val v4 = ManifestTable.restore(spark, root, 1)
+    val undeleted = ManifestTable.readChangesBetween(spark, root, v3, v4)
+      .where(col("_change") === "insert")
+    assert(ids(undeleted) === ids(docs.where(deleted)))
+    ManifestTable.restore(spark, root, v3) // both delete files again
+    // a merge touching NO delete key carries both files verbatim
+    val dv = ManifestTable.snapshot(spark, root).deleteFiles
+    ManifestTable.mergeCoW(spark, root, "doc_id",
+      removeKeys = docs.select("doc_id").limit(0),
+      upserts = docs.where(!deleted).orderBy("doc_id").limit(1)
+        .withColumn("text", lit("touched")))
+    assert(ManifestTable.snapshot(spark, root).deleteFiles === dv)
+    // a merge touching SOME (shared keys % 12, duplicated in the
+    // changed keys) consolidates the rest into one file, each key once
+    val vSome = ManifestTable.currentVersion(spark, root).get
+    val back = docs.where(col("doc_id") % 12 === 0)
+      .withColumn("text", concat(col("text"), lit(" back")))
+    ManifestTable.mergeCoW(spark, root, "doc_id",
+      removeKeys = back.select("doc_id"), upserts = back)
+    val consolidated = ManifestTable.snapshot(spark, root).deleteFiles
+    assert(consolidated.size === 1 && !dv.contains(consolidated.head))
+    val survivors = ids(docs.where(deleted && col("doc_id") % 12 =!= 0))
+    assert(ids(spark.read.parquet(consolidated.head)) === survivors)
+    assert(ids(ManifestTable.read(spark, root)) ===
+      ids(docs.where(!deleted || col("doc_id") % 12 === 0)))
+    // the change feed across the consolidation: the new delete file's
+    // keys once each (key-only rows), every resurrected row once
+    val cdc = ManifestTable.readChangesBetween(spark, root, vSome, vSome + 1)
+    assert(ids(cdc.where(col("_change") === "delete" && col("text").isNull))
+      === survivors)
+    val inserted = ids(cdc.where(col("_change") === "insert"))
+    assert(inserted.distinct === inserted)
+    assert(ids(docs.where(col("doc_id") % 12 === 0)).toSet
+      .subsetOf(inserted.toSet))
+    // a merge touching ALL of them (duplicated keys again) ends the
+    // delete set and its declaration
+    ManifestTable.mergeCoW(spark, root, "doc_id",
+      removeKeys = k1.unionByName(k2), upserts = docs.limit(0))
+    val end = ManifestTable.snapshot(spark, root)
+    assert(end.deleteFiles.isEmpty && end.deleteCols.isEmpty)
+    assert(ids(ManifestTable.read(spark, root)) === ids(docs.where(!deleted)))
+  }
+
   test("CHECK constraints: NULL passes (SQL semantics), drop re-allows, " +
       "history counts delete files, timestampAsOf future = newest") {
     val root = freshRoot()
