@@ -86,7 +86,7 @@ object ManifestTable {
     * vacuumed). `schema` is the committed `#schema=` header, every
     * field carrying its field id. `files` are the DATA files;
     * `deleteFiles` the outstanding merge-on-read equality deletes
-    * (format v6), applied by [[read]] as one anti-join on
+    * (format v6), applied by [[read]] as at most one anti-join on
     * `deleteCols` (one or more key columns
     * — a composite equality delete matches on the whole tuple,
     * Iceberg's multi-column equality-delete shape). The second
@@ -121,7 +121,8 @@ object ManifestTable {
       val base =
         if (kept.isEmpty)
           readFiles(spark, Seq(pathOf(data.head)), schema).where(lit(false))
-        else applyDeletes(spark, readFiles(spark, kept.map(pathOf), schema))
+        else applyDeletes(spark, readFiles(spark, kept.map(pathOf), schema),
+          kept)
       residual.fold(base)(base.where)
     }
 
@@ -139,21 +140,39 @@ object ManifestTable {
         timestamp_micros(lit(x))
       else lit(x)
 
-    /** Merge-on-read: suppress every row whose `deleteCols` TUPLE
-      * appears in the outstanding delete set — one anti-join against
-      * the delta-sized (auto-broadcast) key set, duplicates and all.
-      * Delete files without the declaring header would be
+    /** Merge-on-read: suppress every row of `df` — the rows of the data
+      * files `over` — whose `deleteCols` TUPLE appears in an outstanding
+      * delete file: one anti-join against the delta-sized
+      * (auto-broadcast) key set of the delete files that can match
+      * ([[deletesOver]]), duplicates and all; none when no delete file
+      * can. Delete files without the declaring header would be
       * un-interpretable; fail loudly rather than return resurrected
       * rows. */
-    private[sources] def applyDeletes(spark: SparkSession,
-                                      df: DataFrame): DataFrame =
+    private[sources] def applyDeletes(spark: SparkSession, df: DataFrame,
+                                      over: Seq[Entry]): DataFrame =
       if (deleteFiles.isEmpty) df
       else {
         if (deleteCols.isEmpty) throw new IllegalStateException(
           "manifest lists delete files but no #deletecol header names " +
             "their key column(s) — refusing to read resurrected rows")
-        df.join(deleteKeys(spark), deleteCols, "left_anti")
+        val ds = deletesOver(over)
+        if (ds.isEmpty) df
+        else df.join(deleteKeys(spark, ds.map(pathOf)), deleteCols,
+          "left_anti")
       }
+
+    /** The delete entries that can hold a key of the files `over`. When
+      * the table's bounds column is the leading delete column, a delete
+      * line carries that column's [lo, hi] (format v6), and a delete
+      * file whose range misses every file's range holds no tuple any of
+      * them can match. A line without bounds, on either side, may hold
+      * anything. `over`'s [lo, hi] must describe this snapshot's bounds
+      * column: its own data entries, or lines staged for it. */
+    private[sources] def deletesOver(over: Seq[Entry]): Seq[Entry] =
+      if (!deleteCols.headOption.exists(boundsCol.contains)) deleteEntries
+      else deleteEntries.filter(d => d.bounds.forall { case (lo, hi) =>
+        over.exists(_.bounds.forall { case (a, b) => a <= hi && b >= lo })
+      })
 
     /** The ONE delete-key read: the `deleteCols` tuples of `paths`
       * (default: the outstanding delete files) under their declared key
@@ -167,14 +186,26 @@ object ManifestTable {
         StructType(deleteCols.map(stripFieldIds(schema)(_))))
 
     /** RESURRECTION GUARD (format v6): an equality delete suppresses
-      * its keys until compacted, so `rows` holding one would vanish on
-      * every read — refuse them with `msg`. */
+      * its keys until compacted, so a row holding one would vanish on
+      * every read — refuse the STAGED, not yet committed, files `staged`
+      * (read under `fileSchema`, their [lo, hi] as [[deletesOver]]
+      * needs) with `msg` when one holds a deleted tuple. The bounds
+      * decide first: when no delete file can hold a staged file's key,
+      * no job runs; else one semi-join probe of the staged files
+      * against the delete files that can. */
     private[sources] def requireNoDeletedKeys(spark: SparkSession,
-                                              rows: DataFrame,
-                                              msg: => String): Unit =
-      if (deleteFiles.nonEmpty && deleteCols.nonEmpty)
-        require(rows.join(deleteKeys(spark), deleteCols, "left_semi")
+                                              staged: Seq[Entry],
+                                              fileSchema: StructType,
+                                              msg: => String): Unit = {
+      val rows = staged.filter(_.rows > 0)
+      val ds =
+        if (deleteCols.isEmpty || rows.isEmpty) Seq.empty
+        else deletesOver(rows)
+      if (ds.nonEmpty)
+        require(readFiles(spark, rows.map(pathOf), fileSchema)
+          .join(deleteKeys(spark, ds.map(pathOf)), deleteCols, "left_semi")
           .take(1).isEmpty, msg)
+    }
 
     private[sources] def dataEntries: Seq[Entry] =
       entries.filterNot(_.isDelete)
@@ -218,7 +249,7 @@ object ManifestTable {
       * column; None when this manifest carries no stats for it (a
       * mismatched column must never prune). */
     private[sources] def boundsOf(e: Entry, c: String): Option[(Long, Long)] =
-      if (boundsCol.contains(c)) for (a <- e.lo; b <- e.hi) yield (a, b)
+      if (boundsCol.contains(c)) e.bounds
       else statsCols.indexOf(c) match {
         case -1 => None
         case i => e.extra.lift(i).flatten
@@ -323,11 +354,12 @@ object ManifestTable {
     /** Format v6: a delete file is distinguished by its PATH prefix —
       * the line format itself is the same. */
     def isDelete: Boolean = rel.startsWith("deletes/")
+    def bounds: Option[(Long, Long)] = for (a <- lo; b <- hi) yield (a, b)
     def line: String = {
       def pair(p: Option[(Long, Long)]): String =
         p.map { case (a, b) => s"$a\t$b" }.getOrElse("-\t-")
-      val b = pair(for (a <- lo; c <- hi) yield (a, c))
-      (s"$rel\t$b\t$rows\t$bytes" +: extra.map(pair)).mkString("\t")
+      (s"$rel\t${pair(bounds)}\t$rows\t$bytes" +: extra.map(pair))
+        .mkString("\t")
     }
   }
 
@@ -345,6 +377,11 @@ object ManifestTable {
           f.drop(5).grouped(2).toSeq.map(p => bounds(p(0), p(1))))
       }
   }
+
+  /** Staged `lines` without their primary [lo, hi] (extra stats stay):
+    * a racing commit changed the bounds column they were stamped for. */
+  private def withoutBounds(lines: Seq[String]): Seq[String] =
+    lines.map(l => parseEntry(l).fold(l)(_.copy(lo = None, hi = None).line))
 
   // -------------------------------------------------------------------
   // Manifest headers (`#key=value` lines before the entries)
@@ -383,22 +420,28 @@ object ManifestTable {
   private val BloomFpp = 0.01
   /** Format v6: MERGE-ON-READ equality deletes (Iceberg's equality
     * delete files, the write-amplification complement to [[mergeCoW]]'s
-    * copy-on-write). A delete commit stages the deleted KEYS as a
-    * parquet file under `deletes/` — manifest entry lines distinguish
-    * delete files from data files by that path prefix alone, so the
-    * line format is unchanged — and every reader anti-joins the
-    * (delta-sized, auto-broadcast) key set on the column this header
-    * names. The contract is GLOBAL-UNTIL-COMPACTED: an equality delete
-    * suppresses EVERY row of its key, past and future, until a
-    * compaction ([[optimize]]) applies and drops it — so [[append]]
-    * refuses keys in the outstanding delete set (resurrection needs a
-    * compaction or a merge first). [[mergeCoW]]/[[mergeCoWKeys]]
-    * SEQUENCE outstanding deletes when the merge key-set IS the delete
-    * column-set — single column or whole tuple alike (rewrites read
-    * through the delete set, changed keys leave it, survivors carry or
-    * consolidate — an upsert is therefore the keyed resurrection
-    * path); a merge on a DIFFERENT column-set cannot reconcile the two
-    * key spaces and is rejected loudly instead of wrong. */
+    * copy-on-write). A delete commit stages the deleted KEYS, once
+    * each, as a parquet file under `deletes/` — manifest entry lines
+    * distinguish delete files from data files by that path prefix
+    * alone, so the line format is unchanged. When the leading delete
+    * column is the table's `#boundscol=`, a delete line carries that
+    * column's [lo, hi] like a data line (`-` otherwise, and on lines
+    * written before), and every reader anti-joins the (delta-sized,
+    * auto-broadcast) key set of just the delete files whose [lo, hi]
+    * meets a kept data file's, on the column(s) this header names — no
+    * anti-join when none does. The contract is GLOBAL-UNTIL-COMPACTED:
+    * an equality delete suppresses EVERY row of its key, past and
+    * future, until a compaction ([[optimize]]) applies and drops it —
+    * so [[append]] refuses keys in the outstanding delete set
+    * (resurrection needs a compaction or a merge first); its guard
+    * reads the same bounds, against the staged files'.
+    * [[mergeCoW]]/[[mergeCoWKeys]] SEQUENCE outstanding deletes when
+    * the merge key-set IS the delete column-set — single column or
+    * whole tuple alike (rewrites read through the delete set, changed
+    * keys leave it, survivors carry or consolidate — an upsert is
+    * therefore the keyed resurrection path); a merge on a DIFFERENT
+    * column-set cannot reconcile the two key spaces and is rejected
+    * loudly instead of wrong. */
   private val DeleteKey = "deletecol"
   /** TRANSACTIONAL WRITER MARKERS (Delta's `txn` action shape): a
     * `#txn-<appId>=<version>` header records the highest version an
@@ -597,8 +640,7 @@ object ManifestTable {
                 version: Option[Int] = None)
       : Seq[(String, Option[(Long, Long)], Option[Long], Option[Long])] =
     resolve(spark, root, version).dataEntries.map(e =>
-      (e.rel, for (a <- e.lo; b <- e.hi) yield (a, b), Some(e.rows),
-        Some(e.bytes)))
+      (e.rel, e.bounds, Some(e.rows), Some(e.bytes)))
 
   /** The table's row count FROM MANIFEST METADATA ALONE — no data file
     * is opened, the answer a format's statistics exist for. None under
@@ -834,10 +876,14 @@ object ManifestTable {
     * column, rather than stamping guessed bounds. Chunks of an all-null
     * column carry no min/max but a set null count — they contribute
     * nothing. Zero-row files are omitted from the map — the caller drops
-    * them from the manifest. */
+    * them from the manifest. `nullNames` (any type) are summed into the
+    * file's null count: None when a chunk of one carries no null count
+    * (parquet drops the whole statistics block of an oversized binary
+    * value), so the caller must scan to know. */
   private def footerStats(fs: FileSystem, dir: Path, names: Seq[String],
-                          statNames: Seq[String])
-      : Map[String, (Seq[Option[(Long, Long)]], Long)] = {
+                          statNames: Seq[String],
+                          nullNames: Seq[String] = Seq.empty)
+      : Map[String, FileFooter] = {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
     import org.apache.parquet.schema.LogicalTypeAnnotation
     def servable(pt: org.apache.parquet.schema.PrimitiveType): Boolean =
@@ -860,7 +906,7 @@ object ManifestTable {
       case other => throw new IllegalStateException(
         s"unexpected footer stat type ${other.getClass}")
     }
-    val out = Map.newBuilder[String, (Seq[Option[(Long, Long)]], Long)]
+    val out = Map.newBuilder[String, FileFooter]
     for (name <- names) {
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
@@ -872,14 +918,17 @@ object ManifestTable {
         val rows = blocks.map(_.getRowCount).sum
         if (rows > 0) {
           val fileSchema = footer.getFileMetaData.getSchema
+          def chunksOf(k: String) = for (b <- blocks;
+              cc <- b.getColumns.asScala
+              if cc.getPath.size == 1 && cc.getPath.toArray.head == k)
+            yield cc
           val pairs: Seq[Option[(Long, Long)]] = statNames.map { k =>
             def unservable(why: String) = new IllegalStateException(
               s"stats column $k of ${new Path(dir, name)}: $why")
             if (!fileSchema.containsField(k))
               throw unservable("not a top-level column of the file")
             var lo = Long.MaxValue; var hi = Long.MinValue; var seen = false
-            for (b <- blocks; cc <- b.getColumns.asScala
-                 if cc.getPath.size == 1 && cc.getPath.toArray.head == k) {
+            for (cc <- chunksOf(k)) {
               if (!servable(cc.getPrimitiveType))
                 throw unservable(s"footer type ${cc.getPrimitiveType} " +
                   "is not signed INT32/INT64 or INT64 TIMESTAMP(MICROS)")
@@ -896,11 +945,39 @@ object ManifestTable {
             }
             if (seen) Some((lo, hi)) else None
           }
-          out += name -> ((pairs, rows))
+          // one chunk per row group, or the column is not a top-level
+          // primitive (a nested column counts nulls only at its leaves)
+          val nulls = sumKnown(nullNames.map { k =>
+            val cs = chunksOf(k)
+            if (cs.size != blocks.size) None
+            else sumKnown(cs.map(cc => Option(cc.getStatistics)
+              .filter(_.isNumNullsSet).map(_.getNumNulls)))
+          })
+          out += name -> FileFooter(pairs, rows, nulls)
         }
       } finally reader.close()
     }
     out.result()
+  }
+
+  /** The sum of `xs`, or None when one is unknown. */
+  private def sumKnown(xs: Iterable[Option[Long]]): Option[Long] =
+    xs.foldLeft(Option(0L))((a, x) => for (p <- a; q <- x) yield p + q)
+
+  /** One staged file's footer facts (see [[footerStats]]). */
+  private case class FileFooter(pairs: Seq[Option[(Long, Long)]], rows: Long,
+                                nulls: Option[Long])
+
+  /** A staged commit dir: its manifest entry lines, and the null count
+    * of [[stage]]'s `nullCols` summed over its files (None: unknown). */
+  private case class Staged(dir: Path, lines: Seq[String],
+                            nulls: Option[Long]) {
+    /** Remove the dir of a commit that will not happen. */
+    def discard(spark: SparkSession): Unit = fsOf(spark, dir).delete(dir, true)
+    /** `check`, discarding the dir when it throws: a refused commit
+      * leaves nothing behind. */
+    def orDiscard(spark: SparkSession)(check: => Unit): Unit =
+      try check catch { case e: Throwable => discard(spark); throw e }
   }
 
   /** Write `df`'s rows as immutable files under a fresh commit subdir and
@@ -910,14 +987,15 @@ object ManifestTable {
     * `boundsCol` fills the per-file [lo, hi] key bounds, `statsCols`
     * adds one extra [lo, hi] pair per column (format v4), `bloomCols`
     * one per-file Bloom filter per column in the commit dir's sidecars
-    * (format v5). */
+    * (format v5), `nullCols` the staged null count (from the footers). */
   private def stage(spark: SparkSession, root: String,
                     write: String => Unit,
                     allowEmpty: Boolean = false,
                     boundsCol: Option[String] = None,
                     statsCols: Seq[String] = Seq.empty,
                     bloomCols: Seq[String] = Seq.empty,
-                    relPrefix: String = "data"): Seq[String] = {
+                    nullCols: Seq[String] = Seq.empty,
+                    relPrefix: String = "data"): Staged = {
     val rel = s"$relPrefix/c-${UUID.randomUUID().toString.take(12)}"
     val dir = new Path(root, rel)
     write(dir.toString)
@@ -926,7 +1004,7 @@ object ManifestTable {
       .filter(f => f.isFile && !f.getPath.getName.startsWith("_"))
       .map(f => f.getPath.getName -> f.getLen).toMap
     require(allowEmpty || staged.nonEmpty, "commit staged zero data files")
-    if (staged.isEmpty) return Seq.empty
+    if (staged.isEmpty) return Staged(dir, Seq.empty, Some(0L))
     // per-file stats for the manifest (formats v3/v4), taken from the
     // parquet FOOTERS the write just produced (optimization guide §1/§6
     // — the footers already hold exact typed min/max and row counts, so
@@ -940,8 +1018,8 @@ object ManifestTable {
     // (ManifestFooterStatsSpec pins the equality). The callers reject
     // non-integral stat columns before writing.
     lazy val justWritten = spark.read.parquet(dir.toString)
-    val perFile: Map[String, (Seq[Option[(Long, Long)]], Long)] =
-      footerStats(fs, dir, staged.keys.toSeq, boundsCol.toSeq ++ statsCols)
+    val perFile: Map[String, FileFooter] = footerStats(fs, dir,
+      staged.keys.toSeq, boundsCol.toSeq ++ statsCols, nullCols)
     // format v5: one Bloom filter per file per declared column. TWO
     // more passes reading only the bloom columns: a per-file DISTINCT
     // count (a filter holds a SET — sizing by row count would pay the
@@ -992,7 +1070,7 @@ object ManifestTable {
     }
     val lines = staged.toSeq.sortBy(_._1).flatMap { case (name, bytes) =>
       perFile.get(name) match {
-        case Some((pairs, n)) => Some(entryOf(name, bytes, pairs, n).line)
+        case Some(f) => Some(entryOf(name, bytes, f.pairs, f.rows).line)
         // ZERO rows (no group at all): a writer task that got an empty
         // partition — the file contributes nothing, drop it from the
         // manifest rather than carrying an unprunable line
@@ -1002,10 +1080,11 @@ object ManifestTable {
     // an all-empty write (zero rows total) must NOT silently commit a
     // zero-entry manifest: keep the raw file list (schema preserved,
     // rows stamped 0) so the table stays readable as a zero-row relation
-    if (lines.isEmpty)
-      staged.toSeq.sortBy(_._1).map { case (name, bytes) =>
-        Entry(s"$rel/$name", None, None, 0L, bytes).line }
-    else lines
+    Staged(dir,
+      if (lines.nonEmpty) lines
+      else staged.toSeq.sortBy(_._1).map { case (name, bytes) =>
+        Entry(s"$rel/$name", None, None, 0L, bytes).line },
+      sumKnown(perFile.values.map(_.nulls)))
   }
 
   /** In-process serialization of the check-then-rename window: the
@@ -1122,6 +1201,7 @@ object ManifestTable {
     val dfOut = alignToSchema(df, outSchema)
     val staged = stage(spark, root, dir => dfOut.write.parquet(dir),
       boundsCol = boundsCol, statsCols = statsCols, bloomCols = bloomCols)
+      .lines
     val headers = boundsHeader(boundsCol) ++
       colsHeader(StatsKey, statsCols) ++
       colsHeader(BloomKey, bloomCols) +
@@ -1219,25 +1299,24 @@ object ManifestTable {
         (e, e.fields.length.toLong)
     }
     val (stagedSchema, _) = evolve(base)
-    // RESURRECTION GUARD (format v6) + CHECK constraints, validated
-    // against a SPECIFIC base — the commit loop re-runs this whenever
-    // it lands on a base OTHER than the one validated (a racing
-    // delete/addConstraint between validation and commit must not slip
+    // CHECK constraints gate `df` BEFORE staging (fail fast, no orphan
+    // files). The RESURRECTION GUARD (format v6) runs AFTER staging, on
+    // the staged files: their footer bounds usually prove it with no
+    // job (Snapshot.requireNoDeletedKeys), and a failed guard discards
+    // the staged dir, so nothing is committed or left behind. Both hold
+    // against a SPECIFIC base — the commit loop re-runs them whenever it
+    // lands on a base OTHER than the one checked (a racing
+    // delete/addConstraint between check and commit must not slip
     // pre-deleted or violating rows in: TOCTOU-safe). The evolution
     // contract above already requires `df` to carry every table column,
     // the delete columns among them.
-    def validateAgainst(s: Snapshot): Unit = {
-      s.requireNoDeletedKeys(spark, df,
-        s"append to $root would resurrect equality-deleted " +
-          s"(${s.deleteCols.mkString(", ")}) tuples — the delete is " +
-          "global until compacted; run optimize first, then append")
+    def constraintsHold(s: Snapshot): Unit =
       validateConstraints(df, s.constraints, s"append to $root")
-    }
-    base.foreach(validateAgainst)
-    var validatedBase = base.map(_.version)
+    base.foreach(constraintsHold)
     val staged = stage(spark, root,
       dir => alignToSchema(df, stagedSchema).write.parquet(dir),
       boundsCol = effBounds, bloomCols = effBloom)
+    var validated: Option[Int] = None // the base the staged files passed
     var attempt = 0
     while (attempt < MaxCommitAttempts) {
       if (attempt > 0) base = resolveOption(spark, root) // a lost race
@@ -1251,18 +1330,24 @@ object ManifestTable {
         throw new java.util.ConcurrentModificationException(
           s"append to $root raced a schema change (field ids " +
             "reassigned under the staged files); rerun the append")
-      if (base.map(_.version) != validatedBase) {
-        base.foreach(validateAgainst)
-        validatedBase = base.map(_.version)
-      }
       val h = base.flatMap(_.boundsCol).orElse(effBounds)
       // the base header governs the combined manifest: staged lines
       // were stamped for effBounds, so strip their bounds (stats stay)
       // if a racing commit changed the table's bounds column underneath
       val stagedOut =
-        if (effBounds.isEmpty || h == effBounds) staged
-        else staged.map(l =>
-          parseEntry(l).fold(l)(_.copy(lo = None, hi = None).line))
+        if (effBounds.isEmpty || h == effBounds) staged.lines
+        else withoutBounds(staged.lines)
+      base.filterNot(s => validated.contains(s.version)).foreach { s =>
+        staged.orDiscard(spark) {
+          if (attempt > 0) constraintsHold(s) // a newer base than checked
+          s.requireNoDeletedKeys(spark, stagedOut.flatMap(parseEntry),
+            stagedSchema, s"append to $root would resurrect " +
+              s"equality-deleted (${s.deleteCols.mkString(", ")}) tuples" +
+              " — the delete is global until compacted; run optimize " +
+              "first, then append")
+        }
+        validated = Some(s.version)
+      }
       val baseLines = base.map(_.entryLines).getOrElse(Seq.empty)
       val v = base.fold(0)(_.version) + 1
       val bh = base.map(_.headers).getOrElse(Map.empty[String, String])
@@ -1349,15 +1434,25 @@ object ManifestTable {
       s"table $root already carries equality deletes on " +
         s"(${base.deleteCols.mkString(", ")}); one delete column-set per " +
         s"table (got ${keyCols.mkString(", ")})")
+    // ONE job: on a single partition `distinct` plans no exchange. The
+    // dedup stays — the change feed emits each delete row as a 'delete'
     val delKeys = keys.select(keyCols.map(k =>
-      col(k).cast(base.schema(k).dataType).as(k)): _*).distinct()
-    require(delKeys.where(keyCols.map(col(_).isNull).reduce(_ || _))
-      .take(1).isEmpty,
+      col(k).cast(base.schema(k).dataType).as(k)): _*)
+      .coalesce(1).distinct()
+    // the delete line carries the leading key's [lo, hi] when that is
+    // the table's bounds column: readers and the append guard skip
+    // the delete files whose range misses theirs (Snapshot.deletesOver)
+    val stampCol = base.boundsCol.filter(_ == keyCols.head)
+    val staged = stage(spark, root, dir => delKeys.write.parquet(dir),
+      boundsCol = stampCol, nullCols = keyCols, relPrefix = "deletes")
+    // the null-key guard from the staged footers' null counts; a scan
+    // only when a footer does not carry them
+    val nullFree = staged.nulls.map(_ == 0L).getOrElse(
+      readFiles(spark, Seq(staged.dir.toString), delKeys.schema)
+        .where(keyCols.map(col(_).isNull).reduce(_ || _)).take(1).isEmpty)
+    staged.orDiscard(spark)(require(nullFree,
       "null keys cannot be equality-deleted (the anti-join would " +
-        "never match them)")
-    val staged = stage(spark, root,
-      dir => delKeys.coalesce(1).write.parquet(dir),
-      relPrefix = "deletes")
+        "never match them)"))
     val fs = fsOf(spark, new Path(root))
     var attempt = 0
     while (attempt < MaxCommitAttempts) {
@@ -1367,8 +1462,10 @@ object ManifestTable {
           s"a concurrent commit set the delete columns of $root to " +
             base.deleteCols.mkString(", "))
       }
-      if (tryCommit(fs, root, base.version + 1,
-          base.entryLines ++ staged,
+      val lines =
+        if (stampCol.isEmpty || base.boundsCol == stampCol) staged.lines
+        else withoutBounds(staged.lines)
+      if (tryCommit(fs, root, base.version + 1, base.entryLines ++ lines,
           base.headers + (DeleteKey -> keyCols.mkString(",")) +
             (KindKey -> "delete")))
         return base.version + 1
@@ -1556,7 +1653,7 @@ object ManifestTable {
         .repartitionByRange(targetFiles, sortKey)
         .sortWithinPartitions(sortKey)
         .write.parquet(dir), boundsCol = boundsCol,
-      statsCols = statsCols, bloomCols = bloomCs)
+      statsCols = statsCols, bloomCols = bloomCs).lines
     val headers = boundsHeader(boundsCol) ++
       colsHeader(BloomKey, bloomCs) ++ colsHeader(StatsKey, statsCols) ++
       carriedHeaders(base.headers) + (SchemaKey -> base.schema.json) +
@@ -1977,9 +2074,6 @@ object ManifestTable {
         s"schema exactly (${stored.fieldNames.mkString(", ")}) — " +
         "branch-side evolution is not supported; evolve on main " +
         "and re-branch")
-    head.requireNoDeletedKeys(spark, df,
-      s"append to branch $name of $root would resurrect " +
-        s"equality-deleted (${head.deleteCols.mkString(", ")}) tuples")
     validateConstraints(df, head.constraints,
       s"append to branch $name of $root")
     val effBounds = head.boundsCol.filter(b =>
@@ -1989,7 +2083,11 @@ object ManifestTable {
     val staged = stage(spark, root,
       dir => alignToSchema(df, stored).write.parquet(dir),
       boundsCol = effBounds, bloomCols = effBloom)
-    commitNext(spark, head, head.entryLines ++ staged,
+    staged.orDiscard(spark)(head.requireNoDeletedKeys(spark,
+      staged.lines.flatMap(parseEntry), stored,
+      s"append to branch $name of $root would resurrect " +
+        s"equality-deleted (${head.deleteCols.mkString(", ")}) tuples"))
+    commitNext(spark, head, head.entryLines ++ staged.lines,
       head.headers + (KindKey -> "append"),
       s"append to branch $name of $root")
   }
@@ -2307,78 +2405,93 @@ object ManifestTable {
       s"version ${m.version} of $root lists no data files; " +
         "use overwrite to (re)populate an emptied table")
     val tableSchema = m.schema
-    // not distinct: every reader is a semi/anti join, a set or the
-    // delete probe. The LAZY checkpoint is filled by the first job that
-    // scans it (the stab), so a computed frame is evaluated once.
+    // not distinct: every reader is a semi/anti join or a set. The
+    // LAZY checkpoint is filled by the first job that scans it (the
+    // stab), so a computed frame is evaluated once.
     val changedKeys = removeKeys.select(keyCols.map(col): _*)
       .unionByName(upserts.select(keyCols.map(col): _*))
       .localCheckpoint(eager = false)
-    // null keys cannot be merged: the anti-join would never match them
-    // (SQL null semantics), silently appending duplicates — fail fast.
-    // The probe is FOLDED into the interval-stab job below when the
-    // table has bounded entries (one pass over the checkpointed keys
-    // answers both; a dedicated job otherwise) — every merge commit in
-    // the engine pays this path, so one job here is one job per
-    // commit, suite-wide.
+    // delete sequencing: the outstanding delete keys (delta-sized) for
+    // the stab, the rewrite filter and the consolidation
+    val delKeys: Option[DataFrame] =
+      if (m.deleteFiles.isEmpty) None else Some(m.deleteKeys(spark))
     def nullKeyError(): Nothing = throw new IllegalArgumentException(
       s"mergeCoW: null (${keyCols.mkString(", ")}) in removeKeys/" +
         "upserts is unsupported (an upsert of a null key could never " +
         "replace its row)")
-    // (1) bounded entries: interval stabbing of each changed key
-    // against the broadcast [lo, hi] file bounds — delta-sized work,
-    // zero data-file IO. Files sorted by lo; ranges may overlap
-    // (appends), so the backward walk stops on the PREFIX-MAX of hi.
+    // (1) THE STAB: ONE pass over the changed keys, no shuffle, answers
+    // three questions — every merge commit in the engine pays it, so
+    // one job here is one job per commit, suite-wide:
+    //  - a null key? Unsupported: the anti-join would never match it
+    //    (SQL null semantics), silently appending duplicates;
+    //  - is a changed key an outstanding delete key? The changed keys
+    //    are left-outer joined to the (broadcast) delete keys;
+    //  - which bounded entries hold a changed key? Interval stabbing of
+    //    each key, in its stats unit (epoch MICROS for a timestamp),
+    //    against the broadcast [lo, hi] file bounds — delta-sized work,
+    //    zero data-file IO. Files sorted by lo; ranges may overlap
+    //    (appends), so the backward walk stops on the PREFIX-MAX of hi.
     val (bounded, unbounded) =
       entries.partition(e => e.lo.isDefined && e.hi.isDefined)
-    val boundedAffected: Set[String] = if (bounded.isEmpty) {
-      if (changedKeys.where(keyCols.map(col(_).isNull).reduce(_ || _))
-          .take(1).nonEmpty) nullKeyError()
-      Set.empty
-    } else {
-      val sorted = bounded.sortBy(_.lo.get)
-      val bcLo = spark.sparkContext.broadcast(sorted.map(_.lo.get).toArray)
-      val bcHi = spark.sparkContext.broadcast(sorted.map(_.hi.get).toArray)
-      val bcPm = spark.sparkContext.broadcast(
-        sorted.map(_.hi.get).scanLeft(Long.MinValue)(math.max).drop(1).toArray)
-      val bcRel = spark.sparkContext.broadcast(sorted.map(_.rel).toArray)
-      // "\t" can never be a staged rel (UUID alphabet) — safe sentinel
-      // for "a null key was seen in this partition"
-      val nullMark = "\t"
-      // ONE job, no shuffle: each partition emits its SET of hit rels
-      // and the driver's toSet merges them
-      val stabbed = changedKeys.select(
-          keyCols.map(col(_).isNull).reduce(_ || _).as("_n"),
-          col(keyCols.head).cast("long").as("_k"))
-        .mapPartitions { it =>
-          val lo = bcLo.value; val hi = bcHi.value
-          val pm = bcPm.value; val rel = bcRel.value
-          val hit = scala.collection.mutable.HashSet.empty[String]
-          it.foreach { row =>
-            if (row.getBoolean(0)) hit += nullMark
-            else {
-              val k = row.getLong(1)
-              // last file with lo <= k, then walk back while any
-              // earlier file can still reach k (prefix-max hi >= k)
-              var a = 0; var b = lo.length - 1; var idx = -1
-              if (lo(0) <= k) {
-                while (a < b) {
-                  val mid = (a + b + 1) >>> 1
-                  if (lo(mid) <= k) a = mid else b = mid - 1
-                }
-                idx = a
+    val sorted = bounded.sortBy(_.lo.get)
+    val bcLo = spark.sparkContext.broadcast(sorted.map(_.lo.get).toArray)
+    val bcHi = spark.sparkContext.broadcast(sorted.map(_.hi.get).toArray)
+    val bcPm = spark.sparkContext.broadcast(
+      sorted.map(_.hi.get).scanLeft(Long.MinValue)(math.max).drop(1).toArray)
+    val bcRel = spark.sparkContext.broadcast(sorted.map(_.rel).toArray)
+    // "\t" and "\t\t" can never be a staged rel (UUID alphabet) — safe
+    // sentinels for "a null key / a delete key was seen in this
+    // partition"
+    val nullMark = "\t"; val deleteMark = "\t\t"
+    val deleted = "__graft_deleted" // no collision with table cols
+    val probed = delKeys.fold(changedKeys.withColumn(deleted, lit(false)))(
+      dk => changedKeys.join(dk.withColumn(deleted, lit(true)), keyCols,
+        "left_outer"))
+    // each partition emits its SET of hit rels and marks; the driver's
+    // toSet merges them. The count of changed keys sizes the broadcasts
+    // below: the plan's estimate of a computed frame (a join's output,
+    // say) can be off by orders of magnitude
+    val changedRows = spark.sparkContext.longAccumulator
+    val stabbed = probed.select(
+        keyCols.map(col(_).isNull).reduce(_ || _).as("_n"),
+        coalesce(col(deleted), lit(false)).as("_d"),
+        (if (sorted.isEmpty) lit(0L)
+         else if (changedKeys.schema(keyCols.head).dataType == TimestampType)
+           unix_micros(col(keyCols.head))
+         else col(keyCols.head).cast("long")).as("_k"))
+      .mapPartitions { it =>
+        val lo = bcLo.value; val hi = bcHi.value
+        val pm = bcPm.value; val rel = bcRel.value
+        val hit = scala.collection.mutable.HashSet.empty[String]
+        var n = 0L
+        it.foreach { row =>
+          n += 1
+          if (row.getBoolean(0)) hit += nullMark
+          else {
+            if (row.getBoolean(1)) hit += deleteMark
+            val k = row.getLong(2)
+            // last file with lo <= k, then walk back while any earlier
+            // file can still reach k (prefix-max hi >= k)
+            if (lo.nonEmpty && lo(0) <= k) {
+              var a = 0; var b = lo.length - 1
+              while (a < b) {
+                val mid = (a + b + 1) >>> 1
+                if (lo(mid) <= k) a = mid else b = mid - 1
               }
-              var i = idx
+              var i = a
               while (i >= 0 && pm(i) >= k) {
                 if (hi(i) >= k) hit += rel(i)
                 i -= 1
               }
             }
           }
-          hit.iterator
-        }.collect().toSet
-      if (stabbed.contains(nullMark)) nullKeyError()
-      stabbed - nullMark
-    }
+        }
+        changedRows.add(n)
+        hit.iterator
+      }.collect().toSet
+    if (stabbed.contains(nullMark)) nullKeyError()
+    val touchesDeletes = stabbed.contains(deleteMark)
+    val boundedAffected = stabbed - nullMark - deleteMark
     // (2) unbounded entries: key-column-only scan of just those files
     val unboundedAffected: Set[String] = if (unbounded.isEmpty) Set.empty
     else {
@@ -2430,10 +2543,6 @@ object ManifestTable {
     val headerMatches = m.boundsCol.contains(keyCols.head)
     val carryE = (if (headerMatches) m.dataEntries else entries)
       .filterNot(e => affectedRels.contains(e.rel))
-    // delete sequencing: the outstanding delete keys (delta-sized) for
-    // the rewrite filter, the overlap probe and the consolidation
-    val delKeys: Option[DataFrame] =
-      if (m.deleteFiles.isEmpty) None else Some(m.deleteKeys(spark))
     // align the upserts to the table's column order — and REJECT an
     // upsert that carries columns the table lacks: silently dropping
     // them would lose data (widen the schema via append/overwrite first)
@@ -2447,18 +2556,28 @@ object ManifestTable {
     val up = upserts.select(tableCols.map(col): _*)
     // CHECK constraints gate the upserts BEFORE any rewrite is staged
     validateConstraints(up, m.constraints, s"mergeCoW upserts into $root")
-    // surviving rows of the affected files (neither suppressed by an
+    // key sets of `rows` rows under the auto-broadcast threshold, at
+    // Spark's per-row size estimate, are broadcast explicitly: planned
+    // as a sort-merge join instead, every affected row is shuffled
+    // before the adaptive planner sees how small the key side is
+    val keyRowBytes = 8 + keyCols.map(tableSchema(_).dataType.defaultSize).sum
+    def broadcastIfSmall(keys: DataFrame, rows: Long): DataFrame =
+      if (rows * keyRowBytes <= spark.sessionState.conf
+          .autoBroadcastJoinThreshold) broadcast(keys) else keys
+    // surviving rows of the affected files — neither suppressed by an
     // outstanding delete, nor removed, nor about to be replaced by an
-    // upsert of the same key) + the upsert rows
+    // upsert of the same key: ONE anti-join against the union of the
+    // delete keys and the changed keys — plus the upsert rows
     val rewritten =
-      if (rewriteE.nonEmpty) {
-        val affectedRows = readFiles(spark, rewriteE.map(e =>
+      if (rewriteE.nonEmpty)
+        readFiles(spark, rewriteE.map(e =>
             new Path(root, e.rel).toString), tableSchema)
-        delKeys.map(dk => affectedRows.join(dk, keyCols, "left_anti"))
-          .getOrElse(affectedRows)
-          .join(changedKeys, keyCols, "left_anti")
+          .join(broadcastIfSmall(
+              delKeys.fold(changedKeys)(_.unionByName(changedKeys)),
+              changedRows.value + m.deleteEntries.map(_.rows).sum),
+            keyCols, "left_anti")
           .unionByName(up)
-      } else up
+      else up
     // a pure delete can stage zero rows — the new manifest is then the
     // carried files alone. The rewrite is bounds-stamped (for integral
     // keys — others degrade to stats-only lines), so the next merge on
@@ -2473,31 +2592,24 @@ object ManifestTable {
     // upsert frames come from user DataFrames with no id metadata
     val staged = stage(spark, root,
       dir => alignToSchema(rewritten, tableSchema).write.parquet(dir),
-      allowEmpty = true, boundsCol = stampCol, bloomCols = bloomCs)
+      allowEmpty = true, boundsCol = stampCol, bloomCols = bloomCs).lines
     // delete sequencing, write side: changed keys leave the delete set
-    // — carry the delete files VERBATIM when the merge touched none of
-    // their keys (zero IO), else consolidate the surviving keys into
-    // one fresh delta-sized delete file (the old files stay on disk
-    // for time travel until vacuumed)
+    // — carry the delete lines VERBATIM when the stab saw none of their
+    // keys change (zero IO), else write the surviving keys, once each,
+    // into one fresh delta-sized delete file (the old files stay on
+    // disk for time travel until vacuumed). No survivor: no delete line
+    // — the zero-row file is dropped, not listed.
     val deleteLines: Seq[String] = delKeys match {
-      case None => Seq.empty
-      case Some(dk) =>
-        // ONE probe job for both decisions (touched? anything left?),
-        // exact with duplicates on either side: a delete row matching
-        // n changed keys adds n to both counts, an unmatched one adds 1
-        // to _n only — touched == 0 iff no delete key changed, and
-        // total == touched iff every one did
-        val probe = dk.join(
-            changedKeys.withColumn("__m", lit(1)), keyCols, "left_outer")
-          .agg(count(lit(1)).as("_n"), count(col("__m")).as("_touched"))
-          .collect()(0)
-        val total = probe.getLong(0); val touched = probe.getLong(1)
-        if (touched == 0) m.deleteEntries.map(_.line)
-        else if (total == touched) Seq.empty
-        else stage(spark, root,
-          dir => dk.join(changedKeys, keyCols, "left_anti").distinct()
-            .coalesce(1).write.parquet(dir),
-          relPrefix = "deletes")
+      case Some(dk) if touchesDeletes =>
+        val survivors = stage(spark, root,
+          dir => dk.join(broadcastIfSmall(changedKeys, changedRows.value),
+              keyCols, "left_anti").coalesce(1).distinct().write.parquet(dir),
+          allowEmpty = true, boundsCol = stampCol.filter(c =>
+            isIntegral(tableSchema(c).dataType)), relPrefix = "deletes")
+        val kept = survivors.lines.filter(parseEntry(_).exists(_.rows > 0))
+        if (kept.isEmpty) survivors.discard(spark)
+        kept
+      case _ => m.deleteEntries.map(_.line)
     }
     // a merge that would empty the table entirely (full-table delete
     // whose rewrite staged zero files) must not brick it with a
@@ -2617,7 +2729,7 @@ object ManifestTable {
     val fileTag = "__graft_input_file" // no collision with table cols
     val snap = s.applyDeletes(spark,
       readFiles(spark, data.map(s.pathOf), s.schema)
-        .withColumn(fileTag, input_file_name()))
+        .withColumn(fileTag, input_file_name()), data)
     val affectedRels = snap.where(predicate)
       .select(fileTag).distinct()
       .collect().flatMap(r => // O(files) rows — bounded collect
@@ -2631,18 +2743,6 @@ object ManifestTable {
       transform(s.scan(spark, e => affectedRels.contains(e.rel), None))
     if (validateCheck)
       validateConstraints(rewritten, s.constraints, s"rewrite of $root")
-    // RESURRECTION GUARD, rewrite-side: an assignment that SETs a
-    // delete-key column can write a suppressed key INTO the rewritten
-    // rows — they would silently vanish from every read (the delete
-    // files carry verbatim below). The same guard append runs on
-    // incoming rows, run on the rewritten output exactly when an
-    // assignment targets a delete-key column (delta×affected-sized).
-    if (assignedCols.exists(s.deleteCols.contains))
-      s.requireNoDeletedKeys(spark, rewritten,
-        s"rewrite of $root would SET (${s.deleteCols.mkString(", ")}) " +
-          "to equality-deleted key(s) — the rewritten rows would be " +
-          "suppressed by the outstanding delete set on every read; " +
-          "run optimize first, or assign a non-deleted key")
     val stampCol = s.boundsCol.filter(k =>
       rewritten.schema.fieldNames.contains(k) &&
         isIntegral(rewritten.schema(k).dataType))
@@ -2655,13 +2755,26 @@ object ManifestTable {
       boundsCol = stampCol,
       statsCols = s.statsCols.filter(stampable(rewritten.schema, _)),
       bloomCols = s.bloomCols.filter(stampable(rewritten.schema, _)))
-    require(carryE.nonEmpty || staged.nonEmpty,
+    // RESURRECTION GUARD, rewrite-side: an assignment that SETs a
+    // delete-key column can write a suppressed key INTO the rewritten
+    // rows — they would silently vanish from every read (the delete
+    // files carry verbatim below). The same guard append runs on its
+    // staged files, run on the staged rewrite exactly when an
+    // assignment targets a delete-key column (delta×affected-sized).
+    if (assignedCols.exists(s.deleteCols.contains))
+      staged.orDiscard(spark)(s.requireNoDeletedKeys(spark,
+        staged.lines.flatMap(parseEntry), s.schema,
+        s"rewrite of $root would SET (${s.deleteCols.mkString(", ")}) " +
+          "to equality-deleted key(s) — the rewritten rows would be " +
+          "suppressed by the outstanding delete set on every read; " +
+          "run optimize first, or assign a non-deleted key"))
+    require(carryE.nonEmpty || staged.lines.nonEmpty,
       s"the rewrite would leave $root with no data files; " +
         "use overwrite to truncate a table")
-    val outLines = carryE.map(_.line) ++ staged ++
+    val outLines = carryE.map(_.line) ++ staged.lines ++
       s.deleteEntries.map(_.line)
     (commitNext(spark, s, outLines, s.headers + (KindKey -> kind),
-      s"rewrite of $root"), carryE.size, staged.size)
+      s"rewrite of $root"), carryE.size, staged.lines.size)
   }
 
   /** Q152: the manifest lifecycle end-to-end, hash-gated — build the

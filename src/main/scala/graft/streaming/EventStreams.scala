@@ -35,10 +35,10 @@ object EventStreams {
     *
     * A NOT-YET-POPULATED landing dir (the documented production start
     * order: runner first, files later) has nothing to probe — the probe
-    * failure falls back to the nanos-long schema — a guess: every
-    * shipped input (the sf fixtures, perfbench's generator) writes
-    * TIMESTAMP(MICROS). Invariant either way: ONE ts encoding per landing dir for
-    * the dir's lifetime. The encoding is decided once at plan build, so
+    * failure falls back to the TIMESTAMP(MICROS) schema, the encoding
+    * every shipped input writes (the sf fixtures, perfbench's
+    * generator). Invariant either way: ONE ts encoding per landing dir
+    * for the dir's lifetime. The encoding is decided once at plan build, so
     * a file of the other encoding landing later is misread (nanos long
     * under a TimestampType schema or vice versa), and a checkpointed
     * restart re-probes — a dir whose encoding flipped between phases
@@ -55,8 +55,8 @@ object EventStreams {
     * query; clones share the context and the same filesystem view.
     * The EMPTY-DIR FALLBACK is deliberately NOT cached: it is a guess,
     * not a probe result — a dir that starts empty and later receives
-    * TIMESTAMP(MICROS) files would otherwise be misread 1000x by every
-    * FUTURE plan build, with no way to correct it. Left uncached, the
+    * nanos-long files would otherwise be misread by every FUTURE plan
+    * build, with no way to correct it. Left uncached, the
     * next plan build after files land probes the real encoding; only
     * the plan built while the dir was still empty carries the guess
     * (which is the pre-cache behavior, and the documented start-order
@@ -78,8 +78,7 @@ object EventStreams {
         // fall back ONLY for the documented case — a not-yet-populated
         // landing dir (no glob-matching parquet present). A populated
         // dir that fails to probe (missing ts column, corrupt footer)
-        // must stay a loud plan-build error: defaulting it to
-        // nanos-long would misread every timestamp by 1000x. The
+        // must stay a loud plan-build error, not a guessed encoding. The
         // listing goes through Hadoop's FileSystem so scheme-qualified
         // dirs (file://, hdfs://, s3a://) resolve — a bare
         // java.io.File would see them as nonexistent and silently take
@@ -93,7 +92,7 @@ object EventStreams {
           // RECURSIVE listing: a partitioned landing layout keeps its
           // parquet one level down (date=.../part-*.parquet), and a
           // top-level-only listing would class such a dir "empty" and
-          // silently take the nanos fallback for whatever unrelated
+          // silently take the fallback for whatever unrelated
           // AnalysisException got us here.
           fs.exists(p) && {
             val it = fs.listFiles(p, /* recursive = */ true)
@@ -107,7 +106,7 @@ object EventStreams {
           }
         }.getOrElse(true) // can't list: can't prove empty — stay loud
         if (hasMatchingFiles) throw e
-        else LongType // nothing landed yet: guess the nanos-long encoding
+        else TimestampType // nothing landed yet: the shipped encoding
     })
     val tsIsNanos = probe == LongType
     val schema = StructType(Seq(

@@ -2067,4 +2067,115 @@ class ManifestTableSpec extends SparkSpec {
     assert(heard2.isEmpty,
       s"diagnostic fired on a correctly-clustered table: $heard2")
   }
+
+  /** A 4-file table of keys [0, 400) clustered and bounds-stamped on
+    * `k`, with a string payload `s`. */
+  private def keyedTable(): String = {
+    val root = freshRoot()
+    ManifestTable.overwrite(spark, root,
+      keyRows(0, 400, "v").repartitionByRange(4, col("k"))
+        .sortWithinPartitions("k"),
+      boundsCol = Some("k"))
+    root
+  }
+
+  private def keyRows(from: Long, until: Long, tag: String) =
+    spark.range(from, until, 1, 1).select(col("id").as("k"),
+      concat(lit(tag), col("id").cast("string")).as("s"))
+
+  private def entriesUnder(root: String, dir: String): Set[String] =
+    Option(new java.io.File(root, dir).list()).fold(Set.empty[String])(_.toSet)
+
+  test("resurrection guard after staging: an append whose bounds meet " +
+      "a delete file's but hold no deleted key commits; one holding a " +
+      "deleted key fails unchanged and leaves nothing behind") {
+    val root = keyedTable()
+    ManifestTable.deleteWhereKeyIn(spark, root, "k",
+      spark.range(0, 400, 10, 1).select(col("id").as("k")))
+    // the delete line carries the leading key's bounds
+    assert(ManifestTable.snapshot(spark, root).deleteEntries
+      .map(_.bounds) === Seq(Some((0L, 390L))))
+    // [381, 389] meets [0, 390] but holds no multiple of 10: commits
+    val v = ManifestTable.append(spark, root, keyRows(381, 390, "new"),
+      boundsCol = Some("k"))
+    assert(ManifestTable.read(spark, root).where(col("s").startsWith("new"))
+      .count() === 9)
+    // pruned reads apply the delete file exactly where it can match
+    def ks(df: org.apache.spark.sql.DataFrame) =
+      df.select("k").collect().map(_.getLong(0)).sorted.toSeq
+    assert(ks(ManifestTable.readWhereKeyBetween(spark, root, "k", 375, 395))
+      === ((375L to 395L).filter(_ % 10 != 0) ++ (381L to 389L)).sorted)
+    val rows = ManifestTable.read(spark, root).collect()
+      .map(_.toString).sorted.toSeq
+    val dataDirs = entriesUnder(root, "data")
+    // [375, 384] holds the deleted key 380
+    val ex = intercept[IllegalArgumentException] {
+      ManifestTable.append(spark, root, keyRows(375, 385, "back"),
+        boundsCol = Some("k"))
+    }
+    assert(ex.getMessage === s"requirement failed: append to $root " +
+      "would resurrect equality-deleted (k) tuples — the delete is " +
+      "global until compacted; run optimize first, then append")
+    assert(ManifestTable.currentVersion(spark, root) === Some(v))
+    assert(ManifestTable.read(spark, root).collect().map(_.toString)
+      .sorted.toSeq === rows)
+    assert(entriesUnder(root, "data") === dataDirs,
+      "the refused append left its staged dir behind")
+  }
+
+  test("a null delete key fails unchanged and commits nothing: a long " +
+      "key, and a composite key whose null sits in a string column") {
+    val root = keyedTable()
+    val v = ManifestTable.currentVersion(spark, root)
+    val msg = "requirement failed: null keys cannot be equality-deleted " +
+      "(the anti-join would never match them)"
+    val nullLong = spark.range(0, 5, 1, 1).select(
+      when(col("id") =!= 3, col("id")).as("k"))
+    val exL = intercept[IllegalArgumentException] {
+      ManifestTable.deleteWhereKeyIn(spark, root, "k", nullLong)
+    }
+    assert(exL.getMessage === msg)
+    val nullString = keyRows(0, 5, "v")
+      .withColumn("s", when(col("k") =!= 2, col("s")))
+    val exC = intercept[IllegalArgumentException] {
+      ManifestTable.deleteWhereKeysIn(spark, root, Seq("k", "s"), nullString)
+    }
+    assert(exC.getMessage === msg)
+    assert(ManifestTable.currentVersion(spark, root) === v)
+    assert(ManifestTable.read(spark, root).count() === 400)
+    assert(entriesUnder(root, "deletes").isEmpty,
+      "a refused delete left its staged dir behind")
+  }
+
+  test("a delete input with duplicate keys surfaces each key once in " +
+      "the change feed") {
+    val root = keyedTable()
+    val v = ManifestTable.currentVersion(spark, root).get
+    val dupes = spark.range(0, 50, 10, 2)
+      .union(spark.range(0, 50, 5, 3)).union(spark.range(0, 50, 10, 1))
+      .select(col("id").as("k"))
+    val v2 = ManifestTable.deleteWhereKeyIn(spark, root, "k", dupes)
+    val deleted = ManifestTable.readChangesBetween(spark, root, v, v2)
+      .where(col("_change") === "delete")
+      .select("k").collect().map(_.getLong(0)).sorted.toSeq
+    assert(deleted === (0L until 50L by 5L))
+    assert(ManifestTable.read(spark, root).count() === 390)
+  }
+
+  test("a merge keyed on a timestamp stats column replaces the row it " +
+      "upserts (the stab compares epoch micros with micros bounds)") {
+    val root = freshRoot()
+    val base = spark.range(0, 100, 1, 1).select(
+      timestamp_micros(col("id") * 1000000L + 1600000000000000L).as("ts"),
+      col("id").as("v"))
+    ManifestTable.overwrite(spark, root,
+      base.repartitionByRange(4, col("ts")).sortWithinPartitions("ts"),
+      statsCols = Seq("ts"))
+    val up = base.where(col("v") === 50).withColumn("v", lit(-1L))
+    ManifestTable.mergeCoW(spark, root, "ts", up.select("ts").limit(0), up)
+    val t = up.select("ts").head().getTimestamp(0)
+    assert(ManifestTable.read(spark, root).where(col("ts") === lit(t))
+      .select("v").collect().map(_.getLong(0)).toSeq === Seq(-1L))
+    assert(ManifestTable.read(spark, root).count() === 100)
+  }
 }

@@ -145,37 +145,72 @@ class EventStreamsSpec extends SparkSpec {
     assert(got.distinct.length === got.length)
   }
 
+  /** Land `events` as the single FILE `dir/events.parquet` — the
+    * fixture layout the events glob expects: the Spark write stages to
+    * a scratch dir and the part file moves into place. */
+  private def landEvents(events: org.apache.spark.sql.DataFrame,
+                         dir: String): Unit = {
+    val staging = scratchDir("graft-probe-stage-").toString
+    events.coalesce(1).write.mode("overwrite").parquet(staging)
+    val part = new java.io.File(staging).listFiles()
+      .find(f => f.getName.startsWith("part-") &&
+        f.getName.endsWith(".parquet")).get
+    java.nio.file.Files.move(part.toPath,
+      java.nio.file.Paths.get(s"$dir/events.parquet"))
+    graft.GraftSession.deleteRecursively(new java.io.File(staging))
+  }
+
   test("empty-dir schema fallback is not cached: later files re-probe") {
-    // a landing dir probed while EMPTY takes the nanos-long fallback
-    // for that plan build only — caching the guess would misread every
-    // future build 1000x once differently-encoded files land. After
-    // files arrive, the next plan build must probe the REAL encoding.
+    // a landing dir probed while EMPTY takes the TIMESTAMP(MICROS)
+    // fallback for that plan build only — caching the guess would
+    // misread every future build once differently-encoded files land.
+    // After files arrive, the next plan build must probe the REAL
+    // encoding: here the other one, a nanos-since-epoch LONG ts.
     val dir = scratchDir("graft-probe-").toString
     try {
       val empty = EventStreams.q43StreamIntervalJoin(spark, dir)
       assert(empty.count() === 0, "empty landing dir emitted rows")
-      // land events through Spark's writer: a TimestampType ts column,
-      // NOT the corpus's native nanos-long — the encoding the cached
-      // fallback would get wrong. The landing layout is a single FILE
-      // named events.parquet (the fixture layout the glob expects), so
-      // the Spark write stages to a scratch dir and the part file moves
-      // into place.
-      val staging = scratchDir("graft-probe-stage-").toString
-      Tables.events(spark, sfDir).coalesce(1)
-        .write.mode("overwrite").parquet(staging)
-      val part = new java.io.File(staging).listFiles()
-        .find(f => f.getName.startsWith("part-") &&
-          f.getName.endsWith(".parquet")).get
-      java.nio.file.Files.move(part.toPath,
-        java.nio.file.Paths.get(s"$dir/events.parquet"))
-      graft.GraftSession.deleteRecursively(new java.io.File(staging))
+      landEvents(Tables.events(spark, sfDir)
+        .withColumn("ts", unix_micros(col("ts")) * lit(1000L)), dir)
       val got = EventStreams.q43StreamIntervalJoin(spark, dir)
       val ts = got.select("click_ts").collect().map(_.getString(0))
       assert(ts.nonEmpty, "no joined rows after files landed")
       assert(ts.forall(_.startsWith("20")),
-        s"timestamps misread (nanos fallback applied to non-nanos data): ${ts.head}")
+        s"timestamps misread (micros fallback applied to nanos data): ${ts.head}")
     } finally graft.GraftSession
       .deleteRecursively(new java.io.File(dir))
+  }
+
+  test("a runner started on an empty landing dir reads the " +
+      "TIMESTAMP(MICROS) files that land later") {
+    // the documented start order: the plan is built while the dir is
+    // empty, so its ts encoding is the fallback's, and every file that
+    // lands later is read under it
+    val dir = scratchDir("graft-empty-start-").toString
+    val q = EventStreams.eventsStream(spark, dir).writeStream
+      .format("memory").queryName("events_from_empty_dir")
+      .outputMode("append").start()
+    try {
+      // the shipped fixture file itself (TIMESTAMP(MICROS), not
+      // UTC-adjusted), copied beside the dir and renamed in, so the
+      // running query never lists a half-written file
+      val staged = java.nio.file.Paths.get(
+        scratchDir("graft-empty-stage-").toString, "events.parquet")
+      java.nio.file.Files.copy(
+        java.nio.file.Paths.get(s"$sfDir/events.parquet"), staged)
+      java.nio.file.Files.move(staged,
+        java.nio.file.Paths.get(s"$dir/events.parquet"),
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      q.processAllAvailable()
+      def byId(df: org.apache.spark.sql.DataFrame) = df.select("event_id", "ts")
+        .collect().map(r => r.getLong(0) -> r.getTimestamp(1)).sortBy(_._1).toSeq
+      val got = byId(spark.table("events_from_empty_dir"))
+      assert(got.nonEmpty, "no events read after the file landed")
+      assert(got === byId(Tables.events(spark, sfDir)))
+    } finally {
+      q.stop()
+      graft.GraftSession.deleteRecursively(new java.io.File(dir))
+    }
   }
 
   test("q137 outer stream join: inner subset == q43; unmatched clicks emit nulls") {
