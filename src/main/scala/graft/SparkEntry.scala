@@ -4,9 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.api.SampleJobs
 import graft.operators.{AsofJoin, CurationPipeline, DedupQueries,
-  FuzzyJoin, MultimodalPipeline, ProductQuantization, RangeJoin,
-  ReferenceQueries, RelationalQueries, SimilarityQueries, SkewJoin,
-  SuffixQueries, SuffixRefresh, TextQueries}
+  FuzzyJoin, ManifestQueries, MultimodalPipeline, ProductQuantization,
+  RangeJoin, ReferenceQueries, RelationalQueries, SimilarityQueries,
+  SkewJoin, SqlCatalogQueries, SuffixQueries, SuffixRefresh, TextQueries}
 import graft.sources.{DelimitedSources, PartitionedSink}
 import graft.streaming.EventStreams
 
@@ -335,7 +335,7 @@ object SparkEntry {
     // Morton-clustered events table via ordinary pushed per-column
     // predicates; the output carries the Z-value so the gate pins the
     // interleave arithmetic and the layout round-trip.
-    "q130_zorder_rectangle" -> (graft.sources.ZOrderLayout.q130ZOrderRectangle _),
+    "q130_zorder_rectangle" -> (ManifestQueries.q130ZOrderRectangle _),
     // q131 answers audience-overlap questions (union/intersection
     // distinct counts across event types) entirely in sketch space —
     // one corpus pass builds the KMV sketches, Theta-style combines do
@@ -442,7 +442,7 @@ object SparkEntry {
     // versions — the hash gate pins append-accumulates, optimize-
     // changes-no-row, and history-stays-readable at once.
     "q152_manifest_lifecycle" ->
-      (graft.sources.ManifestTable.q152ManifestLifecycle _),
+      (ManifestQueries.q152ManifestLifecycle _),
     // q153 completes the audio pipeline q61's framing fronted: per
     // overlapping window, Goertzel DFT bins at the integer-twiddle
     // frequencies (DC / quarter band / Nyquist) — recurrence in the
@@ -461,13 +461,13 @@ object SparkEntry {
     // without changed keys carried verbatim into the new version) —
     // the merged table must BE snapshot B row-for-row.
     "q155_manifest_merge" ->
-      (graft.sources.ManifestTable.q155ManifestMerge _),
+      (ManifestQueries.q155ManifestMerge _),
     // q156 gates the manifest bounds' READ side: a range read whose
     // file set comes from the manifest header + per-file [lo, hi]
     // alone — a wrongly-pruned file (missing rows) or an unapplied
     // residual filter (extra rows) fires the hash.
     "q156_manifest_pruned_read" ->
-      (graft.sources.ManifestTable.q156ManifestPrunedRead _),
+      (ManifestQueries.q156ManifestPrunedRead _),
     // q157 is the CDC consumption pattern on the manifest table: q80's
     // shingle refresh rewired to consume a COMMIT RANGE — stale/fresh
     // ids and fresh text come from the changed files of versions
@@ -479,47 +479,47 @@ object SparkEntry {
     // rows read the new column as null — a silent drop, a misresolved
     // old file, or a wrong null-fill fires the hash.
     "q158_schema_evolution" ->
-      (graft.sources.ManifestTable.q158SchemaEvolution _),
+      (ManifestQueries.q158SchemaEvolution _),
     // q159 answers per-version row counts from the manifest's v3 file
     // statistics ALONE (no data file opened) — the metadata-only
     // count(*) a format's stats exist for; the oracle recomputes each
     // version's subset from parquet.
     "q159_manifest_stats" ->
-      (graft.sources.ManifestTable.q159ManifestStats _),
+      (ManifestQueries.q159ManifestStats _),
     // q160 is the CDC read run over a MULTI-commit history: an SCD2
     // dimension folded incrementally from each commit's changed files
     // (close removed/modified, open added/modified, validity in version
     // numbers) — never a snapshot re-diff; the oracle rebuilds the same
     // history independently via gaps-and-islands runs.
     "q160_manifest_scd2" ->
-      (graft.sources.ManifestTable.q160ManifestScd2 _),
+      (ManifestQueries.q160ManifestScd2 _),
     // q161 is q160's history maintained by the RESTARTABLE version-tail
     // runner (ManifestTail): each commit processed exactly once into a
     // persisted v<N> state dir, cursor = newest _SUCCESS-marked state,
     // kill+resume proven by spec — one oracle gates both paths.
     "q161_manifest_tail_scd2" ->
-      (graft.sources.ManifestTable.q161ManifestTailScd2 _),
+      (ManifestQueries.q161ManifestTailScd2 _),
     // q162 is the manifest format's multi-column stats (v4) under the
     // z-order layout: per-file [lo, hi] on BOTH rectangle dimensions,
     // file set decided by readWhereRect from the manifest alone — 2-D
     // skipping before any footer read; spec pins the 2-D set strictly
     // smaller than either single dimension's.
     "q162_zorder_manifest_rect" ->
-      (graft.sources.ZOrderLayout.q162ZOrderManifestRect _),
+      (ManifestQueries.q162ZOrderManifestRect _),
     // q163 is the manifest format's per-file Bloom filters (v5): point
     // lookups on a column the table is NOT clustered by skip from the
     // sidecar filters alone (stats can't — every file's [lo, hi] on a
     // scattered column spans the domain); spec pins the skipping, the
     // oracle pins no-false-negatives.
     "q163_manifest_bloom_point" ->
-      (graft.sources.ManifestTable.q163ManifestBloomPoint _),
+      (ManifestQueries.q163ManifestBloomPoint _),
     // q164 is the manifest table AS A STREAMING SOURCE (version-number
     // offsets, snapshot-then-tail, exactly-once across process deaths);
     // the gated run restarts the checkpointed aggregation between
     // every commit, so the hash compares a thrice-resumed stream
     // against the one-shot batch aggregate.
     "q164_stream_manifest_source" ->
-      (graft.streaming.ManifestStream.q164StreamManifestSource _),
+      (ManifestQueries.q164StreamManifestSource _),
     // q165 is the one-pass table profiler: per-column null/distinct
     // counts + typed integer-exact [lo, hi] facets over lineitem's 11
     // columns (all four facet kinds), hash-gated column by column.
@@ -550,13 +550,13 @@ object SparkEntry {
     // pins the apply-at-read and apply-at-compaction paths to the same
     // filtered aggregate.
     "q169_manifest_equality_delete" ->
-      (graft.sources.ManifestTable.q169ManifestEqualityDelete _),
+      (ManifestQueries.q169ManifestEqualityDelete _),
     // q170 is the CHANGE DATA FEED stream (Delta CDF shape): batches
     // are readChangesBetween rows, so removals stream too — the gate
     // folds the feed (insert anti-join streamed delete keys) back into
     // the table's filtered aggregate across three restarted drains.
     "q170_manifest_change_feed" ->
-      (graft.streaming.ManifestStream.q170ManifestChangeFeed _),
+      (ManifestQueries.q170ManifestChangeFeed _),
     // q171 is the exactly-once STREAMING UPSERT SINK: foreachBatch
     // commits each micro-batch through one CoW merge whose manifest
     // rename atomically lands both the rows and a #txn-<app>=<batch>
@@ -564,7 +564,7 @@ object SparkEntry {
     // batches are no-ops; the gate applies updates to earlier keys
     // across restarted drains and hash-compares last-writer-wins.
     "q171_stream_upsert_sink" ->
-      (graft.streaming.ManifestSink.q171StreamUpsertSink _),
+      (ManifestQueries.q171StreamUpsertSink _),
     // q172 is the point-in-time dimension join (facts enriched with
     // the SCD2 version valid at each fact's own time): SCD2 intervals
     // tile the timeline, so the BETWEEN range join collapses to the
@@ -578,20 +578,20 @@ object SparkEntry {
     // resolves the newest commit at-or-before t — each version's
     // contents hash-gated against the slice definitions.
     "q173_history_time_travel" ->
-      (graft.sources.ManifestTable.q173HistoryTimeTravel _),
+      (ManifestQueries.q173HistoryTimeTravel _),
     // q174 is CHECK constraints: declared over clean data only,
     // enforced on every append/merge before staging (violators
     // rejected loudly, table provably untouched), surviving
     // compaction; final state hash-gated.
     "q174_check_constraints" ->
-      (graft.sources.ManifestTable.q174CheckConstraints _),
+      (ManifestQueries.q174CheckConstraints _),
     // q175 is the SQL surface: a DSv2 TableCatalog over manifest
     // tables (Delta/Iceberg's catalog shape) — the whole query runs
     // through spark.sql, including VERSION AS OF time travel and a
     // pushdown-pruned WHERE branch; vacuumed-version errors and the
     // file skipping itself are GraftCatalogSpec's pins.
     "q175_sql_catalog" ->
-      (graft.sources.GraftCatalog.q175SqlCatalog _),
+      (SqlCatalogQueries.q175SqlCatalog _),
     // q176 closes the CDC loop: a manifest table's change feed (q170's
     // shape, including a delete commit and a delete-sequencing merge)
     // drained per-commit into a SECOND manifest table through the
@@ -599,14 +599,14 @@ object SparkEntry {
     // included) are no-ops; mirror ≡ source asserted, aggregate
     // hash-gated.
     "q176_cdc_apply_sink" ->
-      (graft.streaming.ManifestSink.q176CdcApplySink _),
+      (ManifestQueries.q176CdcApplySink _),
     // q177 is the append tail across interleaved OPTIMIZEs under the
     // skip policy (Delta's skipChangeCommits): rewrite commits' files
     // are ignored, appends arrive exactly once — q164's oracle gates
     // both histories; the default loud failure and the redeliver
     // opt-in are spec-pinned.
     "q177_tail_across_optimize" ->
-      (graft.streaming.ManifestStream.q177TailAcrossOptimize _),
+      (ManifestQueries.q177TailAcrossOptimize _),
     // q178 is the generalized multi-table transaction (ManifestCatalog
     // — SuffixRefresh's catalog-pointer pattern as a reusable
     // primitive, q154 itself migrated onto it): the q160 SCD2 history
@@ -615,52 +615,52 @@ object SparkEntry {
     // rolled back by the next transaction; q160's oracle gates a THIRD
     // maintenance path.
     "q178_catalog_txn_scd2" ->
-      (graft.sources.ManifestCatalog.q178CatalogTxnScd2 _),
+      (ManifestQueries.q178CatalogTxnScd2 _),
     // q181 is metadata tables through SQL (Iceberg's db.t.history
     // shape): per-version metadata row counts off the manifests alone
     // — q159's oracle gates the SQL surface verbatim.
     "q181_sql_metadata_tables" ->
-      (graft.sources.GraftCatalog.q181SqlMetadataTables _),
+      (SqlCatalogQueries.q181SqlMetadataTables _),
     // q182 is writes through SQL: CREATE TABLE, two INSERT INTO
     // commits, one truncating INSERT OVERWRITE — the V1Write fallback
     // onto the same commit protocol; the three written versions read
     // back by VERSION AS OF, hash-gated.
     "q182_sql_writes" ->
-      (graft.sources.GraftCatalog.q182SqlWrites _),
+      (SqlCatalogQueries.q182SqlWrites _),
     // q183 is row-level DELETE through SQL (SupportsDelete onto the
     // CoW deleteWhere rewrite): only fully-translatable predicates
     // accepted, matching files rewritten, everything else carried
     // verbatim — complement hash-gated.
     "q183_sql_delete" ->
-      (graft.sources.GraftCatalog.q183SqlDelete _),
+      (SqlCatalogQueries.q183SqlDelete _),
     // q184 is row-level CoW UPDATE (updateWhere — the redaction
     // shape): matching rows transformed, non-matching rows
     // bit-identical, constraints validated on updated values; whole
     // corpus hash-gated via md5(text).
     "q184_update_where" ->
-      (graft.sources.ManifestTable.q184UpdateWhere _),
+      (ManifestQueries.q184UpdateWhere _),
     // q185 is maintenance procedures through SQL (Spark 4's CALL on a
     // ProcedureCatalog — Iceberg's stored-procedure shape): optimize,
     // restore, vacuum with asserted one-row diagnostics; final table
     // = the restored v1 slice, hash-gated.
     "q185_sql_procedures" ->
-      (graft.sources.GraftCatalog.q185SqlProcedures _),
+      (SqlCatalogQueries.q185SqlProcedures _),
     // q186 is named tags (Iceberg's refs): VERSION AS OF 'tag' through
     // SQL, tags as a vacuum retention floor — the tagged v1 survives a
     // retain=1 vacuum and both branches read hash-gated.
     "q186_sql_tags" ->
-      (graft.sources.GraftCatalog.q186SqlTags _),
+      (SqlCatalogQueries.q186SqlTags _),
     // q187 is COMPOSITE equality deletes (multi-column #deletecol —
     // Iceberg's multi-column shape): rows suppressed only on a WHOLE
     // (orderkey, linenumber) tuple match, O(delta) commit, both
     // regimes (merge-on-read + compacted) under one oracle.
     "q187_composite_delete" ->
-      (graft.sources.ManifestTable.q187CompositeDelete _),
+      (ManifestQueries.q187CompositeDelete _),
     // q188 is CALL system.zorder + the 2-D rectangle through plain SQL
     // WHERE: pushed range filters drive the v4 multi-column manifest
     // skipping — q162's oracle gates the third surface.
     "q188_sql_zorder_rect" ->
-      (graft.sources.GraftCatalog.q188SqlZOrderRect _),
+      (SqlCatalogQueries.q188SqlZOrderRect _),
     // q180 is the approx profiler twin (the q165 scaladoc's 100 TB
     // shape, exercised): approx_count_distinct everywhere, the
     // multi-distinct Expand gone from the plan; rows-only gate (HLL++
@@ -674,14 +674,14 @@ object SparkEntry {
     // consolidate into one fresh delta-sized delete file; final state
     // hash-gated against the rules replayed over raw parquet.
     "q179_merge_over_deletes" ->
-      (graft.sources.ManifestTable.q179MergeOverDeletes _),
+      (ManifestQueries.q179MergeOverDeletes _),
     // q191 is TUPLE-KEYED delete sequencing: q179's three-case merge
     // gate re-run on a q187-shaped composite-delete table — removes,
     // whole-tuple resurrections, and untouched tuples staying
     // suppressed via the consolidated delete file, all at
     // (l_orderkey, l_linenumber) granularity.
     "q191_composite_merge" ->
-      (graft.sources.ManifestTable.q191CompositeMerge _),
+      (ManifestQueries.q191CompositeMerge _),
     // q192 is incremental maintenance of the STORED IVF index: a
     // stale index (missing a shard, polluted with junk ids) refreshes
     // with one O(delta) equality-delete commit + one cell-assigned
@@ -695,20 +695,20 @@ object SparkEntry {
     // rewrite — q184's oracle gates the SQL surface verbatim; the
     // file-pruned pin and rejections are spec-pinned.
     "q189_sql_update" ->
-      (graft.sources.GraftCatalog.q189SqlUpdate _),
+      (SqlCatalogQueries.q189SqlUpdate _),
     // q190 is MERGE INTO through SQL: delete/update/insert actions
     // first-match-wins onto one keyed mergeCoW commit — q155's oracle
     // gates the SQL surface verbatim; cardinality and non-equi
     // rejections are spec-pinned.
     "q190_sql_merge" ->
-      (graft.sources.GraftCatalog.q190SqlMerge _),
+      (SqlCatalogQueries.q190SqlMerge _),
     // q199 is writable branches (write-audit-publish): a merge staged
     // on a branch is invisible to main, audited via readBranch / SQL
     // VERSION AS OF 'branch', then published as one main commit over
     // append-only main movement — the concurrent append survives;
     // conflict rejections + vacuum floors are spec-pinned.
     "q199_branch_wap" ->
-      (graft.sources.ManifestTable.q199BranchWap _),
+      (ManifestQueries.q199BranchWap _),
     // q198 is field-id schema evolution: add → rename → drop as
     // header-only commits over stable column ids (Iceberg's rename
     // semantics on parquet's field-id mechanism), three regimes
@@ -717,26 +717,26 @@ object SparkEntry {
     // rules-replay oracle; header-only pins, the fresh-id re-add rule,
     // and rejections are spec-pinned.
     "q198_field_id_evolution" ->
-      (graft.sources.ManifestTable.q198FieldIdEvolution _),
+      (ManifestQueries.q198FieldIdEvolution _),
     // q197 is streaming reads by TABLE NAME: readStream.table through
     // the catalog onto the v1 manifest source (V2TableWithV1Fallback —
     // Delta's shape), q164's thrice-resumed exactly-once gate re-run
     // by name — q164's oracle verbatim; CDF/options-by-name and the
     // pinned rejection are spec-pinned.
     "q197_stream_table_by_name" ->
-      (graft.sources.GraftCatalog.q197StreamTableByName _),
+      (SqlCatalogQueries.q197StreamTableByName _),
     // q195 is composite-key MERGE INTO through SQL: the ON conjunction
     // folds to the (l_orderkey, l_linenumber) tuple onto mergeCoWKeys'
     // delete-sequencing commit — q191's oracle gates the SQL surface
     // verbatim; mixed-AND rejection is spec-pinned.
     "q195_sql_composite_merge" ->
-      (graft.sources.GraftCatalog.q195SqlCompositeMerge _),
+      (SqlCatalogQueries.q195SqlCompositeMerge _),
     // q196 is WHEN NOT MATCHED BY SOURCE: all three clause families in
     // one statement, the target-side complement folded into the same
     // remove/upsert pair — one atomic commit; the by-source dup-key
     // rejection is spec-pinned.
     "q196_sql_merge_by_source" ->
-      (graft.sources.GraftCatalog.q196SqlMergeBySource _),
+      (SqlCatalogQueries.q196SqlMergeBySource _),
     // q194 is add-column schema evolution through SQL DDL: ALTER TABLE
     // ADD COLUMN widens the committed schema header-only (zero data
     // IO), INSERT INTO lands wider rows, the mixed-file read serves
@@ -744,7 +744,7 @@ object SparkEntry {
     // surface verbatim; rejections + the same-files pin are
     // spec-pinned.
     "q194_sql_add_column" ->
-      (graft.sources.GraftCatalog.q194SqlAddColumn _),
+      (SqlCatalogQueries.q194SqlAddColumn _),
     // q200 is TYPE WIDENING through SQL DDL: ALTER COLUMN int->bigint
     // and float->double as header-only commits (same files, the old
     // narrow physical columns upcast at read), a wide append beside
@@ -753,7 +753,7 @@ object SparkEntry {
     // the oracle replays both stages from raw parquet where no
     // widening ever happened.
     "q200_type_widening" ->
-      (graft.sources.GraftCatalog.q200TypeWidening _),
+      (SqlCatalogQueries.q200TypeWidening _),
     // q193 is N-dimensional Z-order: one optimizeZOrderCols commit
     // rewrites lineitem into the 3-D Morton layout on its independent
     // key triple (l_orderkey, l_partkey, l_suppkey — events' event_id
@@ -762,7 +762,7 @@ object SparkEntry {
     // every dimension from the manifest alone;
     // 3-D-beats-every-2-D-projection is spec-pinned.
     "q193_zorder_3d" ->
-      (graft.sources.ZOrderLayout.q193ZOrder3D _),
+      (ManifestQueries.q193ZOrder3D _),
   )
 
   /** Shared by q162 (Scala rect read on the z-layout) and q188 (the

@@ -332,10 +332,7 @@ object CurationPipeline {
   private[graft] def mergeSnapshotB(spark: SparkSession, root: String,
                                     docs: DataFrame): Unit = {
     import graft.sources.ManifestTable
-    ManifestTable.overwrite(spark, root,
-      docs.repartitionByRange(8, col("doc_id"))
-        .sortWithinPartitions("doc_id"),
-      boundsCol = Some("doc_id"))
+    ManifestTable.overwriteClustered(spark, root, docs, "doc_id", 8)
     ManifestTable.mergeCoW(spark, root, "doc_id",
       docs.where(col("doc_id") % 10 === 7).select("doc_id"),
       snapshotB(docs).where(col("doc_id") % 10 === 3 || col("doc_id") < 0))

@@ -338,13 +338,11 @@ object SimilarityQueries {
     val e = vecs(spark, sfDir)
     val junk = e.where(col("vec_id") % 17 === 0)
       .withColumn("vec_id", col("vec_id") + lit(1000000000L))
-    ManifestTable.overwrite(spark, root,
+    ManifestTable.overwriteClustered(spark, root,
       assignCells(e.where(pmod(col("vec_id"), lit(13)) =!= 0)
           .unionByName(junk), cents)
-        .select(col("cell"), col("vec_id"), col("v"))
-        .repartitionByRange(NumCells, col("cell"))
-        .sortWithinPartitions("cell"),
-      boundsCol = Some("cell"))
+        .select(col("cell"), col("vec_id"), col("v")),
+      "cell", NumCells)
     ManifestTable.deleteWhereKeyIn(spark, root, "vec_id",
       junk.select("vec_id"))
     ManifestTable.append(spark, root,
@@ -360,10 +358,10 @@ object SimilarityQueries {
   def indexRoot(spark: SparkSession, sfDir: String): String = {
     Artifacts.materializeManifest(spark, sfDir, "ivf_index_",
         boundsCol = Some("cell")) {
-      assignCells(vecs(spark, sfDir), kmeansCodebook(spark, sfDir))
-        .select(col("cell"), col("vec_id"), col("v"))
-        .repartitionByRange(NumCells, col("cell"))
-        .sortWithinPartitions("cell")
+      ManifestTable.clustered(
+        assignCells(vecs(spark, sfDir), kmeansCodebook(spark, sfDir))
+          .select(col("cell"), col("vec_id"), col("v")),
+        col("cell"), NumCells)
     }
     Artifacts.manifestRoot(spark, sfDir, "ivf_index_")
   }

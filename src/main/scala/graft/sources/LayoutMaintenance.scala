@@ -20,14 +20,13 @@ import org.apache.spark.sql.functions._
   * Swap discipline, stated honestly: on a plain filesystem directory
   * the delete-then-move window is NON-transactional (a concurrent
   * reader can see a partial table); production storage puts the same
-  * rewrite behind a transactional commit. The engine now ships that
-  * commit: [[ManifestTable.optimize]] runs this same clustered rewrite
-  * behind a manifest-pointer commit (one atomic rename per version, old
-  * version readable until vacuum) — use it for tables that have
-  * concurrent readers. The two compactors below remain the in-place
-  * variants for plain directories and catalog tables the caller owns
-  * exclusively; for those the window is benign and this scaladoc is
-  * the contract.
+  * rewrite behind a transactional commit. The engine ships that commit
+  * for the clustered layout: [[ManifestTable.optimize]] runs the
+  * range-and-sort rewrite behind a manifest-pointer commit (one atomic
+  * rename per version, old version readable until vacuum). The two
+  * compactors below cover the layouts no manifest operation does, in
+  * place, for catalog tables the caller owns exclusively; for those the
+  * window is benign and this scaladoc is the contract.
   */
 object LayoutMaintenance {
 
@@ -40,33 +39,6 @@ object LayoutMaintenance {
   private def dataFiles(spark: SparkSession, dir: Path) =
     fsOf(spark, dir).listStatus(dir).toSeq
       .filter(f => f.isFile && !f.getPath.getName.startsWith("_"))
-
-  /** OPTIMIZE for a plain-directory CLUSTERED layout (the q130 shape:
-    * `repartitionByRange` + `sortWithinPartitions` on a cluster key):
-    * read the directory — base files plus delta appends — and rewrite
-    * it as `targetFiles` files re-clustered on `clusterCol`, restoring
-    * the tight per-file min-max stats the appends destroyed. ONE range
-    * exchange of the directory's rows; at 100 TB this runs per
-    * partition/temporal slice, not over the whole table at once. */
-  def compactClustered(spark: SparkSession, dir: String, clusterCol: String,
-                       targetFiles: Int): CompactStats = {
-    val dirPath = new Path(dir)
-    val fs = fsOf(spark, dirPath)
-    val before = dataFiles(spark, dirPath)
-    val staging = new Path(dir.stripSuffix("/") + "__optimize_staging")
-    if (fs.exists(staging)) fs.delete(staging, true)
-    spark.read.parquet(dir)
-      .repartitionByRange(targetFiles, col(clusterCol))
-      .sortWithinPartitions(clusterCol)
-      .write.parquet(staging.toString)
-    // the non-transactional swap window (see object scaladoc)
-    before.foreach(f => fs.delete(f.getPath, false))
-    val staged = dataFiles(spark, staging)
-    staged.foreach(f =>
-      fs.rename(f.getPath, new Path(dirPath, f.getPath.getName)))
-    fs.delete(staging, true)
-    CompactStats(before.size, dataFiles(spark, dirPath).size)
-  }
 
   /** OPTIMIZE for a directory-PARTITIONED catalog table (the q82
     * shape): every append lands at least one new file inside each

@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit, sum}
 
 /** MULTI-TABLE TRANSACTIONS over manifest tables — the catalog-pointer
   * pattern (the Iceberg-catalog / Delta-log shape) lifted out of
@@ -148,77 +147,5 @@ object ManifestCatalog {
         cat.tables.keys.toSeq.sorted.mkString(", "))
     commitPins(spark, cat, next, expectedBase = base.orElse(Some(0)))
     next
-  }
-
-  /** Q178: A TWO-TABLE TRANSACTIONAL PIPELINE on the generalized
-    * catalog, hash-gated — the q160 SCD2 history maintained as a PAIR
-    * of manifest tables ('dim' = the type-2 dimension, 'cur' = the
-    * current-snapshot mirror) that must never be seen from different
-    * transactions: each source commit applies as ONE [[transact]]
-    * (fold the CDC delta into dim, re-mirror cur, one catalog publish),
-    * with a CRASH INJECTED mid-history — a transaction that commits
-    * dim and dies before the catalog pointer — whose orphan the next
-    * transact rolls back ([[ManifestTable.restore]], content-compared
-    * so recovery never re-restores forever). The final dim is q160's
-    * oracle VERBATIM (one oracle, THREE maintenance paths now:
-    * in-memory fold q160, durable tail q161, catalog transaction
-    * q178 — the shared-gate discipline), and the gate also asserts
-    * cur ≡ the source's newest snapshot. */
-  def q178CatalogTxnScd2(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = ManifestTable.buildScd2DemoTable(spark, sfDir,
-      "manifest_cattxn_")
-    val base = graft.Artifacts.freshRoot(spark, sfDir,
-      "manifest_cattxn_state_")
-    val cat = Catalog(s"$base/catalog",
-      Map("dim" -> s"$base/dim", "cur" -> s"$base/cur"))
-    // seed transaction: dim from v1, cur mirrors v1
-    transact(spark, cat) { _ =>
-      val v1 = ManifestTable.readAt(spark, root, 1)
-      Map(
-        "dim" -> ManifestTable.overwrite(spark, cat.tables("dim"),
-          ManifestTable.scd2Seed(v1)),
-        "cur" -> ManifestTable.overwrite(spark, cat.tables("cur"), v1))
-    }
-    val latest = ManifestTable.currentVersion(spark, root).get
-    def applyCommit(v: Int, crashBeforeCatalog: Boolean): Unit = {
-      val r = scala.util.Try(transact(spark, cat) { pinned =>
-        val folded = ManifestTable.scd2Step(
-          ManifestTable.readAt(spark, cat.tables("dim"), pinned("dim")),
-          graft.operators.CurationPipeline.cdcDocDelta(
-            spark, root, v - 1, v), v)
-        val vDim = ManifestTable.overwrite(spark, cat.tables("dim"),
-          folded)
-        if (crashBeforeCatalog)
-          throw new IllegalStateException(
-            "injected crash between member commit and catalog commit")
-        Map("dim" -> vDim,
-          "cur" -> ManifestTable.overwrite(spark, cat.tables("cur"),
-            ManifestTable.readAt(spark, root, v)))
-      })
-      require(r.isSuccess != crashBeforeCatalog,
-        s"crash injection at source v$v did not behave: $r")
-    }
-    for (v <- 2 to latest) {
-      // the crashed attempt leaves dim's orphan; the retry must roll
-      // it back and land the SAME transaction
-      if (v == 2) applyCommit(v, crashBeforeCatalog = true)
-      applyCommit(v, crashBeforeCatalog = false)
-    }
-    // cur is exactly the source's newest snapshot — ONE pins read
-    // resolves both members (the multi-member consumer discipline)
-    val p = pins(spark, cat)
-    val src = ManifestTable.read(spark, root)
-    val cur = readAtPins(spark, cat, p, "cur")
-    // ONE multiset-equality probe (signed per-row counts) instead of
-    // the prior four count jobs; strictly stronger — empty exactly
-    // when cur equals src as a multiset
-    val drift = src.withColumn("_s", lit(1L))
-      .unionByName(cur.withColumn("_s", lit(-1L)))
-      .groupBy(src.columns.map(col).toSeq: _*)
-      .agg(sum(col("_s")).as("_d"))
-      .where(col("_d") =!= 0).take(1)
-    require(drift.isEmpty,
-      "the mirror member drifted from the source")
-    ManifestTable.presentScd2(readAtPins(spark, cat, p, "dim"))
   }
 }

@@ -8,8 +8,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StructField, StructType, TimestampType}
 
-import graft.Artifacts
-
 /** MANIFEST-POINTER TABLES — the transactional commit the rewriting
   * operators (layout OPTIMIZE, artifact refresh snapshots) otherwise
   * lack on a plain filesystem: readers of a directory-listed table can
@@ -1216,6 +1214,24 @@ object ManifestTable {
     base + 1
   }
 
+  /** The clustered layout: `df` range-partitioned on `key` into
+    * `files` files, each sorted on `key`, so the files' key ranges are
+    * disjoint and ascending. [[compact]] writes it;
+    * [[overwriteClustered]] commits it with bounds stamped on `key`. */
+  private[graft] def clustered(df: DataFrame, key: Column,
+                               files: Int): DataFrame =
+    df.repartitionByRange(files, key).sortWithinPartitions(key)
+
+  /** [[overwrite]] in the [[clustered]] layout on `key`, with per-file
+    * [lo, hi] bounds stamped on `key` (it must be integral): a later
+    * merge, delete or range read on `key` prunes by file from the
+    * manifest alone. */
+  def overwriteClustered(spark: SparkSession, root: String, df: DataFrame,
+                         key: String, files: Int,
+                         bloomCols: Seq[String] = Seq.empty): Int =
+    overwrite(spark, root, clustered(df, col(key), files),
+      boundsCol = Some(key), bloomCols = bloomCols)
+
   /** The widened table schema an append with `incoming` produces against
     * `stored`, enforcing the evolution contract: every stored column
     * must arrive with the same type (dropping or retyping is rejected —
@@ -1595,13 +1611,12 @@ object ManifestTable {
     }
   }
 
-  /** Transactional OPTIMIZE — the clustered compaction
-    * ([[LayoutMaintenance.compactClustered]]'s plan: one range exchange
-    * + in-file sort on `clusterCol`, restoring per-file min-max pruning)
-    * behind a manifest commit: the rewritten files become version N+1 in
-    * one rename, the pre-compaction version stays readable until
-    * [[vacuum]], and a concurrent commit aborts the swap (stale base)
-    * instead of clobbering it. Pass `targetFiles` explicitly, or
+  /** Transactional OPTIMIZE — the [[clustered]] rewrite (one range
+    * exchange + in-file sort on `clusterCol`, restoring per-file min-max
+    * pruning) behind a manifest commit: the rewritten files become
+    * version N+1 in one rename, the pre-compaction version stays readable
+    * until [[vacuum]], and a concurrent commit aborts the swap (stale
+    * base) instead of clobbering it. Pass `targetFiles` explicitly, or
     * `targetFileBytes` to SIZE-BALANCE from the manifest's v3 stats
     * (total bytes / target size, metadata-only — no listing, no scan).
     * Returns (newVersion, filesBefore, filesAfter). */
@@ -1648,12 +1663,10 @@ object ManifestTable {
                       boundsCol: Option[String], statsCols: Seq[String],
                       what: String): (Int, Int, Int) = {
     val bloomCs = base.bloomCols.filter(stampable(pinned.schema, _))
-    val staged = stage(spark, base.root, dir =>
-      pinned
-        .repartitionByRange(targetFiles, sortKey)
-        .sortWithinPartitions(sortKey)
-        .write.parquet(dir), boundsCol = boundsCol,
-      statsCols = statsCols, bloomCols = bloomCs).lines
+    val staged = stage(spark, base.root,
+      dir => clustered(pinned, sortKey, targetFiles).write.parquet(dir),
+      boundsCol = boundsCol, statsCols = statsCols, bloomCols = bloomCs)
+      .lines
     val headers = boundsHeader(boundsCol) ++
       colsHeader(BloomKey, bloomCs) ++ colsHeader(StatsKey, statsCols) ++
       carriedHeaders(base.headers) + (SchemaKey -> base.schema.json) +
@@ -1663,16 +1676,8 @@ object ManifestTable {
   }
 
 
-  /** OPTIMIZE ZORDER BY (Delta's shape): the transactional compaction
-    * with a TWO-dimensional layout — see [[optimizeZOrderCols]], the
-    * N-dimensional general form this delegates to. */
-  def optimizeZOrder(spark: SparkSession, root: String,
-                     xCol: String, yCol: String,
-                     targetFiles: Int): (Int, Int, Int) =
-    optimizeZOrderCols(spark, root, Seq(xCol, yCol), targetFiles)
-
-  /** N-DIMENSIONAL OPTIMIZE ZORDER BY: the rewrite orders by the
-    * Morton interleave of ALL `cols`' domain buckets
+  /** N-DIMENSIONAL OPTIMIZE ZORDER BY (Delta's shape): the rewrite
+    * orders by the Morton interleave of ALL `cols`' domain buckets
     * ([[ZOrderLayout.zValueN]]; exact integer arithmetic throughout,
     * in each column's stored stats unit — each dimension bucketed to
     * the same 10-bit scale so the interleave alternates between
@@ -2777,663 +2782,12 @@ object ManifestTable {
       s"rewrite of $root"), carryE.size, staged.lines.size)
   }
 
-  /** Q152: the manifest lifecycle end-to-end, hash-gated — build the
-    * documents table as a manifest table (v1 = 80% of docs), APPEND the
-    * rest (v2), OPTIMIZE clustered on doc_id (v3), then read ALL THREE
-    * versions by time travel and emit each one's totals. The oracle
-    * recomputes v1's subset and the full table directly from parquet, so
-    * the hash gate pins the three commit semantics at once: append
-    * accumulates (v2 = all docs), optimize changes NO row (v3 == v2 —
-    * the rewrite is invisible to readers except in file count), and
-    * history stays readable after later commits. sum(doc_id) makes a
-    * row-identity slip (not just a count slip) hash-visible. */
-  def q152ManifestLifecycle(spark: SparkSession,
-                            sfDir: String): DataFrame = {
-    val root = Artifacts.freshRoot(spark, sfDir, "manifest_docs_")
-    val docs = graft.Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("lang"), col("text"))
-    overwrite(spark, root, docs.where(col("doc_id") % 5 =!= 0))
-    append(spark, root, docs.where(col("doc_id") % 5 === 0))
-    optimize(spark, root, "doc_id", targetFiles = 4)
-    val perVersion = (1 to 3).map { v =>
-      readAt(spark, root, v)
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("doc_id")).as("sum_doc_id"),
-          sum(length(col("text"))).as("n_chars"))
-        .select(lit(v).cast("int").as("version"),
-          col("n_docs"), col("sum_doc_id"), col("n_chars"))
-    }
-    perVersion.reduce(_ unionByName _).orderBy("version")
-  }
-
   /** An unreferenced data file younger than this may be an IN-FLIGHT
     * append's staging (stage happens before the manifest rename), not a
     * crash orphan — vacuum must not delete it, or the append commits a
     * manifest pointing at deleted files. Same reason Delta's VACUUM has
     * a retention window. */
   val DefaultOrphanRetentionMs: Long = 24L * 60 * 60 * 1000
-
-  /** Q155: the recrawl applied as a copy-on-write MERGE — the documents
-    * table lives as a manifest table (v1 = snapshot A, written as 8
-    * doc_id-clustered files so files have real key ranges), the q79
-    * delta lands in ONE [[mergeCoW]] commit (deletes + edits + inserts),
-    * and the result must BE snapshot B row-for-row: the oracle replays
-    * the recrawl rules directly over the parquet and compares doc_id +
-    * md5(text) — so a dropped carried file, a surviving removed row, a
-    * lost concurrent row, or an unapplied edit all fire the hash gate.
-    * Diagnostics (files carried vs rewritten) are the spec's job; at
-    * the q79 delta every file contains changed keys (doc_id % 10 rules
-    * touch every range), so carry-over is exercised by the spec's
-    * range-local delta instead. */
-  def q155ManifestMerge(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = Artifacts.freshRoot(spark, sfDir, "manifest_merge_")
-    // bounds-stamped (manifest format v2): the merge finds its affected
-    // files from the manifest alone, no snapshot scan
-    graft.operators.CurationPipeline.mergeSnapshotB(spark, root,
-      graft.Tables.documents(spark, sfDir))
-    read(spark, root)
-      .select(col("doc_id"), md5(col("text")).as("text_md5"))
-      .orderBy("doc_id")
-  }
-
-  /** Q156: the bounds-pruned RANGE READ, hash-gated — the documents
-    * table as a bounds-stamped manifest table (8 doc_id-clustered
-    * files), then [[readWhereKeyBetween]] over the lowest fifth of the
-    * id domain: the file set is decided from the manifest header +
-    * per-file [lo, hi] alone (no footer reads — the spec pins
-    * inputFiles < total), and the oracle recomputes the same range
-    * directly from parquet, so a wrongly-pruned file (missing rows) or
-    * an unapplied residual filter (extra rows) fires the hash gate. The
-    * range bounds are integer arithmetic over min/max, identical on
-    * both engines. */
-  def q156ManifestPrunedRead(spark: SparkSession,
-                             sfDir: String): DataFrame = {
-    val root = Artifacts.freshRoot(spark, sfDir, "manifest_pruned_")
-    val docs = graft.Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("lang"), col("text"))
-    overwrite(spark, root,
-      docs.repartitionByRange(8, col("doc_id"))
-        .sortWithinPartitions("doc_id"),
-      boundsCol = Some("doc_id"))
-    val mm = docs.agg(min(col("doc_id")), max(col("doc_id"))).head()
-    val (lo, hi) = (mm.getLong(0),
-      mm.getLong(0) + (mm.getLong(1) - mm.getLong(0)) / 5)
-    readWhereKeyBetween(spark, root, "doc_id", lo, hi)
-      .groupBy("lang")
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("doc_id")).as("sum_doc_id"),
-        sum(length(col("text"))).as("n_chars"))
-      .orderBy("lang")
-  }
-
-  /** Q163: format v5's point lookup, hash-gated — build lineitem as a
-    * manifest table CLUSTERED on l_orderkey (so l_partkey is scattered:
-    * every file's [lo, hi] on it spans the domain and stats alone prune
-    * nothing) with `bloomCols = l_partkey`, then answer
-    * `l_partkey IN (5 probe keys)` through [[readWherePointIn]]. The
-    * oracle runs the same IN directly on parquet, so the hash gate pins
-    * the no-false-negative contract: blooms may keep a wasted file,
-    * they may never drop a matching row. The spec pins the pruning
-    * itself (files opened ≪ files listed) — a correctness gate can't,
-    * since skipping is invisible in the result by design. */
-  def q163ManifestBloomPoint(spark: SparkSession,
-                             sfDir: String): DataFrame = {
-    val root = Artifacts.freshRoot(spark, sfDir, "manifest_bloom_")
-    val li = graft.Tables.lineitem(spark, sfDir)
-      .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"))
-    overwrite(spark, root,
-      li.repartitionByRange(8, col("l_orderkey"))
-        .sortWithinPartitions("l_orderkey"),
-      boundsCol = Some("l_orderkey"),
-      bloomCols = Seq("l_partkey"))
-    // deterministic probes: the 5 smallest part keys present (bounded
-    // 5-row collect, same at every sf)
-    val probes = li.select(col("l_partkey")).distinct()
-      .orderBy(col("l_partkey")).limit(5)
-      .collect().map(_.getLong(0)).toSeq
-    readWherePointIn(spark, root, "l_partkey", probes)
-      .groupBy(col("l_partkey"))
-      .agg(count(lit(1)).as("n_rows"),
-        sum(col("l_orderkey")).as("sum_orderkey"),
-        // integer-exact quantity sum: addition-order independent
-        sum(round(col("l_quantity")).cast("long")).as("sum_qty"))
-      .orderBy(col("l_partkey"))
-  }
-
-  /** Q169: merge-on-read equality deletes end to end, hash-gated —
-    * land documents as a manifest table, DELETE every doc_id ≡ 2
-    * (mod 5) as one O(delta) delete commit (zero data-file IO, every
-    * data file carried verbatim — the spec pins that), read the table
-    * in BOTH regimes: 'mor' (outstanding delete files, readers
-    * anti-join) and 'compacted' (optimize applied + dropped the
-    * deletes). Both stages must equal the oracle's filtered aggregate
-    * — the apply-at-read and apply-at-compaction paths cannot drift. */
-  def q169ManifestEqualityDelete(spark: SparkSession,
-                                 sfDir: String): DataFrame = {
-    val root = Artifacts.freshRoot(spark, sfDir, "manifest_eqdel_")
-    val docs = graft.Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("lang"))
-    overwrite(spark, root,
-      docs.repartitionByRange(8, col("doc_id"))
-        .sortWithinPartitions("doc_id"),
-      boundsCol = Some("doc_id"))
-    deleteWhereKeyIn(spark, root, "doc_id",
-      docs.where(pmod(col("doc_id"), lit(5)) === 2).select("doc_id"))
-    def aggOf(stage: String): DataFrame =
-      read(spark, root).groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("doc_id")).as("sum_doc_id"))
-        .withColumn("stage", lit(stage))
-    val mor = aggOf("1_mor").localCheckpoint() // pin BEFORE compaction
-    optimize(spark, root, "doc_id", 4)
-    mor.unionByName(aggOf("2_compacted"))
-      .select("stage", "lang", "n_docs", "sum_doc_id")
-      .orderBy("stage", "lang")
-  }
-
-  /** Q173: DESCRIBE HISTORY + time travel by TIMESTAMP, hash-gated on
-    * the versioned contents — three commits land documents in thirds;
-    * the query asserts the history invariants the wall-clock makes
-    * un-hashable (one CommitInfo per version, commit instants
-    * non-decreasing, metadata row counts exact, `readAtTimestamp` at
-    * each commit's own instant resolving to exactly that version, a
-    * pre-history timestamp failing loudly), then emits each version's
-    * aggregate — which the oracle recomputes from the slice
-    * definitions, so a wrong version resolution is hash-fatal. */
-  def q173HistoryTimeTravel(spark: SparkSession,
-                            sfDir: String): DataFrame = {
-    val root = Artifacts.freshRoot(spark, sfDir, "manifest_history_")
-    val docs = graft.Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("lang"))
-    overwrite(spark, root, docs.where(pmod(col("doc_id"), lit(3)) === 0))
-    append(spark, root, docs.where(pmod(col("doc_id"), lit(3)) === 1))
-    append(spark, root, docs.where(pmod(col("doc_id"), lit(3)) === 2))
-    val h = history(spark, root)
-    require(h.map(_.version) == Seq(1, 2, 3) &&
-      h.forall(_.deleteFiles == 0) &&
-      h.map(_.timestampMs) == h.map(_.timestampMs).sorted,
-      s"history shape wrong: $h")
-    h.foreach { c =>
-      require(c.rows.contains(readAt(spark, root, c.version).count()),
-        s"metadata row count drifted at v${c.version}")
-      require(readAtTimestamp(spark, root, c.timestampMs)
-        .count() == c.rows.get,
-        s"timestampAsOf at v${c.version}'s own instant resolved wrong")
-    }
-    require(scala.util.Try(
-      readAtTimestamp(spark, root, h.head.timestampMs - 1)).isFailure,
-      "a pre-history timestamp must fail loudly, not serve a later " +
-        "version")
-    h.map(c => readAt(spark, root, c.version)
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("doc_id")).as("sum_doc_id"))
-        .withColumn("version", lit(c.version)))
-      .reduce(_ unionByName _)
-      .select("version", "n_docs", "sum_doc_id")
-      .orderBy("version")
-  }
-
-  /** Q174: CHECK constraints end to end, hash-gated — a constrained
-    * table accepts two valid ingests (append + CoW merge), REJECTS a
-    * violating append, a violating merge, and a constraint declared
-    * over already-violating data (all three loudly, table unchanged —
-    * asserted inside the query), and the constraint survives a
-    * compaction. The oracle recomputes the final state arithmetically,
-    * so an ingest that slipped a rejected batch in (or lost a valid
-    * one) is hash-fatal. */
-  def q174CheckConstraints(spark: SparkSession,
-                           sfDir: String): DataFrame = {
-    val root = Artifacts.freshRoot(spark, sfDir, "manifest_check_")
-    val li = graft.Tables.lineitem(spark, sfDir)
-      .select(col("l_orderkey"), col("l_linenumber"),
-        col("l_returnflag"),
-        round(col("l_extendedprice") * 100).cast("long").as("price_cents"))
-    overwrite(spark, root, li.where(pmod(col("l_orderkey"), lit(2)) === 0))
-    addConstraint(spark, root, "non_negative_price", "price_cents >= 0")
-    // valid ingests pass: one append, one keyed CoW merge
-    append(spark, root,
-      li.where(pmod(col("l_orderkey"), lit(2)) === 1))
-    val bump = li.where(col("l_orderkey") === 1)
-      .withColumn("price_cents", col("price_cents") + 1)
-    mergeCoW(spark, root, "l_orderkey",
-      removeKeys = bump.select("l_orderkey").limit(0),
-      // a merge keys whole orders: replace order 1's rows wholesale
-      upserts = bump)
-    val vBefore = currentVersion(spark, root)
-    // violating ingests are rejected loudly, table untouched
-    require(scala.util.Try(append(spark, root,
-      li.limit(3).withColumn("price_cents", lit(-1L)))).isFailure,
-      "violating append was accepted")
-    require(scala.util.Try(mergeCoW(spark, root, "l_orderkey",
-      bump.select("l_orderkey").limit(0),
-      bump.withColumn("price_cents", lit(-5L)))).isFailure,
-      "violating merge was accepted")
-    require(scala.util.Try(addConstraint(spark, root,
-      "impossible", "l_orderkey < 0")).isFailure,
-      "a constraint over violating data was accepted")
-    require(currentVersion(spark, root) == vBefore,
-      "a rejected ingest changed the table")
-    // the constraint survives compaction
-    optimize(spark, root, "l_orderkey", 4)
-    require(constraintsOf(spark, root)
-      == Map("non_negative_price" -> "price_cents >= 0"),
-      "compaction shed the constraint")
-    read(spark, root).groupBy("l_returnflag")
-      .agg(count(lit(1)).as("n_rows"),
-        sum(col("price_cents")).as("sum_price_cents"))
-      .orderBy("l_returnflag")
-  }
-
-  /** Q179: COPY-ON-WRITE MERGE OVER OUTSTANDING EQUALITY DELETES
-    * (delete sequencing), hash-gated — documents land clustered on
-    * doc_id, a MoR delete suppresses every doc_id ≡ 1 (mod 3), then
-    * ONE [[mergeCoW]] interleaves all three delete-sequencing cases:
-    * plain removes (doc_id ≡ 4 (mod 10) — some deleted, some live),
-    * RESURRECTING upserts (doc_id ≡ 7 (mod 10): 7 mod 3 = 1 ⊂ deleted;
-    * 17 mod 3 = 2 live — mixed), and untouched deleted keys that must
-    * STAY suppressed via the consolidated delete file the merge
-    * carries forward. The oracle recomputes the final state from the
-    * rules over raw parquet and compares doc_id + md5(text), so a
-    * resurrected row that stayed suppressed, a suppressed row that
-    * leaked, a lost remove, or an unapplied upsert is hash-fatal.
-    * The spec pins the mechanics (consolidated delete file, carried
-    * files untouched, optimize afterwards agreeing). */
-  def q179MergeOverDeletes(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = Artifacts.freshRoot(spark, sfDir, "manifest_mergedel_")
-    val docs = graft.Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("text"))
-    overwrite(spark, root,
-      docs.repartitionByRange(8, col("doc_id"))
-        .sortWithinPartitions("doc_id"),
-      boundsCol = Some("doc_id"))
-    deleteWhereKeyIn(spark, root, "doc_id",
-      docs.where(pmod(col("doc_id"), lit(3)) === 1).select("doc_id"))
-    mergeCoW(spark, root, "doc_id",
-      removeKeys = docs.where(pmod(col("doc_id"), lit(10)) === 4)
-        .select("doc_id"),
-      upserts = docs.where(pmod(col("doc_id"), lit(10)) === 7)
-        .withColumn("text", concat(col("text"), lit(" upd"))))
-    read(spark, root)
-      .select(col("doc_id"), md5(col("text")).as("text_md5"))
-      .orderBy("doc_id")
-  }
-
-  /** Q187: COMPOSITE equality deletes (multi-column `#deletecol=`,
-    * Iceberg's multi-column equality-delete shape), hash-gated — the
-    * lineitem table keyed by the (l_orderkey, l_linenumber) TUPLE
-    * takes one O(delta) delete commit of the tuples matching
-    * `orderkey ≡ 0 (mod 5) ∧ linenumber odd` (zero data-file IO —
-    * every data file carried verbatim), read in BOTH regimes ('mor':
-    * readers anti-join the tuple set; 'compacted': optimize applies
-    * and drops it). Both stages must equal the oracle's complement
-    * aggregate — a row suppressed on a partial tuple match (the
-    * single-column bug a composite delete exists to avoid) changes
-    * counts and fires the gate. The one-column-SET-per-table rule,
-    * the tuple resurrection guard, and the merge rejection are
-    * spec-pinned. */
-  def q187CompositeDelete(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = Artifacts.freshRoot(spark, sfDir, "manifest_compdel_")
-    val li = graft.Tables.lineitem(spark, sfDir)
-      .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
-        round(col("l_extendedprice") * 100).cast("long").as("price_cents"))
-    overwrite(spark, root,
-      li.repartitionByRange(8, col("l_orderkey"))
-        .sortWithinPartitions("l_orderkey"),
-      boundsCol = Some("l_orderkey"))
-    deleteWhereKeysIn(spark, root, Seq("l_orderkey", "l_linenumber"),
-      li.where(pmod(col("l_orderkey"), lit(5)) === 0 &&
-          pmod(col("l_linenumber"), lit(2)) === 1)
-        .select("l_orderkey", "l_linenumber"))
-    def aggOf(stage: String): DataFrame =
-      read(spark, root).groupBy("l_returnflag")
-        .agg(count(lit(1)).as("n_rows"),
-          sum(col("price_cents")).as("sum_price_cents"))
-        .withColumn("stage", lit(stage))
-    val mor = aggOf("1_mor").localCheckpoint() // pin BEFORE compaction
-    optimize(spark, root, "l_orderkey", 4)
-    mor.unionByName(aggOf("2_compacted"))
-      .select("stage", "l_returnflag", "n_rows", "sum_price_cents")
-      .orderBy("stage", "l_returnflag")
-  }
-
-  /** Q191: TUPLE-KEYED COPY-ON-WRITE MERGE OVER OUTSTANDING COMPOSITE
-    * EQUALITY DELETES (q179's delete-sequencing gate on a q187-shaped
-    * table), hash-gated — lineitem keyed by the (l_orderkey,
-    * l_linenumber) TUPLE: a composite MoR delete suppresses every
-    * `orderkey ≡ 0 (mod 5) ∧ linenumber odd` tuple, then ONE
-    * [[mergeCoWKeys]] interleaves all three sequencing cases at tuple
-    * granularity — removes of LIVE tuples (orderkey ≡ 4 (mod 10) —
-    * disjoint from the ≡0 (mod 5) delete set) AND removes of
-    * SUPPRESSED tuples (orderkey ≡ 0 (mod 10), odd linenumbers — every
-    * one sits in the delete set: the remove must make its delete moot,
-    * dropping the tuple from the consolidated delete file without
-    * resurrecting anything), RESURRECTING upserts (orderkey ≡ 5 (mod 10):
-    * its odd-linenumber tuples sit in the delete set, its even ones
-    * are live — mixed), and untouched deleted tuples that must STAY
-    * suppressed via the consolidated delete file the merge carries
-    * forward. The oracle replays the rules over raw parquet; a row
-    * resurrected on a partial tuple match (the single-column bug),
-    * a suppressed tuple that leaked, a lost remove, or an unapplied
-    * upsert shifts the identity-weighted aggregate and fires the hash
-    * gate. Mechanics (consolidated delete file, leading-column file
-    * pruning, whole-tuple guard, mismatched-key rejection) are
-    * spec-pinned. */
-  def q191CompositeMerge(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = Artifacts.freshRoot(spark, sfDir, "manifest_compmerge_")
-    val li = graft.Tables.lineitem(spark, sfDir)
-      .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
-        round(col("l_extendedprice") * 100).cast("long").as("price_cents"))
-    overwrite(spark, root,
-      li.repartitionByRange(8, col("l_orderkey"))
-        .sortWithinPartitions("l_orderkey"),
-      boundsCol = Some("l_orderkey"))
-    deleteWhereKeysIn(spark, root, Seq("l_orderkey", "l_linenumber"),
-      li.where(pmod(col("l_orderkey"), lit(5)) === 0 &&
-          pmod(col("l_linenumber"), lit(2)) === 1)
-        .select("l_orderkey", "l_linenumber"))
-    mergeCoWKeys(spark, root, Seq("l_orderkey", "l_linenumber"),
-      removeKeys = li.where(pmod(col("l_orderkey"), lit(10)) === 4 ||
-          (pmod(col("l_orderkey"), lit(10)) === 0 &&
-            pmod(col("l_linenumber"), lit(2)) === 1))
-        .select("l_orderkey", "l_linenumber"),
-      upserts = li.where(pmod(col("l_orderkey"), lit(10)) === 5)
-        .withColumn("price_cents", col("price_cents") + 7))
-    read(spark, root)
-      .groupBy(col("l_returnflag"),
-        pmod(col("l_orderkey"), lit(10)).as("okey_mod"))
-      .agg(count(lit(1)).as("n_rows"),
-        sum(col("price_cents")).as("sum_price_cents"),
-        sum(col("l_orderkey") * col("l_linenumber")).as("sum_key_product"))
-      .orderBy("l_returnflag", "okey_mod")
-  }
-
-  /** Q184: ROW-LEVEL COPY-ON-WRITE UPDATE ([[updateWhere]] — the
-    * redaction/correction shape: a takedown rewrites ONLY the files
-    * holding matching rows), hash-gated — every doc_id ≡ 0 (mod 9)
-    * gets its lang reset to the redaction sentinel and its text
-    * suffixed; non-matching rows must pass through BIT-IDENTICAL
-    * (md5(text) hashes the whole corpus, so a mangled carried or
-    * pass-through row anywhere is hash-fatal). The oracle replays the
-    * CASE arithmetic over raw parquet. The no-match no-op, the
-    * constraint gate on updated values, and carried-vs-rewritten file
-    * counts are the spec's pins. */
-  def q184UpdateWhere(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = Artifacts.freshRoot(spark, sfDir, "manifest_update_")
-    val docs = graft.Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("lang"), col("text"))
-    overwrite(spark, root,
-      docs.repartitionByRange(8, col("doc_id"))
-        .sortWithinPartitions("doc_id"),
-      boundsCol = Some("doc_id"))
-    updateWhere(spark, root, pmod(col("doc_id"), lit(9)) === 0, Seq(
-      "lang" -> lit("xx"),
-      "text" -> concat(col("text"), lit(" [redacted]"))))
-    read(spark, root)
-      .select(col("doc_id"), col("lang"), md5(col("text")).as("text_md5"))
-      .orderBy("doc_id")
-  }
-
-  /** Q158: SCHEMA EVOLUTION, hash-gated — the documents table committed
-    * WITHOUT a lang column (v1), then an append that ADDS it (v2:
-    * add-column evolution widens the committed `#schema=` header), read
-    * back as one relation: pre-evolution rows surface lang as null
-    * (grouped under a sentinel), post-evolution rows carry it. The
-    * oracle replays the same two-phase union with a NULL lang for the
-    * first subset, so a silently-dropped column, a misresolved old
-    * file, or a wrong null-fill all fire the hash gate. Time-travel
-    * schema (v1 has no lang at all) is the spec's pin. */
-  def q158SchemaEvolution(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = Artifacts.freshRoot(spark, sfDir, "manifest_evo_")
-    val docs = graft.Tables.documents(spark, sfDir)
-    overwrite(spark, root,
-      docs.where(col("doc_id") % 3 =!= 0).select("doc_id", "text"))
-    append(spark, root,
-      docs.where(col("doc_id") % 3 === 0).select("doc_id", "text", "lang"))
-    read(spark, root)
-      .groupBy(coalesce(col("lang"), lit("pre_evolution")).as("lang"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("doc_id")).as("sum_doc_id"),
-        sum(length(col("text"))).as("n_chars"))
-      .orderBy("lang")
-  }
-
-  /** Q198: FIELD-ID SCHEMA EVOLUTION ACROSS A FULL add → rename → drop
-    * HISTORY, hash-gated — the documents table evolves through six
-    * commits (create two-column → ADD lang header-only → append
-    * three-column rows → RENAME lang→language header-only → append
-    * rows written under the NEW name → DROP text header-only), so the
-    * final table mixes files written under THREE namings/widths; the
-    * query aggregates THREE regimes — post-add (v3, time travel),
-    * post-rename (v5, time travel: files named `lang` and `language`
-    * must merge BY FIELD ID under the renamed schema), and the
-    * current post-drop mask — and the oracle replays each regime's
-    * row set from raw parquet. A rename that nulled the old files'
-    * values, a drop that leaked, or a time travel serving the wrong
-    * regime shifts a group and is hash-fatal. The header-only pins
-    * (same files across ALTERs), the re-add-gets-fresh-id
-    * no-resurrection rule, and every rejection are
-    * ManifestTableSpec's pins. */
-  def q198FieldIdEvolution(spark: SparkSession,
-                           sfDir: String): DataFrame = {
-    val root = Artifacts.freshRoot(spark, sfDir, "manifest_fid_")
-    val docs = graft.Tables.documents(spark, sfDir)
-    overwrite(spark, root,                                       // v1
-      docs.where(col("doc_id") % 3 =!= 0).select("doc_id", "text"))
-    addColumns(spark, root, Seq(StructField("lang",              // v2
-      org.apache.spark.sql.types.StringType)))
-    append(spark, root,                                          // v3
-      docs.where(col("doc_id") % 3 === 0)
-        .select("doc_id", "text", "lang"))
-    renameColumn(spark, root, "lang", "language")                // v4
-    append(spark, root,                                          // v5
-      docs.where(col("doc_id") % 10 === 1)
-        .select((-(col("doc_id") + 1)).as("doc_id"), col("text"),
-          col("lang").as("language")))
-    dropColumn(spark, root, "text")                              // v6
-    def regime(df: DataFrame, langCol: String, stage: String,
-               chars: org.apache.spark.sql.Column): DataFrame =
-      df.groupBy(coalesce(col(langCol), lit("pre_evolution"))
-          .as("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("doc_id")).as("sum_doc_id"), chars.as("n_chars"))
-        .withColumn("stage", lit(stage))
-    regime(readAt(spark, root, 3), "lang", "1_added",
-        sum(length(col("text"))))
-      .unionByName(regime(readAt(spark, root, 5), "language",
-        "2_renamed", sum(length(col("text")))))
-      .unionByName(regime(read(spark, root), "language",
-        "3_dropped", max(lit(-1L))))
-      .select("stage", "lang", "n_docs", "sum_doc_id", "n_chars")
-      .orderBy("stage", "lang")
-  }
-
-  /** Q199: WRITABLE BRANCHES — WRITE-AUDIT-PUBLISH, hash-gated: a
-    * recrawl merge is STAGED on branch `audit` (commits invisible to
-    * every main read), audited through BOTH surfaces (Scala
-    * [[readBranch]] and SQL `VERSION AS OF 'audit'` — the spec pins
-    * they agree), and published as ONE main commit; a main-line append
-    * lands DURING the branch life and must survive the publish
-    * (file-granularity rebase over append-only main movement). Three
-    * stages gate the isolation story: `1_main_pre` (pre-publish main —
-    * the staged merge must be invisible, the concurrent append
-    * visible), `2_branch_audit` (the branch head — merge applied,
-    * concurrent append invisible: the audit sees exactly what it
-    * approves), `3_published` (merge + append together). The oracle
-    * replays all three from the rules; a leaked staged row, a lost
-    * concurrent append, or a publish that resurrected a removed row is
-    * hash-fatal. Conflict rejections (non-append main movement, schema
-    * /constraint drift, vacuumed gaps), the vacuum retention floor,
-    * and dropBranch are ManifestTableSpec's pins. */
-  def q199BranchWap(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = Artifacts.freshRoot(spark, sfDir, "manifest_wap_")
-    val docs = graft.Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("lang"), col("text"))
-    overwrite(spark, root,                                        // v1
-      docs.repartitionByRange(8, col("doc_id"))
-        .sortWithinPartitions("doc_id"),
-      boundsCol = Some("doc_id"))
-    createBranch(spark, root, "audit")                            // v2
-    // a main-line append DURING the branch life (the negative
-    // namespace — disjoint from the staged merge's key ranges)
-    append(spark, root,                                           // v3
-      docs.where(pmod(col("doc_id"), lit(10)) === 1)
-        .select((-(col("doc_id") + 1)).as("doc_id"), col("lang"),
-          col("text")),
-      boundsCol = Some("doc_id"))
-    // the STAGED merge, on the branch: remove ≡7, edit ≡3 (mod 10)
-    mergeCoWKeys(spark, root, Seq("doc_id"),
-      removeKeys = docs.where(pmod(col("doc_id"), lit(10)) === 7)
-        .select("doc_id"),
-      upserts = docs.where(pmod(col("doc_id"), lit(10)) === 3)
-        .withColumn("text", concat(col("text"), lit(" v2"))),
-      branch = Some("audit"))
-    def agg(df: DataFrame, stage: String): DataFrame =
-      df.groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("doc_id")).as("sum_doc_id"),
-          sum(length(col("text"))).as("n_chars"))
-        .withColumn("stage", lit(stage))
-        .localCheckpoint() // pinned BEFORE publish mutates the table
-    val mainPre = agg(read(spark, root), "1_main_pre")
-    val auditRead = agg(readBranch(spark, root, "audit"),
-      "2_branch_audit")
-    publishBranch(spark, root, "audit")                           // v4
-    mainPre.unionByName(auditRead)
-      .unionByName(agg(read(spark, root), "3_published"))
-      .select("stage", "lang", "n_docs", "sum_doc_id", "n_chars")
-      .orderBy("stage", "lang")
-  }
-
-  /** Q159: MANIFEST STATISTICS, hash-gated — per-version row counts of a
-    * three-commit table (overwrite, append, optimize) answered FROM THE
-    * MANIFEST'S v3 STATS ALONE: no data file is opened for the counts
-    * (the spec pins that [[rowCountFromStats]] is defined and that a
-    * scan agrees); the oracle recomputes each version's subset count
-    * directly from parquet, so a mis-stamped row count anywhere fires
-    * the hash gate. This is the metadata-only `count(*)` every format's
-    * file statistics exist for. */
-  def q159ManifestStats(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val root = Artifacts.freshRoot(spark, sfDir, "manifest_stats_")
-    val docs = graft.Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("text"))
-    overwrite(spark, root,
-      docs.where(col("doc_id") % 5 =!= 0)
-        .repartitionByRange(6, col("doc_id"))
-        .sortWithinPartitions("doc_id"),
-      boundsCol = Some("doc_id"))
-    append(spark, root, docs.where(col("doc_id") % 5 === 0),
-      boundsCol = Some("doc_id"))
-    optimize(spark, root, "doc_id", targetFiles = 3)
-    (1 to 3).map { v =>
-      val n = rowCountFromStats(spark, root, Some(v)).getOrElse(
-        throw new IllegalStateException(
-          s"version $v of $root has outstanding deletes"))
-      (v, n)
-    }.toDF("version", "n_rows").orderBy("version")
-  }
-
-  /** Q160: SCD2 HISTORY BY TAILING MANIFEST COMMITS — the dimension-
-    * maintenance pattern the CDC read (q157) exists for, run over a
-    * MULTI-commit history: the documents table takes two successive
-    * copy-on-write recrawl merges (v2 = the q79 rules, v3 = a second
-    * delete+edit wave), and the type-2 slowly-changing dimension
-    * (doc_id, text_md5, [valid_from, valid_to) in VERSION numbers,
-    * is_current) is folded INCREMENTALLY: one [[readChangesBetween]]
-    * per commit closes the open rows of removed/modified keys and opens
-    * rows for added/modified ones — each fold step is delta-file-sized
-    * (carried files never surface), and no snapshot pair is ever
-    * re-diffed. The oracle reconstructs the same history independently
-    * (three snapshot CTEs + gaps-and-islands runs over version-stamped
-    * hashes), so a missed close, a phantom open, or a wrong validity
-    * bound anywhere in the fold fires the hash gate. At 100 TB this is
-    * how a dimension table tracks a fact table that rewrites daily:
-    * consume commits, never compare corpora. */
-  def q160ManifestScd2(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = buildScd2DemoTable(spark, sfDir, "manifest_scd2_")
-    // the SCD2 fold: seed from v1, then apply each commit's CDC delta
-    var scd = scd2Seed(readAt(spark, root, 1))
-    val latest = currentVersion(spark, root).get
-    for (v <- 2 to latest) {
-      scd = scd2Step(scd,
-        graft.operators.CurationPipeline.cdcDocDelta(spark, root, v - 1, v),
-        v)
-        .localCheckpoint() // keep the fold's lineage flat across commits
-    }
-    presentScd2(scd)
-  }
-
-  /** The three-commit documents history q160/q161 fold: v1 = the raw
-    * table (8 doc_id-clustered bounds-stamped files), v2 = the q79
-    * recrawl as one CoW merge, v3 = a second delete+edit wave over the
-    * current table (positive ids only — the synthetic namespace stays
-    * put). Returns the table root (rebuilt fresh per call). */
-  private[graft] def buildScd2DemoTable(spark: SparkSession, sfDir: String,
-                                        prefix: String): String = {
-    val root = Artifacts.freshRoot(spark, sfDir, prefix)
-    graft.operators.CurationPipeline.mergeSnapshotB(spark, root,
-      graft.Tables.documents(spark, sfDir).select(col("doc_id"), col("text")))
-    val cur = readAt(spark, root, 2)
-    mergeCoW(spark, root, "doc_id",
-      cur.where(col("doc_id") > 0 && col("doc_id") % 10 === 9)
-        .select("doc_id"),
-      cur.where(col("doc_id") > 0 && col("doc_id") % 10 === 4)
-        .withColumn("text", concat(col("text"), lit(" updated v3"))))
-    root
-  }
-
-  /** SCD2 state seeded from a table's FIRST committed version. */
-  private[graft] def scd2Seed(snapshotV1: DataFrame): DataFrame =
-    snapshotV1.select(col("doc_id"), md5(col("text")).as("text_md5"),
-      lit(1).as("valid_from"), lit(null).cast("int").as("valid_to"))
-
-  /** One SCD2 fold step: close the open rows of removed/modified keys
-    * at version `v`, open rows for added/modified ones — `delta` is a
-    * reconciled row-level change relation
-    * ([[graft.operators.CurationPipeline.cdcDocDelta]]'s shape). */
-  private[graft] def scd2Step(base: DataFrame, deltaIn: DataFrame,
-                              v: Int): DataFrame = {
-    val delta = deltaIn.localCheckpoint() // delta-sized; read twice
-    val closing = graft.Delta.stale(delta)
-      .select(col("doc_id"), lit(1).as("_close"))
-    val opening = graft.Delta.fresh(delta)
-      .select(col("doc_id"), md5(col("text")).as("text_md5"),
-        lit(v).as("valid_from"), lit(null).cast("int").as("valid_to"))
-    base
-      .join(closing, Seq("doc_id"), "left")
-      .withColumn("valid_to",
-        when(col("_close") === 1 && col("valid_to").isNull, lit(v))
-          .otherwise(col("valid_to")))
-      .drop("_close")
-      .unionByName(opening)
-  }
-
-  private[graft] def presentScd2(scd: DataFrame): DataFrame =
-    scd
-      .withColumn("is_current",
-        when(col("valid_to").isNull, 1).otherwise(0))
-      .select("doc_id", "text_md5", "valid_from", "valid_to", "is_current")
-      .orderBy("doc_id", "valid_from")
-
-  /** Q161: the same SCD2 history as q160, maintained by the RESTARTABLE
-    * version-tail runner ([[ManifestTail]]) instead of an in-memory
-    * fold: each committed version is processed EXACTLY ONCE into a
-    * persisted state dir (`v<N>` + `_SUCCESS`), the cursor is the
-    * newest complete state, and a killed/restarted runner resumes from
-    * it — the spec kills the catch-up mid-history and proves the resume
-    * converges to the identical table; this query runs the full
-    * catch-up and presents the final state, so the q160 oracle gates
-    * the runner's end state row-for-row (one oracle, two maintenance
-    * paths — q117/q142's shared-gate discipline). */
-  def q161ManifestTailScd2(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = buildScd2DemoTable(spark, sfDir, "manifest_tail_")
-    val stateDir = Artifacts.freshRoot(spark, sfDir, "manifest_tailstate_")
-    ManifestTail.catchUp(spark, root, stateDir)(
-      seed = v1 => scd2Seed(v1),
-      fold = (base, changes, v) => scd2Step(base,
-        graft.operators.CurationPipeline.reconcileDocChanges(changes), v))
-    presentScd2(ManifestTail.currentState(spark, stateDir).get)
-  }
 
   /** Retire history: keep the newest `retain` manifests, delete older
     * manifest files, then delete data files in two classes —

@@ -114,15 +114,20 @@ object ZOrderLayout {
     * scale; at production scale the same layout also prunes at
     * row-group granularity. */
   def zEvents(spark: SparkSession, sfDir: String): DataFrame =
-    Artifacts.materializeManifest(spark, sfDir, "graft_events_zorder_") {
-      val (uMax, tMin, tMax) = boundsOf(spark, sfDir)
-      Tables.events(spark, sfDir)
-        .withColumn("zv", zValue(
-          zBucket("user_id", 0L, uMax),
-          zBucket("unix_micros(ts)", tMin, tMax)))
-        .repartitionByRange(64, col("zv"))
-        .sortWithinPartitions("zv")
-    }
+    Artifacts.materializeManifest(spark, sfDir, "graft_events_zorder_")(
+      zOrdered(spark, sfDir))
+
+  /** The events with their Z-value, in [[zEvents]]' layout — the frame
+    * it materializes, unwritten (q162 commits the same frame with
+    * per-file stats). */
+  private[graft] def zOrdered(spark: SparkSession,
+                              sfDir: String): DataFrame = {
+    val (uMax, tMin, tMax) = boundsOf(spark, sfDir)
+    ManifestTable.clustered(Tables.events(spark, sfDir)
+      .withColumn("zv", zValue(
+        zBucket("user_id", 0L, uMax),
+        zBucket("unix_micros(ts)", tMin, tMax))), col("zv"), 64)
+  }
 
   /** Domain bounds both engines derive identically (driver-side here,
     * scalar subqueries in the oracle). */
@@ -162,95 +167,9 @@ object ZOrderLayout {
     Z3Cols.zipWithIndex.map { case (c, i) => (c, 0L, mx.getLong(i) / 4) }
   }
 
-  /** Q193: N-DIMENSIONAL Z-ORDER — the q162/q188 discipline at THREE
-    * dimensions, hash-gated: lineitem lands unclustered, ONE
-    * [[ManifestTable.optimizeZOrderCols]] rewrites it into the 3-D
-    * Morton layout (l_orderkey, l_partkey, l_suppkey — [[zValueN]]'s
-    * generic interleave) with v4 stats stamped for all three columns,
-    * and a 3-predicate rectangle (each dimension's lower quarter —
-    * an order-range x part-range x supplier-range slice) is answered
-    * by [[ManifestTable.readWhereRect]] pruning files on EVERY
-    * dimension from the manifest alone. The oracle recomputes the
-    * rectangle aggregate straight from parquet with the same integer
-    * bounds arithmetic, so a wrongly-skipped file or an unapplied
-    * residual fires the hash gate. The LAYOUT claim — 3-D pruning
-    * strictly beats every 2-D projection of the same three columns on
-    * this query — is ManifestTableSpec's pin (skipping is invisible
-    * in a correct result by design). */
-  def q193ZOrder3D(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = Artifacts.freshRoot(spark, sfDir, "manifest_z3_")
-    val li = Tables.lineitem(spark, sfDir)
-      .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
-        col("l_returnflag"),
-        round(col("l_extendedprice") * 100).cast("long").as("price_cents"))
-    ManifestTable.overwrite(spark, root, li)
-    ManifestTable.optimizeZOrderCols(spark, root, Z3Cols,
-      targetFiles = 64)
-    ManifestTable.readWhereRect(spark, root, rectangle3Of(spark, sfDir))
-      .groupBy("l_returnflag")
-      .agg(count(lit(1)).as("n_rows"),
-        sum(col("l_orderkey")).as("sum_orderkey"),
-        sum(col("price_cents")).as("sum_price_cents"))
-      .orderBy("l_returnflag")
-  }
-
   private[graft] def tsOfMicros(m: Long): java.sql.Timestamp = {
     val t = new java.sql.Timestamp(m / 1000)
     t.setNanos((m % 1000000L).toInt * 1000)
     t
-  }
-
-  /** Q130: rectangle slice off the Z-ORDERED events table — the reader
-    * side of the layout. The filter is plain pushed per-column
-    * predicates (literal user_id and ts bounds — `PushedFilters` in the
-    * scan, spec-pinned); the Z-layout's file stats turn them into file
-    * skipping on BOTH dimensions at once. Output carries the Z-value
-    * itself so the hash gate pins the interleave arithmetic, the
-    * bounds derivation, and the layout round-trip together. */
-  def q130ZOrderRectangle(spark: SparkSession, sfDir: String): DataFrame = {
-    val (uHi, tLo, tHi) = rectangleOf(spark, sfDir)
-    zEvents(spark, sfDir)
-      .where(col("user_id") >= 0L && col("user_id") <= uHi &&
-        col("ts") >= lit(tsOfMicros(tLo)) && col("ts") <= lit(tsOfMicros(tHi)))
-      .select(col("event_id"), col("user_id"),
-        col("event_type"), col("zv"))
-      .orderBy("event_id")
-  }
-
-  /** Q162: the Z-layout's rectangle served by MANIFEST-level 2-D file
-    * skipping (format v4) — q130 pruned through parquet's per-file
-    * column statistics at scan time; here the same z-clustered events
-    * land as a manifest table with PER-FILE [lo, hi] stats on BOTH
-    * rectangle dimensions (`statsCols = user_id, ts` — one stamped pass
-    * at write time), and [[ManifestTable.readWhereRect]] decides the
-    * file set from the manifest alone: a file is skipped the moment ONE
-    * dimension's stats miss the rectangle, before any footer is opened
-    * or directory listed. The z-clustering is what makes those stats
-    * tight hyper-rectangles — without it every file spans both domains
-    * and nothing prunes (the spec pins the 2-D file set strictly
-    * smaller than either single dimension's). The oracle recomputes the
-    * rectangle aggregate straight from parquet with the same integer
-    * bounds arithmetic, so a wrongly-skipped file (missing rows) or an
-    * unapplied residual (extra rows) fires the hash gate. */
-  def q162ZOrderManifestRect(spark: SparkSession,
-                             sfDir: String): DataFrame = {
-    val root = Artifacts.freshRoot(spark, sfDir, "manifest_zrect_")
-    val (uMax, tMin, tMax) = boundsOf(spark, sfDir)
-    val z = Tables.events(spark, sfDir)
-      .withColumn("zv", zValue(
-        zBucket("user_id", 0L, uMax),
-        zBucket("unix_micros(ts)", tMin, tMax)))
-      .repartitionByRange(64, col("zv"))
-      .sortWithinPartitions("zv")
-    ManifestTable.overwrite(spark, root, z,
-      statsCols = Seq("user_id", "ts"))
-    val (uHi, tLo, tHi) = rectangleOf(spark, sfDir)
-    ManifestTable.readWhereRect(spark, root,
-        Seq(("user_id", 0L, uHi), ("ts", tLo, tHi)))
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("user_id")).as("sum_user_id"),
-        sum(round(col("value") * 100).cast("long")).as("value_cents"))
-      .orderBy("event_type")
   }
 }

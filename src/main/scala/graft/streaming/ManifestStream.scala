@@ -168,156 +168,6 @@ case class ManifestVersionOffset(version: Long) extends Offset {
   override def json: String = version.toString
 }
 
-object ManifestStream {
-
-  /** Q164: the manifest table AS A STREAM, hash-gated — land events as
-    * a manifest table in three commits, and between each commit run an
-    * AvailableNow pass of ONE checkpointed streaming aggregation whose
-    * source is the table itself. Each pass is a fresh "process": the
-    * engine's checkpoint carries the VERSION offset (so pass 2 reads
-    * only commit 2's files, pass 3 only commit 3's) and the state store
-    * carries the running aggregate. The final complete-mode table must
-    * therefore equal the one-shot batch aggregate over all events — the
-    * oracle — which a dropped, duplicated, or re-snapshotted commit
-    * would break. Money sums are exact cents (q162's discipline). */
-  def q164StreamManifestSource(spark: SparkSession,
-                               sfDir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val base = graft.Artifacts.freshRoot(spark, sfDir, "manifest_stream_")
-    val root = s"$base/tbl"
-    val qn = graft.Artifacts.nameOf(spark, sfDir, "q164_agg_")
-    val ev = graft.Tables.events(spark, sfDir)
-      .select(col("event_id"), col("event_type"), col("user_id"),
-        col("value"))
-    def slice(i: Int) = ev.where(pmod(col("event_id"), lit(3)) === i)
-    def drainOnce(): Unit = {
-      val q = spark.readStream
-        .format(classOf[ManifestStreamProvider].getName)
-        .option("path", root).load()
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(col("user_id")).as("sum_user_id"),
-          sum(round(col("value") * 100).cast("long")).as("value_cents"))
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("complete")
-        .option("checkpointLocation", s"$base/ck")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    ManifestTable.overwrite(spark, root, slice(0))
-    drainOnce()
-    ManifestTable.append(spark, root, slice(1))
-    drainOnce()
-    ManifestTable.append(spark, root, slice(2))
-    drainOnce()
-    spark.table(qn).orderBy("event_type")
-  }
-
-  /** Q177: THE APPEND TAIL ACROSS INTERLEAVED COMPACTIONS, hash-gated
-    * — q164's checkpointed streaming aggregation (fresh process per
-    * drain), but the table is OPTIMIZED between appends, twice. With
-    * `.option("onRewriteCommits", "skip")` the tail ignores the
-    * rewrite commits' output files entirely (Delta's
-    * `skipChangeCommits`): every event still arrives EXACTLY ONCE
-    * (appends flow; a rewrite adds no rows by contract), so the final
-    * complete-mode table must equal the one-shot batch aggregate —
-    * q164's own oracle verbatim (one oracle, two maintenance
-    * histories: the q160/q161 shared-gate discipline). A re-delivered
-    * carried row (the failure this policy exists for) would double a
-    * count and fire the hash gate. The DEFAULT policy's loud failure
-    * on the same history, and the explicit `redeliver` opt-in, are
-    * ManifestStreamSpec's pins. */
-  def q177TailAcrossOptimize(spark: SparkSession,
-                             sfDir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val base = graft.Artifacts.freshRoot(spark, sfDir, "manifest_tailopt_")
-    val root = s"$base/tbl"
-    val qn = graft.Artifacts.nameOf(spark, sfDir, "q177_agg_")
-    val ev = graft.Tables.events(spark, sfDir)
-      .select(col("event_id"), col("event_type"), col("user_id"),
-        col("value"))
-    def slice(i: Int) = ev.where(pmod(col("event_id"), lit(3)) === i)
-    def drainOnce(): Unit = {
-      val q = spark.readStream
-        .format(classOf[ManifestStreamProvider].getName)
-        .option("path", root)
-        .option("onRewriteCommits", "skip")
-        .load()
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(col("user_id")).as("sum_user_id"),
-          sum(round(col("value") * 100).cast("long")).as("value_cents"))
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("complete")
-        .option("checkpointLocation", s"$base/ck")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    ManifestTable.overwrite(spark, root,
-      slice(0).repartitionByRange(4, col("event_id"))
-        .sortWithinPartitions("event_id"),
-      boundsCol = Some("event_id"))
-    drainOnce()
-    ManifestTable.optimize(spark, root, "event_id", 2) // rewrite #1
-    ManifestTable.append(spark, root, slice(1))
-    drainOnce() // one batch spans rewrite + append: append rows only
-    ManifestTable.append(spark, root, slice(2))
-    ManifestTable.optimize(spark, root, "event_id", 3) // rewrite #2
-    drainOnce()
-    spark.table(qn).orderBy("event_type")
-  }
-
-  /** Q170: the CHANGE DATA FEED stream, hash-gated — documents land as
-    * a manifest table (v1 = ~80%), an append adds the rest (v2), a
-    * merge-on-read equality delete suppresses every doc_id ≡ 0 (mod 7)
-    * (v3); a checkpointed CDF stream drains after EACH commit (three
-    * fresh processes — version offsets prove continuation), landing
-    * (doc_id, lang, _change) rows in a parquet sink. The gate folds
-    * the feed back into a table — inserts anti-joined by the streamed
-    * delete keys — and aggregates; it must equal the oracle's filtered
-    * aggregate, which breaks if the feed drops, duplicates, or
-    * mis-tags any commit's rows. */
-  def q170ManifestChangeFeed(spark: SparkSession,
-                             sfDir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val base = graft.Artifacts.freshRoot(spark, sfDir, "manifest_cdf_")
-    val root = s"$base/tbl"
-    val docs = graft.Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("lang"))
-    def drainOnce(): Unit = {
-      val q = spark.readStream
-        .format(classOf[ManifestStreamProvider].getName)
-        .option("path", root)
-        .option("readChangeFeed", "true")
-        .load()
-        .writeStream.format("parquet")
-        .option("path", s"$base/feed")
-        .option("checkpointLocation", s"$base/ck")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    ManifestTable.overwrite(spark, root,
-      docs.where(pmod(col("doc_id"), lit(5)) =!= 0))
-    drainOnce()
-    ManifestTable.append(spark, root,
-      docs.where(pmod(col("doc_id"), lit(5)) === 0))
-    drainOnce()
-    ManifestTable.deleteWhereKeyIn(spark, root, "doc_id",
-      docs.where(pmod(col("doc_id"), lit(7)) === 0).select("doc_id"))
-    drainOnce()
-    val feed = spark.read.parquet(s"$base/feed")
-    val dels = feed.where(col("_change") === "delete").select("doc_id")
-    feed.where(col("_change") === "insert")
-      .join(dels, Seq("doc_id"), "left_anti")
-      .groupBy("lang")
-      .agg(count(lit(1)).as("n_docs"), sum(col("doc_id")).as("sum_doc_id"))
-      .orderBy("lang")
-  }
-}
-
 /** `maxVersionsPerTrigger`: cap each micro-batch at N table versions
   * (Delta's maxFilesPerTrigger shape, in commit units). `1` gives
   * strict PER-COMMIT batches — what a CDC applier needs for correct

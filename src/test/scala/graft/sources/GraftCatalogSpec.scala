@@ -247,7 +247,7 @@ class GraftCatalogSpec extends SparkSpec {
       .select("event_id", "user_id", "ts", "value")
       .where(col("user_id").isNotNull && col("ts").isNotNull)
     ManifestTable.overwrite(spark, root, ev)
-    ManifestTable.optimizeZOrder(spark, root, "user_id", "ts", 64)
+    ManifestTable.optimizeZOrderCols(spark, root, Seq("user_id", "ts"), 64)
     val mm = ev.agg(max("user_id"), min(unix_micros(col("ts"))),
       max(unix_micros(col("ts")))).head()
     val (uHi, tLo, tHi) = (mm.getLong(0) / 10,

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.operators.ManifestQueries
 
 /** The manifest-pointer commit: readers resolve whole versions (never a
   * partial table), crashes leave only invisible orphans, history stays
@@ -96,6 +97,31 @@ class ManifestTableSpec extends SparkSpec {
       ManifestTable.readAt(spark, root, 4)
     }
     assert(ManifestTable.read(spark, root).count() === expect.length)
+    // the clustered layout: n data files whose [lo, hi] bounds, in lo
+    // order, ascend without overlap — from overwriteClustered, and from
+    // optimize (the same layout) after appends whose one file each spans
+    // the whole key domain
+    def assertClustered(r: String, n: Int): Unit = {
+      val b = ManifestTable.fileStats(spark, r).map(_._2.get).sortBy(_._1)
+      assert(b.size === n && b.forall { case (lo, hi) => lo <= hi } &&
+        b.zip(b.tail).forall { case ((_, hi), (lo, _)) => hi < lo },
+        s"not $n disjoint ascending key ranges: $b")
+    }
+    val clustered = freshRoot()
+    ManifestTable.overwriteClustered(spark, clustered,
+      docs.where(col("doc_id") % 4 =!= 0), "doc_id", 6)
+    assertClustered(clustered, 6)
+    for (i <- 0 until 3)
+      ManifestTable.append(spark, clustered,
+        docs.where(col("doc_id") % 12 === i * 4).repartition(1),
+        boundsCol = Some("doc_id"))
+    val (_, filesBefore, filesAfter) =
+      ManifestTable.optimize(spark, clustered, "doc_id", targetFiles = 6)
+    assert(filesBefore === 9 && filesAfter === 6)
+    assertClustered(clustered, 6)
+    assert(ManifestTable.read(spark, clustered).select("doc_id").collect()
+      .map(_.getLong(0)).sorted.toSeq ===
+      docs.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq)
   }
 
   test("concurrent appends: both land via the per-version commit race, " +
@@ -342,7 +368,7 @@ class ManifestTableSpec extends SparkSpec {
   test("q156: the gated range read actually prunes files AND matches a " +
       "direct-filter replay") {
     val sf01 = "/root/testdata/sf0.001"
-    val df = ManifestTable.q156ManifestPrunedRead(spark, sf01)
+    val df = ManifestQueries.q156ManifestPrunedRead(spark, sf01)
     val got = df.collect().map(r =>
       (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
     val all = graft.Tables.documents(spark, sf01)
@@ -529,7 +555,7 @@ class ManifestTableSpec extends SparkSpec {
       "the per-version counts") {
     val sf = "/root/testdata/sf0.001"
     val d = graft.Tables.documents(spark, sf)
-    val gotEvo = ManifestTable.q158SchemaEvolution(spark, sf).collect()
+    val gotEvo = ManifestQueries.q158SchemaEvolution(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .toSeq
     val expEvo = d
@@ -542,7 +568,7 @@ class ManifestTableSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .toSeq
     assert(gotEvo === expEvo)
-    val gotStats = ManifestTable.q159ManifestStats(spark, sf).collect()
+    val gotStats = ManifestQueries.q159ManifestStats(spark, sf).collect()
       .map(r => (r.getInt(0), r.getLong(1))).toSeq
     val nSub = d.where(col("doc_id") % 5 =!= 0).count()
     val nAll = d.count()
@@ -553,7 +579,7 @@ class ManifestTableSpec extends SparkSpec {
       "committed snapshot, validity intervals partition each key's " +
       "history") {
     val sf = "/root/testdata/sf0.001"
-    val got = ManifestTable.q160ManifestScd2(spark, sf).collect()
+    val got = ManifestQueries.q160ManifestScd2(spark, sf).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getInt(2),
         if (r.isNullAt(3)) None else Some(r.getInt(3)), r.getInt(4)))
     // current rows == the table's newest version, key for key

@@ -5,6 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.operators.ManifestQueries
 
 /** The restartable version-tail runner: every committed version is
   * folded exactly once, a kill at any point loses no progress and a
@@ -40,12 +41,12 @@ class ManifestTailSpec extends SparkSpec {
 
   private def run(root: String, stateDir: String, max: Int): Int =
     ManifestTail.catchUp(spark, root, stateDir, maxVersions = max)(
-      seed = v1 => ManifestTable.scd2Seed(v1),
-      fold = (base, changes, v) => ManifestTable.scd2Step(base,
+      seed = v1 => ManifestQueries.scd2Seed(v1),
+      fold = (base, changes, v) => ManifestQueries.scd2Step(base,
         graft.operators.CurationPipeline.reconcileDocChanges(changes), v))
 
   private def rows(df: DataFrame): Seq[Seq[Any]] =
-    ManifestTable.presentScd2(df).collect().map(_.toSeq).toSeq
+    ManifestQueries.presentScd2(df).collect().map(_.toSeq).toSeq
 
   test("kill mid-history + resume converges; crashed write replays " +
       "idempotently; state vacuum keeps the cursor") {
