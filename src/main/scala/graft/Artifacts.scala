@@ -22,7 +22,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    key-keyed joins and aggregates downstream skip their exchange
   *    (Spark reads bucket metadata as the child's output partitioning).
   *  - DRIVER CACHES ([[Memo]]): small driver-held derivations (codebooks,
-  *    PQ models, the dedup trio, sketches, staged renders).
+  *    PQ models, the dedup trio, sketches, staged renders, and each input
+  *    table's parquet schema, which [[Tables.load]] infers once).
   *  - FRESH ROOTS ([[freshRoot]]): an emptied per-input directory under
   *    the warehouse, where a gated query rebuilds its own table.
   *

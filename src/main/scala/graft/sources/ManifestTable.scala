@@ -583,7 +583,7 @@ object ManifestTable {
 
   /** Every field stored nullable: a pre-evolution file genuinely lacks
     * the later columns, so the committed schema must admit null there. */
-  private def asNullable(s: StructType): StructType =
+  private[sources] def asNullable(s: StructType): StructType =
     StructType(s.fields.map(_.copy(nullable = true)))
 
   // -------------------------------------------------------------------

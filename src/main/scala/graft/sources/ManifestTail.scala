@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** RESTARTABLE MANIFEST-VERSION TAIL — the incremental consumer loop for
   * a [[ManifestTable]]: process each committed version EXACTLY ONCE,
@@ -83,17 +84,23 @@ object ManifestTail {
         s"no committed version under $root"))
     var processed = 0
     var cur = cursor(spark, stateDir).getOrElse(0)
+    // the schema `v<cur>` was written with, once this call wrote it: the
+    // next fold reads it back under that schema instead of inferring
+    // one from its footer, so only the resume point infers
+    var written: Option[StructType] = None
     while (processed < maxVersions && cur < latest) {
       val v = cur + 1
       val state =
         if (v == 1) seed(ManifestTable.readAt(spark, root, 1))
         else fold(
-          spark.read.parquet(s"$stateDir/v$cur"),
+          written.fold(spark.read)(spark.read.schema(_))
+            .parquet(s"$stateDir/v$cur"),
           ManifestTable.readChangesBetween(spark, root, v - 1, v),
           v)
       // overwrite is the replay-safety: a crashed prior attempt left a
       // markerless dir this write replaces; _SUCCESS lands last
       state.write.mode("overwrite").parquet(s"$stateDir/v$v")
+      written = Some(ManifestTable.asNullable(state.schema))
       processed += 1
       cur = v
     }

@@ -1073,9 +1073,15 @@ object EventStreams {
   private[graft] def runScd2ToFiles(spark: SparkSession, landingDir: String,
       checkpointDir: String, stateDir: String): Unit = {
     val s = stateSession(spark)
-    val emptyHistory = graft.operators.RelationalQueries.scd2Of(
-      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        Scd2LandingSchema))
+    val noUpdates = s.createDataFrame(
+      s.sparkContext.emptyRDD[org.apache.spark.sql.Row], Scd2LandingSchema)
+    val emptyHistory = graft.operators.RelationalQueries.scd2Of(noUpdates)
+    // every v-dir is scd2Merge's output, so a base reads back under this
+    // schema with no footer inference
+    val historySchema = emptyHistory.schema
+    require(graft.operators.RelationalQueries
+      .scd2Merge(emptyHistory, noUpdates).schema == historySchema,
+      "scd2Merge's output schema differs from scd2Of's")
     val q = s.readStream.schema(Scd2LandingSchema)
       .option("maxFilesPerTrigger", 1).parquet(landingDir)
       .writeStream
@@ -1083,7 +1089,8 @@ object EventStreams {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
         val base = latestScd2Version(stateDir, below = id)
-          .map(v => s.read.parquet(v._2)).getOrElse(emptyHistory)
+          .map(v => s.read.schema(historySchema).parquet(v._2))
+          .getOrElse(emptyHistory)
         graft.operators.RelationalQueries.scd2Merge(base, batch)
           .write.mode("overwrite").parquet(s"$stateDir/v$id")
         ()

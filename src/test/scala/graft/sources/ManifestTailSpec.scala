@@ -5,6 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.metrics.MetricsReport
 import graft.operators.ManifestQueries
 
 /** The restartable version-tail runner: every committed version is
@@ -45,6 +46,12 @@ class ManifestTailSpec extends SparkSpec {
       fold = (base, changes, v) => ManifestQueries.scd2Step(base,
         graft.operators.CurationPipeline.reconcileDocChanges(changes), v))
 
+  private def jobs(body: => Any): Long = {
+    val m = MetricsReport.install(spark)
+    try m.window(body).jobs
+    finally spark.sparkContext.removeSparkListener(m)
+  }
+
   private def rows(df: DataFrame): Seq[Seq[Any]] =
     ManifestQueries.presentScd2(df).collect().map(_.toSeq).toSeq
 
@@ -57,12 +64,19 @@ class ManifestTailSpec extends SparkSpec {
     assert(ManifestTail.cursor(spark, st) === Some(1))
     assert(run(root, st, max = 1) === 1)
     assert(ManifestTail.cursor(spark, st) === Some(2))
-    assert(run(root, st, max = Int.MaxValue) === 1)
+    // a resumed call infers its resume point's schema from the footer
+    // (one job of its budget)
+    val resume = jobs(assert(run(root, st, max = Int.MaxValue) === 1))
+    assert(resume <= 9, s"resuming one version ran $resume jobs")
     assert(ManifestTail.cursor(spark, st) === Some(3))
     val killed = rows(ManifestTail.currentState(spark, st).get)
     // a fresh uninterrupted catch-up lands on the identical state
     val st2 = freshStateDir()
-    assert(run(root, st2, max = Int.MaxValue) === 3)
+    // ... and reads back every state it wrote under the schema it
+    // wrote: no fold infers its base, which would cost a job apiece
+    val straightJobs = jobs(assert(run(root, st2, max = Int.MaxValue) === 3))
+    assert(straightJobs <= 17,
+      s"catching up three versions ran $straightJobs jobs")
     val straight = rows(ManifestTail.currentState(spark, st2).get)
     assert(killed === straight,
       "killed-and-resumed tail diverged from the uninterrupted one")
@@ -80,7 +94,8 @@ class ManifestTailSpec extends SparkSpec {
       spark.sparkContext.hadoopConfiguration)
     fs.delete(new Path(s"$st/v3/_SUCCESS"), false)
     assert(ManifestTail.cursor(spark, st) === Some(2))
-    assert(run(root, st, max = Int.MaxValue) === 1)
+    val replay = jobs(assert(run(root, st, max = Int.MaxValue) === 1))
+    assert(replay <= 9, s"replaying one version ran $replay jobs")
     assert(rows(ManifestTail.currentState(spark, st).get) === straight,
       "replayed version produced a different state")
     // caught up: another invocation is a no-op

@@ -404,8 +404,15 @@ class RecoverySpec extends SparkSpec {
       }
     // uninterrupted twin over the same landing sequence
     land(s"$base/landingU", slabs, 0)
-    EventStreams.runScd2ToFiles(spark,
-      s"$base/landingU", s"$base/ckU", s"$base/stU")
+    // four batches, each base read under the history schema the runner
+    // writes: no batch infers its base's schema, which would cost a
+    // job apiece
+    val m = graft.metrics.MetricsReport.install(spark)
+    val straightJobs = try m.window(EventStreams.runScd2ToFiles(spark,
+      s"$base/landingU", s"$base/ckU", s"$base/stU")).jobs
+    finally spark.sparkContext.removeSparkListener(m)
+    assert(straightJobs <= 21,
+      s"four SCD2 batches ran $straightJobs jobs")
     val want = spark.read
       .parquet(EventStreams.latestScd2Table(s"$base/stU").get)
       .orderBy("user_id", "version").collect().map(_.toSeq).toSeq
