@@ -88,14 +88,11 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries TIMESTAMP(NANOS); Spark 4 reads it as long
-      // under this flag and Tables.events converts back to micros.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // fixture generations that write TIMESTAMP(MICROS) without UTC
-      // adjustment must read as a plain session-TZ timestamp, not NTZ —
-      // the whole engine (unix_micros arithmetic, watermarks, the
-      // DuckDB oracle's string forms under session TZ = UTC) assumes
-      // TimestampType
+      // every input timestamp is TIMESTAMP(MICROS) without UTC
+      // adjustment (FIXTURES.md); it must read as a plain session-TZ
+      // timestamp, not NTZ — the whole engine (unix_micros arithmetic,
+      // watermarks, the DuckDB oracle's string forms under session
+      // TZ = UTC) assumes TimestampType
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       // write timestamps as INT64 micros, not the deprecated INT96:
       // INT96 columns carry NO usable min/max statistics and take no

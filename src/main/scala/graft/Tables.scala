@@ -1,8 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructType, TimestampType}
+import org.apache.spark.sql.types.{StructType, TimestampType}
 
 /** Table registry over the driver-provided parquet test data (TESTDATA.md).
   *
@@ -97,28 +96,19 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame = load(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame = load(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame = load(s, d, "lineitem")
-  /** `events.ts` has shipped in two parquet encodings across fixture
-    * generations: TIMESTAMP(NANOS), which Spark 4 only reads as a long
-    * (spark.sql.legacy.parquet.nanosAsLong — set by GraftSession), and
-    * TIMESTAMP(MICROS) without UTC adjustment, which reads as
-    * TIMESTAMP_NTZ unless the session pins LTZ inference. Normalize both
-    * to a microsecond TimestampType column here so every operator
-    * downstream sees a plain session-TZ timestamp. */
+  /** `events`, whose `ts` must be TIMESTAMP(MICROS) — the one encoding
+    * every shipped input writes (FIXTURES.md) — read as a session-TZ
+    * `TimestampType` (GraftSession pins LTZ inference). Any other
+    * encoding fails here, at build: TIMESTAMP(NANOS) in the schema
+    * inference, a nanos-since-epoch long — which a batch read returns
+    * silently as `LongType` — in the `require`. */
   def events(s: SparkSession, d: String): DataFrame = {
     val df = load(s, d, "events")
-    df.schema("ts").dataType match {
-      case LongType =>
-        // integer FLOOR division, not `/` (nanos-since-epoch overflows a
-        // double's 53-bit mantissa) and not bare DIV (which truncates
-        // toward zero, so a pre-1970 nanos value would land 1 µs high
-        // of the true floor the oracle computes)
-        df.withColumn("ts", timestamp_micros(
-          expr("ts DIV 1000 - CASE WHEN ts % 1000 < 0 THEN 1 ELSE 0 END")))
-      case _ =>
-        // NTZ→LTZ is wall-clock reinterpretation in the session TZ (UTC
-        // here): exact micros preserved; a no-op when already LTZ
-        df.withColumn("ts", col("ts").cast(TimestampType))
-    }
+    val ts = df.schema("ts").dataType
+    require(ts == TimestampType,
+      s"$d/events.parquet: ts reads as $ts, not TimestampType " +
+        "(events.ts must be parquet TIMESTAMP(MICROS))")
+    df
   }
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")

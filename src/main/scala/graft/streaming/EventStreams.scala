@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
@@ -24,111 +24,25 @@ import org.apache.spark.sql.types._
   */
 object EventStreams {
 
-  /** Streamed events source. The file stream source must DECLARE a schema
-    * (streaming cannot infer), but the fixtures have shipped `ts` in two
-    * parquet encodings across generations — TIMESTAMP(NANOS), surfaced as
-    * a nanos long under spark.sql.legacy.parquet.nanosAsLong, and
-    * TIMESTAMP(MICROS), surfaced as a timestamp — so the encoding is
-    * probed from a one-footer batch read of the same files and the
-    * matching schema declared; both normalize to a microsecond
-    * TimestampType column, like Tables.events.
-    *
-    * A NOT-YET-POPULATED landing dir (the documented production start
-    * order: runner first, files later) has nothing to probe — the probe
-    * failure falls back to the TIMESTAMP(MICROS) schema, the encoding
-    * every shipped input writes (the sf fixtures, perfbench's
-    * generator). Invariant either way: ONE ts encoding per landing dir
-    * for the dir's lifetime. The encoding is decided once at plan build, so
-    * a file of the other encoding landing later is misread (nanos long
-    * under a TimestampType schema or vice versa), and a checkpointed
-    * restart re-probes — a dir whose encoding flipped between phases
-    * would silently re-declare the schema against committed state.
-    * RecoverySpec.rawNanosEvents enforces it test-side by normalizing
-    * to nanos-long before any file lands. */
-  /** SUCCESSFUL probe results cached per (SparkContext, dir, glob): the
-    * encoding is a property of the landing dir (invariant above: ONE
-    * encoding per dir for the dir's lifetime), so re-probing on every
-    * plan build — the bench invokes each streaming query several times
-    * over the same sfDir — pays a batch footer read per invocation for
-    * an answer that cannot change. Keyed by SparkContext, not
-    * SparkSession, because [[stateSession]] clones a fresh session per
-    * query; clones share the context and the same filesystem view.
-    * The EMPTY-DIR FALLBACK is deliberately NOT cached: it is a guess,
-    * not a probe result — a dir that starts empty and later receives
-    * nanos-long files would otherwise be misread by every FUTURE plan
-    * build, with no way to correct it. Left uncached, the
-    * next plan build after files land probes the real encoding; only
-    * the plan built while the dir was still empty carries the guess
-    * (which is the pre-cache behavior, and the documented start-order
-    * risk the invariant covers). */
-  private val tsProbeCache =
-    new scala.collection.concurrent.TrieMap[(org.apache.spark.SparkContext, String, Option[String]), DataType]
+  /** The events schema a file stream source declares (streaming cannot
+    * infer). `ts` is TIMESTAMP(MICROS), the one encoding every shipped
+    * input writes (the sf fixtures, perfbench's generator; FIXTURES.md),
+    * read as a session-TZ `TimestampType` like [[graft.Tables.events]].
+    * A landing file whose `ts` is anything else — a nanos long,
+    * TIMESTAMP(NANOS) — fails the drain that reads it with
+    * `FAILED_READ_FILE.PARQUET_COLUMN_DATA_TYPE_MISMATCH`. */
+  private val EventsSchema = StructType(Seq(
+    StructField("event_id", LongType), StructField("ts", TimestampType),
+    StructField("user_id", LongType), StructField("event_type", StringType),
+    StructField("value", DoubleType), StructField("props", StringType)))
 
   private def streamEvents(s: SparkSession, dir: String,
                            glob: Option[String] = None,
                            maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val probeKey = (s.sparkContext, dir, glob)
-    val probe = tsProbeCache.get(probeKey).getOrElse(try {
-      val p = glob.foldLeft(s.read)((r, g) => r.option("pathGlobFilter", g))
-        .parquet(dir).schema("ts").dataType
-      tsProbeCache.putIfAbsent(probeKey, p)
-      p
-    } catch {
-      case e: org.apache.spark.sql.AnalysisException =>
-        // fall back ONLY for the documented case — a not-yet-populated
-        // landing dir (no glob-matching parquet present). A populated
-        // dir that fails to probe (missing ts column, corrupt footer)
-        // must stay a loud plan-build error, not a guessed encoding. The
-        // listing goes through Hadoop's FileSystem so scheme-qualified
-        // dirs (file://, hdfs://, s3a://) resolve — a bare
-        // java.io.File would see them as nonexistent and silently take
-        // the fallback; and if the listing itself fails we CANNOT
-        // prove the dir empty, so the original error propagates.
-        val matcher = glob.map(g => java.nio.file.FileSystems.getDefault
-          .getPathMatcher("glob:" + g))
-        val hasMatchingFiles = scala.util.Try {
-          val p = new org.apache.hadoop.fs.Path(dir)
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          // RECURSIVE listing: a partitioned landing layout keeps its
-          // parquet one level down (date=.../part-*.parquet), and a
-          // top-level-only listing would class such a dir "empty" and
-          // silently take the fallback for whatever unrelated
-          // AnalysisException got us here.
-          fs.exists(p) && {
-            val it = fs.listFiles(p, /* recursive = */ true)
-            var found = false
-            while (!found && it.hasNext) {
-              val name = it.next().getPath.getName
-              found = !name.startsWith("_") && !name.startsWith(".") &&
-                matcher.forall(_.matches(java.nio.file.Paths.get(name)))
-            }
-            found
-          }
-        }.getOrElse(true) // can't list: can't prove empty — stay loud
-        if (hasMatchingFiles) throw e
-        else TimestampType // nothing landed yet: the shipped encoding
-    })
-    val tsIsNanos = probe == LongType
-    val schema = StructType(Seq(
-      StructField("event_id", LongType),
-      StructField("ts", probe),
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType), StructField("props", StringType)))
     val opts = glob.map("pathGlobFilter" -> _) ++
       maxFilesPerTrigger.map("maxFilesPerTrigger" -> _.toString)
-    val raw = opts.foldLeft(s.readStream.schema(schema))((r, kv) =>
+    opts.foldLeft(s.readStream.schema(EventsSchema))((r, kv) =>
       r.option(kv._1, kv._2)).parquet(dir)
-    if (tsIsNanos)
-      // integer FLOOR division, not `/` (nanos-since-epoch overflows a
-      // double's 53-bit mantissa) and not bare DIV (which truncates
-      // toward zero, so a pre-1970 nanos value would land 1 µs high of
-      // the true floor the oracle computes)
-      raw.withColumn("ts", timestamp_micros(
-        expr("ts DIV 1000 - CASE WHEN ts % 1000 < 0 THEN 1 ELSE 0 END")))
-    else
-      // NTZ→LTZ wall-clock reinterpretation under session TZ = UTC;
-      // a no-op when the probe already read LTZ
-      raw.withColumn("ts", col("ts").cast(TimestampType))
   }
 
   def eventsStream(spark: SparkSession, sfDir: String): DataFrame =
@@ -136,38 +50,58 @@ object EventStreams {
     // production this would be a landing dir new files keep arriving into)
     streamEvents(spark, sfDir, glob = Some("events.parquet"))
 
+  /** An event time as the microsecond text the streaming outputs and
+    * their DuckDB oracles compare. */
+  private def microsText(ts: Column): Column =
+    date_format(ts, "yyyy-MM-dd HH:mm:ss.SSSSSS")
+
+  /** The click/view interval join behind every join mode — q43's inner
+    * join and its outer twins q137/q144/q151 — ONE definition shared by
+    * the memory-sink demos and the checkpointed runner, so the recovery
+    * spec exercises exactly the shipped shape and the join-mode matrix
+    * cannot drift: each side's projection and 1-hour watermark, and the
+    * interval condition (views within the hour preceding the click).
+    * `flush`, passed by the outer joins only, is [[flushRows]]' row,
+    * unioned into BOTH sides (outer emission waits on the MIN of the two
+    * watermarks — one stalled side stalls every outer row) and keyed to
+    * user −1, so it can never pair with a real row. */
+  private def clickViewJoin(ev: DataFrame, joinType: String = "inner",
+                            flush: Option[DataFrame] = None): DataFrame = {
+    def side(eventType: String, userCol: String, tsCol: String,
+             idCol: String) = {
+      val rows = ev.where(col("event_type") === eventType)
+        .select(col("user_id").as(userCol), col("ts").as(tsCol),
+          col("event_id").as(idCol))
+      flush.fold(rows)(f => rows.unionByName(f.select(lit(-1L).as(userCol),
+          col("ts").as(tsCol), lit(-1L).as(idCol))))
+        .withWatermark(tsCol, "1 hour")
+    }
+    side("click", "user_id", "click_ts", "click_id").join(
+      side("view", "v_user_id", "view_ts", "view_id"),
+      col("user_id") === col("v_user_id") &&
+        col("view_ts") <= col("click_ts") &&
+        col("view_ts") >= col("click_ts") - expr("INTERVAL 1 HOUR"),
+      joinType)
+  }
+
+  /** A click/view join's output row: the pair's ids under `user`, both
+    * event times as [[microsText]]. */
+  private def joinRows(joined: DataFrame,
+                       user: Column = col("user_id")): DataFrame =
+    joined.select(user.as("user_id"), col("click_id"), col("view_id"),
+      microsText(col("click_ts")).as("click_ts"),
+      microsText(col("view_ts")).as("view_ts"))
+
   /** Q43: stream-stream interval join — clicks joined to the same user's
     * view events from the preceding hour. Both sides are unbounded; the
     * event-time constraint plus watermarks bound the join state (each
     * side's rows are dropped once no future match can exist — the
     * mechanism that makes stream-stream joins feasible at all). Inner
     * join, append output. */
-  /** q43's join plan over any streaming events frame — ONE definition
-    * shared by the memory-sink demo query and the checkpointed file-sink
-    * runner, so the recovery spec exercises exactly the shipped shape. */
-  private def clickViewIntervalJoin(ev: DataFrame): DataFrame = {
-    val clicks = ev.where(col("event_type") === "click")
-      .select(col("user_id"), col("ts").as("click_ts"),
-        col("event_id").as("click_id"))
-      .withWatermark("click_ts", "1 hour")
-    val views = ev.where(col("event_type") === "view")
-      .select(col("user_id").as("v_user_id"), col("ts").as("view_ts"),
-        col("event_id").as("view_id"))
-      .withWatermark("view_ts", "1 hour")
-    clicks.join(views,
-      col("user_id") === col("v_user_id") &&
-        col("view_ts") <= col("click_ts") &&
-        col("view_ts") >= col("click_ts") - expr("INTERVAL 1 HOUR"))
-  }
-
-  def q43StreamIntervalJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val joined = clickViewIntervalJoin(eventsStream(stateSession(spark), sfDir))
-    runToTable(joined, OutputMode.Append())
-      .select(col("user_id"), col("click_id"), col("view_id"),
-        date_format(col("click_ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("click_ts"),
-        date_format(col("view_ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("view_ts"))
+  def q43StreamIntervalJoin(spark: SparkSession, sfDir: String): DataFrame =
+    runToTable(joinRows(clickViewJoin(eventsStream(stateSession(spark), sfDir))),
+        OutputMode.Append())
       .orderBy("user_id", "click_id", "view_id")
-  }
 
   /** RESTARTABLE stream-stream interval join: q43's shape over a landing
     * dir, append mode to a parquet sink with a real checkpoint — the
@@ -183,11 +117,8 @@ object EventStreams {
   def runIntervalJoinToFiles(spark: SparkSession, landingDir: String,
                              checkpointDir: String,
                              outDir: String): Unit = {
-    val s = stateSession(spark)
-    drainToParquet(clickViewIntervalJoin(streamEvents(s, landingDir))
-      .select(col("user_id"), col("click_id"), col("view_id"),
-        date_format(col("click_ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("click_ts"),
-        date_format(col("view_ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("view_ts")),
+    drainToParquet(
+      joinRows(clickViewJoin(streamEvents(stateSession(spark), landingDir))),
       checkpointDir, outDir)
   }
 
@@ -245,7 +176,7 @@ object EventStreams {
 
   /** q86's content-key dedup plan over any document stream — ONE
     * definition shared by the memory-sink demo and the checkpointed
-    * runner ([[clickViewIntervalJoin]]'s discipline), so the recovery
+    * runner ([[clickViewJoin]]'s discipline), so the recovery
     * spec exercises exactly the shipped dedup plan. */
   private def contentDedupPlan(docs: DataFrame): DataFrame =
     docs.select(md5(graft.functions.Text.normalized(col("text")))
@@ -362,7 +293,7 @@ object EventStreams {
   }
 
   /** q104's enrichment plan — ONE definition shared by the memory-sink
-    * query and the checkpointed runner ([[clickViewIntervalJoin]]'s
+    * query and the checkpointed runner ([[clickViewJoin]]'s
     * discipline): the clicks of the `ev` stream, left-joined to a
     * broadcast per-user view profile aggregated from the static
     * `staticEvents` relation. */
@@ -404,8 +335,10 @@ object EventStreams {
     * q15's corpus-wide rule; a bounded recrawl-overlap horizon is
     * `dropDuplicatesWithinWatermark` on the same plan.) */
   def q86StreamDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    val s = stateSession(spark)
-    val docs = graft.Tables.documents(s, sfDir)
+    // the landing files are written on the caller's session, whose
+    // schema memo holds `documents` (a clone's memo is empty); only the
+    // drain runs on the state-width clone
+    val docs = graft.Tables.documents(spark, sfDir)
       .select("doc_id", "lang", "text")
     val landing = java.nio.file.Files
       .createTempDirectory("graft-stream-dedup").toString
@@ -419,7 +352,7 @@ object EventStreams {
         graft.operators.CurationPipeline.snapshotB(docs)
           .select("doc_id", "lang", "text"),
         landing, 1)
-      runToTable(contentDedupPlan(docLandingStream(s, landing)),
+      runToTable(contentDedupPlan(docLandingStream(stateSession(spark), landing)),
           OutputMode.Append())
         .orderBy("content_md5")
     } finally {
@@ -462,9 +395,9 @@ object EventStreams {
     * its own (re-ingested keys re-occupy their old slots). */
   private[graft] def horizonDedupRun(spark: SparkSession, sfDir: String)
       : (DataFrame, Array[org.apache.spark.sql.streaming.StreamingQueryProgress]) = {
-    val s = stateSession(spark)
-    import s.implicits._
-    val docs = graft.Tables.documents(s, sfDir)
+    // landing files on the caller's session, the drain on a clone (q86)
+    import spark.implicits._
+    val docs = graft.Tables.documents(spark, sfDir)
       .select("doc_id", "lang", "text")
     val advancer = Seq((-1L, "xx", "graft horizon advancer"))
       .toDF("doc_id", "lang", "text")
@@ -487,7 +420,7 @@ object EventStreams {
         StructField("doc_id", LongType), StructField("lang", StringType),
         StructField("text", StringType),
         StructField("ingest_ts", TimestampType)))
-      val deduped = s.readStream.schema(docSchema)
+      val deduped = stateSession(spark).readStream.schema(docSchema)
         .option("maxFilesPerTrigger", 1) // one crawl batch per trigger
         .parquet(landing)
         .select(md5(graft.functions.Text.normalized(col("text")))
@@ -548,20 +481,42 @@ object EventStreams {
     (spark.table(name), q.recentProgress)
   }
 
+  /** Hourly tumbling event-time windows per event type, under a 1-hour
+    * watermark — q14's buckets, ONE plan for q29 (complete mode), q60
+    * (append, with the flush row) and [[runWindowedAppendToFiles]]. */
+  private def hourlyWindows(ev: DataFrame): DataFrame =
+    ev.withWatermark("ts", "1 hour")
+      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+      .agg(count(lit(1)).as("cnt"), round(sum(col("value")), 2).as("sum_value"))
+      .select(
+        date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hour"),
+        col("event_type"), col("cnt"), col("sum_value"))
+
   /** Q29: the streaming twin of batch q14 — tumbling 1-hour event-time
     * windows per event type. Watermark bounds state at 1 hour of lateness;
     * complete output mode because AvailableNow ends before a final
     * watermark advance would flush the last windows in append mode. */
-  def q29StreamTimeBucket(spark: SparkSession, sfDir: String): DataFrame = {
-    val agg = eventsStream(stateSession(spark), sfDir)
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("cnt"), round(sum(col("value")), 2).as("sum_value"))
-    runToTable(agg, OutputMode.Complete())
-      .select(
-        date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hour"),
-        col("event_type"), col("cnt"), col("sum_value"))
+  def q29StreamTimeBucket(spark: SparkSession, sfDir: String): DataFrame =
+    runToTable(hourlyWindows(eventsStream(stateSession(spark), sfDir)),
+        OutputMode.Complete())
       .orderBy("hour", "event_type")
+
+  /** The far-future FLUSH row every append-mode drain of the events
+    * stream unions in (q60, q142 and the outer joins — one definition so
+    * the load-bearing parts cannot drift): the `ts` of one known event,
+    * shifted 36500 days (100 years) forward; callers add their columns.
+    * The event id is a batch metadata lookup at plan build; min() over
+    * an EMPTY events table is a null cell (getLong would NPE), and an
+    * empty stream needs no flush, so a non-matching sentinel keeps the
+    * plan sound. A drain whose flush never fires silently leaves its
+    * last windows/rows stuck in state. */
+  private def flushRows(spark: SparkSession, s: SparkSession,
+      sfDir: String): DataFrame = {
+    val anchorRow = graft.Tables.events(spark, sfDir)
+      .agg(min(col("event_id"))).head()
+    val anchorId = if (anchorRow.isNullAt(0)) -1L else anchorRow.getLong(0)
+    eventsStream(s, sfDir).where(col("event_id") === anchorId)
+      .select((col("ts") + expr("INTERVAL 36500 DAYS")).as("ts"))
   }
 
   /** Q60: the APPEND-mode twin of q29 — the production default for
@@ -582,40 +537,33 @@ object EventStreams {
     * window, which append mode never emits — its end is past the final
     * watermark — and is dropped from the sink output defensively. The
     * result is exactly q29's (and the oracle is the same SQL). */
-  /** The far-future FLUSH-ROW source every append-mode drain unions in
-    * (q60's discipline, shared by q60/q137/q142/q144 so the
-    * load-bearing parts cannot drift): the rows of one known event id —
-    * a batch metadata lookup at plan build; min() over an EMPTY events
-    * table is a null cell (getLong would NPE), and an empty stream
-    * needs no flush, so a non-matching sentinel keeps the plan sound.
-    * Callers reshape the row and shift its ts 100 years forward; a
-    * drain whose flush never fires silently leaves its last
-    * windows/rows stuck in state. */
-  private def flushAnchorRows(spark: SparkSession, s: SparkSession,
-      sfDir: String): DataFrame = {
-    val anchorRow = graft.Tables.events(spark, sfDir)
-      .agg(min(col("event_id"))).head()
-    val anchorId = if (anchorRow.isNullAt(0)) -1L else anchorRow.getLong(0)
-    eventsStream(s, sfDir).where(col("event_id") === anchorId)
-  }
-
   def q60StreamAppendWindows(spark: SparkSession, sfDir: String): DataFrame = {
     val s = stateSession(spark)
     val ev = eventsStream(s, sfDir)
       .select(col("ts"), col("event_type"), col("value"))
-    val flush = flushAnchorRows(spark, s, sfDir)
-      .select((col("ts") + expr("INTERVAL 36500 DAYS")).as("ts"),
-        lit("__flush__").as("event_type"), lit(0.0).as("value"))
-    val agg = ev.unionByName(flush)
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("cnt"), round(sum(col("value")), 2).as("sum_value"))
-    runToTable(agg, OutputMode.Append())
+    val flush = flushRows(spark, s, sfDir)
+      .select(col("ts"), lit("__flush__").as("event_type"), lit(0.0).as("value"))
+    runToTable(hourlyWindows(ev.unionByName(flush)), OutputMode.Append())
       .where(col("event_type") =!= "__flush__")
-      .select(
-        date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hour"),
-        col("event_type"), col("cnt"), col("sum_value"))
       .orderBy("hour", "event_type")
+  }
+
+  /** An outer twin of q43 — [[clickViewJoin]] with the flush row —
+    * drained and keyed by `user`. Null `user_id`/`ts` rows are dropped
+    * first, as the oracles drop them: the watermark discards a null-ts
+    * row and the −1-sentinel sink filter would null-kill a null user_id,
+    * but a bare outer join would KEEP both as unmatched rows. Flush
+    * leftovers are dropped from the sink defensively. */
+  private def outerJoinRows(spark: SparkSession, sfDir: String,
+      joinType: String, user: Column): DataFrame = {
+    val s = stateSession(spark)
+    val ev = eventsStream(s, sfDir)
+      .where(col("user_id").isNotNull && col("ts").isNotNull)
+    runToTable(
+        joinRows(clickViewJoin(ev, joinType, Some(flushRows(spark, s, sfDir))),
+          user),
+        OutputMode.Append())
+      .where(col("user_id") =!= -1L)
   }
 
   /** Q137: stream-stream LEFT OUTER interval join — the join mode q43's
@@ -631,20 +579,10 @@ object EventStreams {
     * interval as q43 (views within the preceding hour), so after the
     * final flush the result is exactly the batch LEFT JOIN the oracle
     * runs. */
-  def q137StreamOuterJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val s = stateSession(spark)
-    val (clicks, views, cond) = outerJoinInputs(spark, s, sfDir)
-    val joined = clicks.join(views, cond, "leftOuter")
-    runToTable(joined, OutputMode.Append())
-      .where(col("user_id") =!= -1L)
-      .select(col("user_id"), col("click_id"), col("view_id"),
-        date_format(col("click_ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS")
-          .as("click_ts"),
-        date_format(col("view_ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS")
-          .as("view_ts"))
+  def q137StreamOuterJoin(spark: SparkSession, sfDir: String): DataFrame =
+    outerJoinRows(spark, sfDir, "leftOuter", col("user_id"))
       .orderBy(col("user_id"), col("click_id"),
         col("view_id").asc_nulls_first)
-  }
 
   /** Q144: stream-stream FULL OUTER interval join — the last cell of
     * the join-mode matrix (inner q43, left q137): unmatched CLICKS and
@@ -657,32 +595,23 @@ object EventStreams {
     * `coalesce(click.user_id, view.user_id)` (an unmatched view has no
     * click-side user), null ordering pinned on both engines (Spark asc
     * = NULLS FIRST; DuckDB defaults NULLS LAST — the oracle says it
-    * explicitly). After the final flush the result is exactly the
-    * batch FULL JOIN; the matched subset is q43 (spec-pinned). */
-  def q144StreamFullOuterJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val s = stateSession(spark)
-    val (clicks, views, cond) = outerJoinInputs(spark, s, sfDir)
-    val joined = clicks.join(views, cond, "fullOuter")
-    runToTable(joined, OutputMode.Append())
-      // flush leftovers can surface on EITHER side here (the two flush
-      // rows even match each other — same sentinel user, equal ts)
-      .where(coalesce(col("user_id"), col("v_user_id")) =!= -1L)
-      .select(coalesce(col("user_id"), col("v_user_id")).as("user_id"),
-        col("click_id"), col("view_id"),
-        date_format(col("click_ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS")
-          .as("click_ts"),
-        date_format(col("view_ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS")
-          .as("view_ts"))
+    * explicitly). Flush leftovers can surface on EITHER side here (the
+    * two flush rows even match each other — same sentinel user, equal
+    * ts); the coalesced key drops both. After the final flush the
+    * result is exactly the batch FULL JOIN; the matched subset is q43
+    * (spec-pinned). */
+  def q144StreamFullOuterJoin(spark: SparkSession, sfDir: String): DataFrame =
+    outerJoinRows(spark, sfDir, "fullOuter",
+        coalesce(col("user_id"), col("v_user_id")))
       .orderBy(col("user_id"), col("click_id").asc_nulls_first,
         col("view_id").asc_nulls_first)
-  }
 
   /** Q151: stream-stream RIGHT OUTER interval join — the fourth and
     * last cell of the join-mode matrix (inner q43, left q137, full
     * q144), making the "every join mode" claim literal: unmatched
     * VIEWS emit with a null click side once the global watermark
     * proves no click can still fall inside `[view_ts, view_ts + 1h]`
-    * — exactly q137 mirrored. Same shared inputs and flush/null
+    * — exactly q137 mirrored. Same join builder and flush/null
     * discipline (the two flush rows match each other, so the sink
     * filter on the VIEW side's sentinel removes the pair; an
     * unmatched click-side flush row is never emitted by a right
@@ -692,58 +621,10 @@ object EventStreams {
     * on both engines. After the final flush the result is exactly the
     * batch RIGHT JOIN; the matched subset is q43 (spec-pinned). */
   def q151StreamRightOuterJoin(spark: SparkSession,
-      sfDir: String): DataFrame = {
-    val s = stateSession(spark)
-    val (clicks, views, cond) = outerJoinInputs(spark, s, sfDir)
-    val joined = clicks.join(views, cond, "rightOuter")
-    runToTable(joined, OutputMode.Append())
-      .where(col("v_user_id") =!= -1L)
-      .select(col("v_user_id").as("user_id"),
-        col("click_id"), col("view_id"),
-        date_format(col("click_ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS")
-          .as("click_ts"),
-        date_format(col("view_ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS")
-          .as("view_ts"))
+      sfDir: String): DataFrame =
+    outerJoinRows(spark, sfDir, "rightOuter", col("v_user_id"))
       .orderBy(col("user_id"), col("view_id"),
         col("click_id").asc_nulls_first)
-  }
-
-  /** The click/view stream pair every outer interval join
-    * (q137/q144/q151) builds on, ONE definition so the load-bearing
-    * parts cannot drift: explicit null drops mirrored in the oracles
-    * (the watermark discards null-ts rows and the -1-sentinel sink
-    * filter would null-kill a null user_id — a bare outer join would
-    * KEEP both as unmatched rows), q60's far-future flush row unioned
-    * into BOTH inputs (outer emission waits on the MIN of the two
-    * watermarks — one stalled side stalls every outer row), keyed to
-    * user −1 so it can never pair with a real row, and the q43
-    * interval condition (views within the hour preceding the click). */
-  private def outerJoinInputs(spark: SparkSession, s: SparkSession,
-      sfDir: String): (DataFrame, DataFrame,
-      org.apache.spark.sql.Column) = {
-    val ev = eventsStream(s, sfDir)
-      .where(col("user_id").isNotNull && col("ts").isNotNull)
-    def flush(tsName: String, idName: String) =
-      flushAnchorRows(spark, s, sfDir)
-        .select(lit(-1L).as("user_id"),
-          (col("ts") + expr("INTERVAL 36500 DAYS")).as(tsName),
-          lit(-1L).as(idName))
-    val clicks = ev.where(col("event_type") === "click")
-      .select(col("user_id"), col("ts").as("click_ts"),
-        col("event_id").as("click_id"))
-      .unionByName(flush("click_ts", "click_id"))
-      .withWatermark("click_ts", "1 hour")
-    val views = ev.where(col("event_type") === "view")
-      .select(col("user_id").as("v_user_id"), col("ts").as("view_ts"),
-        col("event_id").as("view_id"))
-      .unionByName(flush("view_ts", "view_id")
-        .withColumnRenamed("user_id", "v_user_id"))
-      .withWatermark("view_ts", "1 hour")
-    val cond = col("user_id") === col("v_user_id") &&
-      col("view_ts") <= col("click_ts") &&
-      col("view_ts") >= col("click_ts") - expr("INTERVAL 1 HOUR")
-    (clicks, views, cond)
-  }
 
   /** RESTARTABLE windowed aggregation: the production layout of q29/q60
     * — a file-stream LANDING DIR in, hourly event-time windows with a
@@ -773,17 +654,10 @@ object EventStreams {
                                checkpointDir: String,
                                outDir: String,
                                maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val s = stateSession(spark)
-    val agg = streamEvents(s, landingDir,
-        maxFilesPerTrigger = maxFilesPerTrigger)
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("cnt"),
-        round(sum(col("value")), 2).as("sum_value"))
-      .select(
-        date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hour"),
-        col("event_type"), col("cnt"), col("sum_value"))
-    drainToParquet(agg, checkpointDir, outDir)
+    drainToParquet(
+      hourlyWindows(streamEvents(stateSession(spark), landingDir,
+        maxFilesPerTrigger = maxFilesPerTrigger)),
+      checkpointDir, outDir)
   }
 
   /** RESTARTABLE first-seen dedup: q31's `flatMapGroupsWithState` over a
@@ -814,7 +688,7 @@ object EventStreams {
   /** q31's first-seen dedup plan over a streaming events frame,
     * parameterized by the dedup HORIZON — ONE definition shared by the
     * memory-sink demo (24 h) and the checkpointed runner (365 d), the
-    * [[clickViewIntervalJoin]] discipline: the recovery spec must
+    * [[clickViewJoin]] discipline: the recovery spec must
     * exercise exactly the shipped state function (tie-break, timeout
     * clamp and all), and a fix applied to one copy can't silently skip
     * the other. */
@@ -847,8 +721,7 @@ object EventStreams {
       }
       .toDF()
       .select(col("user_id"), col("event_type"), col("first_event_id"),
-        date_format(col("first_ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS")
-          .as("first_ts"))
+        microsText(col("first_ts")).as("first_ts"))
   }
 
   /** Clamp a desired event-time timeout above the current watermark:
@@ -877,8 +750,8 @@ object EventStreams {
       .withWatermark("ts", "1 hour")
       .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
       .agg(
-        date_format(min(col("ts")), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("session_start"),
-        date_format(max(col("ts")), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("session_end"),
+        microsText(min(col("ts"))).as("session_start"),
+        microsText(max(col("ts"))).as("session_end"),
         count(lit(1)).as("n_events"),
         round(sum(col("value")), 2).as("sum_value"))
     runToTable(agg, OutputMode.Complete())
@@ -886,33 +759,35 @@ object EventStreams {
       .orderBy("user_id", "session_start")
   }
 
-  /** Q117: streaming session FUNNEL — q112's conversion semantics
-    * computed INSIDE the streaming sessionizer. `session_window` merges
-    * windows while events keep arriving within the 30-minute gap, and
-    * the SAME aggregate pass carries the funnel columns (earliest view
+  /** The session funnel's one plan (q117, and q142 with the flush
+    * row): 30-minute session windows per user under a 1-hour watermark,
+    * whose SAME aggregate pass carries the funnel columns (earliest view
     * ts, latest click ts) — no second stateful stage, no reprocessing;
     * converted = non-strict `min(view) <= max(click)` (q112's rule;
     * null-safe: a session without views or clicks compares NULL and
-    * reads 0). Batch q112 additionally rolls up per user — streaming
-    * stops at per-session rows because chaining a second streaming
-    * aggregate needs complete-mode output of the first; the per-user
-    * rollup belongs downstream, on the session table this emits. */
-  def q117StreamSessionFunnel(spark: SparkSession, sfDir: String): DataFrame = {
-    val agg = eventsStream(stateSession(spark), sfDir)
-      .withWatermark("ts", "1 hour")
+    * reads 0). */
+  private def sessionFunnel(ev: DataFrame): DataFrame =
+    ev.withWatermark("ts", "1 hour")
       .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
       .agg(
-        date_format(min(col("ts")), "yyyy-MM-dd HH:mm:ss.SSSSSS")
-          .as("session_start"),
+        microsText(min(col("ts"))).as("session_start"),
         count(lit(1)).as("n_events"),
         min(when(col("event_type") === "view", col("ts"))).as("fv"),
         max(when(col("event_type") === "click", col("ts"))).as("lc"))
-    runToTable(agg, OutputMode.Complete())
       .select(col("user_id"), col("session_start"), col("n_events"),
         when(col("fv").isNotNull && col("fv") <= col("lc"), 1L)
           .otherwise(0L).as("converted"))
+
+  /** Q117: streaming session FUNNEL — q112's conversion semantics
+    * computed INSIDE the streaming sessionizer ([[sessionFunnel]]).
+    * Batch q112 additionally rolls up per user — streaming stops at
+    * per-session rows because chaining a second streaming aggregate
+    * needs complete-mode output of the first; the per-user rollup
+    * belongs downstream, on the session table this emits. */
+  def q117StreamSessionFunnel(spark: SparkSession, sfDir: String): DataFrame =
+    runToTable(sessionFunnel(eventsStream(stateSession(spark), sfDir)),
+        OutputMode.Complete())
       .orderBy("user_id", "session_start")
-  }
 
   /** Q142: the APPEND-mode twin of q117 — the session funnel with STATE
     * EVICTION, the variant a true unbounded stream must run: q30/q117
@@ -943,25 +818,12 @@ object EventStreams {
     val s = stateSession(spark)
     val ev = eventsStream(s, sfDir)
       .select(col("user_id"), col("ts"), col("event_type"))
-    val flush = flushAnchorRows(spark, s, sfDir)
-      .select(lit(-1L).as("user_id"),
-        (col("ts") + expr("INTERVAL 36500 DAYS")).as("ts"),
+    val flush = flushRows(spark, s, sfDir)
+      .select(lit(-1L).as("user_id"), col("ts"),
         lit("__flush__").as("event_type"))
-    val agg = ev.unionByName(flush)
-      .withWatermark("ts", "1 hour")
-      .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-      .agg(
-        date_format(min(col("ts")), "yyyy-MM-dd HH:mm:ss.SSSSSS")
-          .as("session_start"),
-        count(lit(1)).as("n_events"),
-        min(when(col("event_type") === "view", col("ts"))).as("fv"),
-        max(when(col("event_type") === "click", col("ts"))).as("lc"))
-    val (table, progress) = runToTableWithProgress(agg, OutputMode.Append())
-    (table
-      .where(col("user_id") =!= -1L)
-      .select(col("user_id"), col("session_start"), col("n_events"),
-        when(col("fv").isNotNull && col("fv") <= col("lc"), 1L)
-          .otherwise(0L).as("converted"))
+    val (table, progress) = runToTableWithProgress(
+      sessionFunnel(ev.unionByName(flush)), OutputMode.Append())
+    (table.where(col("user_id") =!= -1L)
       .orderBy("user_id", "session_start"), progress)
   }
 
@@ -1003,9 +865,10 @@ object EventStreams {
     * row-for-row spec against q126. Two engines, one Kimball rule set:
     * the q112/q117 twin discipline applied to CDC. */
   def q133StreamScd2(spark: SparkSession, sfDir: String): DataFrame = {
-    val s = stateSession(spark)
+    // the landing files are written on the caller's session, whose
+    // schema memo holds `events`; runScd2ToFiles drains on a clone
     val updates = graft.operators.RelationalQueries
-      .scd2Updates(graft.Tables.events(s, sfDir))
+      .scd2Updates(graft.Tables.events(spark, sfDir))
     // quartile cut points: four landing files, strictly ascending in
     // event time (rows tying a boundary stay in one file). Order
     // statistics via the house bisection engine (groupedQuantiles) —
@@ -1036,7 +899,7 @@ object EventStreams {
     val cur = latestScd2Table(stateDir)
     require(cur.nonEmpty, "stream produced no batches")
     graft.operators.RelationalQueries
-      .scd2Formatted(s.read.parquet(cur.get))
+      .scd2Formatted(spark.read.parquet(cur.get))
   }
 
   /** The CDC-update landing schema (= scd2Updates' columns) — streaming

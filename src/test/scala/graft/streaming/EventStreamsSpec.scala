@@ -150,7 +150,7 @@ class EventStreamsSpec extends SparkSpec {
     * a scratch dir and the part file moves into place. */
   private def landEvents(events: org.apache.spark.sql.DataFrame,
                          dir: String): Unit = {
-    val staging = scratchDir("graft-probe-stage-").toString
+    val staging = scratchDir("graft-events-stage-").toString
     events.coalesce(1).write.mode("overwrite").parquet(staging)
     val part = new java.io.File(staging).listFiles()
       .find(f => f.getName.startsWith("part-") &&
@@ -160,31 +160,55 @@ class EventStreamsSpec extends SparkSpec {
     graft.GraftSession.deleteRecursively(new java.io.File(staging))
   }
 
-  test("empty-dir schema fallback is not cached: later files re-probe") {
-    // a landing dir probed while EMPTY takes the TIMESTAMP(MICROS)
-    // fallback for that plan build only — caching the guess would
-    // misread every future build once differently-encoded files land.
-    // After files arrive, the next plan build must probe the REAL
-    // encoding: here the other one, a nanos-since-epoch LONG ts.
-    val dir = scratchDir("graft-probe-").toString
+  test("a `ts` that is not TIMESTAMP(MICROS) fails loudly") {
+    // events whose ts is a nanos-since-epoch long, the encoding a batch
+    // read would otherwise return silently as LongType
+    val nanos = Tables.events(spark, sfDir)
+      .withColumn("ts", unix_micros(col("ts")) * lit(1000L))
+    val base = scratchDir("graft-nanos-").toString
     try {
-      val empty = EventStreams.q43StreamIntervalJoin(spark, dir)
-      assert(empty.count() === 0, "empty landing dir emitted rows")
-      landEvents(Tables.events(spark, sfDir)
-        .withColumn("ts", unix_micros(col("ts")) * lit(1000L)), dir)
-      val got = EventStreams.q43StreamIntervalJoin(spark, dir)
-      val ts = got.select("click_ts").collect().map(_.getString(0))
-      assert(ts.nonEmpty, "no joined rows after files landed")
-      assert(ts.forall(_.startsWith("20")),
-        s"timestamps misread (micros fallback applied to nanos data): ${ts.head}")
-    } finally graft.GraftSession
-      .deleteRecursively(new java.io.File(dir))
+      // a runner whose landing dir receives a nanos-long file fails its
+      // drain
+      nanos.coalesce(1).write.parquet(s"$base/landing")
+      val drain = intercept[Exception](EventStreams.runWindowedAppendToFiles(
+        spark, s"$base/landing", s"$base/ck", s"$base/out"))
+      val chain = Iterator.iterate[Throwable](drain)(_.getCause)
+        .takeWhile(_ != null).map(_.getMessage).mkString("\n")
+      assert(chain.contains("PARQUET_COLUMN_DATA_TYPE_MISMATCH"), chain)
+      // the batch table over the same encoding throws at build
+      landEvents(nanos, base)
+      val load = intercept[IllegalArgumentException](
+        Tables.events(spark, base))
+      assert(load.getMessage.contains(s"$base/events.parquet") &&
+        load.getMessage.contains("LongType"), load.getMessage)
+    } finally graft.GraftSession.deleteRecursively(new java.io.File(base))
+  }
+
+  test("q86, q90 and q133 load their inputs on the caller's session: " +
+      "a warm build infers no input schema") {
+    // each build clones a session for its drain; a table loaded on the
+    // clone misses the caller's schema memo and pays one footer-inference
+    // job (5, 10 and 31 jobs apiece when q86 and q90 loaded `documents`
+    // and q133 `events` there; the counts repeat run to run)
+    val budget = Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
+        org.apache.spark.sql.DataFrame, Long)](
+      ("q86", EventStreams.q86StreamDedup, 4L),
+      ("q90", EventStreams.q90StreamDedupBounded, 9L),
+      ("q133", EventStreams.q133StreamScd2, 30L))
+    budget.foreach { case (_, fn, _) => fn(spark, sfDir).count() }
+    val m = graft.metrics.MetricsReport.install(spark)
+    val jobs =
+      try budget.map { case (q, fn, _) => q -> m.window(fn(spark, sfDir)).jobs }
+      finally spark.sparkContext.removeSparkListener(m)
+    val over = budget.zip(jobs).collect {
+      case ((q, _, max), (_, n)) if n > max => s"$q: $n > $max" }
+    assert(over.isEmpty, s"builds over budget: $over (all: $jobs)")
   }
 
   test("a runner started on an empty landing dir reads the " +
       "TIMESTAMP(MICROS) files that land later") {
     // the documented start order: the plan is built while the dir is
-    // empty, so its ts encoding is the fallback's, and every file that
+    // empty, under the one declared events schema, and every file that
     // lands later is read under it
     val dir = scratchDir("graft-empty-start-").toString
     val q = EventStreams.eventsStream(spark, dir).writeStream

@@ -13,36 +13,27 @@ import graft.SparkSpec
   * files exactly-once. */
 class RecoverySpec extends SparkSpec {
 
-  /** events.parquet with `ts` normalized to nanos-since-epoch LONG no
-    * matter which encoding the fixture generation shipped (nanos long
-    * under nanosAsLong, or a plain micros timestamp). All the slicing
-    * arithmetic below is in nanos, and landing files written from this
-    * frame carry a LongType ts — which EventStreams' encoding probe
-    * reads back as the nanos regime. */
-  private def rawNanosEvents = {
-    val df = spark.read.parquet(s"$sfDir/events.parquet")
-    df.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType => df
-      case _ => df.withColumn("ts",
-        unix_micros(col("ts").cast(
-          org.apache.spark.sql.types.TimestampType)) * lit(1000L))
-    }
-  }
+  /** events.parquet as shipped: `ts` is TIMESTAMP(MICROS), the one
+    * encoding EventStreams reads, so landing files written from this
+    * frame drain as they are. The slicing below is in [[tsMicros]]; the
+    * flush and backfill rows shift `ts` by intervals. */
+  private def rawEvents = spark.read.parquet(s"$sfDir/events.parquet")
+
+  private def tsMicros = unix_micros(col("ts"))
 
   test("killed+resumed checkpointed stream equals the uninterrupted run") {
     val base = scratchDir("graft-recovery").toString
-    // raw events with ts as nanos-since-epoch LONG (see rawNanosEvents)
-    val raw = rawNanosEvents
-    val Seq(lo, hi) = raw.agg(min("ts"), max("ts")).head()
+    val raw = rawEvents
+    val Seq(lo, hi) = raw.agg(min(tsMicros), max(tsMicros)).head()
       .toSeq.map(_.asInstanceOf[Long]).toSeq
     val mid = lo + (hi - lo) / 2
-    val half1 = raw.where(col("ts") < mid)
-    val half2 = raw.where(col("ts") >= mid)
+    val half1 = raw.where(tsMicros < mid)
+    val half2 = raw.where(tsMicros >= mid)
     // final-watermark flush (q60's pattern): one far-future row pushes
     // the watermark past every real window; its own window never closes,
     // so it appears in no output
     val flush = raw.limit(1)
-      .withColumn("ts", col("ts") + lit(36500L * 86400L * 1000000000L))
+      .withColumn("ts", col("ts") + expr("INTERVAL 36500 DAYS"))
       .withColumn("event_type", lit("__flush__"))
 
     // uninterrupted twin: everything lands before the single run
@@ -91,17 +82,17 @@ class RecoverySpec extends SparkSpec {
     // emitted windows must never re-emit. Kill+resume proved checkpoint
     // recovery; this proves the ordinary many-batch path.
     val base = scratchDir("graft-multibatch").toString
-    val raw = rawNanosEvents
-    val Seq(lo, hi) = raw.agg(min("ts"), max("ts")).head()
+    val raw = rawEvents
+    val Seq(lo, hi) = raw.agg(min(tsMicros), max(tsMicros)).head()
       .toSeq.map(_.asInstanceOf[Long]).toSeq
     val flush = raw.limit(1)
-      .withColumn("ts", col("ts") + lit(36500L * 86400L * 1000000000L))
+      .withColumn("ts", col("ts") + expr("INTERVAL 36500 DAYS"))
       .withColumn("event_type", lit("__flush__"))
     // 6 time slices + flush, one parquet file each: 7 micro-batches
     val slices = (0 until 6).map { i =>
       val a = lo + (hi - lo + 1) * i / 6
       val b = lo + (hi - lo + 1) * (i + 1) / 6
-      raw.where(col("ts") >= a && col("ts") < b)
+      raw.where(tsMicros >= a && tsMicros < b)
     } :+ flush
     for (dir <- Seq("landing1", "landingN"); s <- slices)
       s.coalesce(1).write.mode("append").parquet(s"$base/$dir")
@@ -138,24 +129,24 @@ class RecoverySpec extends SparkSpec {
     // _spark_metadata-deduped file output would still catch re-emits as
     // duplicate (click_id, view_id) rows.
     val base = scratchDir("graft-recovery-join").toString
-    val raw = rawNanosEvents
+    val raw = rawEvents
     // an arbitrary midpoint may straddle no matched pair at the smallest
     // SF; instead CUT INSIDE THE WIDEST MATCHED PAIR (batch twin of the
     // join condition), so at least that pair's click is buffered at the
     // kill and can only complete from recovered state
     val clicks = raw.where(col("event_type") === "click")
-      .select(col("user_id"), col("ts").as("cts"))
+      .select(col("user_id"), tsMicros.as("cts"))
     val views = raw.where(col("event_type") === "view")
-      .select(col("user_id").as("vu"), col("ts").as("vts"))
+      .select(col("user_id").as("vu"), tsMicros.as("vts"))
     val mid = clicks.join(views,
       col("user_id") === col("vu") &&
         col("vts") < col("cts") &&
-        col("vts") >= col("cts") - lit(3600L * 1000000000L))
+        col("vts") >= col("cts") - lit(3600L * 1000000L))
       .select(expr("vts + (cts - vts) DIV 2").as("cut"),
         (col("cts") - col("vts")).as("gap"))
       .orderBy(desc("gap")).head().getLong(0)
-    val half1 = raw.where(col("ts") < mid)
-    val half2 = raw.where(col("ts") >= mid)
+    val half1 = raw.where(tsMicros < mid)
+    val half2 = raw.where(tsMicros >= mid)
 
     // uninterrupted twin
     half1.write.mode("append").parquet(s"$base/landingU")
@@ -171,7 +162,7 @@ class RecoverySpec extends SparkSpec {
     // format the cut through the same date_format/UTC path the output
     // columns use, so the string comparison is apples-to-apples
     val midStr = spark.range(1).select(
-      date_format(timestamp_micros(lit(mid / 1000L)),
+      date_format(timestamp_micros(lit(mid)),
         "yyyy-MM-dd HH:mm:ss.SSSSSS")).head().getString(0)
     val crossCut = spark.read.parquet(s"$base/outU")
       .where((col("click_ts") < lit(midStr)) =!=
@@ -209,7 +200,7 @@ class RecoverySpec extends SparkSpec {
     // FIXED sfDir (the contract: genuinely static input), so both runs
     // see the same dimension and outputs must be identical.
     val base = scratchDir("graft-recovery-enrich").toString
-    val raw = rawNanosEvents
+    val raw = rawEvents
     val ids = raw.where(col("event_type") === "click")
       .select("event_id").orderBy("event_id").collect().map(_.getLong(0))
     assert(ids.length >= 4, "fixture too small to split")
@@ -260,7 +251,7 @@ class RecoverySpec extends SparkSpec {
     // EventStreams is defense-in-depth for the exact-boundary case and
     // for Spark versions that deliver late rows to the function.
     val base = scratchDir("graft-backfill").toString
-    val raw = rawNanosEvents
+    val raw = rawEvents
     // phase 1: current data advances the watermark to max(ts) - 1h
     raw.write.mode("append").parquet(s"$base/landing")
     EventStreams.runFirstSeenToFiles(spark,
@@ -269,7 +260,7 @@ class RecoverySpec extends SparkSpec {
     // phase 2: one NEW pair lands 400 days (> the 365-day horizon)
     // in the past — deeper than the horizon behind the watermark
     raw.limit(1)
-      .withColumn("ts", col("ts") - lit(400L * 86400L * 1000000000L))
+      .withColumn("ts", col("ts") - expr("INTERVAL 400 DAYS"))
       .withColumn("event_type", lit("__backfill__"))
       .write.mode("append").parquet(s"$base/landing")
     EventStreams.runFirstSeenToFiles(spark, // must not throw
@@ -291,13 +282,13 @@ class RecoverySpec extends SparkSpec {
     // The cut is by TIME, so a pair's true first event is always in the
     // phase that first contains the pair.
     val base = scratchDir("graft-recovery-state").toString
-    val raw = rawNanosEvents
-    val Seq(lo, hi) = raw.agg(min("ts"), max("ts")).head()
+    val raw = rawEvents
+    val Seq(lo, hi) = raw.agg(min(tsMicros), max(tsMicros)).head()
       .toSeq.map(_.asInstanceOf[Long]).toSeq
     val mid = lo + (hi - lo) / 2
-    raw.where(col("ts") < mid).write.mode("append")
+    raw.where(tsMicros < mid).write.mode("append")
       .parquet(s"$base/landingU")
-    raw.where(col("ts") >= mid).write.mode("append")
+    raw.where(tsMicros >= mid).write.mode("append")
       .parquet(s"$base/landingU")
     EventStreams.runFirstSeenToFiles(spark,
       s"$base/landingU", s"$base/ckU", s"$base/outU")
@@ -305,7 +296,7 @@ class RecoverySpec extends SparkSpec {
       .orderBy("user_id", "event_type").collect().toSeq
     assert(uninterrupted.nonEmpty)
 
-    raw.where(col("ts") < mid).write.mode("append")
+    raw.where(tsMicros < mid).write.mode("append")
       .parquet(s"$base/landingI")
     EventStreams.runFirstSeenToFiles(spark,
       s"$base/landingI", s"$base/ckI", s"$base/outI")
@@ -316,13 +307,13 @@ class RecoverySpec extends SparkSpec {
     // the no-re-emit property must actually be exercised: the second
     // half has to contain events for pairs ALREADY emitted in phase A —
     // without recovered state, each would emit a duplicate in phase B
-    val half2Pairs = raw.where(col("ts") >= mid)
+    val half2Pairs = raw.where(tsMicros >= mid)
       .select("user_id", "event_type").distinct().collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
     assert((phaseA & half2Pairs).nonEmpty,
       "no already-seen pair has post-kill events; test exercises nothing")
 
-    raw.where(col("ts") >= mid).write.mode("append")
+    raw.where(tsMicros >= mid).write.mode("append")
       .parquet(s"$base/landingI")
     EventStreams.runFirstSeenToFiles(spark,
       s"$base/landingI", s"$base/ckI", s"$base/outI")
