@@ -657,7 +657,7 @@ object SparkEntry {
     "q187_composite_delete" ->
       (ManifestQueries.q187CompositeDelete _),
     // q188 is CALL system.zorder + the 2-D rectangle through plain SQL
-    // WHERE: pushed range filters drive the v4 multi-column manifest
+    // WHERE: pushed range filters drive the multi-column manifest
     // skipping — q162's oracle gates the third surface.
     "q188_sql_zorder_rect" ->
       (SqlCatalogQueries.q188SqlZOrderRect _),

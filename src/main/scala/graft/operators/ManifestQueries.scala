@@ -64,7 +64,7 @@ object ManifestQueries {
     * range-local delta instead. */
   def q155ManifestMerge(spark: SparkSession, sfDir: String): DataFrame = {
     val root = Artifacts.freshRoot(spark, sfDir, "manifest_merge_")
-    // bounds-stamped (manifest format v2): the merge finds its affected
+    // bounds-stamped on doc_id: the merge finds its affected
     // files from the manifest alone, no snapshot scan
     CurationPipeline.mergeSnapshotB(spark, root,
       Tables.documents(spark, sfDir))
@@ -777,7 +777,7 @@ object ManifestQueries {
   }
 
   /** Q162: the Z-layout's rectangle served by MANIFEST-level 2-D file
-    * skipping (format v4) — q130 pruned through parquet's per-file
+    * skipping — q130 pruned through parquet's per-file
     * column statistics at scan time; here the same z-clustered events
     * land as a manifest table with PER-FILE [lo, hi] stats on BOTH
     * rectangle dimensions (`statsCols = user_id, ts` — one stamped pass

@@ -38,8 +38,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * [[V1Scan]] fallback (the JDBC connector's shape) — the planner's
   * pushed column set and filters arrive through
   * [[SupportsPushDownRequiredColumns]]/[[SupportsPushDownFilters]],
-  * drive MANIFEST file skipping (v2 bounds + v4 multi-column stats,
-  * decided before any footer read) plus parquet row-group pushdown via
+  * drive MANIFEST file skipping (the per-file [lo, hi] of every
+  * listed stats column, decided before any footer read) plus parquet
+  * row-group pushdown via
   * [[ManifestTable.sqlScan]], and Spark re-applies every filter
   * post-scan (this scan declares them all residual), so an
   * untranslatable predicate costs IO, never correctness. At 100 TB the
@@ -420,7 +421,7 @@ private[sources] object GraftProcedures {
           input.getInt(1))))
       case "zorder" => proc("zorder",
         "N-dimensional clustered compaction: Morton-interleaved " +
-          "layout + v4 multi-column stats over a comma-separated " +
+          "layout + per-file stats over a comma-separated " +
           "column list (ManifestTable.optimizeZOrderCols — Delta's " +
           "OPTIMIZE ZORDER BY)",
         Seq(in("table", DataTypes.StringType),
@@ -508,6 +509,25 @@ object GraftCatalog {
     spark.conf.set(s"spark.sql.catalog.$name",
       classOf[GraftCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$name.warehouse", warehouse)
+  }
+
+  /** A whole-relation read of a driver-built DataFrame through the V1
+    * fallback: the scan of the tables with no pushdown tier (a branch
+    * head, a metadata table). */
+  private[sources] def dataFrameScan(schema: StructType,
+                                     relation: () => DataFrame)
+      : ScanBuilder = new ScanBuilder {
+    override def build(): Scan = new V1Scan {
+      override def readSchema(): StructType = schema
+      override def toV1TableScan[T <: BaseRelation with TableScan](
+          context: SQLContext): T =
+        new BaseRelation with TableScan {
+          override def sqlContext: SQLContext = context
+          override def schema: StructType = readSchema()
+          override def buildScan(): org.apache.spark.rdd.RDD[Row] =
+            relation().rdd
+        }.asInstanceOf[T]
+    }
   }
 }
 
@@ -699,19 +719,7 @@ private[sources] class GraftBranchTable(ident: String, tableRoot: String,
     }
 
   override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder = new ScanBuilder {
-    override def build(): Scan = new V1Scan {
-      override def readSchema(): StructType = schema
-      override def toV1TableScan[T <: BaseRelation with TableScan](
-          context: SQLContext): T =
-        new BaseRelation with TableScan {
-          override def sqlContext: SQLContext = context
-          override def schema: StructType = GraftBranchTable.this.schema
-          override def buildScan(): org.apache.spark.rdd.RDD[Row] =
-            relation().rdd
-        }.asInstanceOf[T]
-    }
-  }
+      : ScanBuilder = GraftCatalog.dataFrameScan(schema, () => relation())
 }
 
 /** A table's METADATA served as SQL relations (Iceberg's metadata-table
@@ -756,19 +764,7 @@ private[sources] class GraftMetaTable(ident: String, tableRoot: String,
     util.EnumSet.of(TableCapability.BATCH_READ)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder = new ScanBuilder {
-    override def build(): Scan = new V1Scan {
-      override def readSchema(): StructType = schema
-      override def toV1TableScan[T <: BaseRelation with TableScan](
-          context: SQLContext): T =
-        new BaseRelation with TableScan {
-          override def sqlContext: SQLContext = context
-          override def schema: StructType = GraftMetaTable.this.schema
-          override def buildScan(): org.apache.spark.rdd.RDD[Row] =
-            relation().rdd
-        }.asInstanceOf[T]
-    }
-  }
+      : ScanBuilder = GraftCatalog.dataFrameScan(schema, () => relation())
 }
 
 /** Receives the planner's pushdown: pruned columns shape the scan's

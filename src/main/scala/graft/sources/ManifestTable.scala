@@ -61,6 +61,12 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, Sh
   *    [[append]]/[[mergeCoW]] enforce the evolution contract: adding
   *    trailing columns is supported, dropping or retyping a column is
   *    rejected loudly — never a silent column drop.
+  *  - '''Per-file stats, one list.''' The `#statscols=` header names
+  *    the table's stats columns in order, and each entry line carries
+  *    [lo, hi] pairs for a prefix of that list (see [[StatsKey]] for
+  *    the one rule every writer follows): reads, merges and deletes
+  *    prune files from the manifest alone, and a column or pair the
+  *    list does not give is unknown — read, never wrongly skipped.
   *
   * '''One resolve per operation.''' Every entry point resolves the
   * table ONCE into a [[Snapshot]] — one listing of `_manifests/`, one
@@ -159,18 +165,18 @@ object ManifestTable {
           "left_anti")
       }
 
-    /** The delete entries that can hold a key of the files `over`. When
-      * the table's bounds column is the leading delete column, a delete
-      * line carries that column's [lo, hi] (format v6), and a delete
-      * file whose range misses every file's range holds no tuple any of
-      * them can match. A line without bounds, on either side, may hold
-      * anything. `over`'s [lo, hi] must describe this snapshot's bounds
-      * column: its own data entries, or lines staged for it. */
-    private[sources] def deletesOver(over: Seq[Entry]): Seq[Entry] =
-      if (!deleteCols.headOption.exists(boundsCol.contains)) deleteEntries
-      else deleteEntries.filter(d => d.bounds.forall { case (lo, hi) =>
-        over.exists(_.bounds.forall { case (a, b) => a <= hi && b >= lo })
-      })
+    /** The delete entries that can hold a key of the files `over`. A
+      * delete line carries the pairs of the listed delete columns, so
+      * when the leading delete column is listed, a delete file whose
+      * range misses every file's range holds no tuple any of them can
+      * match. A line without that pair, on either side, may hold
+      * anything. `over` must be read under this snapshot's stats list:
+      * its own data entries, or lines staged for it. */
+    private[sources] def deletesOver(over: Seq[Entry]): Seq[Entry] = {
+      val k = deleteCols.head
+      deleteEntries.filter(d =>
+        over.exists(overlaps(boundsOf(d, k).map(k -> _))))
+    }
 
     /** The ONE delete-key read: the `deleteCols` tuples of `paths`
       * (default: the outstanding delete files) under their declared key
@@ -210,8 +216,8 @@ object ManifestTable {
     private[sources] def deleteEntries: Seq[Entry] = entries.filter(_.isDelete)
     private[sources] def pathOf(e: Entry): String =
       new Path(root, e.rel).toString
-    private[sources] def boundsCol: Option[String] = headers.get(BoundsKey)
-    private[sources] def statsCols: Seq[String] = colsOf(headers, StatsKey)
+    private[sources] lazy val statsCols: Seq[String] =
+      colsOf(headers, StatsKey)
     private[sources] def bloomCols: Seq[String] = colsOf(headers, BloomKey)
     /** CHECK constraints, name → SQL expression. */
     private[sources] def constraints: Map[String, String] =
@@ -242,24 +248,11 @@ object ManifestTable {
     /** The table's field-id high-water mark (see the FIELD IDS block). */
     private[sources] def maxFieldId: Long = headers(MaxFieldIdKey).toLong
 
-    /** The stored [lo, hi] of `c` for one entry, from whichever header
-      * declares it — the PRIMARY bounds column or an extra stats
-      * column; None when this manifest carries no stats for it (a
-      * mismatched column must never prune). */
+    /** The stored [lo, hi] of `c` for one entry; None when the stats
+      * list does not name `c` or the entry's pair is unknown (a column
+      * without stats must never prune). */
     private[sources] def boundsOf(e: Entry, c: String): Option[(Long, Long)] =
-      if (boundsCol.contains(c)) e.bounds
-      else statsCols.indexOf(c) match {
-        case -1 => None
-        case i => e.extra.lift(i).flatten
-      }
-
-    /** DATA entries with bounds (from either header source) resolved
-      * for `keyCol` into the primary lo/hi slots. */
-    private[sources] def entriesFor(keyCol: String): Seq[Entry] =
-      dataEntries.map { e =>
-        val b = boundsOf(e, keyCol)
-        e.copy(lo = b.map(_._1), hi = b.map(_._2))
-      }
+      e.statOf(statsCols, c)
   }
 
   /** Schema-aware file read: the stored schema resolves columns BY NAME
@@ -333,71 +326,81 @@ object ManifestTable {
     resolve(spark, root, version)
 
   /** One manifest entry line, in the ONE shape [[stage]] writes:
-    * `rel<TAB>lo<TAB>hi<TAB>rows<TAB>bytes` followed by one
-    * `<TAB>lo<TAB>hi` pair per EXTRA stats column the `#statscols=`
-    * header names, in header order. `rel` is the root-relative file;
-    * `lo`/`hi` are the [lo, hi] bounds of the integral column the
-    * `#boundscol=` header names (`-` when the column was all-null or no
-    * bounds column was declared); `rows`/`bytes` are the file's row
-    * count and size. The extra pairs are the multi-column file
-    * statistics Iceberg/Delta ship, enabling file skipping on non-key
-    * predicates ([[readWhereRect]]); a `-` pair is unknown and never
+    * `rel<TAB>lo<TAB>hi<TAB>rows<TAB>bytes` followed by `<TAB>lo<TAB>hi`
+    * for each further stats pair. `rel` is the root-relative file and
+    * `rows`/`bytes` are its row count and size. `stats` are the file's
+    * per-column [lo, hi] pairs for a PREFIX of its manifest's
+    * `#statscols=` list, in list order — the first pair sits between
+    * `rel` and `rows`, the rest trail. A pair that is `-` (the column
+    * was all-null, or the file was not stamped for it) or missing (the
+    * line was written under a shorter list) is unknown and never
     * prunes. Any other line shape is malformed, and [[load]] rejects
     * the manifest. */
-  private[sources] case class Entry(rel: String, lo: Option[Long],
-                                    hi: Option[Long], rows: Long,
-                                    bytes: Long,
-                                    extra: Seq[Option[(Long, Long)]] =
-                                      Seq.empty) {
-    /** Format v6: a delete file is distinguished by its PATH prefix —
-      * the line format itself is the same. */
+  private[sources] case class Entry(rel: String, rows: Long, bytes: Long,
+                                    stats: Seq[Option[(Long, Long)]]) {
+    /** A delete file is distinguished by its PATH prefix — the line
+      * format itself is the same. */
     def isDelete: Boolean = rel.startsWith("deletes/")
-    def bounds: Option[(Long, Long)] = for (a <- lo; b <- hi) yield (a, b)
+    /** The pair of the first listed column. */
+    def bounds: Option[(Long, Long)] = stats.headOption.flatten
+    /** The pair of column `c` under the stats list `cols`. */
+    def statOf(cols: Seq[String], c: String): Option[(Long, Long)] =
+      cols.indexOf(c) match {
+        case -1 => None
+        case i => stats.lift(i).flatten
+      }
     def line: String = {
       def pair(p: Option[(Long, Long)]): String =
         p.map { case (a, b) => s"$a\t$b" }.getOrElse("-\t-")
-      (s"$rel\t${pair(bounds)}\t$rows\t$bytes" +: extra.map(pair))
-        .mkString("\t")
+      (s"$rel\t${pair(bounds)}\t$rows\t$bytes" +:
+        stats.drop(1).map(pair)).mkString("\t")
     }
   }
 
   /** None for a malformed line: a valid one has an odd number >= 5 of
     * tab-separated fields, and integral rows and bytes. */
   private def parseEntry(line: String): Option[Entry] = {
-    def bounds(a: String, b: String): Option[(Long, Long)] =
-      for (x <- a.toLongOption; y <- b.toLongOption) yield (x, y)
     val f = line.split("\t", -1)
     if (f.length < 5 || f.length % 2 == 0) None
     else for (rows <- f(3).toLongOption; bytes <- f(4).toLongOption)
-      yield {
-        val b = bounds(f(1), f(2))
-        Entry(f(0), b.map(_._1), b.map(_._2), rows, bytes,
-          f.drop(5).grouped(2).toSeq.map(p => bounds(p(0), p(1))))
-      }
+      yield Entry(f(0), rows, bytes, (f.slice(1, 3) ++ f.drop(5))
+        .grouped(2).toSeq.map(p =>
+          for (x <- p(0).toLongOption; y <- p(1).toLongOption) yield (x, y)))
   }
 
-  /** Staged `lines` without their primary [lo, hi] (extra stats stay):
-    * a racing commit changed the bounds column they were stamped for. */
-  private def withoutBounds(lines: Seq[String]): Seq[String] =
-    lines.map(l => parseEntry(l).fold(l)(_.copy(lo = None, hi = None).line))
+  /** `list` extended by the `cols` it does not name yet, in order — how
+    * a write grows the stats list (lists never shrink but on
+    * [[overwrite]]). */
+  private def grown(list: Seq[String], cols: Seq[String]): Seq[String] =
+    list ++ cols.filterNot(list.contains)
 
   // -------------------------------------------------------------------
   // Manifest headers (`#key=value` lines before the entries)
   // -------------------------------------------------------------------
 
-  /** Bounds are meaningless without knowing WHICH column they describe:
-    * a v2+ manifest records it in a header line, and every bounds
-    * consumer ([[mergeCoW]], [[readWhereKeyBetween]], [[readWhereKeyIn]])
-    * honors the stored [lo, hi] ONLY when its own key column matches the
-    * header — a mismatched key silently falls back to
-    * unknown-bounds/read-everything (correct, just unpruned) instead of
-    * pruning WRONG files. */
-  private val BoundsKey = "boundscol"
   /** The committed table schema as `StructType.json` (one line, no tabs
     * or newlines) — the same role Delta's log metadata plays. */
   private val SchemaKey = "schema"
-  /** The EXTRA stats columns (comma-joined, in entry-line pair order)
-    * whose per-file [lo, hi] follow the v3 fields — format v4. */
+  /** THE STATS LIST: the columns (comma-joined, in order) whose per-file
+    * [lo, hi] pairs the entry lines carry — the one per-column
+    * lower/upper-bound map Iceberg's manifests keep, by position. Pairs
+    * are meaningless without knowing WHICH column they describe, so
+    * every stats consumer ([[mergeCoW]], [[readWhereKeyBetween]],
+    * [[readWhereRect]], the SQL scan, ...) reads a column's pair ONLY
+    * at its position in this list — an unlisted column falls back to
+    * unknown/read-everything (correct, just unpruned) instead of
+    * pruning WRONG files. One rule keeps every line right:
+    *  - every entry line carries pairs for a PREFIX of its manifest's
+    *    list; a missing or `-` pair is unknown;
+    *  - carried lines are copied verbatim, never rewritten;
+    *  - new lines stamp every listed column their files hold, and a
+    *    write appends to the list at most the column it stamps for its
+    *    own purpose (an append's or overwrite's `boundsCol`, a merge's
+    *    integral leading key, optimize's integral cluster column, the
+    *    z-order columns);
+    *  - so the list only grows: [[overwrite]] replaces it, [[restore]]
+    *    replicates it, and a writer that loses a commit race re-projects
+    *    its staged lines onto the new base's list by name. */
   private val StatsKey = "statscols"
   /** Format v5: the columns (comma-joined) carrying per-file BLOOM
     * filters for point-lookup pruning ([[readWherePointEquals]]) —
@@ -421,13 +424,13 @@ object ManifestTable {
     * copy-on-write). A delete commit stages the deleted KEYS, once
     * each, as a parquet file under `deletes/` — manifest entry lines
     * distinguish delete files from data files by that path prefix
-    * alone, so the line format is unchanged. When the leading delete
-    * column is the table's `#boundscol=`, a delete line carries that
-    * column's [lo, hi] like a data line (`-` otherwise, and on lines
-    * written before), and every reader anti-joins the (delta-sized,
-    * auto-broadcast) key set of just the delete files whose [lo, hi]
-    * meets a kept data file's, on the column(s) this header names — no
-    * anti-join when none does. The contract is GLOBAL-UNTIL-COMPACTED:
+    * alone, so the line format is unchanged. A delete line carries the
+    * pairs of the listed delete columns (`-` for the other listed
+    * columns), and every reader anti-joins, on the column(s) this
+    * header names, the (delta-sized, auto-broadcast) key set of just
+    * the delete files whose leading-column [lo, hi] meets a kept data
+    * file's — no anti-join when none does. The contract is
+    * GLOBAL-UNTIL-COMPACTED:
     * an equality delete suppresses EVERY row of its key, past and
     * future, until a compaction ([[optimize]]) applies and drops it —
     * so [[append]] refuses keys in the outstanding delete set
@@ -569,12 +572,6 @@ object ManifestTable {
   private def headerLines(hs: Map[String, String]): Seq[String] =
     hs.toSeq.sortBy(_._1).map { case (k, v) => s"#$k=$v" }
 
-  /** The bounds column a committed manifest's [lo, hi] values describe,
-    * if any. */
-  def boundsColOf(spark: SparkSession, root: String,
-                  version: Option[Int] = None): Option[String] =
-    resolveOption(spark, root, version).flatMap(_.boundsCol)
-
   /** The schema a version committed with; None when asked for the
     * newest version of a table that has none. */
   def schemaAt(spark: SparkSession, root: String,
@@ -628,8 +625,9 @@ object ManifestTable {
     df.select(s.fields.map(f =>
       col(f.name).as(f.name, f.metadata)).toSeq: _*)
 
-  /** Per-file (relative path, bounds, rows, bytes) of a committed
-    * version — the metadata the stats consumers and tools read. DATA
+  /** Per-file (relative path, [lo, hi] of the first listed stats
+    * column, rows, bytes) of a committed version — the metadata the
+    * stats consumers and tools read. DATA
     * files only: an equality-delete file's bytes/rows would otherwise
     * leak indistinguishably into size-based planning (optimizeBySize
     * would size the post-delete output from data+delete bytes);
@@ -652,8 +650,8 @@ object ManifestTable {
   def read(spark: SparkSession, root: String): DataFrame =
     resolve(spark, root).read(spark)
 
-  /** Bounds-pruned RANGE READ — the read-side payoff of manifest format
-    * v2+: resolve the newest version, keep only the files whose stored
+  /** Bounds-pruned RANGE READ — the read-side payoff of the stats
+    * list: resolve the newest version, keep only the files whose stored
     * [lo, hi] key bounds intersect `[lo, hi]` (bounds-less entries
     * are always kept — unknown means "may contain anything"), and apply
     * the residual row filter on what remains. File-level skipping from
@@ -693,7 +691,7 @@ object ManifestTable {
       Some(col(keyCol).isin(keys: _*)))
   }
 
-  /** MULTI-COLUMN rectangle read (format v4's payoff): keep only the
+  /** MULTI-COLUMN rectangle read: keep only the
     * files whose stored per-column [lo, hi] intersect EVERY requested
     * range — a file is skipped as soon as ONE dimension's stats rule it
     * out, so a clustered layout whose files are hyper-rectangles (the
@@ -758,7 +756,7 @@ object ManifestTable {
     * version read shaped by what Spark's planner pushed down —
     * `requiredCols` (column pruning reaches the parquet scan),
     * `ranges` (per-column [lo, hi] constraints derived from the pushed
-    * filters, pruning FILES from the manifest's v2/v4 stats before any
+    * filters, pruning FILES from the manifest's stats before any
     * footer is opened — columns without stored stats never prune), and
     * `residual` (the pushed filters re-expressed as one Column so
     * parquet row-group stats prune WITHIN the kept files; Spark
@@ -966,10 +964,18 @@ object ManifestTable {
   private case class FileFooter(pairs: Seq[Option[(Long, Long)]], rows: Long,
                                 nulls: Option[Long])
 
-  /** A staged commit dir: its manifest entry lines, and the null count
-    * of [[stage]]'s `nullCols` summed over its files (None: unknown). */
-  private case class Staged(dir: Path, lines: Seq[String],
-                            nulls: Option[Long]) {
+  /** A staged commit dir: its manifest entries, stamped for the stats
+    * list `cols`, and the null count of [[stage]]'s `nullCols` summed
+    * over its files (None: unknown). */
+  private case class Staged(dir: Path, cols: Seq[String],
+                            entries: Seq[Entry], nulls: Option[Long]) {
+    def lines: Seq[String] = entries.map(_.line)
+    /** The entries re-projected onto the stats list `list` BY NAME: a
+      * racing commit moved the list they were stamped for. */
+    def on(list: Seq[String]): Staged =
+      if (list == cols) this
+      else copy(cols = list, entries = entries.map(e =>
+        e.copy(stats = list.map(e.statOf(cols, _)))))
     /** Remove the dir of a commit that will not happen. */
     def discard(spark: SparkSession): Unit = fsOf(spark, dir).delete(dir, true)
     /** `check`, discarding the dir when it throws: a refused commit
@@ -979,31 +985,29 @@ object ManifestTable {
   }
 
   /** Write `df`'s rows as immutable files under a fresh commit subdir and
-    * return their manifest entry lines — NOT yet visible to any reader
-    * (no manifest references them until a commit does). Every line is
-    * in [[Entry]]'s shape, carrying the file's row count and size;
-    * `boundsCol` fills the per-file [lo, hi] key bounds, `statsCols`
-    * adds one extra [lo, hi] pair per column (format v4), `bloomCols`
-    * one per-file Bloom filter per column in the commit dir's sidecars
-    * (format v5), `nullCols` the staged null count (from the footers). */
-  private def stage(spark: SparkSession, root: String,
-                    write: String => Unit,
+    * return their manifest entries — NOT yet visible to any reader (no
+    * manifest references them until a commit does). Every entry carries
+    * the file's row count and size and one [lo, hi] pair per column of
+    * the stats list `statsCols` (unknown for a column `df` does not
+    * hold as a stats type), `bloomCols` one per-file Bloom filter per
+    * column `df` holds in the commit dir's sidecars, `nullCols` the
+    * staged null count (from the footers). */
+  private def stage(spark: SparkSession, root: String, df: DataFrame,
                     allowEmpty: Boolean = false,
-                    boundsCol: Option[String] = None,
                     statsCols: Seq[String] = Seq.empty,
                     bloomCols: Seq[String] = Seq.empty,
                     nullCols: Seq[String] = Seq.empty,
                     relPrefix: String = "data"): Staged = {
     val rel = s"$relPrefix/c-${UUID.randomUUID().toString.take(12)}"
     val dir = new Path(root, rel)
-    write(dir.toString)
+    df.write.parquet(dir.toString)
     val fs = fsOf(spark, dir)
     val staged = fs.listStatus(dir).toSeq
       .filter(f => f.isFile && !f.getPath.getName.startsWith("_"))
       .map(f => f.getPath.getName -> f.getLen).toMap
     require(allowEmpty || staged.nonEmpty, "commit staged zero data files")
-    if (staged.isEmpty) return Staged(dir, Seq.empty, Some(0L))
-    // per-file stats for the manifest (formats v3/v4), taken from the
+    if (staged.isEmpty) return Staged(dir, statsCols, Seq.empty, Some(0L))
+    // per-file stats for the manifest, taken from the
     // parquet FOOTERS the write just produced (optimization guide §1/§6
     // — the footers already hold exact typed min/max and row counts, so
     // re-scanning the staged files was one full Spark job per commit,
@@ -1016,8 +1020,10 @@ object ManifestTable {
     // (ManifestFooterStatsSpec pins the equality). The callers reject
     // non-integral stat columns before writing.
     lazy val justWritten = spark.read.parquet(dir.toString)
+    val held = statsCols.filter(stampable(df.schema, _))
     val perFile: Map[String, FileFooter] = footerStats(fs, dir,
-      staged.keys.toSeq, boundsCol.toSeq ++ statsCols, nullCols)
+      staged.keys.toSeq, held, nullCols)
+    val blooms = bloomCols.filter(stampable(df.schema, _))
     // format v5: one Bloom filter per file per declared column. TWO
     // more passes reading only the bloom columns: a per-file DISTINCT
     // count (a filter holds a SET — sizing by row count would pay the
@@ -1034,16 +1040,16 @@ object ManifestTable {
     // column into the commit dir — at this design's driver-manifest
     // scale that's the same shape as the stats collect (a production
     // format emits per-file sidecars from the writer tasks themselves).
-    if (bloomCols.nonEmpty && perFile.nonEmpty) {
-      val dAggs = bloomCols.zipWithIndex.map { case (k, i) =>
+    if (blooms.nonEmpty && perFile.nonEmpty) {
+      val dAggs = blooms.zipWithIndex.map { case (k, i) =>
         countDistinct(statExpr(justWritten.schema, k)).as(s"_d$i") }
       val dRows = justWritten
         .groupBy(input_file_name().as("_f"))
         .agg(dAggs.head, dAggs.tail: _*)
         .collect()
-      val expectedPerCol = bloomCols.indices.map(i =>
+      val expectedPerCol = blooms.indices.map(i =>
         math.max(1L, dRows.iterator.map(_.getLong(1 + i)).max))
-      val bAggs = bloomCols.zipWithIndex.map { case (k, i) =>
+      val bAggs = blooms.zipWithIndex.map { case (k, i) =>
         graft.functions.BloomAgg.sketch(
           statExpr(justWritten.schema, k), expectedPerCol(i), BloomFpp)
           .as(s"_b$i")
@@ -1052,36 +1058,28 @@ object ManifestTable {
         .groupBy(input_file_name().as("_f"))
         .agg(bAggs.head, bAggs.tail: _*)
         .collect()
-      bloomCols.zipWithIndex.foreach { case (k, i) =>
+      blooms.zipWithIndex.foreach { case (k, i) =>
         writeBloomSidecar(fs, new Path(dir, s"_bloom.$k"),
           rows.toSeq.map(r => new Path(r.getString(0)).getName ->
             r.getAs[Array[Byte]](1 + i)).sortBy(_._1))
       }
     }
-    def entryOf(name: String, bytes: Long,
-                pairs: Seq[Option[(Long, Long)]], n: Long): Entry = {
-      val (primary, extra) =
-        if (boundsCol.isDefined) (pairs.head, pairs.tail)
-        else (None, pairs)
-      Entry(s"$rel/$name", primary.map(_._1), primary.map(_._2), n, bytes,
-        extra)
-    }
-    val lines = staged.toSeq.sortBy(_._1).flatMap { case (name, bytes) =>
-      perFile.get(name) match {
-        case Some(f) => Some(entryOf(name, bytes, f.pairs, f.rows).line)
-        // ZERO rows (no group at all): a writer task that got an empty
-        // partition — the file contributes nothing, drop it from the
-        // manifest rather than carrying an unprunable line
-        case None => None
+    // a ZERO-row file (a writer task that got an empty partition) has
+    // no footer entry: it contributes nothing, so it is dropped from
+    // the manifest rather than carried as an unprunable line
+    val entries = staged.toSeq.sortBy(_._1).flatMap { case (name, bytes) =>
+      perFile.get(name).map { f =>
+        val pairs = held.zip(f.pairs).toMap
+        Entry(s"$rel/$name", f.rows, bytes, statsCols.map(pairs.get(_).flatten))
       }
     }
     // an all-empty write (zero rows total) must NOT silently commit a
     // zero-entry manifest: keep the raw file list (schema preserved,
     // rows stamped 0) so the table stays readable as a zero-row relation
-    Staged(dir,
-      if (lines.nonEmpty) lines
+    Staged(dir, statsCols,
+      if (entries.nonEmpty) entries
       else staged.toSeq.sortBy(_._1).map { case (name, bytes) =>
-        Entry(s"$rel/$name", None, None, 0L, bytes).line },
+        Entry(s"$rel/$name", 0L, bytes, Seq.empty) },
       sumKnown(perFile.values.map(_.nulls)))
   }
 
@@ -1099,7 +1097,7 @@ object ManifestTable {
   /** Atomic-rename commit of version `v`; false = lost the race (a
     * manifest for `v` already exists). See the object scaladoc for the
     * per-filesystem exclusivity contract. `headers` lead the file
-    * (`#boundscol=` declaring which column the lines' [lo, hi]
+    * (`#statscols=` declaring which columns the lines' [lo, hi] pairs
     * describe, `#schema=` the committed schema). The temp manifest is
     * deleted on ANY failure path — a throwing write must not leak
     * `.tmp-*` junk into `_manifests` forever ([[vacuum]] sweeps aged
@@ -1171,9 +1169,6 @@ object ManifestTable {
     commitNext(spark, s, s.entryLines, headers + (KindKey -> "metadata"),
       s"$what on ${s.root}")
 
-  private def boundsHeader(boundsCol: Option[String]): Map[String, String] =
-    boundsCol.map(BoundsKey -> _).toMap
-
   /** Create the table (version 1) or REPLACE its contents: the new
     * manifest lists only this commit's files. Fails if another writer
     * committed after the base was resolved — the caller computed against
@@ -1181,7 +1176,9 @@ object ManifestTable {
     * replacement was derived from a specific version read earlier (the
     * read-modify-write shape): the commit then targets exactly
     * `expectedBase + 1` and aborts if anything landed in between, rather
-    * than silently dropping the interleaved commit's rows. */
+    * than silently dropping the interleaved commit's rows. The table's
+    * stats list becomes `boundsCol` (integral) followed by `statsCols`
+    * (integral or timestamp). */
   def overwrite(spark: SparkSession, root: String, df: DataFrame,
                 expectedBase: Option[Int] = None,
                 boundsCol: Option[String] = None,
@@ -1196,12 +1193,10 @@ object ManifestTable {
     // (re)creation stamps fresh field ids 1..n — the stable column
     // identities every later rename/drop resolves against
     val outSchema = stampFieldIds(asNullable(df.schema))
-    val dfOut = alignToSchema(df, outSchema)
-    val staged = stage(spark, root, dir => dfOut.write.parquet(dir),
-      boundsCol = boundsCol, statsCols = statsCols, bloomCols = bloomCols)
-      .lines
-    val headers = boundsHeader(boundsCol) ++
-      colsHeader(StatsKey, statsCols) ++
+    val stats = grown(boundsCol.toSeq, statsCols)
+    val staged = stage(spark, root, alignToSchema(df, outSchema),
+      statsCols = stats, bloomCols = bloomCols).lines
+    val headers = colsHeader(StatsKey, stats) ++
       colsHeader(BloomKey, bloomCols) +
       (SchemaKey -> outSchema.json) +
       (MaxFieldIdKey -> outSchema.fields.length.toString) +
@@ -1280,31 +1275,24 @@ object ManifestTable {
     * Add-column schema evolution happens here: a `df` carrying every
     * table column plus new ones widens the committed schema (old files
     * read the additions as null); a `df` missing or retyping a table
-    * column is rejected loudly. */
+    * column is rejected loudly. The new files stamp the table's whole
+    * stats list; `boundsCol` (integral) joins the list when it is not
+    * on it yet. */
   def append(spark: SparkSession, root: String, df: DataFrame,
              boundsCol: Option[String] = None): Int = {
     val fs = fsOf(spark, new Path(root))
-    // ONE resolve serves every pre-staging decision (bounds header,
-    // bloom declaration, committed schema, delete guard, constraints)
-    // AND the first commit attempt; only a lost race resolves again
+    // ONE resolve serves every pre-staging decision (stats list, bloom
+    // declaration, committed schema, delete guard, constraints) AND the
+    // first commit attempt; only a lost race resolves again
     var base = resolveOption(spark, root)
-    val h0 = base.flatMap(_.boundsCol)
-    // stamp bounds only when they will MEAN the table's declared bounds
-    // column — stamping a different column under the base's header
-    // would misattribute the values (the format's one hard rule)
-    val effBounds = boundsCol.filter(b => h0.forall(_ == b))
-    // the table's declared BLOOM columns auto-stamp on every append —
-    // a maintained index, not a per-writer choice — but only those this
-    // df can stamp (present, stampable type); the rest degrade to
-    // sidecar-less files (never skipped — correct, just unpruned)
-    val effBloom = base.map(_.bloomCols).getOrElse(Seq.empty)
-      .filter(stampable(df.schema, _))
+    def statsOn(b: Option[Snapshot]): Seq[String] =
+      grown(b.fold(Seq.empty[String])(_.statsCols), boundsCol.toSeq)
     // evolution contract and bounds-type gate checked BEFORE staging
     // (fail fast, no orphan files); the commit loop re-derives the
     // evolution per attempt for races. The evolved schema is resolved
     // HERE because the staged files must carry ITS field ids — a
     // creation-by-append stamps fresh ids exactly like overwrite.
-    effBounds.foreach(k => requireIntegral(df.schema, k))
+    boundsCol.foreach(k => requireIntegral(df.schema, k))
     // (evolved schema, field-id high-water mark) against a base
     def evolve(b: Option[Snapshot]): (StructType, Long) = b match {
       case Some(s) =>
@@ -1329,9 +1317,11 @@ object ManifestTable {
     def constraintsHold(s: Snapshot): Unit =
       validateConstraints(df, s.constraints, s"append to $root")
     base.foreach(constraintsHold)
-    val staged = stage(spark, root,
-      dir => alignToSchema(df, stagedSchema).write.parquet(dir),
-      boundsCol = effBounds, bloomCols = effBloom)
+    // the table's declared BLOOM columns auto-stamp on every append — a
+    // maintained index, not a per-writer choice
+    val staged = stage(spark, root, alignToSchema(df, stagedSchema),
+      statsCols = statsOn(base),
+      bloomCols = base.fold(Seq.empty[String])(_.bloomCols))
     var validated: Option[Int] = None // the base the staged files passed
     var attempt = 0
     while (attempt < MaxCommitAttempts) {
@@ -1346,17 +1336,12 @@ object ManifestTable {
         throw new java.util.ConcurrentModificationException(
           s"append to $root raced a schema change (field ids " +
             "reassigned under the staged files); rerun the append")
-      val h = base.flatMap(_.boundsCol).orElse(effBounds)
-      // the base header governs the combined manifest: staged lines
-      // were stamped for effBounds, so strip their bounds (stats stay)
-      // if a racing commit changed the table's bounds column underneath
-      val stagedOut =
-        if (effBounds.isEmpty || h == effBounds) staged.lines
-        else withoutBounds(staged.lines)
+      val stats = statsOn(base)
+      val stagedOut = staged.on(stats)
       base.filterNot(s => validated.contains(s.version)).foreach { s =>
         staged.orDiscard(spark) {
           if (attempt > 0) constraintsHold(s) // a newer base than checked
-          s.requireNoDeletedKeys(spark, stagedOut.flatMap(parseEntry),
+          s.requireNoDeletedKeys(spark, stagedOut.entries,
             stagedSchema, s"append to $root would resurrect " +
               s"equality-deleted (${s.deleteCols.mkString(", ")}) tuples" +
               " — the delete is global until compacted; run optimize " +
@@ -1367,11 +1352,8 @@ object ManifestTable {
       val baseLines = base.map(_.entryLines).getOrElse(Seq.empty)
       val v = base.fold(0)(_.version) + 1
       val bh = base.map(_.headers).getOrElse(Map.empty[String, String])
-      val headers = boundsHeader(h) ++
-        // the base's extra-stats header survives: its lines keep their
-        // pairs; this commit's new lines carry none (unknown = read)
-        bh.get(StatsKey).map(StatsKey -> _).toMap ++
-        // likewise the bloom declaration: base files keep their
+      val headers = colsHeader(StatsKey, stats) ++
+        // the bloom declaration survives: base files keep their
         // sidecars in place, this commit's were stamped above
         bh.get(BloomKey).map(BloomKey -> _).toMap ++
         // and the delete column: base delete lines carry verbatim
@@ -1383,7 +1365,8 @@ object ManifestTable {
         // the carried value; ids are never reused)
         (MaxFieldIdKey -> maxFieldId.toString) +
         (SchemaKey -> outSchema.json) + (KindKey -> "append")
-      if (tryCommit(fs, root, v, baseLines ++ stagedOut, headers)) return v
+      if (tryCommit(fs, root, v, baseLines ++ stagedOut.lines, headers))
+        return v
       attempt += 1
     }
     throw new java.util.ConcurrentModificationException(
@@ -1455,12 +1438,11 @@ object ManifestTable {
     val delKeys = keys.select(keyCols.map(k =>
       col(k).cast(base.schema(k).dataType).as(k)): _*)
       .coalesce(1).distinct()
-    // the delete line carries the leading key's [lo, hi] when that is
-    // the table's bounds column: readers and the append guard skip
-    // the delete files whose range misses theirs (Snapshot.deletesOver)
-    val stampCol = base.boundsCol.filter(_ == keyCols.head)
-    val staged = stage(spark, root, dir => delKeys.write.parquet(dir),
-      boundsCol = stampCol, nullCols = keyCols, relPrefix = "deletes")
+    // the delete line carries the listed key columns' [lo, hi]: readers
+    // and the append guard skip the delete files whose range misses
+    // theirs (Snapshot.deletesOver)
+    val staged = stage(spark, root, delKeys, statsCols = base.statsCols,
+      nullCols = keyCols, relPrefix = "deletes")
     // the null-key guard from the staged footers' null counts; a scan
     // only when a footer does not carry them
     val nullFree = staged.nulls.map(_ == 0L).getOrElse(
@@ -1478,9 +1460,7 @@ object ManifestTable {
           s"a concurrent commit set the delete columns of $root to " +
             base.deleteCols.mkString(", "))
       }
-      val lines =
-        if (stampCol.isEmpty || base.boundsCol == stampCol) staged.lines
-        else withoutBounds(staged.lines)
+      val lines = staged.on(base.statsCols).lines
       if (tryCommit(fs, root, base.version + 1, base.entryLines ++ lines,
           base.headers + (DeleteKey -> keyCols.mkString(",")) +
             (KindKey -> "delete")))
@@ -1617,7 +1597,7 @@ object ManifestTable {
     * version N+1 in one rename, the pre-compaction version stays readable
     * until [[vacuum]], and a concurrent commit aborts the swap (stale
     * base) instead of clobbering it. Pass `targetFiles` explicitly, or
-    * `targetFileBytes` to SIZE-BALANCE from the manifest's v3 stats
+    * `targetFileBytes` to SIZE-BALANCE from the manifest's byte counts
     * (total bytes / target size, metadata-only — no listing, no scan).
     * Returns (newVersion, filesBefore, filesAfter). */
   def optimize(spark: SparkSession, root: String, clusterCol: String,
@@ -1636,39 +1616,32 @@ object ManifestTable {
   private def optimizeImpl(spark: SparkSession, base: Snapshot,
                            clusterCol: String,
                            targetFiles: Int): (Int, Int, Int) = {
-    // the rewrite clusters on clusterCol, so stamp bounds on it — every
-    // line is fresh, so the header switches cleanly. Stamping by DEFAULT
-    // also prevents the silent downgrade where compacting a
-    // bounds-stamped table strips all its pruning. A NON-integral
-    // cluster column degrades to stats-only lines (no bounds, no
-    // header) — never collation-ordered bounds that would prune wrong
-    // files on a later merge.
+    // the rewrite clusters on clusterCol, so an integral one joins the
+    // stats list — a NON-integral one does not (never collation-ordered
+    // bounds that would prune wrong files on a later merge)
     val pinned = base.read(spark)
-    val stampCol = Some(clusterCol)
-      .filter(c => isIntegral(pinned.schema(c).dataType))
-    compact(spark, base, pinned, col(clusterCol), targetFiles, stampCol,
-      base.statsCols.filter(stampable(pinned.schema, _)), "optimize")
+    compact(spark, base, pinned, col(clusterCol), targetFiles,
+      grown(base.statsCols, Seq(clusterCol)
+        .filter(c => isIntegral(pinned.schema(c).dataType))), "optimize")
   }
 
   /** The compaction both OPTIMIZE shapes commit: `base`'s rows (read
     * through its deletes, which the commit then drops) range-partitioned
     * into `targetFiles` files sorted on `sortKey`. Every line is fresh,
-    * so the bounds/stats/bloom declarations are re-stamped for the new
-    * files — compacting must never silently strip a pruning tier — and
-    * writer markers, constraints and tags carry over: compaction must
-    * not amnesia a sink's cursor or shed the table's invariants.
-    * Returns (newVersion, filesBefore, filesAfter). */
+    * so every file stamps the stats list `statsCols` (base's, grown)
+    * and the bloom declaration — compacting must never silently strip
+    * a pruning tier — and writer markers, constraints and tags carry
+    * over: compaction must not amnesia a sink's cursor or shed the
+    * table's invariants. Returns (newVersion, filesBefore, filesAfter). */
   private def compact(spark: SparkSession, base: Snapshot,
                       pinned: DataFrame, sortKey: Column, targetFiles: Int,
-                      boundsCol: Option[String], statsCols: Seq[String],
+                      statsCols: Seq[String],
                       what: String): (Int, Int, Int) = {
-    val bloomCs = base.bloomCols.filter(stampable(pinned.schema, _))
     val staged = stage(spark, base.root,
-      dir => clustered(pinned, sortKey, targetFiles).write.parquet(dir),
-      boundsCol = boundsCol, statsCols = statsCols, bloomCols = bloomCs)
-      .lines
-    val headers = boundsHeader(boundsCol) ++
-      colsHeader(BloomKey, bloomCs) ++ colsHeader(StatsKey, statsCols) ++
+      clustered(pinned, sortKey, targetFiles),
+      statsCols = statsCols, bloomCols = base.bloomCols).lines
+    val headers = colsHeader(StatsKey, statsCols) ++
+      colsHeader(BloomKey, base.bloomCols) ++
       carriedHeaders(base.headers) + (SchemaKey -> base.schema.json) +
       (KindKey -> "compact")
     (commitNext(spark, base, staged, headers, s"$what of ${base.root}"),
@@ -1681,8 +1654,8 @@ object ManifestTable {
     * ([[ZOrderLayout.zValueN]]; exact integer arithmetic throughout,
     * in each column's stored stats unit — each dimension bucketed to
     * the same 10-bit scale so the interleave alternates between
-    * dimensions at every level) and stamps EVERY column's per-file
-    * [lo, hi] as v4 multi-column stats, so the files become tight
+    * dimensions at every level) and adds every column to the stats
+    * list, stamping its per-file [lo, hi], so the files become tight
     * N-dimensional hyper-rectangles and [[readWhereRect]] — or a SQL
     * `WHERE` through [[GraftCatalog]], whose pushed filters drive the
     * same stats — skips in all N dimensions from the manifest alone.
@@ -1707,7 +1680,7 @@ object ManifestTable {
     val pinned = base.read(spark)
     // the z-bucket needs each dimension as an exact LONG expression in
     // its stats unit — the same unit statExpr stamps, so the stamped
-    // v4 stats and the layout agree. The bigint cast is load-bearing
+    // stats and the layout agree. The bigint cast is load-bearing
     // for narrow integral columns: (c - lo) * 1024 evaluated in a
     // 32-bit column's native type overflows silently once the domain
     // exceeds ~2^21, producing negative buckets and a garbage curve
@@ -1731,7 +1704,7 @@ object ManifestTable {
         (hi - lo + 1).toString, "DIV"))
     }
     val zv = ZOrderLayout.zValueN(buckets)
-    compact(spark, base, pinned, zv, targetFiles, None, cols,
+    compact(spark, base, pinned, zv, targetFiles, grown(base.statsCols, cols),
       "optimizeZOrder")
   }
 
@@ -1840,14 +1813,13 @@ object ManifestTable {
     require(stored.fieldNames.contains(colName),
       s"$what on $root: no column named $colName " +
         s"(have ${stored.fieldNames.mkString(", ")})")
-    Seq("the bounds column" -> s.boundsCol.toSeq,
-      "a stats column" -> s.statsCols,
+    Seq("a stats column" -> s.statsCols,
       "a bloom column" -> s.bloomCols,
       "a delete column" -> s.deleteCols).foreach { case (role, cols) =>
       if (cols.contains(colName)) throw new UnsupportedOperationException(
         s"$what on $root: $colName is $role — pruning/delete headers " +
-          "attribute by name; retire the role first (optimize / " +
-          "overwrite re-stamp), then evolve")
+          "attribute by name; retire the role first (an overwrite " +
+          "re-declares them), then evolve")
     }
     val token = ("(?i)(?<![A-Za-z0-9_])" +
       java.util.regex.Pattern.quote(colName) + "(?![A-Za-z0-9_])").r
@@ -1929,7 +1901,7 @@ object ManifestTable {
     * Shares [[requireIdEvolvable]]'s role/constraint gate with
     * rename/drop — pruning-role (bounds/stats/bloom/delete) and
     * constraint-referenced columns reject (bloom sidecars hash the
-    * PHYSICAL values), so retire the role (optimize / re-stamp) before
+    * PHYSICAL values), so retire the role (an overwrite) before
     * widening — but does NOT require id resolution: the name never
     * changes, so by-name resolution of the narrow physical column
     * under the wide requested type stays sound (spec-pinned). Appends
@@ -2081,15 +2053,10 @@ object ManifestTable {
         "and re-branch")
     validateConstraints(df, head.constraints,
       s"append to branch $name of $root")
-    val effBounds = head.boundsCol.filter(b =>
-      df.schema.fieldNames.contains(b) &&
-        isIntegral(df.schema(b).dataType))
-    val effBloom = head.bloomCols.filter(stampable(df.schema, _))
-    val staged = stage(spark, root,
-      dir => alignToSchema(df, stored).write.parquet(dir),
-      boundsCol = effBounds, bloomCols = effBloom)
+    val staged = stage(spark, root, alignToSchema(df, stored),
+      statsCols = head.statsCols, bloomCols = head.bloomCols)
     staged.orDiscard(spark)(head.requireNoDeletedKeys(spark,
-      staged.lines.flatMap(parseEntry), stored,
+      staged.entries, stored,
       s"append to branch $name of $root would resurrect " +
         s"equality-deleted (${head.deleteCols.mkString(", ")}) tuples"))
     commitNext(spark, head, head.entryLines ++ staged.lines,
@@ -2143,17 +2110,14 @@ object ManifestTable {
     require(mMain.headers.get(DeleteKey) == mBase.headers.get(DeleteKey),
       s"publish of branch $name on $root: the main delete declaration " +
         "changed since the base; re-branch")
-    // bounds/stats headers attribute the manifest lines' [lo, hi]
-    // slots BY NAME: a branch merge keyed on a different column
-    // re-resolved its lines for THAT key and rewrote the branch's
-    // bounds header — splicing those lines under main's header would
-    // misattribute every value (silently wrong pruning forever after)
-    require(mHead.headers.get(BoundsKey) == mBase.headers.get(BoundsKey)
-        && mHead.headers.get(StatsKey) == mBase.headers.get(StatsKey),
-      s"publish of branch $name on $root: the branch re-keyed the " +
-        "bounds/stats headers (a merge keyed off the table's bounds " +
-        "column) — its lines cannot splice under main's header; " +
-        "re-cluster on main after a bounds-compatible re-branch")
+    // the stats list attributes the lines' [lo, hi] pairs by
+    // position: a branch whose list grew (a merge keyed on an unlisted
+    // column) stamped its lines for a list main does not declare
+    require(mHead.statsCols == mBase.statsCols,
+      s"publish of branch $name on $root: the branch changed the " +
+        "bounds/stats list (a merge keyed on an unlisted column) — its " +
+        "lines cannot splice under main's header; re-cluster on main " +
+        "after a bounds-compatible re-branch")
     val baseLines = mBase.entryLines.toSet
     val headLines = mHead.entryLines.toSet
     // the branch's net diff against its base; base ⊆ main was proven
@@ -2321,15 +2285,16 @@ object ManifestTable {
     * upserts keyed on `keyCol` by rewriting ONLY the data files that
     * contain a changed key; every other file is carried VERBATIM into
     * the new manifest (same path, zero IO). Affected files are found
-    * from the MANIFEST's per-file key bounds when the table was written
-    * with `boundsCol` (format v2+): a delta-sized distributed interval
+    * from the MANIFEST's per-file key bounds when the stats list names
+    * `keyCol`: a delta-sized distributed interval
     * stabbing against the O(files) broadcast bounds — no snapshot scan
     * at all, the same plan Delta/Iceberg run off their file statistics.
-    * Entries without bounds (writes that skipped `boundsCol`, or an
-    * all-null key) fall back to one key-column-only scan of just those
-    * files tagged with `input_file_name`. New keys (pure inserts) need
-    * no affected file; they land in the rewrite commit's fresh files,
-    * which are themselves bounds-stamped so the NEXT merge prunes too.
+    * Entries without bounds (an unlisted key, lines written before it
+    * was listed, or an all-null key) fall back to one key-column-only
+    * scan of just those files tagged with `input_file_name`. New keys
+    * (pure inserts) need no affected file; they land in the rewrite
+    * commit's fresh files, and an integral key joins the stats list,
+    * so the NEXT merge prunes too.
     * Readers keep snapshot isolation throughout: the merge is one
     * manifest rename, old versions stay readable, and a concurrent
     * commit aborts this merge (stale base) instead of losing either
@@ -2401,12 +2366,11 @@ object ManifestTable {
         s"(${m.deleteCols.mkString(", ")}); a copy-on-write merge " +
         s"keyed on (${keyCols.mkString(", ")}) cannot sequence them — " +
         "merge on exactly the delete column-set, or run optimize first")
-    // honor stored bounds ONLY if the manifest declares them for the
-    // LEADING key column (as the primary bounds column or an extra
-    // stats column) — bounds of a different column would prune wrong
-    // files
-    val entries = m.entriesFor(keyCols.head)
-    require(entries.nonEmpty,
+    // the stab reads the LEADING key column's listed pairs — an
+    // unlisted key has none, and its files fall back to the scan
+    val lead = keyCols.head
+    val data = m.dataEntries
+    require(data.nonEmpty,
       s"version ${m.version} of $root lists no data files; " +
         "use overwrite to (re)populate an emptied table")
     val tableSchema = m.schema
@@ -2436,14 +2400,16 @@ object ManifestTable {
     //    against the broadcast [lo, hi] file bounds — delta-sized work,
     //    zero data-file IO. Files sorted by lo; ranges may overlap
     //    (appends), so the backward walk stops on the PREFIX-MAX of hi.
-    val (bounded, unbounded) =
-      entries.partition(e => e.lo.isDefined && e.hi.isDefined)
-    val sorted = bounded.sortBy(_.lo.get)
-    val bcLo = spark.sparkContext.broadcast(sorted.map(_.lo.get).toArray)
-    val bcHi = spark.sparkContext.broadcast(sorted.map(_.hi.get).toArray)
+    val keyed = data.map(e => e -> m.boundsOf(e, lead))
+    val unbounded = keyed.collect { case (e, None) => e }
+    val sorted = keyed.collect { case (e, Some(b)) => (e.rel, b) }
+      .sortBy(_._2._1)
+    val spans = sorted.map(_._2)
+    val bcLo = spark.sparkContext.broadcast(spans.map(_._1).toArray)
+    val bcHi = spark.sparkContext.broadcast(spans.map(_._2).toArray)
     val bcPm = spark.sparkContext.broadcast(
-      sorted.map(_.hi.get).scanLeft(Long.MinValue)(math.max).drop(1).toArray)
-    val bcRel = spark.sparkContext.broadcast(sorted.map(_.rel).toArray)
+      spans.map(_._2).scanLeft(Long.MinValue)(math.max).drop(1).toArray)
+    val bcRel = spark.sparkContext.broadcast(sorted.map(_._1).toArray)
     // "\t" and "\t\t" can never be a staged rel (UUID alphabet) — safe
     // sentinels for "a null key / a delete key was seen in this
     // partition"
@@ -2461,9 +2427,9 @@ object ManifestTable {
         keyCols.map(col(_).isNull).reduce(_ || _).as("_n"),
         coalesce(col(deleted), lit(false)).as("_d"),
         (if (sorted.isEmpty) lit(0L)
-         else if (changedKeys.schema(keyCols.head).dataType == TimestampType)
-           unix_micros(col(keyCols.head))
-         else col(keyCols.head).cast("long")).as("_k"))
+         else if (changedKeys.schema(lead).dataType == TimestampType)
+           unix_micros(col(lead))
+         else col(lead).cast("long")).as("_k"))
       .mapPartitions { it =>
         val lo = bcLo.value; val hi = bcHi.value
         val pm = bcPm.value; val rel = bcRel.value
@@ -2522,32 +2488,24 @@ object ManifestTable {
     // domain (q191's shape: near-disjoint file ranges, all rewritten)
     // stays silent — that rewrite is the work requested, not a layout
     // problem.
-    if (bounded.size >= 4 &&
-        boundedAffected.size * 10 > bounded.size * 9) {
-      val domLo = bounded.map(_.lo.get).min
-      val domHi = bounded.map(_.hi.get).max
-      val domain = math.max(domHi - domLo + 1, 1L)
-      val avgSpan = bounded.map(e => e.hi.get - e.lo.get + 1).sum
-        .toDouble / bounded.size
+    if (sorted.size >= 4 &&
+        boundedAffected.size * 10 > sorted.size * 9) {
+      val domain = math.max(spans.map(_._2).max - spans.map(_._1).min + 1, 1L)
+      val avgSpan = spans.map { case (lo, hi) => hi - lo + 1 }.sum
+        .toDouble / sorted.size
       if (avgSpan * 2 > domain.toDouble)
         onDiagnostic(
           s"mergeCoWKeys on $root: bounded pruning kept " +
-            s"${boundedAffected.size} of ${bounded.size} files and the " +
-            s"per-file ${keyCols.head} ranges overlap heavily (avg " +
+            s"${boundedAffected.size} of ${sorted.size} files and the " +
+            s"per-file $lead ranges overlap heavily (avg " +
             f"span ${100 * avgSpan / domain}%.0f%% of the domain) — " +
             s"the table is not clustered on the leading merge key; " +
-            s"cluster on ${keyCols.head} (optimize / repartitionByRange" +
+            s"cluster on $lead (optimize / repartitionByRange" +
             s" + overwrite) to restore file pruning")
     }
-    val rewriteE = entries.filter(e => affectedRels.contains(e.rel))
-    // carried lines: VERBATIM when the merge key is the table's primary
-    // bounds column (extra stats pairs stay attributed under the kept
-    // headers); under a different key the primary slots are re-resolved
-    // for keyCol (the new header) and any extra pairs go dormant (a
-    // pair without its header line is never consulted — safe, unpruned)
-    val headerMatches = m.boundsCol.contains(keyCols.head)
-    val carryE = (if (headerMatches) m.dataEntries else entries)
-      .filterNot(e => affectedRels.contains(e.rel))
+    // carried lines stay VERBATIM: the list only grows, so their pairs
+    // keep their positions
+    val (rewriteE, carryE) = data.partition(e => affectedRels.contains(e.rel))
     // align the upserts to the table's column order — and REJECT an
     // upsert that carries columns the table lacks: silently dropping
     // them would lose data (widen the schema via append/overwrite first)
@@ -2584,20 +2542,18 @@ object ManifestTable {
           .unionByName(up)
       else up
     // a pure delete can stage zero rows — the new manifest is then the
-    // carried files alone. The rewrite is bounds-stamped (for integral
-    // keys — others degrade to stats-only lines), so the next merge on
-    // this table prunes from the manifest alone.
-    val stampCol = Some(keyCols.head)
-      .filter(c => isIntegral(up.schema(c).dataType))
+    // carried files alone. An integral leading key joins the stats list
+    // and the rewrite stamps the whole list, so the next merge on this
+    // table prunes from the manifest alone.
+    val stats = grown(m.statsCols,
+      Seq(lead).filter(c => isIntegral(tableSchema(c).dataType)))
     // bloom sidecars are attributed by COLUMN NAME in their commit dir
-    // (not by line position), so carried files keep theirs no matter
-    // what happens to the bounds header; the rewrite stamps fresh ones
-    val bloomCs = m.bloomCols.filter(stampable(rewritten.schema, _))
-    // staged files must carry the committed schema's field ids —
-    // upsert frames come from user DataFrames with no id metadata
-    val staged = stage(spark, root,
-      dir => alignToSchema(rewritten, tableSchema).write.parquet(dir),
-      allowEmpty = true, boundsCol = stampCol, bloomCols = bloomCs).lines
+    // (not by line position), so carried files keep theirs; the
+    // rewrite stamps fresh ones. Staged files must carry the committed
+    // schema's field ids — upsert frames come from user DataFrames
+    // with no id metadata
+    val staged = stage(spark, root, alignToSchema(rewritten, tableSchema),
+      allowEmpty = true, statsCols = stats, bloomCols = m.bloomCols).lines
     // delete sequencing, write side: changed keys leave the delete set
     // — carry the delete lines VERBATIM when the stab saw none of their
     // keys change (zero IO), else write the surviving keys, once each,
@@ -2607,11 +2563,10 @@ object ManifestTable {
     val deleteLines: Seq[String] = delKeys match {
       case Some(dk) if touchesDeletes =>
         val survivors = stage(spark, root,
-          dir => dk.join(broadcastIfSmall(changedKeys, changedRows.value),
-              keyCols, "left_anti").coalesce(1).distinct().write.parquet(dir),
-          allowEmpty = true, boundsCol = stampCol.filter(c =>
-            isIntegral(tableSchema(c).dataType)), relPrefix = "deletes")
-        val kept = survivors.lines.filter(parseEntry(_).exists(_.rows > 0))
+          dk.join(broadcastIfSmall(changedKeys, changedRows.value),
+            keyCols, "left_anti").coalesce(1).distinct(),
+          allowEmpty = true, statsCols = stats, relPrefix = "deletes")
+        val kept = survivors.entries.filter(_.rows > 0).map(_.line)
         if (kept.isEmpty) survivors.discard(spark)
         kept
       case _ => m.deleteEntries.map(_.line)
@@ -2623,11 +2578,7 @@ object ManifestTable {
       s"merge would leave $root with no data files; " +
         "use overwrite to truncate a table")
     val outLines = carryE.map(_.line) ++ staged ++ deleteLines
-    val headers = boundsHeader(stampCol) ++
-      // extra stats survive a merge only under their declaring header —
-      // and only when the primary key kept its meaning (see carryE)
-      (if (headerMatches) m.headers.get(StatsKey).map(StatsKey -> _).toMap
-       else Map.empty[String, String]) ++
+    val headers = colsHeader(StatsKey, stats) ++
       // the delete declaration survives exactly as long as delete
       // files remain outstanding
       (if (deleteLines.nonEmpty)
@@ -2712,7 +2663,7 @@ object ManifestTable {
   /** Shared CoW row-rewrite: probe for affected files, transform their
     * (delete-applied) rows, carry everything else verbatim — headers,
     * schema, outstanding delete files, writer markers all unchanged;
-    * fresh files re-stamp the table's declared bounds/stats/blooms. */
+    * fresh files stamp the table's stats list and blooms. */
   private def rewriteWhere(spark: SparkSession, root: String,
                            predicate: org.apache.spark.sql.Column,
                            transform: DataFrame => DataFrame,
@@ -2748,18 +2699,11 @@ object ManifestTable {
       transform(s.scan(spark, e => affectedRels.contains(e.rel), None))
     if (validateCheck)
       validateConstraints(rewritten, s.constraints, s"rewrite of $root")
-    val stampCol = s.boundsCol.filter(k =>
-      rewritten.schema.fieldNames.contains(k) &&
-        isIntegral(rewritten.schema(k).dataType))
     // re-align to the committed schema: the transform's replaced
     // columns lost their field-id metadata (and the file tag is
     // dropped here too)
-    val staged = stage(spark, root,
-      dir => alignToSchema(rewritten, s.schema).write.parquet(dir),
-      allowEmpty = true,
-      boundsCol = stampCol,
-      statsCols = s.statsCols.filter(stampable(rewritten.schema, _)),
-      bloomCols = s.bloomCols.filter(stampable(rewritten.schema, _)))
+    val staged = stage(spark, root, alignToSchema(rewritten, s.schema),
+      allowEmpty = true, statsCols = s.statsCols, bloomCols = s.bloomCols)
     // RESURRECTION GUARD, rewrite-side: an assignment that SETs a
     // delete-key column can write a suppressed key INTO the rewritten
     // rows — they would silently vanish from every read (the delete
@@ -2768,7 +2712,7 @@ object ManifestTable {
     // assignment targets a delete-key column (delta×affected-sized).
     if (assignedCols.exists(s.deleteCols.contains))
       staged.orDiscard(spark)(s.requireNoDeletedKeys(spark,
-        staged.lines.flatMap(parseEntry), s.schema,
+        staged.entries, s.schema,
         s"rewrite of $root would SET (${s.deleteCols.mkString(", ")}) " +
           "to equality-deleted key(s) — the rewritten rows would be " +
           "suppressed by the outstanding delete set on every read; " +

@@ -38,17 +38,24 @@ object ManifestSink {
     * replay of an already-committed batch (no-op). */
   def upsertBatch(spark: SparkSession, root: String, keyCol: String,
                   appId: String, batch: DataFrame,
-                  batchId: Long): Boolean = {
-    val last = ManifestTable.lastTxnVersion(spark, root, appId)
-    if (last.exists(_ >= batchId)) false
+                  batchId: Long): Boolean =
+    applyOnce(spark, root, keyCol, appId, batchId,
+      removeKeys = batch.select(keyCol).limit(0), upserts = batch)
+
+  /** The one idempotent apply: a no-op (false) when `appId`'s marker
+    * already covers `batchId`, else ONE merge landing the rows and the
+    * marker together (true). */
+  private def applyOnce(spark: SparkSession, root: String, keyCol: String,
+                        appId: String, batchId: Long,
+                        removeKeys: => DataFrame,
+                        upserts: => DataFrame): Boolean =
+    if (ManifestTable.lastTxnVersion(spark, root, appId)
+        .exists(_ >= batchId)) false
     else {
-      ManifestTable.mergeCoW(spark, root, keyCol,
-        removeKeys = batch.select(keyCol).limit(0),
-        upserts = batch,
+      ManifestTable.mergeCoW(spark, root, keyCol, removeKeys, upserts,
         txn = Some((appId, batchId)))
       true
     }
-  }
 
   /** The `foreachBatch` function for a keyed upsert stream into
     * `root`. Usage:
@@ -81,19 +88,10 @@ object ManifestSink {
     * (see [[ManifestStreamSource]]). */
   def applyChangesBatch(spark: SparkSession, root: String, keyCol: String,
                         appId: String, batch: DataFrame, batchId: Long,
-                        changeCol: String = "_change"): Boolean = {
-    val last = ManifestTable.lastTxnVersion(spark, root, appId)
-    if (last.exists(_ >= batchId)) false
-    else {
-      ManifestTable.mergeCoW(spark, root, keyCol,
-        removeKeys = batch.where(col(changeCol) === "delete")
-          .select(keyCol),
-        upserts = batch.where(col(changeCol) =!= "delete")
-          .drop(changeCol),
-        txn = Some((appId, batchId)))
-      true
-    }
-  }
+                        changeCol: String = "_change"): Boolean =
+    applyOnce(spark, root, keyCol, appId, batchId,
+      removeKeys = batch.where(col(changeCol) === "delete").select(keyCol),
+      upserts = batch.where(col(changeCol) =!= "delete").drop(changeCol))
 
   /** [[applyChangesBatch]] as a `foreachBatch` function. */
   def applyChangesInto(spark: SparkSession, root: String, keyCol: String,

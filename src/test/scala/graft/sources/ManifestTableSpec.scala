@@ -20,6 +20,25 @@ class ManifestTableSpec extends SparkSpec {
   private def docs = graft.Tables.documents(spark, sfDir)
     .select("doc_id", "lang", "text")
 
+  /** A data file's key: its commit dir and file name. */
+  private def fileKey(path: String): String = {
+    val p = new Path(path)
+    s"${p.getParent.getName}/${p.getName}"
+  }
+
+  /** Each data file's true [lo, hi] of the integral `cols`, from one
+    * scan of the table's newest version. */
+  private def trueBounds(root: String,
+                         cols: Seq[String]): Map[String, Seq[(Long, Long)]] = {
+    val aggs = cols.flatMap(c =>
+      Seq(min(col(c)).cast("long"), max(col(c)).cast("long")))
+    ManifestTable.read(spark, root).groupBy(input_file_name())
+      .agg(aggs.head, aggs.tail: _*).collect().map(r =>
+        fileKey(r.getString(0)) -> cols.indices.map(i =>
+          (r.getLong(1 + 2 * i), r.getLong(2 + 2 * i))))
+      .toMap
+  }
+
   test("overwrite/append/read round trip; append accumulates; " +
       "time travel reads each version exactly") {
     val root = freshRoot()
@@ -306,7 +325,9 @@ class ManifestTableSpec extends SparkSpec {
       docs.repartitionByRange(8, col("doc_id"))
         .sortWithinPartitions("doc_id"),
       boundsCol = Some("doc_id"))
-    assert(ManifestTable.boundsColOf(spark, root) === Some("doc_id"))
+    // every line carries doc_id's [lo, hi], the first listed pair
+    assert(ManifestTable.fileStats(spark, root).map { case (rel, b, _, _) =>
+      fileKey(rel) -> b.toSeq }.toMap === trueBounds(root, Seq("doc_id")))
     val allFiles = ManifestTable.snapshot(spark, root).files.size
     // the stored bounds describe doc_id — a range read on n_chars must
     // NOT interpret them (doc_id-valued bounds would prune wrong files)
@@ -2203,5 +2224,52 @@ class ManifestTableSpec extends SparkSpec {
     assert(ManifestTable.read(spark, root).where(col("ts") === lit(t))
       .select("v").collect().map(_.getLong(0)).toSeq === Seq(-1L))
     assert(ManifestTable.read(spark, root).count() === 100)
+  }
+
+  test("every write keeps every stats column: append, merge, optimize " +
+      "and z-order stamp the whole list on every new line") {
+    import spark.implicits._
+    val root = freshRoot()
+    def rows(ks: Seq[Long]) = ks.map(i => (i, i * 2, i * 7 % 50, s"t$i"))
+      .toDF("k", "a", "b", "text")
+    ManifestTable.overwrite(spark, root,
+      rows(1L to 40L).repartitionByRange(4, col("k"))
+        .sortWithinPartitions("k"),
+      boundsCol = Some("k"), statsCols = Seq("a"))
+    // after each version, every data line carries k's and a's true
+    // [lo, hi]: k's through fileStats (the first listed pair), a's
+    // through the snapshot's stats list
+    def everyLineStamped(step: String): Unit = {
+      val truth = trueBounds(root, Seq("k", "a"))
+      val s = ManifestTable.snapshot(spark, root)
+      assert(ManifestTable.fileStats(spark, root).map {
+        case (rel, b, _, _) => fileKey(rel) -> b }.toMap ===
+        truth.map { case (f, t) => f -> Some(t(0)) }, s"$step: k's pairs")
+      assert(s.dataEntries.map(e => fileKey(e.rel) -> s.boundsOf(e, "a"))
+        .toMap === truth.map { case (f, t) => f -> Some(t(1)) },
+        s"$step: a's pairs")
+    }
+    everyLineStamped("overwrite")
+    val before = ManifestTable.snapshot(spark, root).files.map(fileKey).toSet
+    ManifestTable.append(spark, root, rows(41L to 50L).repartition(1),
+      boundsCol = Some("k"))
+    everyLineStamped("append")
+    // the appended file (a in [82, 100]) is pruned by a rect on a
+    val appended = ManifestTable.snapshot(spark, root).files.map(fileKey)
+      .filterNot(before.contains)
+    assert(appended.size === 1)
+    val rect = ManifestTable.readWhereRect(spark, root, Seq(("a", 2L, 2L)))
+    assert(rect.select("k").as[Long].collect().toSeq === Seq(1L))
+    assert(!rect.inputFiles.map(fileKey).exists(appended.contains),
+      "a rect on a read the appended file")
+    ManifestTable.mergeCoW(spark, root, "k", Seq(3L).toDF("k"),
+      rows(Seq(45L, 60L)).withColumn("text", lit("up")))
+    everyLineStamped("merge on k")
+    ManifestTable.optimize(spark, root, "a", 3)
+    everyLineStamped("optimize on a")
+    ManifestTable.optimizeZOrderCols(spark, root, Seq("a", "b"), 3)
+    everyLineStamped("z-order on a, b")
+    assert(ManifestTable.read(spark, root).select("k").as[Long].collect()
+      .sorted.toSeq === ((1L to 50L).filter(_ != 3L) :+ 60L))
   }
 }
